@@ -1,75 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, printing ONE JSON line with per-query seconds.
   *
-  * Each query is fully executed through the `noop` sink (forces complete
-  * materialization without write-path cost — `count()` would let the
-  * optimizer prune work). A failed query is reported under `"errors"`, NOT
-  * as a timing: a wall-clock number indistinguishable from success would
-  * mask regressions.
+  * Each query is fully executed through the `noop` sink ([[Suite.noop]]).
+  * A failed query is reported under `"errors"`, NOT as a timing: a
+  * wall-clock number indistinguishable from success would mask
+  * regressions.
+  *
+  * Environment, beyond [[Suite]]'s: `SPARK_GRAFT_TRANCHE=i/N` runs one
+  * tranche ([[Suite.tranche]]); `SPARK_GRAFT_PASSES` (default 2);
+  * `SPARK_GRAFT_SPILL` set adds per-query spill; `SPARK_GRAFT_BENCH_OUT`
+  * (default `target/bench_full.json`) is where the line is also written.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Suite.sfDir
+    val spark = Suite.session()
 
-    // local-iteration filter, same contract as Verify's: a subset for
-    // targeted soaks (e.g. the sf1 linearity probe); unset on the
-    // driver -> full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    val filtered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // SPARK_GRAFT_TRANCHE=i/N: run the i-th (0-based) of N contiguous
-    // alphabetic tranches — the cap-queries-per-JVM protocol for long
-    // soaks (the r14 sf10 finding: a single JVM running hundreds of
-    // heavy queries accumulates cleaner/GC debt that inflates successor
-    // slots 2-100x; tranching bounds how much debt any slot can inherit,
-    // and the soak driver loops spark-submit over i)
-    val suite = sys.env.get("SPARK_GRAFT_TRANCHE") match {
-      case Some(spec) =>
-        // validate the SHAPE first: a malformed value ('2', 'a/4',
-        // '1/2/3') must reach this message, not a MatchError or
-        // NumberFormatException from the destructuring
-        val parsed = spec.split("/").map(_.trim) match {
-          case Array(a, b) if a.matches("\\d+") && b.matches("\\d+") =>
-            Some((a.toInt, b.toInt))
-          case _ => None
-        }
-        require(parsed.isDefined,
-          s"SPARK_GRAFT_TRANCHE must be i/N with 0 <= i < N, got '$spec'")
-        val (i, n) = parsed.get
-        require(n >= 1 && i >= 0 && i < n,
-          s"SPARK_GRAFT_TRANCHE must be i/N with 0 <= i < N, got '$spec'")
-        val per = (filtered.size + n - 1) / n
-        val slice = filtered.slice(i * per, (i + 1) * per)
-        // ceiling division can leave trailing tranches EMPTY (5 queries
-        // at N=4 -> tranche 3 has none); a soak driver looping i=0..N-1
-        // would get a silent no-op run. Fail fast with the reason.
-        require(slice.nonEmpty,
-          s"tranche $i/$n selects no queries (${filtered.size} after " +
-            "filtering; ceiling split exhausted them in earlier tranches)")
-        slice
-      case None => filtered
-    }
-
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
+    // SPARK_GRAFT_TRANCHE=i/N caps the queries per JVM for long soaks:
+    // one JVM running hundreds of heavy queries accumulates cleaner/GC
+    // debt that inflates successor slots 2-100x, and tranching bounds
+    // how much debt any slot can inherit (the soak driver loops over i)
+    val selected = Suite.only()
+    val suite = sys.env.get("SPARK_GRAFT_TRANCHE")
+      .fold(selected)(Suite.tranche(selected, _))
 
     // SPARK_GRAFT_PASSES=1 turns bench into a single-pass soak runner
     // (no warm-up, no extra samples): constrained-memory and linearity
@@ -79,69 +34,44 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
     require(passes >= 1, "SPARK_GRAFT_PASSES must be >= 1")
 
-    // SPARK_GRAFT_SPILL=1: per-query executor spill deltas
-    // (memoryBytesSpilled / diskBytesSpilled summed over tasks) from a
-    // task-end listener, reported as a "spill" JSON field — the
-    // spill-not-OOM evidence a constrained-memory soak exists to
-    // produce. Attribution uses the FIRST timed pass only (spill is a
-    // plan property, not a noise source), with a stability poll per
-    // query because listener events are async.
+    // SPARK_GRAFT_SPILL=1: per-query executor spill deltas reported as a
+    // "spill" JSON field — the spill-not-OOM evidence a
+    // constrained-memory soak exists to produce. Attribution uses the
+    // FIRST timed pass only (spill is a plan property, not a noise
+    // source).
     val spillTrack = sys.env.contains("SPARK_GRAFT_SPILL")
-    val memSpill = new java.util.concurrent.atomic.AtomicLong(0)
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong(0)
-    if (spillTrack)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = t.taskMetrics
-            if (m != null) {
-              memSpill.addAndGet(m.memoryBytesSpilled)
-              diskSpill.addAndGet(m.diskBytesSpilled)
-            }
-          }
-        })
-    def spillNow(): (Long, Long) = {
-      var last = (-1L, -1L)
-      var stable = 0
-      var i = 0
-      while (stable < 2 && i < 20) {
-        Thread.sleep(100); i += 1
-        val v = (memSpill.get(), diskSpill.get())
-        if (v == last) stable += 1 else { stable = 0; last = v }
-      }
-      (memSpill.get(), diskSpill.get())
-    }
+    val listener = new Suite.TaskListener
+    if (spillTrack) spark.sparkContext.addSparkListener(listener)
     val spills =
       scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
 
-    // Host-speed canary: a fixed, data-independent CPU-bound
-    // calibration (mix + sort of a deterministic in-memory long range,
-    // min of 3) recorded alongside the suite timings. Two consecutive
-    // rounds had cross-round bench comparisons ambiguated by VM-speed
-    // variance (r15: a phantom 1.39x "regression" on untouched queries
-    // that cost real investigation; the same binary+data measured
-    // 1.5-1.7x slower on that round's host). Dividing per-query deltas
-    // by the canary ratio separates "the plan changed" from "the host
-    // changed" mechanically. Single-threaded on purpose: it calibrates
-    // per-core speed (what every task slot sees), not the scheduler.
+    // Host-speed canaries, recorded alongside the suite timings so
+    // cross-run comparisons can divide out host speed: a fixed,
+    // data-independent splitmix + sort of a deterministic long range,
+    // min of 3. `canary_sec` runs it on one thread (per-core speed,
+    // what every task slot sees); `canary_par_sec` runs one array per
+    // core at once (the parallel throughput under all-core load, which
+    // can move while per-core speed does not).
+    def canaryKernel(salt: Long): Long = {
+      val a = new Array[Long](1 << 22)
+      var i = 0
+      while (i < a.length) {
+        // splitmix64-style mix: cheap, fixed, and incompressible by
+        // the JIT into anything data-dependent
+        var z = (i.toLong + salt) * 0x9E3779B97F4A7C15L
+        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+        a(i) = z ^ (z >>> 31)
+        i += 1
+      }
+      java.util.Arrays.sort(a)
+      a(a.length / 2)
+    }
     def canarySec(): Double = {
       var sink = 0L
       val reps = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        val a = new Array[Long](1 << 22)
-        var i = 0
-        while (i < a.length) {
-          // splitmix64-style mix: cheap, fixed, and incompressible by
-          // the JIT into anything data-dependent
-          var z = i.toLong * 0x9E3779B97F4A7C15L
-          z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-          z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-          a(i) = z ^ (z >>> 31)
-          i += 1
-        }
-        java.util.Arrays.sort(a)
-        sink ^= a(a.length / 2)
+        sink ^= canaryKernel(0L)
         (System.nanoTime() - t0) / 1e9
       }
       if (sink == 42L) System.err.println("") // defeat dead-code elim
@@ -149,15 +79,6 @@ object Bench {
     }
     val canary = canarySec()
 
-    // Parallel-throughput canary (r17 measurement fix, old field kept):
-    // the single-threaded canary calibrates per-core speed, but this
-    // round's baseline measured the whole suite 1.27× slower than r16's
-    // artifact at an EQUAL single-core canary — the host's parallel
-    // throughput (steal/turbo under all-core load) had moved while
-    // per-core speed hadn't, exactly the case canary_sec cannot see.
-    // Same splitmix+sort kernel, one array per core, all cores at once,
-    // min of 3: "canary_par_sec" calibrates what 32 concurrent task
-    // slots actually get.
     // A thread that dies (e.g. OOM allocating its array on a
     // low-memory driver) would otherwise be swallowed by join() and
     // yield a silently-fast bogus value that poisons every
@@ -171,17 +92,7 @@ object Bench {
         val threads = (0 until n).map { t =>
           new Thread(() => {
             try {
-              val a = new Array[Long](1 << 22)
-              var i = 0
-              while (i < a.length) {
-                var z = (i.toLong + (t.toLong << 32)) * 0x9E3779B97F4A7C15L
-                z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-                z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-                a(i) = z ^ (z >>> 31)
-                i += 1
-              }
-              java.util.Arrays.sort(a)
-              if (a(a.length / 2) == 42L) System.err.println("")
+              if (canaryKernel(t.toLong << 32) == 42L) System.err.println("")
             } catch { case _: Throwable => died.set(true) }
           })
         }
@@ -204,12 +115,9 @@ object Bench {
     // the number a 100 TB throughput estimate should extrapolate from
     // (same reasoning as JMH warm-up iterations).
     if (passes > 1) {
-      spark.range(1 << 20).selectExpr("sum(id)").write
-        .mode("overwrite").format("noop").save()
+      Suite.noop(spark.range(1 << 20).selectExpr("sum(id)"))
       suite.foreach { case (name, fn) =>
-        try SparkEntry.withOverlay(spark, name) {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        } catch { case _: Throwable => () }
+        Suite.run(spark, sfDir, name, fn)(Suite.noop)
       }
     }
 
@@ -224,15 +132,14 @@ object Bench {
     // pass-1 timing — only a query with NO successful sample reports an
     // error (the same reasoning as the min: noise can only lose samples).
     // Soak mode (single pass) DRAINS the cleaner between timed slots
-    // instead of just nudging it: the r14 sf10 protocol finding was that
-    // System.gc() alone only ENQUEUES dropped broadcast/shuffle refs —
-    // the async cleaning thread then competes with the next query's
-    // timed slot, inflating tranche values 2-100x (tpch_q7_like 341.6 s
-    // first-pass vs 20.4 s isolated). drain() polls the cleaner's
-    // reference buffer until the post-GC wave stops shrinking, so debt
-    // is paid between slots, not inside them. Multi-pass bench keeps
-    // the cheap gc-only nudge: min-of-N already absorbs slot noise and
-    // the full drain would add ~0.4 s x 3 passes x suite size.
+    // instead of just nudging it: System.gc() alone only ENQUEUES
+    // dropped broadcast/shuffle refs, and the async cleaning thread then
+    // competes with the next query's timed slot, inflating tranche
+    // values 2-100x. drain() polls the cleaner's reference buffer until
+    // the post-GC wave stops shrinking, so debt is paid between slots,
+    // not inside them. Multi-pass bench keeps the cheap gc-only nudge:
+    // min-of-N already absorbs slot noise and the full drain would add
+    // ~0.4 s x 3 passes x suite size.
     val soakDrain = passes == 1
     def interSlot(): Unit =
       if (soakDrain)
@@ -249,21 +156,18 @@ object Bench {
         // timed slots, which min-of-two cannot cancel when both passes
         // of a long query absorb one.
         interSlot()
-        val spillBase = if (spillTrack && pass == 1) spillNow() else (0L, 0L)
+        val spillBase = if (spillTrack && pass == 1) listener.settled() else null
         val t0 = System.nanoTime()
-        try {
-          SparkEntry.withOverlay(spark, name) {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          }
-          val sec = (System.nanoTime() - t0) / 1e9
-          timings(name) = timings.get(name).fold(sec)(math.min(_, sec))
-          errors.remove(name)
-          if (spillTrack && pass == 1) {
-            val (m, d) = spillNow()
-            spills(name) = (m - spillBase._1, d - spillBase._2)
-          }
-        } catch {
-          case e: Throwable =>
+        Suite.run(spark, sfDir, name, fn)(Suite.noop) match {
+          case Right(_) =>
+            val sec = (System.nanoTime() - t0) / 1e9
+            timings(name) = timings.get(name).fold(sec)(math.min(_, sec))
+            errors.remove(name)
+            if (spillBase != null) {
+              val d = listener.settled() - spillBase
+              spills(name) = (d.memSpilled, d.diskSpilled)
+            }
+          case Left(e) =>
             if (!timings.contains(name))
               errors(name) =
                 Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
@@ -281,34 +185,32 @@ object Bench {
       if (passes > 1 && timings.get(name).exists(_ > 2.0)) {
         System.gc()
         val t0 = System.nanoTime()
-        try {
-          SparkEntry.withOverlay(spark, name) {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          }
+        // a failed third sample keeps the existing min
+        if (Suite.run(spark, sfDir, name, fn)(Suite.noop).isRight) {
           val sec = (System.nanoTime() - t0) / 1e9
           timings(name) = math.min(timings(name), sec)
-        } catch { case _: Throwable => () /* keep the existing min */ }
+        }
       }
     }
 
-    val qs = timings.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    import Suite.json
+    val qs = timings.map { case (k, v) => s"${json(k)}:$v" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${json(k)}:${json(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
     val spillField =
       if (!spillTrack) ""
       else spills.map { case (k, (m, d)) =>
-        s"""${q(k)}:{"mem_spilled":$m,"disk_spilled":$d}"""
+        s"""${json(k)}:{"mem_spilled":$m,"disk_spilled":$d}"""
       }.mkString(""","spill":{""", ",", "}")
     val canaryParField =
       canaryPar.fold("")(v => s""""canary_par_sec":$v,""")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","canary_sec":$canary,$canaryParField"queries":$qs,"errors":$es$spillField,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","canary_sec":$canary,$canaryParField"queries":$qs,"errors":$es$spillField,"sf":${json(sfDir)}}"""
     println(line)
-    // Durable full-suite artifact: the driver's BENCH_r*.json captures
-    // stdout whose tail truncates past ~64 queries, so cross-round
-    // per-query comparison kept losing history. The same line goes to a
-    // file (override the path via SPARK_GRAFT_BENCH_OUT to snapshot a
-    // soak run) and committed copies live next to the SOAK_*.json files.
+    // Durable full-suite artifact: the driver's captured stdout
+    // truncates past ~64 queries, so the same line also goes to a file
+    // (override the path via SPARK_GRAFT_BENCH_OUT to snapshot a soak
+    // run).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "target/bench_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -1,65 +1,36 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir>; `SPARK_GRAFT_ONLY`
+  * selects a subset ([[Suite.select]]).
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Periodic GC so ContextCleaner keeps up across the whole query
     // suite (nothing here is timed, so the full-GC pauses are free);
     // Bench instead GCs between queries to keep pauses out of timed
     // slots.
-    val spark = GraftSession.builder(cpus)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Suite.session("spark.cleaner.periodicGC.interval" -> "60s")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 runs a subset
-    // (unset on the driver → full suite); entries are trimmed, empties
-    // dropped, and unknown names rejected loudly — a typo'd name would
-    // otherwise silently skip the query and leave a stale dump behind
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // per-query conf overlay (SparkEntry.confOverlays): performance
-      // confs only, but applied here too so the oracle gate checks the
-      // exact configuration the bench runs
-      try SparkEntry.withOverlay(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
+    // the runner applies each query's conf overlay here too, so the
+    // oracle gate checks the exact configuration the bench runs
+    Suite.only().foreach { case (name, fn) =>
+      Suite.run(spark, sfDir, name, fn) {
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }.left.foreach { e =>
         // class name too: ParseException and friends can have a null/empty
         // message, which made a real failure look blank in the round log
         System.err.println(
           s"[verify] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    import Suite.json
+    val jsonText = SparkEntry.oracleSql
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonText)
     spark.stop()
   }
 }

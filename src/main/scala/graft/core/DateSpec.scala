@@ -13,7 +13,7 @@ import java.time.{LocalDate, YearMonth}
   *
   * Pure Scala (no Spark): these drive path construction on the driver, never
   * row data. Row-data dates use a different format (`dd-MM-yyyy`, dashes) —
-  * see [[graft.sources.FunnelSources]].
+  * see [[graft.io.FunnelSources]].
   */
 sealed trait DateSpec {
   /** Every day covered by the spec, ascending (reference `_date_range`). */
@@ -70,6 +70,8 @@ object DateSpec {
       // first two parts only, extras ignored — matches the reference's
       // parts[0]/parts[1] indexing (report_engine.py:95-96)
       val parts = s.split("->").map(_.trim)
+      require(parts.length >= 2,
+        s"date range needs a day on both sides of '->', got '$spec'")
       Range(parseDay(parts(0)), parseDay(parts(1)))
     } else if (s.startsWith("*")) {
       Month(YearMonth.parse(s.drop(1).trim, monthFmt))

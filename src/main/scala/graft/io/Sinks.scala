@@ -261,33 +261,40 @@ object Sinks {
 
   /** Email delivery — mirrors the reference's contract
     * (`run_reports.py:132-166`): skip cleanly (false) when SMTP is not
-    * configured, otherwise STARTTLS-send a MIME multipart with the
-    * report attached via [[Smtp]] and return whether the send
-    * completed. Config from env: SMTP_HOST, SMTP_USER, SMTP_PASS
-    * (all three required to attempt a send), optional SMTP_PORT
-    * (default 587), SMTP_FROM (default user), SMTP_TLS=false to
-    * disable STARTTLS (e.g. a local relay). Never throws — a failed
-    * send logs and returns false, exactly like the reference.
+    * configured or its config is invalid ([[smtpConfig]]), otherwise
+    * STARTTLS-send a MIME multipart with the report attached via
+    * [[Smtp]] and return whether the send completed. Never throws — a
+    * failed send logs and returns false, exactly like the reference.
     */
   def emailOrSkip(to: Seq[String], cc: Seq[String], subject: String,
-      attachment: String): Boolean = {
-    val env = sys.env
-    (env.get("SMTP_HOST"), env.get("SMTP_USER"), env.get("SMTP_PASS")) match {
-      case (Some(host), Some(user), Some(pass)) =>
-        val cfg = Smtp.Config(host,
-          env.get("SMTP_PORT").map(_.toInt).getOrElse(587),
-          user, pass,
-          from = env.getOrElse("SMTP_FROM", user),
-          startTls = !env.get("SMTP_TLS").contains("false"))
+      attachment: String): Boolean =
+    smtpConfig(sys.env) match {
+      case Right(cfg) =>
         val body = s"<b>Funnel report</b><br>Attached: $subject"
         val sent = Smtp.send(cfg, to, cc, subject, body, Seq(attachment))
         println(s"[email] ${if (sent) "sent" else "send FAILED"}: " +
           s"to=${to.mkString(",")} subject=$subject")
         sent
-      case _ =>
-        println(s"[email] skipped (no SMTP config): " +
+      case Left(reason) =>
+        println(s"[email] skipped ($reason): " +
           s"to=${to.mkString(",")} subject=$subject")
         false
     }
-  }
+
+  /** SMTP config from an environment map: SMTP_HOST, SMTP_USER and
+    * SMTP_PASS (all three required to attempt a send), optional
+    * SMTP_PORT (default 587), SMTP_FROM (default user), SMTP_TLS=false
+    * to disable STARTTLS (e.g. a local relay). Left gives the reason no
+    * send is attempted: missing settings or a non-numeric port.
+    */
+  def smtpConfig(env: Map[String, String]): Either[String, Smtp.Config] =
+    (env.get("SMTP_HOST"), env.get("SMTP_USER"), env.get("SMTP_PASS")) match {
+      case (Some(host), Some(user), Some(pass)) =>
+        env.get("SMTP_PORT").fold(Option(587))(_.trim.toIntOption)
+          .toRight(s"bad SMTP_PORT '${env("SMTP_PORT")}'")
+          .map(port => Smtp.Config(host, port, user, pass,
+            from = env.getOrElse("SMTP_FROM", user),
+            startTls = !env.get("SMTP_TLS").contains("false")))
+      case _ => Left("no SMTP config")
+    }
 }

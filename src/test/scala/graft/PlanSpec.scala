@@ -332,5 +332,24 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.withOverlay(spark, "filters") {
       assert(spark.conf.getOption(key) === prior)
     }
+    // the shared runner applies the overlay around build AND sink, and
+    // restores it when the sink throws
+    var atBuild, atSink = ""
+    val probe: Suite.Query = (s, _) => {
+      atBuild = s.conf.get(key)
+      s.range(1).toDF()
+    }
+    assert(Suite.run(spark, dir, "adamic_adar", probe) { _ =>
+      atSink = spark.conf.get(key)
+    }.isRight)
+    assert(atBuild === "64k" && atSink === "64k")
+    assert(spark.conf.getOption(key) === prior,
+      "runner leaked the overlay past its query's scope")
+    val failed = Suite.run(spark, dir, "adamic_adar", probe) { _ =>
+      throw new RuntimeException("boom")
+    }
+    assert(failed.left.map(_.getMessage) === Left("boom"))
+    assert(spark.conf.getOption(key) === prior,
+      "runner leaked the overlay after a throw")
   }
 }

@@ -73,6 +73,13 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("a range spec missing a side is rejected, quoting the spec") {
+    Seq("15_02_2026 ->", "->").foreach { spec =>
+      val e = intercept[IllegalArgumentException](DateSpec.parse(spec))
+      assert(e.getMessage.contains(s"'$spec'"))
+    }
+  }
+
   private val genStageVals: Gen[Seq[Int]] =
     Gen.listOfN(Schemas.stageColumns.size, Gen.choose(0, 100000))
 

@@ -264,6 +264,19 @@ class RenderSinksSpec extends AnyFunSuite {
     assert(!Sinks.emailOrSkip(Seq("a@e.com"), Nil, "subject", "/tmp/x.xlsx"))
   }
 
+  test("SMTP config from env: defaults, overrides, and a bad port as a skip reason") {
+    import graft.io.Smtp
+    val base = Map("SMTP_HOST" -> "mx", "SMTP_USER" -> "u", "SMTP_PASS" -> "p")
+    assert(Sinks.smtpConfig(Map.empty) === Left("no SMTP config"))
+    assert(Sinks.smtpConfig(base - "SMTP_PASS") === Left("no SMTP config"))
+    assert(Sinks.smtpConfig(base) === Right(Smtp.Config("mx", 587, "u", "p", "u")))
+    assert(Sinks.smtpConfig(base ++ Map("SMTP_PORT" -> " 2525",
+      "SMTP_FROM" -> "f@e.com", "SMTP_TLS" -> "false")) ===
+      Right(Smtp.Config("mx", 2525, "u", "p", "f@e.com", startTls = false)))
+    assert(Sinks.smtpConfig(base + ("SMTP_PORT" -> "abc")) ===
+      Left("bad SMTP_PORT 'abc'"))
+  }
+
   test("SMTP client: full dialogue against an in-process server, MIME intact") {
     import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
     import java.net.ServerSocket
