@@ -100,18 +100,19 @@ object Suite {
   } + "\""
 
   final case class Counts(jobs: Long, stages: Long, tasks: Long,
-      runMs: Long, memSpilled: Long, diskSpilled: Long) {
+      runMs: Long, memSpilled: Long, diskSpilled: Long, bytesRead: Long) {
     def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
       tasks - o.tasks, runMs - o.runMs, memSpilled - o.memSpilled,
-      diskSpilled - o.diskSpilled)
+      diskSpilled - o.diskSpilled, bytesRead - o.bytesRead)
   }
 
-  /** Running totals of jobs, completed stages, tasks, executor run time
-    * and spill since registration, plus each job's duration. Callers
-    * take deltas of [[settled]] around the work they attribute.
+  /** Running totals of jobs, completed stages, tasks, executor run time,
+    * spill and input bytes read (file and table scans, not shuffle) since
+    * registration, plus each job's duration. Callers take deltas of
+    * [[settled]] around the work they attribute.
     */
   final class TaskListener extends SparkListener {
-    private val jobs, stages, tasks, runMs, mem, disk = new AtomicLong(0)
+    private val jobs, stages, tasks, runMs, mem, disk, read = new AtomicLong(0)
     private val jobStart = new ConcurrentHashMap[Int, Long]()
     private val jobMs = new ConcurrentLinkedQueue[(Int, Long)]()
 
@@ -131,11 +132,12 @@ object Suite {
         runMs.addAndGet(m.executorRunTime)
         mem.addAndGet(m.memoryBytesSpilled)
         disk.addAndGet(m.diskBytesSpilled)
+        read.addAndGet(m.inputMetrics.bytesRead)
       }
     }
 
     def counts: Counts = Counts(jobs.get, stages.get, tasks.get, runMs.get,
-      mem.get, disk.get)
+      mem.get, disk.get, read.get)
 
     /** [[counts]] once two consecutive 100 ms polls agree (at most 2 s):
       * listener events arrive asynchronously after the action returns.

@@ -2,8 +2,10 @@ package graft.app
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import graft.GraftSession
@@ -30,6 +32,8 @@ object RunReports {
       recipients: Option[String] = None,
       out: String = "target/reports")
 
+  private val valueFlags = Set("--base", "--date", "--recipients", "--out")
+
   def parseArgs(argv: List[String], acc: Args = Args()): Args = argv match {
     case Nil => acc
     case "--demo" :: rest => parseArgs(rest, acc.copy(demo = true))
@@ -37,6 +41,8 @@ object RunReports {
     case "--date" :: v :: rest => parseArgs(rest, acc.copy(date = Some(v)))
     case "--recipients" :: v :: rest => parseArgs(rest, acc.copy(recipients = Some(v)))
     case "--out" :: v :: rest => parseArgs(rest, acc.copy(out = v))
+    case flag :: Nil if valueFlags(flag) =>
+      throw new IllegalArgumentException(s"missing value for $flag")
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
   }
 
@@ -87,25 +93,26 @@ object RunReports {
   private def reportForEntity(spark: SparkSession, args: Args,
       dateSpec: String, entity: String,
       recipients: Option[Recipients]): String = {
+    // stage rows are counted while the stage aggregate scans them, so the
+    // emptiness check costs no job of its own
+    val stageRows = Observation("stage_rows")
+    def counted(stages: DataFrame): DataFrame =
+      stages.observe(stageRows, count(lit(1)).as("n"))
+
     val wide: DataFrame =
       if (args.demo)
         // demo mode: the reference's mock fetch outputs (report_engine.py:326-367)
         FunnelTable.wide(
-          FunnelAggregates.stageTotals(MockData.stages(spark)),
+          FunnelAggregates.stageTotals(counted(MockData.stages(spark))),
           MockData.otpTotals(spark), MockData.discoveryTotals(spark),
           MockData.fiStatusCounts(spark))
       else {
         val base = args.base.getOrElse(
           throw new IllegalArgumentException("--base required without --demo"))
         val spec = DateSpec.parse(dateSpec)
-        val stages = FunnelSources.stages(spark, base, spec, Some(entity))
-        // empty stage fetch -> skip entity, the reference's posture
-        // (run_reports.py:219-221); the built table would be 18 zero
-        // rows, which must never ship as a report
-        if (stages.limit(1).isEmpty)
-          throw new IllegalStateException(s"no data for $entity @ $dateSpec")
         FunnelTable.wide(
-          FunnelAggregates.stageTotals(stages),
+          FunnelAggregates.stageTotals(counted(
+            FunnelSources.stages(spark, base, spec, Some(entity)))),
           FunnelAggregates.otpTotals(
             FunnelSources.otp(spark, base, spec, Some(entity))),
           FunnelAggregates.discoveryTotals(
@@ -114,20 +121,33 @@ object RunReports {
             FunnelSources.userFunnel(spark, base, spec, Some(entity))))
       }
 
-    val table = FunnelTable.rows(wide)
+    // The one action over the sources: every aggregate is a scalar, so the
+    // report is a function of this single row. Everything below runs over
+    // a one-row local relation and never re-reads the CSV files.
+    val wideRow = wide.collect().head
+    // empty stage fetch -> skip entity, the reference's posture
+    // (run_reports.py:219-221); the built table would be 18 zero rows,
+    // which must never ship as a report
+    if (stageRows.get("n") == 0L)
+      throw new IllegalStateException(s"no data for $entity @ $dateSpec")
+    val one = spark.createDataFrame(java.util.List.of(wideRow), wide.schema)
+    val table = FunnelTable.rows(one)
 
     val tag = dateSpec.replace(" ", "").replace("->", "-").replace("*", "m")
     val prefix = if (args.demo) "demo_funnel_report" else s"funnel_report-$entity"
     val stem = s"${args.out}/$prefix-$tag"
 
     Sinks.parquet(table, s"$stem.parquet")
-    val grid = FunnelRender.grid(table, FunnelTable.summary(wide))
-    Sinks.csv(grid, s"$stem.grid.csv")
-    // presentation-sized collect — correct by design for xlsx. The
-    // reference's excel writer prepends one blank row above the grid
+    val grid = FunnelRender.grid(table, FunnelTable.summary(one))
+    // presentation-sized collect, already in `ord` order: the csv is
+    // written from these rows as they are, and the xlsx built from them
+    val gridRows = grid.collect().toSeq
+    Sinks.csv(spark.createDataFrame(gridRows.asJava, grid.schema), s"$stem.grid.csv")
+    // The reference's excel writer prepends one blank row above the grid
     // (run_reports.py:66-67), making the golden file 25 rows.
-    val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))
-    Sinks.xlsxFunnel(blank +: grid.drop("ord").collect().toSeq, s"$stem.xlsx")
+    val blank = Row.fromSeq(Seq.fill(7)(""))
+    Sinks.xlsxFunnel(blank +: gridRows.map(r => Row.fromSeq(r.toSeq.tail)),
+      s"$stem.xlsx")
 
     recipients.foreach { r =>
       Sinks.emailOrSkip(

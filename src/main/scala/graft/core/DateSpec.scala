@@ -1,6 +1,6 @@
 package graft.core
 
-import java.time.format.DateTimeFormatter
+import java.time.format.{DateTimeFormatter, ResolverStyle}
 import java.time.{LocalDate, YearMonth}
 
 /** Date-selection spec for the funnel sources.
@@ -54,8 +54,13 @@ object DateSpec {
     }
   }
 
-  private val dayFmt = DateTimeFormatter.ofPattern("dd_MM_yyyy")
-  private val monthFmt = DateTimeFormatter.ofPattern("MM_yyyy")
+  // STRICT: an impossible day (31_02_2026) is an error, as with the
+  // reference's strptime, not clamped to the month's last day. STRICT
+  // needs the proleptic year `uuuu`; `yyyy` (year-of-era) would need an era.
+  private val dayFmt =
+    DateTimeFormatter.ofPattern("dd_MM_uuuu").withResolverStyle(ResolverStyle.STRICT)
+  private val monthFmt =
+    DateTimeFormatter.ofPattern("MM_uuuu").withResolverStyle(ResolverStyle.STRICT)
 
   def formatDay(d: LocalDate): String = d.format(dayFmt)
   def formatMonth(m: YearMonth): String = m.format(monthFmt)

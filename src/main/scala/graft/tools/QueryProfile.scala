@@ -36,7 +36,8 @@ object QueryProfile {
         val sec = (System.nanoTime() - t0) / 1e9
         val d = listener.settled() - base
         val counts = f"jobs=${d.jobs}%3d stages=${d.stages}%3d " +
-          f"tasks=${d.tasks}%5d taskTime=${d.runMs / 1000.0}%8.2f s"
+          f"tasks=${d.tasks}%5d taskTime=${d.runMs / 1000.0}%8.2f s " +
+          f"read=${d.bytesRead / 1e6}%.1f MB"
         result match {
           case Right(_) => println(f"$name pass $p: $sec%7.3f s  $counts")
           case Left(e) => println(s"$name pass $p ${failure(e)}  $counts")

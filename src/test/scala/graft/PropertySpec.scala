@@ -80,6 +80,16 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("impossible days and months are rejected, not clamped") {
+    Seq("31_02_2026", "29_02_2025", "*13_2026", "31_02_2026 -> 01_03_2026")
+      .foreach { spec =>
+        intercept[java.time.format.DateTimeParseException](DateSpec.parse(spec))
+      }
+    assert(DateSpec.parse("29_02_2024") === DateSpec.Day(LocalDate.of(2024, 2, 29)))
+    assert(DateSpec.parse("*02_2024") ===
+      DateSpec.Month(java.time.YearMonth.of(2024, 2)))
+  }
+
   private val genStageVals: Gen[Seq[Int]] =
     Gen.listOfN(Schemas.stageColumns.size, Gen.choose(0, 100000))
 
