@@ -46,8 +46,7 @@ object GraftSession {
     * otherwise refuses to read it (PARQUET_TYPE_ILLEGAL); with this on,
     * `ts` arrives as raw Long nanos. For TIMESTAMP(MICROS) data the conf
     * is a no-op. Readers must branch on the OBSERVED schema, not assume a
-    * physical precision (see graft.queries.Relational.events — the
-    * round-9 outage was a fixed nanos assumption meeting µs data).
+    * physical precision (see [[graft.io.Tables.events]]).
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")

@@ -12,13 +12,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   * driver-verifiable. Both are SINGLE-FILE, REPORT-SIZED sinks
   * (`coalesce(1)` so each report is one artifact, like the reference's
   * one xlsx per entity): a large query result should use
-  * `df.write.parquet` directly, not these. The xlsx sink is a
-  * driver-side render of the ≤25-row presentation grid (the reference's
-  * `write_funnel_excel`, `run_reports.py:64-125`): collect() is correct
-  * there BY DESIGN — a fixed-size report, not data. Written as minimal
-  * SpreadsheetML with pure JDK zip (no external deps ship in this
-  * environment); cell styling beyond types is presentation polish the
-  * canonical sinks don't carry.
+  * `df.write.parquet` directly, not these. The xlsx sink
+  * ([[xlsxFunnel]]) is a driver-side render of the 25-row presentation
+  * grid (the reference's `write_funnel_excel`, `run_reports.py:64-125`):
+  * collect() is correct there BY DESIGN — a fixed-size report, not
+  * data. Written as minimal SpreadsheetML with pure JDK zip.
   */
 object Sinks {
 
@@ -41,65 +39,6 @@ object Sinks {
 
   private val numeric = """-?\d+(\.\d+)?""".r
 
-  /** Minimal valid .xlsx (one sheet, inline strings, numeric cells for
-    * numeric-looking values). The grid must already be collected — call
-    * only on presentation-sized frames.
-    */
-  def xlsx(gridRows: Seq[Row], path: String,
-      sheetName: String = "Funnel Dashboard"): Unit = {
-    def cell(ref: String, v: String): String =
-      if (v.isEmpty) ""
-      else if (numeric.matches(v)) s"""<c r="$ref"><v>$v</v></c>"""
-      else s"""<c r="$ref" t="inlineStr"><is><t xml:space="preserve">${xml(v)}</t></is></c>"""
-
-    def colRef(i: Int): String = { // 0 -> A, 26 -> AA
-      var n = i; var s = ""
-      while (n >= 0) { s = ('A' + n % 26).toChar.toString + s; n = n / 26 - 1 }
-      s
-    }
-
-    val sheetRows = gridRows.zipWithIndex.map { case (r, ri) =>
-      val cells = (0 until r.length).map { ci =>
-        val v = Option(r.get(ci)).map(_.toString).getOrElse("")
-        cell(s"${colRef(ci)}${ri + 1}", v)
-      }.mkString
-      s"""<row r="${ri + 1}">$cells</row>"""
-    }.mkString
-
-    val entries = Seq(
-      "[Content_Types].xml" ->
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-          |<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
-          |<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>
-          |<Default Extension="xml" ContentType="application/xml"/>
-          |<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>
-          |<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>
-          |</Types>""".stripMargin,
-      "_rels/.rels" ->
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>
-          |</Relationships>""".stripMargin,
-      "xl/workbook.xml" ->
-        s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-           |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-           |<sheets><sheet name="${xml(sheetName)}" sheetId="1" r:id="rId1"/></sheets>
-           |</workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>
-          |</Relationships>""".stripMargin,
-      "xl/worksheets/sheet1.xml" ->
-        s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-           |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-           |<sheetData>$sheetRows</sheetData>
-           |</worksheet>""".stripMargin
-    )
-
-    writeZip(path, entries)
-  }
-
   private def writeZip(path: String, entries: Seq[(String, String)]): Unit = {
     val zos = new ZipOutputStream(
       new BufferedOutputStream(new FileOutputStream(path)))
@@ -111,8 +50,8 @@ object Sinks {
   }
 
   /** Styled funnel workbook — the reference's `write_funnel_excel`
-    * presentation (`run_reports.py:64-125`) re-authored over the same
-    * minimal SpreadsheetML writer: gray header band, green success
+    * presentation (`run_reports.py:64-125`) re-authored as minimal
+    * SpreadsheetML: gray header band, green success
     * cells, brown dropoff causes (dark for stage rows, light for the
     * `↳` sub-causes), thin borders, left/vcenter alignment, the 7
     * merge ranges and the 6 column widths of the golden artifact.

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables
+import graft.io.Tables.{read => t}
 
 /** Model-evaluation and corpus-curation batch: ranking-quality (AUC),
   * probability calibration, the embedding gram/covariance matrix, and
@@ -22,11 +24,6 @@ import graft.GraftSession
   * final mirrored IEEE chain, every result totally ordered.
   */
 object Curation {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   private val D38 = DecimalType(38, 0)
 
@@ -51,7 +48,7 @@ object Curation {
     // window passes and the island group-by share ONE user_id
     // shuffle; durations are exact integer µs.
     "scd2_audit" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
       val wOrd = Window.partitionBy("user_id")
@@ -147,7 +144,7 @@ object Curation {
     "calibration_bins" -> ((s, dir) => {
       val sm = bround(least(greatest(col("value") / lit(500.0), lit(0.0)),
         lit(1.0)) * lit(1000000.0)).cast("long")
-      val q = Relational.events(s, dir)
+      val q = Tables.events(s, dir)
         .filter(col("value").isNotNull)
         .select(sm.as("sm"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
@@ -361,7 +358,7 @@ object Curation {
     // this corpus) and zero tokens colliding across distinct ids. One
     // distinct + two scalar aggregates, map-side combinable.
     "pseudonymize" -> ((s, dir) => {
-      val ids = Relational.events(s, dir).select(col("user_id")).distinct()
+      val ids = Tables.events(s, dir).select(col("user_id")).distinct()
       val tok = ids.select(col("user_id"),
         graft.llm.Dedup.fingerprint60(
           concat(lit("graft-salt-v1:"), col("user_id").cast("string")))
@@ -383,7 +380,7 @@ object Curation {
     // ids) so the oracle reconstructs both sides from the events table
     // alone and the expected class counts are data-defined.
     "snapshot_diff" -> ((s, dir) => {
-      val base = Relational.events(s, dir).select(col("event_id"),
+      val base = Tables.events(s, dir).select(col("event_id"),
         col("user_id"), col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
       val mutated = base.filter(pmod(col("event_id"), lit(97)) =!= 0)
@@ -426,7 +423,7 @@ object Curation {
     // IEEE chain whose last-ulp could differ between engines and flip
     // the per-row quantization; an element of the input cannot.
     "impute_median" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = Tables.events(s, dir)
       val grid = ev.filter(col("value").isNotNull)
         .groupBy("event_type", "value").agg(count(lit(1)).as("c"))
       val w = Window.partitionBy("event_type").orderBy("value")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.core.Schemas
 import graft.engine.FunnelTable
+import graft.io.Tables
 
 /** The full funnel pipeline (SURVEY §2.9, `report_engine.py:233-319`)
   * exercised over the harness's `events` table, so the driver's DuckDB
@@ -65,8 +66,7 @@ object FunnelOverEvents {
   }
 
   def query(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s)
-    val ev = Relational.events(s, dir)
+    val ev = Tables.events(s, dir)
     val aggs = funnelAggs
     val one = ev.agg(aggs.head, aggs.tail: _*)
     FunnelTable.rows(FunnelTable.wideFromJoined(one)).orderBy("row_idx")
@@ -79,9 +79,7 @@ object FunnelOverEvents {
     * sink, then the identical wide→rows projection over the settled
     * 1-row result read back from parquet. Same oracle as the batch
     * path: stream/batch parity for the funnel table itself is a
-    * hash-checked gate, not a spec claim. The ts/schema normalization
-    * branches exactly like [[Insights]]' stream_daily_counts (the
-    * round-9 lesson).
+    * hash-checked gate, not a spec claim.
     *
     * Sink choice: Spark's native parquet sink is append-only, which a
     * complete-mode global aggregate cannot use, so the canonical file
@@ -118,15 +116,8 @@ object FunnelOverEvents {
       maxFilesPerTrigger: Option[Int] = None,
       failAtBatch: Option[Long] = None): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    GraftSession.tune(s)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val tablePath = new java.io.File(s"$dir/events.parquet")
-    val rd = s.readStream.schema(schema)
-    val limited = maxFilesPerTrigger
-      .map(n => rd.option("maxFilesPerTrigger", n.toString)).getOrElse(rd)
-    val raw =
-      if (tablePath.isDirectory) limited.parquet(tablePath.toString)
-      else limited.option("pathGlobFilter", "events.parquet").parquet(dir)
+    // the raw stream: the aggregates never touch ts, so no projection
+    val raw = Tables.stream(s, s"$dir/events.parquet", maxFilesPerTrigger)
     val aggs = funnelAggs
     val writer = raw.agg(aggs.head, aggs.tail: _*)
       .writeStream

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables
+import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
 
 /** Round-10 analytics batch: funnel timing, exact correlation, iterative
@@ -17,40 +19,7 @@ import graft.llm.{Dedup, TextAnalysis}
   */
 object Insights {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
-
   private val D38 = DecimalType(38, 0)
-
-  /** The events table as an unbounded source: same file, same
-    * timestamp-precision normalization as the batch reader
-    * ([[Relational.events]] — BIGINT nanos, TIMESTAMP_NTZ, and TIMESTAMP
-    * all land on µs TIMESTAMP), but planned as a streaming scan so every
-    * query built on it runs through the micro-batch engine. Handles both
-    * fixture layouts (single file and directory table).
-    */
-  private def streamEvents(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType,
-      TimestampType}
-    GraftSession.tune(s)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val tablePath = new java.io.File(s"$dir/events.parquet")
-    val raw =
-      if (tablePath.isDirectory)
-        s.readStream.schema(schema).parquet(tablePath.toString)
-      else
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-    schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Content-addressed, atomically-published replay fixture for the
     * staggered-modtime streaming replays (stream_sessionize /
@@ -285,11 +254,9 @@ object Insights {
           col("event_type"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
     }
-    val real = streamEvents(s, dir)
+    val real = Tables.eventsStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
-    val sentinels = s.readStream
-      .schema(s.read.parquet(scratch.getAbsolutePath).schema)
-      .parquet(scratch.getAbsolutePath)
+    val sentinels = Tables.stream(s, scratch.getAbsolutePath)
     val ev = real.unionByName(sentinels)
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
@@ -329,7 +296,7 @@ object Insights {
     "funnel_conversion_time" -> ((s, dir) => {
       def firstTs(et: String) =
         min(when(col("event_type") === et, unix_micros(col("ts"))))
-      val f = Relational.events(s, dir)
+      val f = Tables.events(s, dir)
         .filter(col("event_type").isin("signup", "view", "click", "purchase"))
         .groupBy("user_id")
         .agg(firstTs("signup").as("t_signup"), firstTs("view").as("t_view"),
@@ -525,7 +492,7 @@ object Insights {
     // approx-quantile gate (quantile_gate), and the top-share/max here
     // stay exact either way.
     "skew_stats" -> ((s, dir) => {
-      val c = Relational.events(s, dir)
+      val c = Tables.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("c"))
       val w = Window.partitionBy(lit(1))
       val r = c.select(col("c"),
@@ -651,7 +618,7 @@ object Insights {
     // DECIMAL(38,0) ≙ HUGEINT.
     "attribution_ushape" -> ((s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = Tables.events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
@@ -706,7 +673,7 @@ object Insights {
     "attribution_decay" -> ((s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
       val dayUs = 86400000000L
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = Tables.events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
@@ -756,35 +723,10 @@ object Insights {
     // readStream over the events parquet, AvailableNow trigger,
     // complete-mode memory sink — and its final result must equal the
     // batch oracle's GROUP BY day. Stream/batch parity stops being a
-    // claim in a spec and becomes a hash-checked gate. The ts
-    // normalization branches on the observed schema exactly like
-    // [[Relational.events]] (the round-9 lesson applies to stream
-    // sources too).
+    // claim in a spec and becomes a hash-checked gate. The stream's ts
+    // type is the batch reader's ([[Tables.eventsStream]]).
     "stream_daily_counts" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType,
-        TimestampType}
-      GraftSession.tune(s)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // the harness table is a single FILE (stream the parent dir with
-      // a glob filter — the file source rejects a file basePath), but
-      // Spark-written fixtures are DIRECTORIES named events.parquet
-      // (stream them directly; a name glob would exclude their part
-      // files)
-      val tablePath = new java.io.File(s"$dir/events.parquet")
-      val raw =
-        if (tablePath.isDirectory)
-          s.readStream.schema(schema).parquet(tablePath.toString)
-        else
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir)
-      val ev = schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _: TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
+      val ev = Tables.eventsStream(s, dir)
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.dailyEventCounts(ev),
           "complete", "daily_" + Relational.sfTag(dir))
@@ -802,7 +744,7 @@ object Insights {
     // memory a 100 TB stream pays for percentiles.
     "stream_quantile" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ev = streamEvents(s, dir)
+      val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), Signals.gridBin(col("value")))
       // the file-sink read-back is a plain parquet relation, so the
       // readout's self-join (cum window ⋈ totals) needs no
@@ -825,12 +767,12 @@ object Insights {
       import org.apache.spark.sql.streaming.Trigger
       val hll = udaf(new graft.functions.HyperLogLogAgg(),
         org.apache.spark.sql.Encoders.STRING)
-      val ev = streamEvents(s, dir)
+      val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val regs = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(hll(col("uid")).as("regs")),
         "complete", "hll_" + Relational.sfTag(dir))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+      val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       regs.join(exact, Seq("event_type"))
         .select(col("event_type"),
@@ -858,12 +800,12 @@ object Insights {
     "stream_kmv" -> ((s, dir) => {
       val kmv = udaf(new graft.functions.KmvSketchAgg(64),
         org.apache.spark.sql.Encoders.STRING)
-      val ev = streamEvents(s, dir)
+      val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val sk = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(kmv(col("uid")).as("sk")),
         "complete", "kmv_" + Relational.sfTag(dir))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+      val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       sk.join(exact, Seq("event_type"))
         .select(col("event_type"),
@@ -887,7 +829,7 @@ object Insights {
     // countDistinct.
     "stream_bitmap" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ev = streamEvents(s, dir).select(col("event_type"),
+      val ev = Tables.eventsStream(s, dir).select(col("event_type"),
         expr("CAST(user_id DIV 62 AS BIGINT)").as("w"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 62 AS INT))")
           .as("m"))
@@ -897,7 +839,7 @@ object Insights {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_words"),
           sum(bit_count(col("bm"))).cast("long").as("distinct_bitmap"))
-      val exact = Relational.events(s, dir).groupBy("event_type")
+      val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("distinct_exact"))
       counts.join(exact, Seq("event_type"))
         .orderBy("event_type")
@@ -918,13 +860,13 @@ object Insights {
       val k = 7
       val bloomAgg = udaf(new graft.functions.BloomFilterAgg(nBits, k),
         org.apache.spark.sql.Encoders.STRING)
-      val ev = streamEvents(s, dir)
+      val ev = Tables.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id").cast("string").as("uid"))
       val bits = parquetSinkReadback(s,
         ev.groupBy().agg(bloomAgg(col("uid")).as("bits")),
         "complete", "bloom_" + Relational.sfTag(dir))
-      val present = Relational.events(s, dir)
+      val present = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id")).distinct()
         .withColumn("present", lit(1))
@@ -960,7 +902,7 @@ object Insights {
       val width = 64
       val cmsU = udaf(new graft.functions.CountMinSketchAgg(depth, width),
         org.apache.spark.sql.Encoders.STRING)
-      val ev = streamEvents(s, dir).select(col("event_type"))
+      val ev = Tables.eventsStream(s, dir).select(col("event_type"))
       val sketch = parquetSinkReadback(s,
         ev.groupBy().agg(cmsU(col("event_type")).as("sketch")),
         "complete", "cms_" + Relational.sfTag(dir))
@@ -971,7 +913,7 @@ object Insights {
           (lit(i * width) + pmod(h1 + lit(i.toLong) * h2,
             lit(width.toLong)) + 1).cast("int"))
       }.reduce(least(_, _))
-      Relational.events(s, dir).groupBy("event_type")
+      Tables.events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(sketch))
         .select(col("event_type"), est.as("est_cnt"), col("true_cnt"))
@@ -989,11 +931,11 @@ object Insights {
       import org.apache.spark.sql.streaming.Trigger
       val mgU = udaf(new graft.functions.MisraGriesAgg(16),
         org.apache.spark.sql.Encoders.STRING)
-      val ev = streamEvents(s, dir).select(col("event_type"))
+      val ev = Tables.eventsStream(s, dir).select(col("event_type"))
       val summary = parquetSinkReadback(s,
         ev.groupBy().agg(mgU(col("event_type")).as("summary")),
         "complete", "topk_" + Relational.sfTag(dir))
-      Relational.events(s, dir).groupBy("event_type")
+      Tables.events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(summary))
         .select(col("event_type"),
@@ -1014,7 +956,7 @@ object Insights {
     // FunnelStreamSpec (its cross-batch replay-drop test).
     "stream_dedup_counts" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ev = streamEvents(s, dir)
+      val ev = Tables.eventsStream(s, dir)
       parquetSinkReadback(s,
           ev.select("user_id", "event_type")
             .dropDuplicates("user_id", "event_type")
@@ -1034,8 +976,8 @@ object Insights {
     // oracle can rebuild it.
     "stream_enriched_counts" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ev = streamEvents(s, dir)
-      val dim = Relational.events(s, dir)
+      val ev = Tables.eventsStream(s, dir)
+      val dim = Tables.events(s, dir)
         .select(col("user_id")).distinct()
         .withColumn("segment",
           concat(lit("seg"), pmod(col("user_id"), lit(4))))
@@ -1078,11 +1020,11 @@ object Insights {
       val p = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_dpp_" + Relational.sfTag(dir)).getAbsolutePath
       if (!new java.io.File(p, "_SUCCESS").exists)
-        Relational.events(s, dir)
+        Tables.events(s, dir)
           .select(to_date(col("ts")).as("day"), col("value"))
           .write.mode("overwrite").partitionBy("day").parquet(p)
       val fact = s.read.parquet(p)
-      val dim = Relational.events(s, dir)
+      val dim = Tables.events(s, dir)
         .select(to_date(col("ts")).as("day")).distinct()
         .filter(pmod(datediff(col("day"), to_date(lit("2024-01-01"))),
           lit(7)) < 2)
@@ -1113,8 +1055,7 @@ object Insights {
     "stream_sessionize" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      GraftSession.tune(s)
-      val ev = Relational.events(s, dir).select(col("user_id"), col("ts"))
+      val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
       // one pass for the sentinel horizon AND the content fingerprint
       // that keys the fixture (count / max-ts / user-sum: a regenerated
       // events table at the same SF gets a fresh replay)
@@ -1146,8 +1087,7 @@ object Insights {
         sentinel(maxUs + 2 * yearUs, t0 - 20000)
       }
       val p = scratch.getAbsolutePath
-      val src = s.readStream.schema(s.read.parquet(p).schema)
-        .option("maxFilesPerTrigger", "1").parquet(p)
+      val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val ds = src
         .select(col("user_id"), col("ts"), lit("e").as("event_type"))
         .as[graft.streaming.FunnelStream.UserEvent]
@@ -1179,8 +1119,7 @@ object Insights {
     "stream_late_data" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      GraftSession.tune(s)
-      val ev = Relational.events(s, dir)
+      val ev = Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
       val meta = ev.agg(max(unix_micros(col("ts"))), count(lit(1)),
         sum(col("user_id"))).collect()(0)
@@ -1218,8 +1157,7 @@ object Insights {
           t0 - 15000)
       }
       val p = scratch.getAbsolutePath
-      val src = s.readStream.schema(s.read.parquet(p).schema)
-        .option("maxFilesPerTrigger", "1").parquet(p)
+      val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val settled = parquetSinkReadback(s,
         src.withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
@@ -1286,7 +1224,7 @@ object Insights {
     // returns ONE row (count 0, sum/avg/min NULL), a GROUPED aggregate
     // returns ZERO rows (witnessed by a count over it).
     "empty_relations" -> ((s, dir) => {
-      val e = Relational.events(s, dir).filter(col("event_type") === "nope")
+      val e = Tables.events(s, dir).filter(col("event_type") === "nope")
       val global = e.agg(
         count(lit(1)).as("n"),
         sum("value").as("s"),
@@ -1313,7 +1251,7 @@ object Insights {
       GraftSession.tune(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_fed_" + Relational.sfTag(dir)).getAbsolutePath
-      val canon = Relational.events(s, dir)
+      val canon = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
       def ensure(sub: String)(write: String => Unit): String = {
@@ -1354,7 +1292,7 @@ object Insights {
     "stream_user_funnel" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val ds = streamEvents(s, dir)
+      val ds = Tables.eventsStream(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
         .as[graft.streaming.FunnelStream.UserEvent]
       parquetSinkReadback(s,
@@ -1386,7 +1324,7 @@ object Insights {
         "graft_ss_read_" + Relational.sfTag(dir) + "_" +
           java.util.UUID.randomUUID.toString.replace("-", "").take(12))
         .getAbsolutePath
-      val counts = streamEvents(s, dir)
+      val counts = Tables.eventsStream(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           sum(bround(col("value") * lit(1000000.0)).cast("long"))

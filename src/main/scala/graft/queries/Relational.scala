@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables.{events, read => t}
 
 /** Relational operator queries for the driver's DuckDB-oracle gate: each
   * entry exercises one operator family from SURVEY §2 over the harness's
@@ -25,35 +26,6 @@ import graft.GraftSession
   * ROUNDS in DuckDB's bigint cast — the oracles spell `trunc()` explicitly.
   */
 object Relational {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
-
-  /** events with `ts` normalized to one canonical TIMESTAMP type,
-    * branching on the schema the parquet footer actually declares:
-    *  - TIMESTAMP(NANOS) arrives as raw Long nanos under the session's
-    *    `nanosAsLong` (see [[GraftSession.tune]]) — integer `div` keeps
-    *    full precision (double division would lose bits above 2^53);
-    *  - TIMESTAMP(MICROS) without isAdjustedToUTC arrives as
-    *    TIMESTAMP_NTZ — under the UTC session, casting to TIMESTAMP
-    *    reinterprets the same wall clock as the same instant DuckDB
-    *    reads, so oracle epoch semantics are unchanged.
-    * Branching on the observed type (not a fixed assumption) keeps every
-    * downstream reader working when the data's physical precision moves.
-    */
-  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    val df = t(s, dir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
-  }
 
   private def money(c: String) = col(c).cast(DecimalType(18, 2))
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Tables
+import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
 
 /** Round-8 batch: corpus ranking and scoring (BM25, PMI collocations,
@@ -18,11 +20,6 @@ import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
   * fixed IEEE chains mirrored verbatim in the oracle, total ORDER BY.
   */
 object Scoring {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Query terms for the registered BM25 ranking and the inverted-index
     * probe — shared with the oracles so the two sides can't drift. Both
@@ -225,7 +222,7 @@ object Scoring {
     // a USING-column semi-join (self-lineage-safe, unlike a raw
     // Column === Column condition between two frames sharing a parent).
     "rolling_distinct" -> ((s, dir) => {
-      val ud = Relational.events(s, dir)
+      val ud = Tables.events(s, dir)
         .select(col("user_id"),
           expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
         .distinct()

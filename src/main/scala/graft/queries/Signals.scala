@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.io.Tables
+import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, Ranking, TextAnalysis}
 
 /** Round-8 (cont.) batch: per-entity signal smoothing and corpus
@@ -19,11 +21,6 @@ import graft.llm.{Dedup, Ranking, TextAnalysis}
   * chains mirrored verbatim in the oracle, total ORDER BY.
   */
 object Signals {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
-    s.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** 512-bin grid width for the mergeable value sketch — an exact
     * binary literal (0.78125) so bin edges are bit-identical
@@ -501,7 +498,7 @@ object Signals {
     // before the per-user sum; the 2^(−Δ/7) chain is fixed and the 1e6
     // quantization absorbs cross-engine pow ulps (the ln precedent).
     "decayed_sum" -> ((s, dir) => {
-      val ev = Relational.events(s, dir)
+      val ev = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("value"),
           expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
@@ -1216,7 +1213,7 @@ object Signals {
     // collapses to |types| rows before the shuffle.
     "ols_fit" -> ((s, dir) => {
       val d38 = "decimal(38,0)"
-      val ev = Relational.events(s, dir).select(col("event_type"),
+      val ev = Tables.events(s, dir).select(col("event_type"),
         datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
           .cast("long").as("x"),
         bround(col("value") * lit(1000000.0)).cast("long").as("y"))
@@ -1333,7 +1330,7 @@ object Signals {
     // per-class sum (order-independence), and the per-type minima are
     // exact integer folds.
     "ldiversity" -> ((s, dir) => {
-      val ev = Relational.events(s, dir).select(col("event_type"),
+      val ev = Tables.events(s, dir).select(col("event_type"),
         datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
           .as("d"),
         col("user_id"))
@@ -1469,7 +1466,7 @@ object Signals {
     // that certifies the mechanism's arithmetic, not a private
     // release itself (production drops the true column and the seed).
     "dp_counts" -> ((s, dir) => {
-      val m = Relational.events(s, dir).groupBy("event_type")
+      val m = Tables.events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("n_true"))
       def u(saltC: String) =
         (Dedup.hashBucket(concat(lit(saltC), col("event_type")),
@@ -1592,7 +1589,7 @@ object Signals {
     "sketch_quantile_rollup" -> ((s, dir) => {
       import s.implicits._
       val W = 400.0 / 512.0
-      val ev = Relational.events(s, dir).select(col("event_type"),
+      val ev = Tables.events(s, dir).select(col("event_type"),
         to_date(col("ts")).as("day"),
         least(floor(col("value") / lit(W)), lit(511L)).cast("int")
           .as("bin"))
@@ -1692,7 +1689,7 @@ object Signals {
     // an exact integer in sixths until the final readout division;
     // Σφ_i = v(full) − v(∅) (efficiency) is emitted as a cross-check.
     "shapley_attribution" -> ((s, dir) => {
-      val perUser = Relational.events(s, dir)
+      val perUser = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"))
         .groupBy("user_id").agg(
           (max(when(col("event_type") === "view", 1).otherwise(0)) +
@@ -1733,7 +1730,7 @@ object Signals {
 
     "attribution" -> ((s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = Tables.events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
@@ -1831,7 +1828,7 @@ object Signals {
     // ln(0) = −∞, so a cumulative any-extinction flag forces survival
     // to exactly 0 from that week on instead.
     "survival_curve" -> ((s, dir) => {
-      val ev = Relational.events(s, dir).select(col("user_id"),
+      val ev = Tables.events(s, dir).select(col("user_id"),
         col("ts").cast("date").as("d"))
       val users = ev.groupBy("user_id")
         .agg(min("d").as("first_d"), max("d").as("last_d"))
@@ -1882,7 +1879,7 @@ object Signals {
     // locale-dependent dayofweek(). Corpus-scale work is ONE daily
     // aggregate; the trend/ratio windows run on the |days| table.
     "seasonal_dow" -> ((s, dir) => {
-      val daily = Relational.events(s, dir)
+      val daily = Tables.events(s, dir)
         .select(col("ts").cast("date").as("d"))
         .groupBy("d").agg(count(lit(1)).as("cnt"))
       val byD = Window.orderBy("d").rowsBetween(-3, 3)

@@ -16,7 +16,7 @@ class ObservabilitySpec extends AnyFunSuite {
 
   test("observed DQ metrics equal a direct aggregate, collected in one pass") {
     assume(new java.io.File("/root/testdata/sf0.001/events.parquet").exists())
-    val ev = graft.queries.Relational.events(spark, "/root/testdata/sf0.001")
+    val ev = graft.io.Tables.events(spark, "/root/testdata/sf0.001")
     val obs = Observation("dq")
     // DISTINCT aggregates are rejected in observed metrics, so the
     // cardinality counter is the mergeable HLL form (mirrored in the

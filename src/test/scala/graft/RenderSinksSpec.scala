@@ -41,7 +41,8 @@ class RenderSinksSpec extends AnyFunSuite {
 
   test("xlsx sink writes a valid zip with the golden values as cells") {
     val path = Files.createTempFile("funnel", ".xlsx").toString
-    Sinks.xlsx(grid.drop("ord").collect().toSeq, path)
+    val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))
+    Sinks.xlsxFunnel(blank +: grid.drop("ord").collect().toSeq, path)
     val zf = new ZipFile(path)
     try {
       val names = zf.entries().asScala.map(_.getName).toSet
