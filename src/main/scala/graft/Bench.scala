@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.QueryDef
+
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, printing ONE JSON line with per-query seconds.
   *
@@ -116,7 +118,7 @@ object Bench {
     // (same reasoning as JMH warm-up iterations).
     if (passes > 1) {
       Suite.noop(spark.range(1 << 20).selectExpr("sum(id)"))
-      suite.foreach { case (name, fn) =>
+      suite.foreach { case QueryDef(name, fn, _) =>
         Suite.run(spark, sfDir, name, fn)(Suite.noop)
       }
     }
@@ -148,7 +150,7 @@ object Bench {
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     for (pass <- 1 to passes) {
-      suite.foreach { case (name, fn) =>
+      suite.foreach { case QueryDef(name, fn, _) =>
         // Trigger ContextCleaner OUTSIDE the timed slot: cleanup of
         // dropped broadcast/shuffle references is driven by driver GC,
         // which a large heap may never run across a 70-query suite —
@@ -181,7 +183,7 @@ object Bench {
     // page-cache event inside a long slot shifts BOTH samples. Queries
     // whose current min exceeds 2 s get a THIRD spaced sample; min of
     // three cuts the chance that every sample absorbed noise.
-    suite.foreach { case (name, fn) =>
+    suite.foreach { case QueryDef(name, fn, _) =>
       if (passes > 1 && timings.get(name).exists(_ > 2.0)) {
         System.gc()
         val t0 = System.nanoTime()

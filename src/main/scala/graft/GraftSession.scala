@@ -90,19 +90,23 @@ object GraftSession {
     else df
   }
 
-  /** Run `body` (which starts and drains streaming queries on `s`) with
-    * the RocksDB state-store provider pinned, restoring the prior
-    * setting afterwards. This is the 100 TB stateful-streaming posture
-    * and the provider EVERY engine stream query verifies under: the
-    * default HDFS-backed store keeps every keyed entry on-heap, which
-    * cannot hold a day's key space at scale, while RocksDB keeps
-    * working state off-heap with local-disk overflow (and is required
-    * by `transformWithState` anyway). The provider is read at query
-    * START, so wrapping the start+drain is sufficient; stateless
-    * streams simply never open a store. Save/restore (rather than a
-    * session-wide default) keeps spec-level negative controls able to
-    * exercise the heap provider deliberately.
+  /** Per-partition source-byte target for [[streamStateWidth]],
+    * overridable via `spark.graft.stream.statePartitionBytes` (bytes).
+    * Default 8 MiB (r18, was 64 MiB in r17): the r17 value was sized
+    * against COMMIT overhead only — at sf0.1 (2 MB source) both values
+    * derive width 1 and the fsync-flood fix is identical — but the sf1
+    * per-batch probe showed the next regime is COMPUTE-bound, not
+    * commit-bound: a 22 MB source carries a 2M-row symmetric-hash join
+    * whose addBatch ran 30 s on the single derived partition while
+    * state commit cost ~1 s. 8 MiB/partition widens exactly when there
+    * is real per-row work to spread (sf1 derives 3) and still saturates
+    * at cluster width long before production scale; the A/B table in
+    * OPTIMIZATION_r18.md pins the choice.
     */
+  def streamStatePartitionBytes(s: SparkSession): Long =
+    s.conf.getOption("spark.graft.stream.statePartitionBytes")
+      .map(_.toLong).filter(_ > 0).getOrElse(8L << 20)
+
   /** Scale-adaptive stateful-stream shuffle width: ⌈sourceBytes/64 MiB⌉
     * clamped to [1, defaultParallelism]. Streaming stateful operators
     * cannot use AQE (disabled in stateful workloads), so their shuffle —
@@ -122,23 +126,6 @@ object GraftSession {
     * grows. `sourceBytes < 0` (unknown — no file source visible) keeps
     * the session's width: never guess narrower than configured.
     */
-  /** Per-partition source-byte target for [[streamStateWidth]],
-    * overridable via `spark.graft.stream.statePartitionBytes` (bytes).
-    * Default 8 MiB (r18, was 64 MiB in r17): the r17 value was sized
-    * against COMMIT overhead only — at sf0.1 (2 MB source) both values
-    * derive width 1 and the fsync-flood fix is identical — but the sf1
-    * per-batch probe showed the next regime is COMPUTE-bound, not
-    * commit-bound: a 22 MB source carries a 2M-row symmetric-hash join
-    * whose addBatch ran 30 s on the single derived partition while
-    * state commit cost ~1 s. 8 MiB/partition widens exactly when there
-    * is real per-row work to spread (sf1 derives 3) and still saturates
-    * at cluster width long before production scale; the A/B table in
-    * OPTIMIZATION_r18.md pins the choice.
-    */
-  def streamStatePartitionBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.statePartitionBytes")
-      .map(_.toLong).filter(_ > 0).getOrElse(8L << 20)
-
   def streamStateWidth(s: SparkSession, sourceBytes: Long): Int = {
     val target = streamStatePartitionBytes(s)
     val byData = (sourceBytes + target - 1) / target
@@ -167,6 +154,19 @@ object GraftSession {
     }
   }
 
+  /** Run `body` (which starts and drains streaming queries on `s`) with
+    * the RocksDB state-store provider pinned, restoring the prior
+    * setting afterwards. This is the 100 TB stateful-streaming posture
+    * and the provider EVERY engine stream query verifies under: the
+    * default HDFS-backed store keeps every keyed entry on-heap, which
+    * cannot hold a day's key space at scale, while RocksDB keeps
+    * working state off-heap with local-disk overflow (and is required
+    * by `transformWithState` anyway). The provider is read at query
+    * START, so wrapping the start+drain is sufficient; stateless
+    * streams simply never open a store. Save/restore (rather than a
+    * session-wide default) keeps spec-level negative controls able to
+    * exercise the heap provider deliberately.
+    */
   def withRocksDbState[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prior = s.conf.getOption(key)

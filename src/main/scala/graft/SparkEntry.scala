@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-import graft.queries.{Analytics, CsvFunnelReport, Curation, FunnelOverEvents, Inference, Insights, LlmQueries, Relational, Scoring, Signals}
+import graft.queries.{Analytics, CsvFunnelReport, Curation, FunnelOverEvents, Inference, Insights, LlmQueries, QueryDef, Relational, Scoring, Signals}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -20,44 +20,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     FunnelOverEvents.query(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ LlmQueries.queries ++ Analytics.queries ++
-      Scoring.queries ++ Signals.queries ++ Insights.queries ++
-      Inference.queries ++ Curation.queries +
-      ("funnel_table" -> (FunnelOverEvents.query(_, _))) +
-      // the funnel aggregation run as a real Structured Streaming query
-      // (readStream → global complete-mode agg → memory sink), hash-
-      // checked against the SAME oracle as the batch funnel_table
-      ("stream_funnel_table" -> (FunnelOverEvents.streamQuery(_, _))) +
-      // CSV source layer end-to-end (path templating, month glob, range
-      // post-filter, entity pushdown) over a generated on-disk fixture
-      // in the reference's directory layout, oracle-checked by DuckDB
-      // read_csv over the same files.
-      ("csv_funnel_report" -> (CsvFunnelReport.query(_, _))) +
-      // same report over the at-scale layout: stages ingested once as a
-      // date=-partitioned parquet table (with a decoy out-of-range day)
-      // and pruned by a planned partition predicate, not path strings
-      ("csv_funnel_partitioned" -> (CsvFunnelReport.partitionedQuery(_, _))) +
-      // per-file provenance via the _metadata hidden column, against
-      // DuckDB read_csv(filename = true) over the same files
-      ("file_lineage" -> (CsvFunnelReport.lineageQuery(_, _)))
+  /** Every registered query, each name once (see [[QueryDef.registry]]). */
+  lazy val registry: Seq[QueryDef] = QueryDef.registry(
+    Relational.defs, LlmQueries.defs, Analytics.defs, Scoring.defs,
+    Signals.defs, Insights.defs, Inference.defs, Curation.defs,
+    FunnelOverEvents.defs, CsvFunnelReport.defs)
 
-  /** Per-query session-conf overlays, applied by the runner (Bench /
-    * Verify) around the query's BUILD AND EXECUTION and restored after —
-    * the engine-visible spelling of a per-operator shuffle-width posture
-    * (r16 verdict item 2). Only performance confs belong here (AQE
-    * sizing, shuffle width): an overlay must never change what a query
-    * computes, and the oracle gate re-runs every overlaid query like any
-    * other.
-    *
-    * The r17 `assoc_rules` `initialPartitionNum=256` overlay was REMOVED
-    * in r18: its justification was the r16 sf10 measurement (17.6× →
-    * 11.9×), and the r18 re-validation at the same SF measured the
-    * OPPOSITE — sf10 isolated 53.6 s without vs 62.0 s with the overlay
-    * (scale ratio 16.8× vs 22.8×), i.e. the conf is anti-scale on the
-    * current host/engine. A conf carried for a scale benefit that does
-    * not reproduce is exactly what an optimization round must drop.
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
+  /** Per-query session-conf overlays, applied by the runner around the
+    * query's BUILD AND EXECUTION and restored after. Only performance
+    * confs belong here (AQE sizing, shuffle width): an overlay must never
+    * change what a query computes, and the oracle gate re-runs every
+    * overlaid query like any other. An overlay stays only while its
+    * measured benefit reproduces.
     */
   def confOverlays: Map[String, Map[String, String]] = {
     // AQE's parallelismFirst coalescing floors post-shuffle partitions
@@ -66,7 +44,7 @@ object SparkEntry {
     // operator that MULTIPLIES rows after that exchange (pair
     // expansion, per-doc token/chunk explode) runs its heavy stage 2-5
     // wide regardless of session width. A 64k floor restores
-    // parallelism exactly where the fan-out is (r18 A/B: adamic_adar
+    // parallelism exactly where the fan-out is (measured A/B: adamic_adar
     // 0.38×, curation_pipeline 0.52×, containment 0.72×); at
     // production scale partitions sit far above 1 MB and the knob is
     // inert. NOT blanket-applied: the same floor regressed the
@@ -100,17 +78,7 @@ object SparkEntry {
     }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ LlmQueries.oracles ++ Analytics.oracles ++
-      Scoring.oracles ++ Signals.oracles ++ Insights.oracles ++
-      Inference.oracles ++ Curation.oracles +
-      ("funnel_table" -> FunnelOverEvents.oracle) +
-      // stream/batch parity IS the claim: one oracle serves both paths
-      ("stream_funnel_table" -> FunnelOverEvents.oracle) +
-      ("csv_funnel_report" -> CsvFunnelReport.oracle) +
-      // the partitioned layout must reproduce the CSV-path result
-      // exactly — one oracle serves both
-      ("csv_funnel_partitioned" -> CsvFunnelReport.oracle) +
-      ("file_lineage" -> CsvFunnelReport.lineageOracle)
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracle).toMap
 }

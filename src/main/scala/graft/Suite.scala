@@ -7,6 +7,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries.QueryDef
+
 /** The one runner behind `Bench`, `Verify`, `QueryProfile` and
   * `ExplainDump`: session setup, query selection, running one query
   * under its conf overlay, JSON output and task counters.
@@ -36,18 +38,16 @@ object Suite {
     * rejected rather than skipped, because a typo would otherwise leave
     * a stale result behind; `what` names the source in that error.
     */
-  def select(spec: Option[String], what: String): Seq[(String, Query)] = {
-    val all = SparkEntry.queries
+  def select(spec: Option[String], what: String): Seq[QueryDef] = {
     val named = spec.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = named -- all.keySet
+    val unknown = named -- SparkEntry.registry.map(_.name)
     require(unknown.isEmpty,
       s"$what names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    val names = if (named.isEmpty) all.keySet else named
-    names.toSeq.sorted.map(n => n -> all(n))
+    SparkEntry.registry.filter(d => named.isEmpty || named(d.name)).sortBy(_.name)
   }
 
   /** `SPARK_GRAFT_ONLY`'s selection (see [[select]]). */
-  def only(): Seq[(String, Query)] =
+  def only(): Seq[QueryDef] =
     select(sys.env.get("SPARK_GRAFT_ONLY"), "SPARK_GRAFT_ONLY")
 
   /** Tranche `i/N`: the i-th (0-based) of N contiguous slices of `all`,

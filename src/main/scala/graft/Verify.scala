@@ -1,10 +1,20 @@
 package graft
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+
+import org.apache.hadoop.fs.Path
+
+import graft.queries.QueryDef
+
+/** Correctness dump: each selected query's result → parquet under
+  * `<outDir>/<name>`, plus `oracle_sql.json` with the oracles of the
+  * same queries, for the DuckDB compare (`tools/oracle_check.py`).
   *
   * Usage: runMain graft.Verify <sfDir> <outDir>; `SPARK_GRAFT_ONLY`
-  * selects a subset ([[Suite.select]]).
+  * selects a subset ([[Suite.select]]). A query's result directory is
+  * deleted before it runs, so a query that fails leaves no result behind
+  * and the compare reports it missing instead of matching an earlier
+  * run's output.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -15,11 +25,14 @@ object Verify {
     // slots.
     val spark = Suite.session("spark.cleaner.periodicGC.interval" -> "60s")
     new java.io.File(outDir).mkdirs()
+    val selected = Suite.only()
     // the runner applies each query's conf overlay here too, so the
     // oracle gate checks the exact configuration the bench runs
-    Suite.only().foreach { case (name, fn) =>
+    selected.foreach { case QueryDef(name, fn, _) =>
+      val out = new Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
       Suite.run(spark, sfDir, name, fn) {
-        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        _.coalesce(1).write.mode("overwrite").parquet(out.toString)
       }.left.foreach { e =>
         // class name too: ParseException and friends can have a null/empty
         // message, which made a real failure look blank in the round log
@@ -28,8 +41,8 @@ object Verify {
       }
     }
     import Suite.json
-    val jsonText = SparkEntry.oracleSql
-      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    val jsonText = selected
+      .map(d => s"${json(d.name)}: ${json(d.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonText)
     spark.stop()
   }

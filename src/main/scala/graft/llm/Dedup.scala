@@ -626,11 +626,6 @@ object Dedup {
     train.join(contaminated, Seq("doc_id"), "left_anti")
   }
 
-  /** Per-mille hash bucket of `salt ++ id` via the portable 28-bit md5
-    * prefix — the ONE place the bucket recipe lives; split assignment
-    * and mixture sampling derive from it with different salts so their
-    * decisions stay independent.
-    */
   /** THE portable hash-bucket recipe (28-bit md5 prefix mod `modulus`)
     * — every bucket derivation (splits, mixture sampling, the
     * inverted-index partition key) delegates here so the Spark, DuckDB
@@ -649,6 +644,11 @@ object Dedup {
           key.cast("string")),
         org.apache.spark.sql.catalyst.expressions.Literal(modulus)))
 
+  /** Per-mille hash bucket of `salt ++ id` via the portable 28-bit md5
+    * prefix — the ONE place the bucket recipe lives; split assignment
+    * and mixture sampling derive from it with different salts so their
+    * decisions stay independent.
+    */
   private[graft] def hashBucket1000(id: Column, salt: String): Column =
     hashBucket(concat(lit(salt), id.cast("string")), 1000L)
 

@@ -460,18 +460,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Exact near-dup pair set: EVERY pair with cosine ≥ `minCosine` —
-    * the ground truth the LSH candidate generators approximate. O(n²),
-    * so this is the sf-scale VERIFICATION side of a recall gate (at
-    * 100 TB you run it on a deterministic sample, never the full
-    * corpus); the production path stays the bucketed LSH join.
-    *
-    * Each vector is normalized ONCE (n rows), so the n² inner loop is a
-    * single fused dot per pair instead of dot + two norms — 3× less
-    * arithmetic where it actually multiplies. Zero-norm vectors have no
-    * cosine and are dropped up front (the un-normalized spelling drops
-    * them too: NaN never clears the threshold).
-    */
   /** Unit-normalized (vec_id, vec) frame, materialized BEFORE any pair
     * join: `transform` is a higher-order function (CodegenFallback),
     * and left in the plan Catalyst collapses it into the join
@@ -500,6 +488,18 @@ object Similarity {
       .filter(col("cos") >= minCosine)
       .orderBy("vec_a", "vec_b")
 
+  /** Exact near-dup pair set: EVERY pair with cosine ≥ `minCosine` —
+    * the ground truth the LSH candidate generators approximate. O(n²),
+    * so this is the sf-scale VERIFICATION side of a recall gate (at
+    * 100 TB you run it on a deterministic sample, never the full
+    * corpus); the production path stays the bucketed LSH join.
+    *
+    * Each vector is normalized ONCE (n rows), so the n² inner loop is a
+    * single fused dot per pair instead of dot + two norms — 3× less
+    * arithmetic where it actually multiplies. Zero-norm vectors have no
+    * cosine and are dropped up front (the un-normalized spelling drops
+    * them too: NaN never clears the threshold).
+    */
   def exactCosinePairs(emb: DataFrame, minCosine: Double): DataFrame = {
     val v = normalizedVecs(emb)
     thresholdPairs(
@@ -798,21 +798,17 @@ object Similarity {
         col("band.band_idx"), col("band.band_key"))
   }
 
-  /** Embedding near-dup pairs via SIGN-projection LSH: bit i =
-    * (v · r_i > 0) for the deterministic ±1 projections above; bands of
-    * `bitsPerBand` bits equi-join candidates (bucketed, never
-    * all-pairs), then exact fused cosine filters at `minCosine`.
-    * Detection probability for angle θ: p_bit = 1 − θ/π, band p_bit^r,
-    * any-of-b bands 1−(1−p_bit^r)^b — ~87% per true pair at cos 0.9
-    * with 6×8 bits, but only ~15% at cos 0.45 (sign bits barely beat
-    * coin flips there; shorter bands would recover recall only by
-    * surrendering selectivity). Use THIS operator for the
-    * high-similarity dedup regime; [[cosineNearDupPairs]] (euclidean
-    * LSH) is the recall workhorse at moderate thresholds. What this one
-    * uniquely offers: full DuckDB verifiability — the oracle inlines
-    * the same projections — unlike the seeded
-    * BucketedRandomProjectionLSH path.
+  /** The banding step table — THE single source of truth: each entry is
+    * (maxRows, nBits, bitsPerBand); the first row whose maxRows covers
+    * the corpus wins. The DuckDB oracle's CASE over count(*)
+    * ([[graft.queries.LlmQueries]]) is GENERATED from this sequence, so
+    * a threshold edit here moves both engines together — a hand-copied
+    * SQL constant desyncs query and oracle at exactly one branch
+    * boundary, which the sf0.01 gate cannot catch.
     */
+  val signLshSteps: Seq[(Long, Int, Int)] =
+    Seq((16384L, 48, 8), (262144L, 96, 12), (Long.MaxValue, 160, 16))
+
   /** Corpus-size-adaptive (nBits, bitsPerBand) for the sign-LSH pair
     * join. Candidate volume is ~n²·b/2^r — with FIXED banding it grows
     * quadratically in the corpus (measured: the registered query at
@@ -829,21 +825,25 @@ object Similarity {
     * at every scale, not just at the gate SFs (verified at sf1, where
     * the 20k-vector corpus takes the middle branch).
     */
-  /** The banding step table — THE single source of truth: each entry is
-    * (maxRows, nBits, bitsPerBand); the first row whose maxRows covers
-    * the corpus wins. The DuckDB oracle's CASE over count(*)
-    * ([[graft.queries.LlmQueries]]) is GENERATED from this sequence, so
-    * a threshold edit here moves both engines together — a hand-copied
-    * SQL constant desyncs query and oracle at exactly one branch
-    * boundary, which the sf0.01 gate cannot catch.
-    */
-  val signLshSteps: Seq[(Long, Int, Int)] =
-    Seq((16384L, 48, 8), (262144L, 96, 12), (Long.MaxValue, 160, 16))
-
   def signLshParams(n: Long): (Int, Int) =
     signLshSteps.collectFirst { case (m, b, r) if n <= m => (b, r) }.get
 
-  /** @param nRows precomputed corpus row count (an index build reads
+  /** Embedding near-dup pairs via SIGN-projection LSH: bit i =
+    * (v · r_i > 0) for the deterministic ±1 projections above; bands of
+    * `bitsPerBand` bits equi-join candidates (bucketed, never
+    * all-pairs), then exact fused cosine filters at `minCosine`.
+    * Detection probability for angle θ: p_bit = 1 − θ/π, band p_bit^r,
+    * any-of-b bands 1−(1−p_bit^r)^b — ~87% per true pair at cos 0.9
+    * with 6×8 bits, but only ~15% at cos 0.45 (sign bits barely beat
+    * coin flips there; shorter bands would recover recall only by
+    * surrendering selectivity). Use THIS operator for the
+    * high-similarity dedup regime; [[cosineNearDupGated]] (the blocked
+    * exact scan) covers moderate thresholds. What this one
+    * uniquely offers: full DuckDB verifiability — the oracle inlines
+    * the same projections — unlike the seeded
+    * BucketedRandomProjectionLSH path.
+    *
+    * @param nRows precomputed corpus row count (an index build reads
     *   this from table metadata/statistics). When None, the builder
     *   runs ONE eager 1-row count job at DataFrame-construction time —
     *   note that merely building the plan (e.g. for explain/plan-shape
@@ -909,60 +909,34 @@ object Similarity {
       .limit(k)
   }
 
-  /** Embedding-cosine near-duplicate pairs via MLlib euclidean-LSH
-    * buckets — RETIRED from the registered gate, kept as the measured
-    * comparison path ([[graft.tools.RecallProbe]]). Round-11 audit: on
-    * unit vectors MLlib's normalized projection directions give
-    * projections with σ ≈ d^-1/2 ≈ 0.125, so bucketLength 1.0 puts
-    * essentially the whole corpus in ONE bucket per table — the join
-    * degenerates to a cartesian through a single hot key (45 s at sf1
-    * vs 8.8 s for [[exactCosinePairs]]' shuffle-free broadcast scan),
-    * and its high measured recall was brute force in disguise, not
-    * hashing. See [[cosineNearDupGated]] for the full phase-diagram
-    * measurement (no hash family prunes at a bulk-tail threshold).
-    *
-    * Two plan choices still worth keeping on record: (a) the LSH
-    * self-join carries ONLY (vec_id, features) — dragging the raw
-    * array column through the per-hash-table explode + distinct
-    * multiplies shuffle bytes by the table count; (b) cosine is derived
-    * algebraically from the join's own euclidean distance and two
-    * precomputed per-vector norms (cos = (|a|²+|b|²−d²) / 2|a||b|) —
-    * no per-pair array fold at all.
+  /** (maxRows, cells) step table — single source of truth shared with
+    * the oracle's generated CASE, same contract as [[signLshSteps]].
     */
-  def cosineNearDupPairs(emb: DataFrame, maxDistance: Double = 4.0,
-      minCosine: Double = 0.9): DataFrame = {
-    val vecs = emb.select(col("vec_id"),
-      array_to_vector(col("embedding")).as("features"))
-    // param sweep at sf0.1 (truth: 920 qualifying pairs): 4 tables find
-    // 906 in ~10s, 2 tables find 905 in ~2.4s — the second table buys
-    // ~nothing here; candidate volume scales with table count
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("buckets")
-      .setBucketLength(1.0).setNumHashTables(2).setSeed(42L)
-    val model = lsh.fit(vecs)
-    val pairs = model.approxSimilarityJoin(vecs, vecs, maxDistance, "dist")
-      .filter(col("datasetA.vec_id") < col("datasetB.vec_id"))
-      .select(
-        col("datasetA.vec_id").as("vec_a"),
-        col("datasetB.vec_id").as("vec_b"),
-        col("dist"))
-    // per-vector norms are an O(corpus) side — a forced broadcast() here
-    // would OOM the driver at 100 TB, so this is a plain equi-join on
-    // vec_id (and the pair side is the small one anyway; Catalyst/AQE
-    // broadcasts whichever side genuinely fits)
-    val v = dbl(col("embedding"))
-    val norms = emb.select(col("vec_id"), sqrt(dot(v, v)).as("norm"))
-    pairs
-      .join(norms.select(col("vec_id").as("vec_a"), col("norm").as("na")), "vec_a")
-      .join(norms.select(col("vec_id").as("vec_b"), col("norm").as("nb")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        bround(
-          (col("na") * col("na") + col("nb") * col("nb")
-            - col("dist") * col("dist")) / (lit(2.0) * col("na") * col("nb")),
-          6).as("cos"))
-      .filter(col("cos") >= minCosine)
-      .orderBy("vec_a", "vec_b")
-  }
+  val semDedupCellSteps: Seq[(Long, Int)] =
+    Seq((16384L, 16), (65536L, 64), (262144L, 256), (Long.MaxValue, 1024))
+
+  /** Corpus-size-adaptive quantizer cell count for [[semDedupDropped]]:
+    * per-cell pair volume is ~(n/k)²·k = n²/k, so a FIXED k grows
+    * quadratically with the corpus (measured: the registered query at
+    * k=16 took 3.4 s on 20k vectors, 521 s on 200k). Cells step with
+    * count(*) at the same power-of-two style thresholds the sign-LSH
+    * banding uses, and the oracle computes the same CASE — SemDedup's
+    * own knob is exactly this cluster count (Abbas et al. 2023 scale k
+    * with the corpus for the same reason). Gate SFs (≤16384 vectors)
+    * keep k=16, so small-scale results are unchanged.
+    */
+  def semDedupCells(n: Long): Int =
+    semDedupCellSteps.collectFirst { case (m, k) if n <= m => k }.get
+
+  /** [[semDedupDropped]] with the cell count chosen from the corpus
+    * size. `nRows` carries the same precomputed-count contract as
+    * [[signLshNearDupPairs]]: None runs one eager count job at
+    * construction time.
+    */
+  def semDedupDroppedAuto(emb: DataFrame, minCosine: Double = 0.35,
+      nRows: Option[Long] = None): DataFrame =
+    semDedupDropped(emb, semDedupCells(nRows.getOrElse(emb.count())),
+      minCosine)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication INSIDE coarse-quantizer cells — assign every vector
@@ -980,35 +954,6 @@ object Similarity {
     * n² pairs) and is checkpointed so the assignment window isn't
     * re-executed on both sides of the self-join.
     */
-  /** Corpus-size-adaptive quantizer cell count for [[semDedupDropped]]:
-    * per-cell pair volume is ~(n/k)²·k = n²/k, so a FIXED k grows
-    * quadratically with the corpus (measured: the registered query at
-    * k=16 took 3.4 s on 20k vectors, 521 s on 200k). Cells step with
-    * count(*) at the same power-of-two style thresholds the sign-LSH
-    * banding uses, and the oracle computes the same CASE — SemDedup's
-    * own knob is exactly this cluster count (Abbas et al. 2023 scale k
-    * with the corpus for the same reason). Gate SFs (≤16384 vectors)
-    * keep k=16, so small-scale results are unchanged.
-    */
-  /** (maxRows, cells) step table — single source of truth shared with
-    * the oracle's generated CASE, same contract as [[signLshSteps]].
-    */
-  val semDedupCellSteps: Seq[(Long, Int)] =
-    Seq((16384L, 16), (65536L, 64), (262144L, 256), (Long.MaxValue, 1024))
-
-  def semDedupCells(n: Long): Int =
-    semDedupCellSteps.collectFirst { case (m, k) if n <= m => k }.get
-
-  /** [[semDedupDropped]] with the cell count chosen from the corpus
-    * size. `nRows` carries the same precomputed-count contract as
-    * [[signLshNearDupPairs]]: None runs one eager count job at
-    * construction time.
-    */
-  def semDedupDroppedAuto(emb: DataFrame, minCosine: Double = 0.35,
-      nRows: Option[Long] = None): DataFrame =
-    semDedupDropped(emb, semDedupCells(nRows.getOrElse(emb.count())),
-      minCosine)
-
   def semDedupDropped(emb: DataFrame, nlist: Int = 16,
       minCosine: Double = 0.35): DataFrame = {
     val v = emb.select(col("vec_id"), dbl(col("embedding")).as("vec"))

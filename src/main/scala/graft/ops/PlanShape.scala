@@ -109,13 +109,6 @@ object PlanShape {
     case _ => p +: p.children.flatMap(executedNodes)
   }
 
-  /** AQE skew-join evidence from an executed DataFrame: the number of
-    * shuffled joins the runtime flagged `isSkewJoin`, and the total
-    * [[PartialReducerPartitionSpec]] count across all adaptive shuffle
-    * reads (each is one split slice of a skewed reducer partition —
-    * > the number of skewed partitions when AQE fans one hot partition
-    * out over several map ranges).
-    */
   /** Capture registry for streaming micro-batch plan shapes.
     *
     * The batch gate fingerprints a DataFrame before running it; a
@@ -149,6 +142,13 @@ object PlanShape {
     }
   }
 
+  /** AQE skew-join evidence from an executed DataFrame: the number of
+    * shuffled joins the runtime flagged `isSkewJoin`, and the total
+    * [[PartialReducerPartitionSpec]] count across all adaptive shuffle
+    * reads (each is one split slice of a skewed reducer partition —
+    * > the number of skewed partitions when AQE fans one hot partition
+    * out over several map ranges).
+    */
   def skewJoinStats(df: DataFrame): (Int, Int) = {
     val ns = executedNodes(df.queryExecution.executedPlan)
     val skewJoins = ns.count {

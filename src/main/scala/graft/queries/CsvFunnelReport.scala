@@ -218,4 +218,20 @@ object CsvFunnelReport {
          |  WHERE entity_id = '$entity'),
          |w AS (SELECT $wide FROM stg, otp, dsc, fi)""".stripMargin)
   }
+
+  val defs: Seq[QueryDef] = Seq(
+    // CSV source layer end-to-end (path templating, month glob, range
+    // post-filter, entity pushdown) over a generated on-disk fixture
+    // in the reference's directory layout, oracle-checked by DuckDB
+    // read_csv over the same files.
+    QueryDef("csv_funnel_report", query, oracle),
+    // same report over the at-scale layout: stages ingested once as a
+    // date=-partitioned parquet table (with a decoy out-of-range day)
+    // and pruned by a planned partition predicate, not path strings;
+    // it must reproduce the CSV-path result exactly, so one oracle
+    // serves both
+    QueryDef("csv_funnel_partitioned", partitionedQuery, oracle),
+    // per-file provenance via the _metadata hidden column, against
+    // DuckDB read_csv(filename = true) over the same files
+    QueryDef("file_lineage", lineageQuery, lineageOracle))
 }

@@ -28,16 +28,6 @@ object FunnelOverEvents {
   private val statusMap: Seq[(String, String)] = Seq(
     "purchase" -> "Success", "error" -> "Failed", "view" -> "Not Attempted")
 
-  /** ONE scan of events computes all 21 aggregates (11 stage + 3 otp +
-    * 5 discovery + 2 fi counts) as conditional counts in a single
-    * HashAggregate, then projects the wide funnel metrics — versus the
-    * naive four-frame build, which scans the fact table four times. At
-    * 100 TB that is 4 passes vs 1. Cast chains replicate the per-source
-    * aggregate paths exactly (stage counts travel string→double→long,
-    * the raw-CSV truncation route), so results are bit-identical to
-    * [[FunnelTable.buildFromRaw]] — LlmSpec-equivalent paths are covered
-    * by FunnelTableSpec; the DuckDB oracle pins this one.
-    */
   /** The 21 conditional aggregates (11 stage + 3 otp + 5 discovery + 2
     * fi) — ONE shared definition feeds the batch path, the streaming
     * path, and (via [[oracle]]'s generated SQL) the DuckDB twin.
@@ -65,6 +55,16 @@ object FunnelOverEvents {
       }
   }
 
+  /** ONE scan of events computes all 21 aggregates (11 stage + 3 otp +
+    * 5 discovery + 2 fi counts) as conditional counts in a single
+    * HashAggregate, then projects the wide funnel metrics — versus the
+    * naive four-frame build, which scans the fact table four times. At
+    * 100 TB that is 4 passes vs 1. Cast chains replicate the per-source
+    * aggregate paths exactly (stage counts travel string→double→long,
+    * the raw-CSV truncation route), so results are bit-identical to
+    * [[FunnelTable.buildFromRaw]] — LlmSpec-equivalent paths are covered
+    * by FunnelTableSpec; the DuckDB oracle pins this one.
+    */
   def query(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val aggs = funnelAggs
@@ -178,4 +178,12 @@ object FunnelOverEvents {
          |  count(*) FILTER (WHERE event_type = 'error') AS fi_f FROM events),
          |w AS (SELECT $wide FROM stg, otp, dsc, fi)""".stripMargin)
   }
+
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("funnel_table", query, oracle),
+    // the funnel aggregation run as a real Structured Streaming query
+    // (readStream → global complete-mode agg → memory sink), hash-
+    // checked against the SAME oracle as the batch funnel_table:
+    // stream/batch parity IS the claim
+    QueryDef("stream_funnel_table", streamQuery, oracle))
 }

@@ -45,7 +45,7 @@ object Inference {
       .agg(count(lit(1)).as("x"))
       .localCheckpoint()
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // Split conformal prediction (Vovk; the distribution-free
     // prediction-interval recipe an ML eval pipeline runs at release
     // gates): calibrate on even order keys — residual = |price −
@@ -58,7 +58,7 @@ object Inference {
     // model is a 5-row broadcast; the order statistic rides
     // [[graft.ops.DistributedRank.withRowNumber]] (bucketed — no
     // single-partition sort); coverage is one more map-side aggregate.
-    "conformal_threshold" -> ((s, dir) => {
+    QueryDef("conformal_threshold", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         col("o_custkey"),
         bround(col("o_totalprice") * lit(100)).cast("long").as("cents"))
@@ -93,7 +93,36 @@ object Inference {
         col("n_test"), col("covered"),
         round(col("covered").cast("double")
           / col("n_test").cast("double"), 6).as("coverage"))
-    }),
+    },
+      // the order statistic is a plain row_number here (DuckDB sorts
+      // globally anyway); k = ⌈0.9(n+1)⌉ in exact integers
+      """WITH j AS (SELECT o_orderkey,
+        |    CAST(round_even(o_totalprice * 100, 0) AS BIGINT) AS cents,
+        |    c_mktsegment AS seg
+        |  FROM orders JOIN customer ON o_custkey = c_custkey),
+        |cal AS (SELECT * FROM j WHERE o_orderkey % 2 = 0),
+        |mu AS (SELECT seg,
+        |    CAST(round_even(CAST(sum(cents) AS DOUBLE) / count(*), 0)
+        |      AS BIGINT) AS m
+        |  FROM cal GROUP BY 1),
+        |r AS (SELECT o_orderkey, abs(cents - m) AS r
+        |  FROM cal JOIN mu USING (seg)),
+        |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_calib,
+        |    CAST(((count(*) + 1) * 9 + 9) // 10 AS BIGINT) AS k
+        |  FROM r),
+        |rk AS (SELECT r,
+        |    row_number() OVER (ORDER BY r, o_orderkey) AS rn FROM r),
+        |q AS (SELECT n_calib, k, r AS q_cents FROM rk, nk WHERE rn = k),
+        |ts AS (SELECT abs(cents - m) AS r FROM j JOIN mu USING (seg)
+        |  WHERE o_orderkey % 2 = 1)
+        |SELECT max(q.n_calib) AS n_calib, max(q.k) AS k,
+        |  max(q.q_cents) AS q_cents,
+        |  CAST(count(*) AS BIGINT) AS n_test,
+        |  CAST(sum(CASE WHEN ts.r <= q.q_cents THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS covered,
+        |  round(CAST(sum(CASE WHEN ts.r <= q.q_cents THEN 1 ELSE 0 END)
+        |      AS DOUBLE) / count(*), 6) AS coverage
+        |FROM ts, q""".stripMargin),
     // Decision-stump training: the best Gini split of order price
     // (binned to a bounded $1000 threshold grid) against a binary
     // label (BUILDING-segment customer) — the inner loop of
@@ -104,7 +133,7 @@ object Inference {
     // 2/n·(pL(nL−pL)/nL + pR(nR−pR)/nR) stays in exact integers until
     // one micro-quantized double chain per bin. Top-5 splits reported;
     // at 100 TB only the first aggregate touches data.
-    "gini_split" -> ((s, dir) => {
+    QueryDef("gini_split", (s, dir) => {
       val o = t(s, dir, "orders")
         .select(col("o_custkey"),
           bround(col("o_totalprice") * lit(100)).cast("long").as("cents"))
@@ -135,7 +164,31 @@ object Inference {
           gini.as("gini_micros"))
         .orderBy(col("gini_micros"), col("bin"))
         .limit(5)
-    }),
+    },
+      // same bin grid, same cumulative, same integer-exact Gini chain
+      """WITH o AS (SELECT o_custkey,
+        |    CAST(round_even(o_totalprice * 100, 0) AS BIGINT) // 100000
+        |      AS bin
+        |  FROM orders),
+        |c AS (SELECT c_custkey AS o_custkey,
+        |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS y
+        |  FROM customer),
+        |b AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(y) AS BIGINT) AS pos
+        |  FROM o JOIN c USING (o_custkey) GROUP BY 1),
+        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
+        |    CAST(sum(pos) AS BIGINT) AS pt FROM b),
+        |cum AS (SELECT bin,
+        |    CAST(sum(n) OVER (ORDER BY bin) AS BIGINT) AS nl,
+        |    CAST(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS pl
+        |  FROM b)
+        |SELECT bin, nl, pl,
+        |  CAST(round_even(2000000.0 / nt *
+        |    (CAST(pl AS DOUBLE) * (nl - pl) / nl
+        |      + CAST(pt - pl AS DOUBLE) * ((nt - nl) - (pt - pl))
+        |        / (nt - nl)), 0) AS BIGINT) AS gini_micros
+        |FROM cum, t WHERE nl < nt
+        |ORDER BY gini_micros, bin LIMIT 5""".stripMargin),
     // Mann–Whitney U rank-sum test (purchase vs view event values) —
     // the nonparametric sibling of welch_ttest. Computed entirely on
     // the DISTINCT-VALUE GRID (the ks_test idiom): one hash-agg to the
@@ -160,7 +213,7 @@ object Inference {
     // (3 return flags would otherwise mean 3 single-partition sorts
     // over a near-unique price grid at scale). Ranks are exact
     // integers either way, so the oracle keeps its plain window.
-    "spearman_corr" -> ((s, dir) => {
+    QueryDef("spearman_corr", (s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_returnflag").as("g"),
         col("l_quantity").as("x"), col("l_extendedprice").as("y"))
       def ranks(c: String): DataFrame = {
@@ -209,7 +262,38 @@ object Inference {
               / (sqrt(dx.cast("double")) * sqrt(dy.cast("double")))), 6)
             .as("rho"))
         .orderBy("returnflag")
-    }),
+    },
+      """WITH li AS (SELECT l_returnflag AS g, l_quantity AS x,
+        |    l_extendedprice AS y FROM lineitem),
+        |gx AS (SELECT g, x, count(*) AS t FROM li GROUP BY 1, 2),
+        |rx AS (SELECT g, x, 2 * coalesce(sum(t) OVER (PARTITION BY g
+        |    ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |    0) + t + 1 AS r2x FROM gx),
+        |gy AS (SELECT g, y, count(*) AS t FROM li GROUP BY 1, 2),
+        |ry AS (SELECT g, y, 2 * coalesce(sum(t) OVER (PARTITION BY g
+        |    ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |    0) + t + 1 AS r2y FROM gy),
+        |j AS (SELECT li.g, r2x, r2y FROM li
+        |  JOIN rx ON rx.g = li.g AND rx.x = li.x
+        |  JOIN ry ON ry.g = li.g AND ry.y = li.y),
+        |m AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(CAST(r2x AS HUGEINT)) AS HUGEINT) AS sx,
+        |    CAST(sum(CAST(r2y AS HUGEINT)) AS HUGEINT) AS sy,
+        |    CAST(sum(CAST(r2x AS HUGEINT) * r2x) AS HUGEINT) AS sxx,
+        |    CAST(sum(CAST(r2y AS HUGEINT) * r2y) AS HUGEINT) AS syy,
+        |    CAST(sum(CAST(r2x AS HUGEINT) * r2y) AS HUGEINT) AS sxy
+        |  FROM j GROUP BY 1),
+        |f AS (SELECT g, n,
+        |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
+        |    CAST(n AS HUGEINT) * sxx - sx * sx AS dx,
+        |    CAST(n AS HUGEINT) * syy - sy * sy AS dy
+        |  FROM m)
+        |SELECT g AS returnflag, n,
+        |  round_even(CASE WHEN dx > 0 AND dy > 0 THEN
+        |    CAST(num AS DOUBLE)
+        |    / (sqrt(CAST(dx AS DOUBLE)) * sqrt(CAST(dy AS DOUBLE)))
+        |    END, 6) AS rho
+        |FROM f ORDER BY returnflag""".stripMargin),
 
     // Additive decomposition of the daily series: 7-day centered
     // moving-average trend (ROWS frame, full windows only), day-of-week
@@ -220,7 +304,7 @@ object Inference {
     // so the decomposition is bit-stable across engines and partition
     // orders. The global window is over the bounded daily grid, never
     // the corpus.
-    "seasonal_decompose" -> ((s, dir) => {
+    QueryDef("seasonal_decompose", (s, dir) => {
       val dd = dailySeries(s, dir)
       val w7 = Window.orderBy("day").rowsBetween(-3, 3)
       val t7 = dd
@@ -244,13 +328,34 @@ object Inference {
             col("x") * lit(1000000L) - col("trend_micros")
               - col("seasonal_micros")).as("resid_micros"))
         .orderBy("day")
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1),
+        |t AS (SELECT day, x,
+        |    count(*) OVER w AS cnt7, sum(x) OVER w AS sum7,
+        |    (day - DATE '2024-01-01') % 7 AS dow
+        |  FROM d WINDOW w AS (ORDER BY day
+        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+        |t2 AS (SELECT *, CASE WHEN cnt7 = 7 THEN
+        |    CAST(round_even(sum7 * 1000000.0 / 7.0, 0) AS BIGINT)
+        |    END AS trend_micros FROM t),
+        |s AS (SELECT dow, CAST(round_even(
+        |    CAST(sum(x * 1000000 - trend_micros) AS DOUBLE) / count(*),
+        |    0) AS BIGINT) AS seasonal_micros
+        |  FROM t2 WHERE trend_micros IS NOT NULL GROUP BY 1)
+        |SELECT strftime(t2.day, '%Y-%m-%d') AS day, t2.x,
+        |  t2.trend_micros, s.seasonal_micros,
+        |  CASE WHEN t2.trend_micros IS NOT NULL
+        |    AND s.seasonal_micros IS NOT NULL
+        |    THEN t2.x * 1000000 - t2.trend_micros - s.seasonal_micros
+        |    END AS resid_micros
+        |FROM t2 LEFT JOIN s USING (dow) ORDER BY day""".stripMargin),
 
     // Two-proportion z-test on per-user conversion between the two
     // hash-split halves (the A/B readout): exact integer counts up to
     // one final mirrored IEEE chain for the pooled z. One user-keyed
     // aggregate then scalars.
-    "prop_ztest" -> ((s, dir) => {
+    QueryDef("prop_ztest", (s, dir) => {
       val u = Tables.events(s, dir).groupBy("user_id")
         .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
@@ -268,9 +373,30 @@ object Inference {
         bround(when(col("n1") > 0 && col("n2") > 0 && se2 > 0.0,
           (col("x1").cast("double") / n1 - col("x2").cast("double") / n2)
             / sqrt(se2)), 6).as("z"))
-    }),
+    },
+      """WITH u AS (SELECT user_id,
+        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |      AS conv,
+        |    user_id % 2 AS grp
+        |  FROM events GROUP BY user_id),
+        |a AS (SELECT
+        |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(sum(CASE WHEN grp = 0 THEN conv ELSE 0 END) AS BIGINT) AS x1,
+        |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+        |    CAST(sum(CASE WHEN grp = 1 THEN conv ELSE 0 END) AS BIGINT) AS x2
+        |  FROM u)
+        |SELECT n1, x1, n2, x2,
+        |  round_even(CASE WHEN n1 > 0 AND n2 > 0 AND
+        |    (CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
+        |      * (1.0 - CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
+        |      * (1.0 / n1 + 1.0 / n2) > 0.0 THEN
+        |    (CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2)
+        |    / sqrt((CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
+        |      * (1.0 - CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
+        |      * (1.0 / n1 + 1.0 / n2)) END, 6) AS z
+        |FROM a""".stripMargin),
 
-    "mannwhitney_u" -> ((s, dir) => {
+    QueryDef("mannwhitney_u", (s, dir) => {
       val g = Tables.events(s, dir)
         .filter(col("event_type").isin("purchase", "view") &&
           col("value").isNotNull)
@@ -304,7 +430,43 @@ object Inference {
         bround(when(vr > 0.0,
           ((u1x2.cast("double") - n1d * n2d) / lit(2.0)) / sqrt(vr)), 6)
           .as("z"))
-    }),
+    },
+      """WITH g AS (SELECT event_type, value FROM events
+        |  WHERE event_type IN ('purchase', 'view') AND value IS NOT NULL),
+        |grid AS (SELECT value,
+        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c1,
+        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS c2
+        |  FROM g GROUP BY value),
+        |rk AS (SELECT c1, c2, c1 + c2 AS t,
+        |    COALESCE(sum(c1 + c2) OVER (ORDER BY value
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS cum
+        |  FROM grid),
+        |a AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
+        |    CAST(sum(c2) AS BIGINT) AS n2,
+        |    CAST(sum(CAST(c1 AS HUGEINT) * (2 * cum + t + 1)) AS HUGEINT)
+        |      AS r1x2,
+        |    CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS ties
+        |  FROM rk)
+        |SELECT n1, n2,
+        |  CAST(r1x2 - CAST(n1 AS HUGEINT) * (n1 + 1) AS BIGINT) AS u1_x2,
+        |  CASE WHEN CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 12.0 *
+        |      ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0) -
+        |        CAST(ties AS DOUBLE) /
+        |        ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE)) *
+        |         (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 1.0))) > 0.0
+        |  THEN round_even(
+        |    ((CAST(r1x2 - CAST(n1 AS HUGEINT) * (n1 + 1) AS DOUBLE) -
+        |       CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) / 2.0) /
+        |    sqrt(CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 12.0 *
+        |      ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0) -
+        |        CAST(ties AS DOUBLE) /
+        |        ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE)) *
+        |         (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 1.0)))), 6)
+        |  END AS z
+        |FROM a""".stripMargin),
 
     // Autocorrelation of the daily event-count series at lags 1..7 —
     // the seasonality diagnostic seasonal_dow eyeballs, made exact.
@@ -324,7 +486,7 @@ object Inference {
     // fail-loudly on overflow), one mirrored IEEE chain for the betas
     // and the sigmoid readout at the mean. One aggregation pass,
     // map-side combinable; the only reduce is a 1-row moment tuple.
-    "logistic_irls_step" -> ((s, dir) => {
+    QueryDef("logistic_irls_step", (s, dir) => {
       val ev = Tables.events(s, dir).select(
         when(col("event_type") === "purchase", 1L).otherwise(-1L).as("t"),
         bround(col("value") * lit(1000000.0)).cast("long").as("x"))
@@ -351,7 +513,38 @@ object Inference {
         when(det =!= 0.0, bround(b1 * lit(1000000.0), 6))
           .as("beta1_per_unit"),
         when(det =!= 0.0, bround(p, 6)).as("p_at_mean"))
-    }),
+    },
+      // same five HUGEINT moments, same closed-form 2×2 solve chain
+      """WITH ev AS (SELECT
+        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END AS t,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS x
+        |  FROM events),
+        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(t) AS BIGINT) AS st,
+        |    sum(CAST(x AS HUGEINT) * x) AS sxx,
+        |    sum(CAST(x AS HUGEINT) * t) AS sxt
+        |  FROM ev),
+        |c AS (SELECT n, sx, st,
+        |    CAST(CAST(n AS HUGEINT) * sxx
+        |      - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS det,
+        |    CAST(sxx * CAST(st AS HUGEINT)
+        |      - CAST(sx AS HUGEINT) * sxt AS DOUBLE) AS num0,
+        |    CAST(CAST(n AS HUGEINT) * sxt
+        |      - CAST(sx AS HUGEINT) * CAST(st AS HUGEINT) AS DOUBLE)
+        |      AS num1
+        |  FROM m)
+        |SELECT n,
+        |  CASE WHEN det <> 0 THEN CAST(round_even(
+        |    2.0 * num0 / det, 6) AS DOUBLE) END AS beta0,
+        |  CASE WHEN det <> 0 THEN CAST(round_even(
+        |    2.0 * num1 / det * 1000000.0, 6) AS DOUBLE) END
+        |    AS beta1_per_unit,
+        |  CASE WHEN det <> 0 THEN CAST(round_even(
+        |    1.0 / (1.0 + exp(-(2.0 * num0 / det
+        |      + 2.0 * num1 / det
+        |        * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))))), 6)
+        |    AS DOUBLE) END AS p_at_mean
+        |FROM c""".stripMargin),
 
     // Holt double exponential smoothing (α=0.5, β=0.3) of the daily
     // event count series, forecast horizons 1..7 — the level+trend
@@ -363,7 +556,7 @@ object Inference {
     // order, the recomputed lₜ inside bₜ) is mirrored token-for-token
     // in the oracle's recursive CTE, so the IEEE trajectories are
     // identical and only the readout rounds.
-    "holt_linear" -> ((s, dir) => {
+    QueryDef("holt_linear", (s, dir) => {
       val dd = dailySeries(s, dir)
       val ys = dd
         .agg(array_sort(collect_list(struct(col("day"),
@@ -390,7 +583,29 @@ object Inference {
           bround(col("l") + col("h").cast("double") * col("b"), 6)
             .as("forecast"))
         .orderBy("h")
-    }),
+    },
+      // the same fold as a single-row recursive CTE: state after prefix
+      // j, stepped by y_{j+1}; arithmetic mirrored node-for-node
+      """WITH RECURSIVE d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |s AS MATERIALIZED (SELECT CAST(x AS DOUBLE) AS y,
+        |    row_number() OVER (ORDER BY day) AS i
+        |  FROM d),
+        |hw(j, l, b) AS (
+        |  SELECT 1, (SELECT y FROM s WHERE i = 1),
+        |    (SELECT y FROM s WHERE i = 2) - (SELECT y FROM s WHERE i = 1)
+        |  UNION ALL
+        |  SELECT hw.j + 1,
+        |    0.5 * s.y + 0.5 * (hw.l + hw.b),
+        |    0.3 * (0.5 * s.y + 0.5 * (hw.l + hw.b) - hw.l) + 0.7 * hw.b
+        |  FROM hw JOIN s ON s.i = hw.j + 1),
+        |last AS (SELECT l, b FROM hw
+        |  WHERE j = (SELECT max(i) FROM s))
+        |SELECT CAST(h AS BIGINT) AS h, round_even(l, 6) AS level,
+        |  round_even(b, 6) AS trend,
+        |  round_even(l + CAST(h AS DOUBLE) * b, 6) AS forecast
+        |FROM last, range(1, 8) t(h) ORDER BY h""".stripMargin),
 
     // Haar wavelet decomposition of the first-16-day event-count
     // series — the multi-resolution summary next to acf (lag
@@ -402,7 +617,7 @@ object Inference {
     // shape: one day-keyed aggregate folds the corpus; the 4 pyramid
     // levels run on the 16-row grid (each a 2-to-1 keyed fold; signs
     // come from index parity, not row order).
-    "haar_decompose" -> ((s, dir) => {
+    QueryDef("haar_decompose", (s, dir) => {
       val grid = s.range(16).select(col("id").cast("int").as("d"))
       val daily = Tables.events(s, dir)
         .select(expr("datediff(to_date(ts), date'2024-01-01')").as("d"))
@@ -428,9 +643,33 @@ object Inference {
           col("d").as("idx"), lit("approx").as("kind"),
           col("x").as("coeff")))
         .orderBy("level", "kind", "idx")
-    }),
+    },
+      // unrolled 4-level integer pyramid; signs from index parity
+      {
+        val levels = (1 to 4).map { l =>
+          s""",
+             |l$l AS MATERIALIZED (SELECT i // 2 AS i,
+             |    CAST(sum(x) AS BIGINT) AS x,
+             |    CAST(sum(CASE WHEN i % 2 = 0 THEN x ELSE -x END)
+             |      AS BIGINT) AS det
+             |  FROM l${l - 1} GROUP BY 1)""".stripMargin
+        }.mkString
+        val dets = (1 to 4).map { l =>
+          s"""SELECT CAST($l AS INT) AS level, CAST(i AS INT) AS idx,
+             |  'detail' AS kind, det AS coeff FROM l$l""".stripMargin
+        }.mkString("\nUNION ALL\n")
+        s"""WITH daily AS (SELECT
+           |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS d,
+           |    CAST(count(*) AS BIGINT) AS x
+           |  FROM events GROUP BY 1),
+           |l0 AS (SELECT CAST(g.range AS INT) AS i, coalesce(x, 0) AS x
+           |  FROM range(16) g LEFT JOIN daily ON daily.d = g.range)$levels
+           |$dets
+           |UNION ALL SELECT 4, CAST(i AS INT), 'approx', x FROM l4
+           |ORDER BY level, kind, idx""".stripMargin
+      }),
 
-    "acf_daily" -> ((s, dir) => {
+    QueryDef("acf_daily", (s, dir) => {
       val dd = dailySeries(s, dir)
       val base = dd.agg(count(lit(1)).cast(D38).as("n"),
         sum("x").cast(D38).as("s"),
@@ -456,7 +695,32 @@ object Inference {
           bround(when(den =!= 0,
             num.cast("double") / den.cast("double")), 6).as("r"))
         .orderBy("lag")
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |base AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+        |    CAST(sum(x) AS HUGEINT) AS s,
+        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
+        |  FROM d),
+        |p AS (SELECT k.lag,
+        |    CAST(count(*) AS BIGINT) AS n_pairs,
+        |    CAST(sum(CAST(a.x AS HUGEINT) * b.x) AS HUGEINT) AS c,
+        |    CAST(sum(CAST(a.x AS HUGEINT)) AS HUGEINT) AS sa,
+        |    CAST(sum(CAST(b.x AS HUGEINT)) AS HUGEINT) AS sb
+        |  FROM d a
+        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) k
+        |  JOIN d b ON b.day = a.day + CAST(k.lag AS INTEGER)
+        |  GROUP BY 1)
+        |SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
+        |  CASE WHEN n * (n * sxx - s * s) <> 0 THEN
+        |    round_even(
+        |      CAST(n * n * c - n * s * (sa + sb) +
+        |        CAST(n_pairs AS HUGEINT) * s * s AS DOUBLE) /
+        |      CAST(n * (n * sxx - s * s) AS DOUBLE), 6)
+        |  END AS r
+        |FROM p CROSS JOIN base
+        |ORDER BY lag""".stripMargin),
 
     // CUSUM changepoint scan over the daily series: S_t = Σ_{i≤t}(x_i−x̄)
     // peaks at the day the level shifts — the temporal complement of the
@@ -464,7 +728,7 @@ object Inference {
     // n·cum_t − t·S is an exact integer for every prefix, so the argmax
     // (ties → earliest day) is engine-independent; the reported
     // statistic divides once at the end.
-    "cusum_changepoint" -> ((s, dir) => {
+    QueryDef("cusum_changepoint", (s, dir) => {
       val dd = dailySeries(s, dir)
       val tot = dd.agg(count(lit(1)).as("n"), sum("x").as("s"))
       val w = Window.orderBy("day")
@@ -482,7 +746,26 @@ object Inference {
           col("n").as("n_days"),
           bround(col("dev_n").cast("double") / col("n").cast("double"), 6)
             .as("cusum"))
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS HUGEINT) AS s
+        |  FROM d),
+        |c AS (SELECT day,
+        |    CAST(sum(x) OVER (ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS HUGEINT)
+        |      AS cum,
+        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
+        |  FROM d)
+        |SELECT strftime(day, '%Y-%m-%d') AS change_day, n AS n_days,
+        |  round_even(CAST(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * s
+        |      AS DOUBLE) / CAST(n AS DOUBLE), 6) AS cusum
+        |FROM c CROSS JOIN tot
+        |ORDER BY abs(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * s)
+        |  DESC, day ASC
+        |LIMIT 1""".stripMargin),
 
     // Theil–Sen robust trend of the daily series: the median of all
     // pairwise slopes (x_j−x_i)/(day_j−day_i). The pair join is
@@ -491,7 +774,7 @@ object Inference {
     // self-join at any data scale. Slopes quantize to integer
     // micro-units before the median; both engines interpolate the
     // even-count median identically ((a+b)/2 over exact integers).
-    "theilsen_trend" -> ((s, dir) => {
+    QueryDef("theilsen_trend", (s, dir) => {
       val dd = dailySeries(s, dir)
       val a = dd.select(col("day").as("da"), col("x").as("xa"))
       val b = dd.select(col("day").as("db"), col("x").as("xb"))
@@ -503,7 +786,18 @@ object Inference {
           expr("percentile(s_micro, 0.5)").as("med"))
         .select(col("n_pairs"),
           bround(col("med") / lit(1000000.0), 6).as("slope_per_day"))
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |sl AS (SELECT CAST(round_even(
+        |      CAST(b.x - a.x AS DOUBLE) / CAST(b.day - a.day AS DOUBLE)
+        |      * 1000000.0, 0) AS BIGINT) AS s_micro
+        |  FROM d a JOIN d b ON a.day < b.day)
+        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+        |  round_even(quantile_cont(CAST(s_micro AS DOUBLE), 0.5)
+        |    / 1000000.0, 6) AS slope_per_day
+        |FROM sl""".stripMargin),
 
     // Mutual information (and its normalized form) between order status
     // and priority — the strength-of-association companion to
@@ -513,7 +807,7 @@ object Inference {
     // ONE division chain yields nats. Absent cells contribute exactly 0
     // to MI (lim p→0 of p·ln p), so the sparse GROUP BY is already the
     // dense answer — no densification needed, unlike chi_square.
-    "mutual_info" -> ((s, dir) => {
+    QueryDef("mutual_info", (s, dir) => {
       val o = t(s, dir, "orders")
       val cell = o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("cxy"))
@@ -550,7 +844,48 @@ object Inference {
           bround(mi, 6).as("mi_nats"),
           bround(when(hxd * hyd > 0.0, mi / sqrt(hxd * hyd)), 6)
             .as("nmi"))
-    }),
+    },
+      """WITH cell AS (SELECT o_orderstatus, o_orderpriority,
+        |    CAST(count(*) AS BIGINT) AS cxy
+        |  FROM orders GROUP BY 1, 2),
+        |rowm AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cx
+        |  FROM orders GROUP BY 1),
+        |colm AS (SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cy
+        |  FROM orders GROUP BY 1),
+        |nt AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM orders),
+        |mi AS (SELECT CAST(sum(CAST(cxy AS HUGEINT) *
+        |      CAST(round_even(ln(
+        |        (CAST(cxy AS DOUBLE) * CAST(nn AS DOUBLE)) /
+        |        (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)))
+        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS mi_n
+        |  FROM cell JOIN rowm USING (o_orderstatus)
+        |    JOIN colm USING (o_orderpriority) CROSS JOIN nt),
+        |hx AS (SELECT CAST(count(*) AS BIGINT) AS levels_x,
+        |    CAST(sum(CAST(cx AS HUGEINT) *
+        |      CAST(round_even(ln(CAST(cx AS DOUBLE) / CAST(nn AS DOUBLE))
+        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS hx_n,
+        |    max(nn) AS nn
+        |  FROM rowm CROSS JOIN nt),
+        |hy AS (SELECT CAST(count(*) AS BIGINT) AS levels_y,
+        |    CAST(sum(CAST(cy AS HUGEINT) *
+        |      CAST(round_even(ln(CAST(cy AS DOUBLE) / CAST(nn AS DOUBLE))
+        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS hy_n
+        |  FROM colm CROSS JOIN nt)
+        |SELECT levels_x, levels_y,
+        |  round_even(CAST(mi_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |    / 1000000000000.0, 6) AS mi_nats,
+        |  CASE WHEN (-CAST(hx_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |        / 1000000000000.0) *
+        |      (-CAST(hy_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |        / 1000000000000.0) > 0.0 THEN
+        |    round_even((CAST(mi_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |        / 1000000000000.0) /
+        |      sqrt((-CAST(hx_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |          / 1000000000000.0) *
+        |        (-CAST(hy_n AS DOUBLE) / CAST(nn AS DOUBLE)
+        |          / 1000000000000.0)), 6)
+        |  END AS nmi
+        |FROM mi CROSS JOIN hx CROSS JOIN hy""".stripMargin),
 
     // Adamic–Adar link prediction over the supplier co-purchase graph:
     // suppliers sharing parts score Σ_p 1/ln(deg p) — rare shared parts
@@ -559,7 +894,7 @@ object Inference {
     // a web-scale corpus caps hub degrees first, the stop-gram move).
     // Per-part weights quantize to pico-units before the pair sum;
     // deg<2 parts drop (no pair, and ln 1 = 0 would divide by zero).
-    "adamic_adar" -> ((s, dir) => {
+    QueryDef("adamic_adar", (s, dir) => {
       val e = t(s, dir, "lineitem")
         .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
         .distinct()
@@ -585,7 +920,22 @@ object Inference {
             .as("aa_score"))
         .orderBy(col("aa_score").desc, col("sa").asc, col("sb").asc)
         .limit(20)
-    }),
+    },
+      """WITH e AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
+        |  FROM lineitem),
+        |degw AS (SELECT pk,
+        |    CAST(round_even(1000000000000.0 /
+        |      ln(CAST(count(*) AS DOUBLE)), 0) AS BIGINT) AS w_pico
+        |  FROM e GROUP BY pk HAVING count(*) >= 2)
+        |SELECT a.sk AS sa, b.sk AS sb,
+        |  CAST(count(*) AS BIGINT) AS n_common,
+        |  round_even(CAST(CAST(sum(w_pico) AS HUGEINT) AS DOUBLE)
+        |    / 1000000000000.0, 6) AS aa_score
+        |FROM e a JOIN degw USING (pk) JOIN e b USING (pk)
+        |WHERE a.sk < b.sk
+        |GROUP BY 1, 2
+        |ORDER BY aa_score DESC, sa ASC, sb ASC
+        |LIMIT 20""".stripMargin),
 
     // Asymmetric containment near-dup (|A∩B|/|A| ≥ 0.8): the
     // doc-inside-doc duplication class MinHash/Jaccard structurally
@@ -600,7 +950,7 @@ object Inference {
     // deterministic bucket, so the oracle replays the exact null
     // distribution and the p-value is bit-stable. Both engines spell
     // the identical IEEE mean chain.
-    "permutation_test" -> ((s, dir) => {
+    QueryDef("permutation_test", (s, dir) => {
       val J = 63
       val users = Tables.events(s, dir)
         .select(col("user_id"),
@@ -644,7 +994,43 @@ object Inference {
           col("n_perms"), col("n_ge"),
           bround((col("n_ge") + 1).cast("double")
             / (col("n_perms") + 1).cast("double"), 6).as("p_value"))
-    }),
+    },
+      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c,
+        |    CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
+        |      AS BIGINT) AS sv
+        |  FROM events GROUP BY 1),
+        |ob AS (SELECT abs(
+        |    CAST(sum(CASE WHEN arm = 0 THEN sv END) AS DOUBLE)
+        |      / CAST(sum(CASE WHEN arm = 0 THEN c END) AS DOUBLE)
+        |    - CAST(sum(CASE WHEN arm = 1 THEN sv END) AS DOUBLE)
+        |      / CAST(sum(CASE WHEN arm = 1 THEN c END) AS DOUBLE))
+        |    AS obs_d
+        |  FROM (SELECT u.*,
+        |      CAST(CAST('0x' || substr(md5('ab:' || user_id), 1, 7)
+        |        AS BIGINT) % 2 AS INT) AS arm
+        |    FROM u)),
+        |p AS (SELECT j, abs(
+        |    CAST(sum(CASE WHEN arm = 0 THEN sv END) AS DOUBLE)
+        |      / CAST(sum(CASE WHEN arm = 0 THEN c END) AS DOUBLE)
+        |    - CAST(sum(CASE WHEN arm = 1 THEN sv END) AS DOUBLE)
+        |      / CAST(sum(CASE WHEN arm = 1 THEN c END) AS DOUBLE))
+        |    AS d
+        |  FROM (SELECT u.*, t.j,
+        |      CAST(CAST('0x' || substr(md5('perm:' || t.j || ':'
+        |        || user_id), 1, 7) AS BIGINT) % 2 AS INT) AS arm
+        |    FROM u, range(0, 63) t(j))
+        |  GROUP BY 1)
+        |SELECT
+        |  CAST(round_even(max(ob.obs_d), 4) AS DOUBLE)
+        |    AS obs_diff_micros,
+        |  CAST(count(*) AS BIGINT) AS n_perms,
+        |  CAST(sum(CASE WHEN p.d >= ob.obs_d THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_ge,
+        |  CAST(round_even(
+        |    CAST(sum(CASE WHEN p.d >= ob.obs_d THEN 1 ELSE 0 END) + 1
+        |      AS DOUBLE)
+        |    / CAST(count(*) + 1 AS DOUBLE), 6) AS DOUBLE) AS p_value
+        |FROM p CROSS JOIN ob""".stripMargin),
 
     // Durbin–Watson autocorrelation diagnostic on the daily value
     // series per event type — the "are my residuals independent" check
@@ -655,7 +1041,7 @@ object Inference {
     // levels summed in DECIMAL(38,0), ONE IEEE division at the end.
     // DW ≈ 2 ⇒ independent; < 1 ⇒ strong positive autocorrelation.
     // The lag runs over the bounded per-type DAY grid, never raw rows.
-    "durbin_watson" -> ((s, dir) => {
+    QueryDef("durbin_watson", (s, dir) => {
       val d38 = "decimal(38,0)"
       val daily = Tables.events(s, dir)
         .groupBy(col("event_type"),
@@ -687,7 +1073,27 @@ object Inference {
                 chk(col("num"), "durbin_watson")).cast("double")
               / col("den").cast("double"), 6)).as("dw"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH daily AS (SELECT event_type,
+        |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS d,
+        |    CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
+        |      AS BIGINT) AS y
+        |  FROM events GROUP BY 1, 2),
+        |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(y) AS BIGINT) AS sy FROM daily GROUP BY 1),
+        |e AS (SELECT d.event_type, d.d, t.n,
+        |    CAST(t.n AS HUGEINT) * d.y - t.sy AS et
+        |  FROM daily d JOIN tot t USING (event_type)),
+        |l AS (SELECT event_type, n, et,
+        |    lag(et) OVER (PARTITION BY event_type ORDER BY d) AS ep
+        |  FROM e)
+        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_days,
+        |  CASE WHEN sum(et * et) <> 0 THEN
+        |    CAST(round_even(
+        |      CAST(sum(CASE WHEN ep IS NOT NULL
+        |        THEN (et - ep) * (et - ep) END) AS DOUBLE)
+        |      / CAST(sum(et * et) AS DOUBLE), 6) AS DOUBLE) END AS dw
+        |FROM l GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Weighted lower median — the quantity-weighted price midpoint per
     // return flag (impute_median's unweighted grid rule generalized to
@@ -695,7 +1101,7 @@ object Inference {
     // = smallest price whose cumulative weight clears ⌈W/2⌉. Prices
     // quantize to integer cents, weights to integer quantity cents, so
     // the cut is exact; the output is an actual data value.
-    "weighted_median" -> ((s, dir) => {
+    QueryDef("weighted_median", (s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_returnflag").as("g"),
         bround(col("l_extendedprice") * 100).cast("long").as("v"),
         bround(col("l_quantity") * 100).cast("long").as("wt"))
@@ -712,7 +1118,24 @@ object Inference {
           min(when(col("cum") >= expr("CAST((tw + 1) DIV 2 AS BIGINT)"),
             col("v"))).as("wmedian_cents"))
         .orderBy("g")
-    }),
+    },
+      """WITH li AS (SELECT l_returnflag AS g,
+        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS v,
+        |    CAST(round_even(l_quantity * 100, 0) AS BIGINT) AS wt
+        |  FROM lineitem),
+        |grid AS (SELECT g, v, CAST(sum(wt) AS BIGINT) AS w
+        |  FROM li GROUP BY 1, 2),
+        |cum AS (SELECT g, v, w, sum(w) OVER (PARTITION BY g ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM grid),
+        |tot AS (SELECT g, CAST(sum(w) AS BIGINT) AS tw,
+        |    CAST(count(*) AS BIGINT) AS n_prices FROM grid GROUP BY 1)
+        |SELECT c.g, max(t.tw) AS total_weight,
+        |  max(t.n_prices) AS n_prices,
+        |  CAST(min(CASE WHEN c.cum >= (t.tw + 1) // 2 THEN c.v END)
+        |    AS BIGINT) AS wmedian_cents
+        |FROM cum c JOIN tot t ON c.g = t.g
+        |GROUP BY c.g ORDER BY c.g""".stripMargin),
 
     // Quantile alignment — the quantile-normalization readout (the
     // batch-effect check run before pooling heterogeneous sources):
@@ -723,7 +1146,7 @@ object Inference {
     // global grid derives from the per-type grid by a second tiny agg
     // (one scan total), and the lower-quantile rule keeps every
     // output an actual data value — no interpolation ulps.
-    "quantile_align" -> ((s, dir) => {
+    QueryDef("quantile_align", (s, dir) => {
       val ev = t(s, dir, "events").select(col("event_type"),
         bround(col("value") * lit(1000000.0)).cast("long").as("v"))
       val grid = ev.groupBy("event_type", "v")
@@ -757,7 +1180,44 @@ object Inference {
           col("g10"), col("g50"), col("g90"),
           (col("q50") - col("g50")).as("shift50_micros"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH ev AS (SELECT event_type,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
+        |  FROM events),
+        |grid AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS c
+        |  FROM ev GROUP BY 1, 2),
+        |cumt AS (SELECT event_type, v, sum(c) OVER (
+        |    PARTITION BY event_type ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM grid),
+        |nt AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
+        |    CAST((10 * sum(c) + 99) // 100 AS BIGINT) AS rk10,
+        |    CAST((50 * sum(c) + 99) // 100 AS BIGINT) AS rk50,
+        |    CAST((90 * sum(c) + 99) // 100 AS BIGINT) AS rk90
+        |  FROM grid GROUP BY 1),
+        |qt AS (SELECT c.event_type,
+        |    min(CASE WHEN c.cum >= n.rk10 THEN c.v END) AS q10,
+        |    min(CASE WHEN c.cum >= n.rk50 THEN c.v END) AS q50,
+        |    min(CASE WHEN c.cum >= n.rk90 THEN c.v END) AS q90
+        |  FROM cumt c JOIN nt n USING (event_type) GROUP BY 1),
+        |ggrid AS (SELECT v, CAST(sum(c) AS BIGINT) AS c
+        |  FROM grid GROUP BY 1),
+        |cumg AS (SELECT v, sum(c) OVER (ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM ggrid),
+        |ng AS (SELECT CAST((10 * sum(c) + 99) // 100 AS BIGINT) AS rk10,
+        |    CAST((50 * sum(c) + 99) // 100 AS BIGINT) AS rk50,
+        |    CAST((90 * sum(c) + 99) // 100 AS BIGINT) AS rk90
+        |  FROM ggrid),
+        |qg AS (SELECT
+        |    min(CASE WHEN c.cum >= ng.rk10 THEN c.v END) AS g10,
+        |    min(CASE WHEN c.cum >= ng.rk50 THEN c.v END) AS g50,
+        |    min(CASE WHEN c.cum >= ng.rk90 THEN c.v END) AS g90
+        |  FROM cumg c CROSS JOIN ng)
+        |SELECT qt.event_type, qt.q10, qt.q50, qt.q90,
+        |  qg.g10, qg.g50, qg.g90,
+        |  qt.q50 - qg.g50 AS shift50_micros
+        |FROM qt CROSS JOIN qg ORDER BY qt.event_type""".stripMargin),
 
     // One exact ALS half-step — the distributed-recommender primitive:
     // with item factors FIXED (a deterministic integer embedding of the
@@ -771,7 +1231,7 @@ object Inference {
     // moments ride along as the audit witnesses. At 100 TB: one
     // shuffle on the user key, factors broadcast back for the next
     // half-step.
-    "als_step" -> ((s, dir) => {
+    QueryDef("als_step", (s, dir) => {
       val li = t(s, dir, "lineitem").select(
         col("l_suppkey").as("user_id"),
         (pmod(col("l_partkey"), lit(7)) - 3).as("y1"),
@@ -792,18 +1252,63 @@ object Inference {
           bround((col("a11") * col("b2") - col("a12") * col("b1"))
             .cast("double") / det.cast("double"), 6).as("x2"))
         .orderBy("user_id")
-    }),
+    },
+      """WITH li AS (SELECT l_suppkey AS user_id,
+        |    (l_partkey % 7) - 3 AS y1, (l_partkey % 5) - 2 AS y2,
+        |    CAST(round_even(l_quantity, 0) AS BIGINT) AS r
+        |  FROM lineitem),
+        |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(y1 * y1) + 1 AS BIGINT) AS a11,
+        |    CAST(sum(y1 * y2) AS BIGINT) AS a12,
+        |    CAST(sum(y2 * y2) + 1 AS BIGINT) AS a22,
+        |    CAST(sum(y1 * r) AS BIGINT) AS b1,
+        |    CAST(sum(y2 * r) AS BIGINT) AS b2
+        |  FROM li GROUP BY 1)
+        |SELECT user_id, n, a11, a12, a22, b1, b2,
+        |  CAST(round_even(CAST(a22 * b1 - a12 * b2 AS DOUBLE)
+        |    / CAST(a11 * a22 - a12 * a12 AS DOUBLE), 6) AS DOUBLE) AS x1,
+        |  CAST(round_even(CAST(a11 * b2 - a12 * b1 AS DOUBLE)
+        |    / CAST(a11 * a22 - a12 * a12 AS DOUBLE), 6) AS DOUBLE) AS x2
+        |FROM m ORDER BY user_id""".stripMargin),
 
-    "containment_neardup" -> ((s, dir) =>
+    QueryDef("containment_neardup", (s, dir) =>
       graft.llm.Dedup.containmentPairs(
-        t(s, dir, "documents").select(col("doc_id"), col("text")))),
+        t(s, dir, "documents").select(col("doc_id"), col("text"))),
+      """WITH tk AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+')
+        |    AS tk FROM documents),
+        |tok AS (SELECT DISTINCT doc_id,
+        |    CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS gram
+        |  FROM (
+        |    SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
+        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS gram
+        |    FROM tk WHERE len(tk) >= 3)),
+        |sz AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY 1),
+        |df AS (SELECT gram, count(*) AS df FROM tok GROUP BY 1),
+        |rk AS (SELECT tok.doc_id, tok.gram, sz.sz,
+        |    row_number() OVER (PARTITION BY tok.doc_id
+        |      ORDER BY df.df, tok.gram) AS rn
+        |  FROM tok JOIN df USING (gram) JOIN sz USING (doc_id)),
+        |pre AS (SELECT doc_id, gram FROM rk
+        |  WHERE rn <= sz - ceil(0.8 * sz) + 1),
+        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM pre a JOIN tok b
+        |  ON a.gram = b.gram AND a.doc_id <> b.doc_id),
+        |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
+        |  FROM cand c JOIN tok ta ON ta.doc_id = c.doc_a
+        |    JOIN tok tb ON tb.doc_id = c.doc_b AND ta.gram = tb.gram
+        |  GROUP BY 1, 2)
+        |SELECT i.doc_a, i.doc_b, CAST(inter AS BIGINT) AS inter,
+        |  round(CAST(inter AS DOUBLE) / sa.sz, 6) AS containment
+        |FROM inter i JOIN sz sa ON sa.doc_id = i.doc_a
+        |WHERE CAST(inter AS DOUBLE) / sa.sz >= 0.8
+        |ORDER BY doc_a, doc_b""".stripMargin),
 
     // Multiset set operations (the ALL twins of set_ops): INTERSECT ALL
     // keeps min(multiplicity), EXCEPT ALL subtracts multiplicities —
     // the semantics that matter when the key repeats (a customer with
     // three urgent orders is three rows, not one). Both execute as one
     // hash-partitioned count-compare per key, no row explosion.
-    "set_ops_all" -> ((s, dir) => {
+    QueryDef("set_ops_all", (s, dir) => {
       val o = t(s, dir, "orders")
       val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_custkey").as("custkey"))
@@ -813,7 +1318,20 @@ object Inference {
         .agg(count(lit(1)).as("both_all_cnt"))
         .crossJoin(urgent.exceptAll(fstatus)
           .agg(count(lit(1)).as("only_urgent_all_cnt")))
-    }),
+    },
+      """SELECT * FROM
+        |(SELECT CAST(count(*) AS BIGINT) AS both_all_cnt FROM (
+        |  SELECT o_custkey AS custkey FROM orders
+        |  WHERE o_orderpriority = '1-URGENT'
+        |  INTERSECT ALL
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))
+        |CROSS JOIN
+        |(SELECT CAST(count(*) AS BIGINT) AS only_urgent_all_cnt FROM (
+        |  SELECT o_custkey AS custkey FROM orders
+        |  WHERE o_orderpriority = '1-URGENT'
+        |  EXCEPT ALL
+        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))"""
+        .stripMargin),
 
     // Per-user behavioral diversity — Gini–Simpson index 1 − Σ(c/n)²
     // = (n² − Σc²)/n², an EXACT rational per user (unlike Shannon
@@ -822,7 +1340,7 @@ object Inference {
     // (specialists vs generalists) a personalization pipeline
     // computes corpus-wide. Two keyed aggregates, both on user_id —
     // one shuffle.
-    "user_diversity" -> ((s, dir) => {
+    QueryDef("user_diversity", (s, dir) => {
       val per = Tables.events(s, dir)
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
         .groupBy("user_id")
@@ -834,7 +1352,20 @@ object Inference {
       per.select(expr("CAST(d_micro DIV 10000 AS BIGINT)").as("pct"))
         .groupBy("pct").agg(count(lit(1)).as("n_users"))
         .orderBy("pct")
-    }),
+    },
+      """WITH pc AS (SELECT user_id, event_type,
+        |    CAST(count(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |pu AS (SELECT user_id, CAST(sum(c) AS BIGINT) AS n,
+        |    CAST(sum(c * c) AS BIGINT) AS c2
+        |  FROM pc GROUP BY 1),
+        |dm AS (SELECT CAST(round_even(1000000.0 *
+        |      CAST(n * n - c2 AS DOUBLE) / CAST(n * n AS DOUBLE), 0)
+        |      AS BIGINT) AS d_micro
+        |  FROM pu)
+        |SELECT d_micro // 10000 AS pct,
+        |  CAST(count(*) AS BIGINT) AS n_users
+        |FROM dm GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Burstiness index (Goh & Barabási) of each user's inter-event
     // times, B = (σ−μ)/(σ+μ) — equivalently (√(nQ−S²) − S)/(√(nQ−S²)
@@ -844,7 +1375,7 @@ object Inference {
     // clockwork, B→+1 is bursty; the per-user index buckets into a
     // 0.1-wide histogram. Users need ≥2 gaps. One user-keyed sort
     // feeds the lag; the rest is keyed aggregates.
-    "burstiness" -> ((s, dir) => {
+    QueryDef("burstiness", (s, dir) => {
       // no event_id tiebreak needed: the gap MULTISET of a sorted
       // timestamp list is invariant under permutations of equal values
       val ev = Tables.events(s, dir)
@@ -867,7 +1398,28 @@ object Inference {
         .select(bround(b * lit(10.0)).cast("long").as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_users"))
         .orderBy("bucket")
-    }),
+    },
+      """WITH ev AS (SELECT user_id,
+        |    CAST(epoch_us(ts) AS BIGINT) AS us
+        |  FROM events),
+        |gp AS (SELECT user_id,
+        |    us - lag(us, 1) OVER (PARTITION BY user_id
+        |      ORDER BY us) AS g
+        |  FROM ev),
+        |per AS (SELECT user_id, CAST(count(*) AS BIGINT) AS ng,
+        |    CAST(sum(g) AS HUGEINT) AS sg,
+        |    CAST(sum(CAST(g AS HUGEINT) * g) AS HUGEINT) AS qg
+        |  FROM gp WHERE g IS NOT NULL GROUP BY 1
+        |  HAVING count(*) >= 2),
+        |bb AS (SELECT
+        |    CAST(round_even((sqrt(CAST(CAST(ng AS HUGEINT) * qg
+        |        - sg * sg AS DOUBLE)) - CAST(sg AS DOUBLE)) /
+        |      (sqrt(CAST(CAST(ng AS HUGEINT) * qg - sg * sg
+        |        AS DOUBLE)) + CAST(sg AS DOUBLE)) * 10.0, 0)
+        |      AS BIGINT) AS bucket
+        |  FROM per WHERE sg > 0)
+        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_users
+        |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Rolling regression — the trailing-14-day OLS slope of the daily
     // series per day (the "is growth accelerating TODAY" readout a
@@ -878,7 +1430,7 @@ object Inference {
     // each day spends one mirrored double chain. Only full windows
     // emit. Complements theilsen_trend (global, robust) and
     // holt_linear (recursive smoothing) with the windowed-refit shape.
-    "rolling_regression" -> ((s, dir) => {
+    QueryDef("rolling_regression", (s, dir) => {
       val dd = dailySeries(s, dir)
       val w = Window.orderBy("day") // bounded: one row per day
       val idx = dd.select(col("day"), col("x"),
@@ -897,7 +1449,27 @@ object Inference {
           bround(when(den =!= 0, num.cast("double") /
             den.cast("double")), 6).as("slope_per_day"))
         .orderBy("day")
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |ix AS (SELECT day, x,
+        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
+        |  FROM d),
+        |mom AS (SELECT day,
+        |    count(*) OVER wr AS m,
+        |    CAST(sum(t) OVER wr AS BIGINT) AS st,
+        |    CAST(sum(x) OVER wr AS BIGINT) AS sx,
+        |    CAST(sum(t * t) OVER wr AS BIGINT) AS stt,
+        |    CAST(sum(t * x) OVER wr AS BIGINT) AS stx
+        |  FROM ix WINDOW wr AS (ORDER BY day
+        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
+        |SELECT strftime(day, '%Y-%m-%d') AS day,
+        |  round_even(CASE WHEN 14 * stt - st * st <> 0
+        |    THEN CAST(14 * stx - st * sx AS DOUBLE) /
+        |      CAST(14 * stt - st * st AS DOUBLE) END, 6)
+        |    AS slope_per_day
+        |FROM mom WHERE m = 14 ORDER BY day""".stripMargin),
 
     // CUPED variance reduction (Deng et al.) — the modern A/B-test
     // adjustment: per-user experiment metric y (second half of the
@@ -909,7 +1481,7 @@ object Inference {
     // ρ² (the variance-reduction fraction) rides along — the number
     // that justifies running CUPED at all. Split day = min_day + 15,
     // derived in-plan, no wall clock.
-    "cuped_adjust" -> ((s, dir) => {
+    QueryDef("cuped_adjust", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
@@ -953,7 +1525,49 @@ object Inference {
           bround(theta, 6).as("theta"),
           bround(lit(100.0) * rho2, 3).as("var_reduction_pct"))
         .orderBy("arm")
-    }),
+    },
+      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS vm
+        |  FROM events),
+        |sp AS (SELECT min(day) + 15 AS cut FROM ev),
+        |per AS (SELECT user_id,
+        |    COALESCE(CAST(sum(CASE WHEN day < cut THEN vm END)
+        |      AS BIGINT), 0) AS x,
+        |    COALESCE(CAST(sum(CASE WHEN day >= cut THEN vm END)
+        |      AS BIGINT), 0) AS y,
+        |    CAST('0x' || substr(md5('arm:'
+        |      || CAST(user_id AS VARCHAR)), 1, 7) AS BIGINT) % 2 AS arm
+        |  FROM ev CROSS JOIN sp GROUP BY user_id),
+        |mom AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS HUGEINT) AS sx,
+        |    CAST(sum(y) AS HUGEINT) AS sy,
+        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
+        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
+        |    CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
+        |  FROM per),
+        |gm AS (SELECT n, sx,
+        |    CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE) AS covn,
+        |    CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE) AS varx,
+        |    CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DOUBLE) AS vary
+        |  FROM mom),
+        |arms AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
+        |    CAST(CAST(sum(x) AS HUGEINT) AS DOUBLE) AS sxg,
+        |    CAST(CAST(sum(y) AS HUGEINT) AS DOUBLE) AS syg
+        |  FROM per GROUP BY 1)
+        |SELECT arm, n_users,
+        |  round_even(syg / CAST(n_users AS DOUBLE) / 1000000.0, 6)
+        |    AS raw_mean,
+        |  round_even((syg / CAST(n_users AS DOUBLE) -
+        |    (CASE WHEN varx > 0.0 THEN covn / varx END) *
+        |    (sxg / CAST(n_users AS DOUBLE) -
+        |      CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))) / 1000000.0, 6)
+        |    AS cuped_mean,
+        |  round_even(CASE WHEN varx > 0.0 THEN covn / varx END, 6)
+        |    AS theta,
+        |  round_even(100.0 * (CASE WHEN varx > 0.0 AND vary > 0.0
+        |    THEN covn * covn / (varx * vary) END), 3)
+        |    AS var_reduction_pct
+        |FROM arms CROSS JOIN gm ORDER BY arm""".stripMargin),
 
     // Closed-form ridge regression (two features + intercept via
     // centering) of line price on quantity and discount, with the OLS
@@ -966,7 +1580,7 @@ object Inference {
     // λ = A_ii/1000 (ridge on the feature's own scale — invariant to
     // unit choice, deterministic, no tuning loop). Readout in dollars
     // per unit so both coefficient magnitudes are readable.
-    "ridge_regression" -> ((s, dir) => {
+    QueryDef("ridge_regression", (s, dir) => {
       val li = t(s, dir, "lineitem").select(
         expr("CAST(l_quantity AS BIGINT)").as("q"),
         expr("CAST(bround(l_discount * 1000000) AS BIGINT)").as("d"),
@@ -1002,7 +1616,46 @@ object Inference {
         bround(when(det0 =!= 0.0,
           (a11 * b2 - a12 * b1) / det0 * lit(10000.0)), 6)
           .as("ols_disc"))
-    }),
+    },
+      """WITH li AS (SELECT CAST(l_quantity AS BIGINT) AS q,
+        |    CAST(round_even(l_discount * 1000000, 0) AS BIGINT) AS d,
+        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS y
+        |  FROM lineitem),
+        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(q) AS HUGEINT) AS s1,
+        |    CAST(sum(d) AS HUGEINT) AS s2,
+        |    CAST(sum(y) AS HUGEINT) AS sy,
+        |    CAST(sum(CAST(q AS HUGEINT) * q) AS HUGEINT) AS s11,
+        |    CAST(sum(CAST(d AS HUGEINT) * d) AS HUGEINT) AS s22,
+        |    CAST(sum(CAST(q AS HUGEINT) * d) AS HUGEINT) AS s12,
+        |    CAST(sum(CAST(q AS HUGEINT) * y) AS HUGEINT) AS s1y,
+        |    CAST(sum(CAST(d AS HUGEINT) * y) AS HUGEINT) AS s2y
+        |  FROM li),
+        |gm AS (SELECT n,
+        |    CAST(CAST(n AS HUGEINT) * s11 - s1 * s1 AS DOUBLE) AS a11,
+        |    CAST(CAST(n AS HUGEINT) * s22 - s2 * s2 AS DOUBLE) AS a22,
+        |    CAST(CAST(n AS HUGEINT) * s12 - s1 * s2 AS DOUBLE) AS a12,
+        |    CAST(CAST(n AS HUGEINT) * s1y - s1 * sy AS DOUBLE) AS b1,
+        |    CAST(CAST(n AS HUGEINT) * s2y - s2 * sy AS DOUBLE) AS b2
+        |  FROM m)
+        |SELECT n,
+        |  round_even(CASE WHEN (a11 + a11 / 1000.0) * (a22 + a22
+        |      / 1000.0) - a12 * a12 <> 0.0
+        |    THEN ((a22 + a22 / 1000.0) * b1 - a12 * b2) /
+        |      ((a11 + a11 / 1000.0) * (a22 + a22 / 1000.0) - a12 * a12)
+        |      / 100.0 END, 6) AS ridge_qty,
+        |  round_even(CASE WHEN (a11 + a11 / 1000.0) * (a22 + a22
+        |      / 1000.0) - a12 * a12 <> 0.0
+        |    THEN ((a11 + a11 / 1000.0) * b2 - a12 * b1) /
+        |      ((a11 + a11 / 1000.0) * (a22 + a22 / 1000.0) - a12 * a12)
+        |      * 10000.0 END, 6) AS ridge_disc,
+        |  round_even(CASE WHEN a11 * a22 - a12 * a12 <> 0.0
+        |    THEN (a22 * b1 - a12 * b2) / (a11 * a22 - a12 * a12)
+        |      / 100.0 END, 6) AS ols_qty,
+        |  round_even(CASE WHEN a11 * a22 - a12 * a12 <> 0.0
+        |    THEN (a11 * b2 - a12 * b1) / (a11 * a22 - a12 * a12)
+        |      * 10000.0 END, 6) AS ols_disc
+        |FROM gm""".stripMargin),
 
     // Cross-correlation function (lead–lag) between the view and
     // purchase daily series at lags −7..+7 — acf_daily's two-series
@@ -1012,7 +1665,7 @@ object Inference {
     // n·Σvp − Σv·Σp etc. in DECIMAL(38,0) with the chk() trap), spent
     // in one mirrored double chain. Cost: |days|·15 exploded probe rows
     // joined back to the bounded grid — quadratic in nothing.
-    "cross_corr" -> ((s, dir) => {
+    QueryDef("cross_corr", (s, dir) => {
       val ev = Tables.events(s, dir)
       def daily(et: String, cn: String) = ev
         .filter(col("event_type") === et)
@@ -1041,7 +1694,30 @@ object Inference {
             sqrt(chk(dv * dp, "cross_corr").cast("double"))), 6)
             .as("r"))
         .orderBy("lag")
-    }),
+    },
+      """WITH v AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS v
+        |  FROM events WHERE event_type = 'view' GROUP BY 1),
+        |p AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS p
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+        |pr AS (SELECT l.lag AS lag,
+        |    CAST(count(*) AS BIGINT) AS n_pairs,
+        |    CAST(sum(v.v) AS HUGEINT) AS sv,
+        |    CAST(sum(p.p) AS HUGEINT) AS sp,
+        |    CAST(sum(CAST(v.v AS HUGEINT) * v.v) AS HUGEINT) AS svv,
+        |    CAST(sum(CAST(p.p AS HUGEINT) * p.p) AS HUGEINT) AS spp,
+        |    CAST(sum(CAST(v.v AS HUGEINT) * p.p) AS HUGEINT) AS svp
+        |  FROM v CROSS JOIN range(-7, 8) l(lag)
+        |  JOIN p ON p.day = v.day + CAST(l.lag AS INT)
+        |  GROUP BY 1)
+        |SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
+        |  round_even(CASE WHEN n_pairs * svv - sv * sv > 0
+        |      AND n_pairs * spp - sp * sp > 0
+        |    THEN CAST(n_pairs * svp - sv * sp AS DOUBLE) /
+        |      sqrt(CAST((n_pairs * svv - sv * sv)
+        |        * (n_pairs * spp - sp * sp) AS DOUBLE)) END, 6) AS r
+        |FROM pr ORDER BY lag""".stripMargin),
 
     // Periodicity scan — seasonality strength of the daily series at
     // every candidate period p ∈ 2..14 WITHOUT trigonometry: fold the
@@ -1055,7 +1731,7 @@ object Inference {
     // double chain. The weekly cycle must dominate: the spec pins
     // argmax = 7 on a planted grid, and all 13 rows emit (no top-k
     // selection to flap on near-ties).
-    "period_scan" -> ((s, dir) => {
+    QueryDef("period_scan", (s, dir) => {
       val dd = dailySeries(s, dir)
       val w = Window.orderBy("day") // bounded: one row per day
       val idx = dd.select(col("x"),
@@ -1078,7 +1754,27 @@ object Inference {
             (col("ssb_raw") - expr("CAST(sx * sx DIV n AS BIGINT)"))
               .cast("double") / sst.cast("double")), 6).as("r2"))
         .orderBy("p")
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |ix AS (SELECT x,
+        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) - 1 AS t
+        |  FROM d),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx,
+        |    CAST(sum(x * x) AS BIGINT) AS sxx FROM ix),
+        |fold AS (SELECT pp.p AS p, ix.t % pp.p AS g,
+        |    CAST(count(*) AS BIGINT) AS ng,
+        |    CAST(sum(x) AS BIGINT) AS sg
+        |  FROM ix CROSS JOIN range(2, 15) pp(p)
+        |  GROUP BY 1, 2),
+        |ssb AS (SELECT p, CAST(sum(sg * sg // ng) AS BIGINT) AS ssb_raw
+        |  FROM fold GROUP BY 1)
+        |SELECT p, round_even(CASE WHEN sxx - sx * sx // n <> 0
+        |    THEN CAST(ssb_raw - sx * sx // n AS DOUBLE) /
+        |      CAST(sxx - sx * sx // n AS DOUBLE) END, 6) AS r2
+        |FROM ssb CROSS JOIN tot ORDER BY p""".stripMargin),
 
     // Hurst exponent by rescaled-range (R/S) analysis — long-range
     // dependence of the daily series (H≈0.5 random walk increments,
@@ -1092,7 +1788,7 @@ object Inference {
     // before the cross-block sum; H = (ln r̄₁₆ − ln r̄₄)/(2 ln 2), the
     // equal-log-spacing least-squares slope. Output: per-size block
     // counts + mean R/S and the fitted H.
-    "hurst_rs" -> ((s, dir) => {
+    QueryDef("hurst_rs", (s, dir) => {
       val dd = dailySeries(s, dir)
       val w = Window.orderBy("day") // bounded: one row per day
       val idx = dd.select(col("x"),
@@ -1137,7 +1833,48 @@ object Inference {
         .select(col("m"), col("n_blocks"), bround(col("mean_rs"), 6)
           .as("mean_rs"), bround(col("hurst"), 6).as("hurst"))
         .orderBy("m")
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |ix AS (SELECT x,
+        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) - 1 AS t
+        |  FROM d),
+        |bl AS (SELECT mm.m AS m, ix.t // mm.m AS blk, ix.t % mm.m AS j,
+        |    ix.x AS x
+        |  FROM ix CROSS JOIN (SELECT unnest([4, 8, 16]) AS m) mm),
+        |z AS (SELECT m, blk, j, x,
+        |    CAST(sum(x) OVER (PARTITION BY m, blk ORDER BY j
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cum
+        |  FROM bl),
+        |bs AS (SELECT m, blk, CAST(count(*) AS BIGINT) AS len,
+        |    CAST(sum(x) AS BIGINT) AS sb,
+        |    CAST(sum(x * x) AS BIGINT) AS ssqb
+        |  FROM z GROUP BY 1, 2),
+        |zj AS (SELECT z.m, z.blk, bs.sb, bs.ssqb,
+        |    z.m * z.cum - (z.j + 1) * bs.sb AS mz
+        |  FROM z JOIN bs ON z.m = bs.m AND z.blk = bs.blk
+        |  WHERE bs.len = z.m),
+        |rs AS (SELECT m, blk,
+        |    CAST(round_even(1000000.0 *
+        |      CAST(greatest(max(mz), 0) - least(min(mz), 0) AS DOUBLE) /
+        |      sqrt(CAST(m * max(ssqb) - max(sb) * max(sb) AS DOUBLE)),
+        |      0) AS BIGINT) AS rs_micro
+        |  FROM zj GROUP BY 1, 2
+        |  HAVING m * max(ssqb) - max(sb) * max(sb) > 0),
+        |bysize AS (SELECT m, CAST(count(*) AS BIGINT) AS n_blocks,
+        |    CAST(sum(rs_micro) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+        |      / 1000000.0 AS mean_rs
+        |  FROM rs GROUP BY 1),
+        |h AS (SELECT (ln(max(CASE WHEN m = 16 THEN mean_rs END)) -
+        |    ln(max(CASE WHEN m = 4 THEN mean_rs END))) / (2.0 * ln(2.0))
+        |    AS hurst
+        |  FROM bysize)
+        |SELECT CAST(m AS BIGINT) AS m, n_blocks,
+        |  round_even(mean_rs, 6) AS mean_rs,
+        |  round_even(hurst, 6) AS hurst
+        |FROM bysize CROSS JOIN h ORDER BY m""".stripMargin),
 
     // Kendall τ-b between the two daily series (event count vs distinct
     // users) — the rank-correlation companion of spearman_corr that
@@ -1148,7 +1885,7 @@ object Inference {
     // exact integers; τ-b spends them in one mirrored double chain
     // ((C−D)/√((n0−n1)(n0−n2)), √ is correctly-rounded IEEE on both
     // engines, so identical integer inputs give identical bits).
-    "kendall_tau" -> ((s, dir) => {
+    QueryDef("kendall_tau", (s, dir) => {
       val dd = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("x"),
@@ -1182,7 +1919,31 @@ object Inference {
           bround((col("concordant") - col("discordant")).cast("double") /
             sqrt(((col("n0") - col("n1")) * (col("n0") - col("n2")))
               .cast("double")), 6).as("tau_b"))
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS y
+        |  FROM events GROUP BY 1),
+        |cd AS (SELECT
+        |    CAST(sum(CASE WHEN (a.x < b.x AND a.y < b.y)
+        |        OR (a.x > b.x AND a.y > b.y) THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS concordant,
+        |    CAST(sum(CASE WHEN (a.x < b.x AND a.y > b.y)
+        |        OR (a.x > b.x AND a.y < b.y) THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS discordant
+        |  FROM d a JOIN d b ON a.day < b.day),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
+        |    CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS n0 FROM d),
+        |t1 AS (SELECT COALESCE(CAST(sum(c * (c - 1) // 2) AS BIGINT),
+        |      0) AS n1
+        |  FROM (SELECT CAST(count(*) AS BIGINT) AS c FROM d GROUP BY x)),
+        |t2 AS (SELECT COALESCE(CAST(sum(c * (c - 1) // 2) AS BIGINT),
+        |      0) AS n2
+        |  FROM (SELECT CAST(count(*) AS BIGINT) AS c FROM d GROUP BY y))
+        |SELECT n_days, concordant, discordant,
+        |  round_even(CAST(concordant - discordant AS DOUBLE) /
+        |    sqrt(CAST((n0 - n1) * (n0 - n2) AS DOUBLE)), 6) AS tau_b
+        |FROM cd, n, t1, t2""".stripMargin),
 
     // Wald–Wolfowitz runs test on the daily series: are above-mean and
     // below-mean days randomly interleaved, or do they clump (the
@@ -1193,7 +1954,7 @@ object Inference {
     // flips via one lag over the bounded day grid; the z-score's μ and
     // σ² terms (2n₁n₂, 2n₁n₂−n) stay exact integers until the single
     // mirrored double chain.
-    "runs_test" -> ((s, dir) => {
+    QueryDef("runs_test", (s, dir) => {
       val dd = dailySeries(s, dir)
       val tot = dd.agg(count(lit(1)).as("nall"), sum("x").as("sx"))
       val signed = dd.crossJoin(broadcast(tot))
@@ -1219,7 +1980,42 @@ object Inference {
             sqrt((m2 * (m2 - nn)).cast("double") /
               (nn.cast("double") * nn.cast("double") *
                 (nn - 1).cast("double")))), 6).as("z"))
-    }),
+    },
+      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
+        |    CAST(count(*) AS BIGINT) AS x
+        |  FROM events GROUP BY 1),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nall,
+        |    CAST(sum(x) AS BIGINT) AS sx FROM d),
+        |sg AS (SELECT day,
+        |    CAST(CASE WHEN x * nall > sx THEN 1 ELSE 0 END AS BIGINT)
+        |      AS sgn
+        |  FROM d, tot WHERE x * nall <> sx),
+        |fl AS (SELECT sgn,
+        |    CASE WHEN lag(sgn) OVER (ORDER BY day) IS NULL
+        |      OR lag(sgn) OVER (ORDER BY day) <> sgn
+        |    THEN 1 ELSE 0 END AS flip
+        |  FROM sg),
+        |r AS (SELECT
+        |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_above,
+        |    CAST(sum(CASE WHEN sgn = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_below,
+        |    CAST(sum(flip) AS BIGINT) AS runs
+        |  FROM fl)
+        |SELECT n_above, n_below, runs,
+        |  round_even(CASE
+        |    WHEN n_above > 0 AND n_below > 0 AND n_above + n_below > 1
+        |    THEN (CAST(runs AS DOUBLE) -
+        |        (CAST(2 * n_above * n_below AS DOUBLE) /
+        |          CAST(n_above + n_below AS DOUBLE) + 1.0)) /
+        |      sqrt(CAST((2 * n_above * n_below) *
+        |          (2 * n_above * n_below - (n_above + n_below))
+        |          AS DOUBLE) /
+        |        (CAST(n_above + n_below AS DOUBLE) *
+        |          CAST(n_above + n_below AS DOUBLE) *
+        |          CAST(n_above + n_below - 1 AS DOUBLE)))
+        |    END, 6) AS z
+        |FROM r""".stripMargin),
 
     // Isotonic calibration (PAVA) of the urgent-order rate over price
     // bins — THE calibration fit (Zadrozny & Elkan) an eval pipeline
@@ -1232,7 +2028,7 @@ object Inference {
     // (≤19³ rows) via broadcast joins — corpus touches exactly one
     // hash-agg. Monotonicity of the output is a theorem, and the spec
     // gates it.
-    "isotonic_calibration" -> ((s, dir) => {
+    QueryDef("isotonic_calibration", (s, dir) => {
       val o = t(s, dir, "orders")
       // bin on integer CENTS (decimal→long exact), never on a decimal
       // division whose engine-specific result scale could flap a
@@ -1271,7 +2067,39 @@ object Inference {
           bround(col("iso_micro").cast("double") / lit(1000000.0), 6)
             .as("iso_rate"))
         .orderBy("bin")
-    }),
+    },
+      """WITH b AS (SELECT
+        |    LEAST(CAST(round_even(o_totalprice * 100, 0) AS BIGINT)
+        |      // 3000000, 18) AS bin,
+        |    CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS k
+        |  FROM orders GROUP BY 1),
+        |c AS (SELECT bin, n, k,
+        |    CAST(sum(n) OVER (ORDER BY bin
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS cn,
+        |    CAST(sum(k) OVER (ORDER BY bin
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      AS BIGINT) AS ck
+        |  FROM b),
+        |jk AS (SELECT j.bin AS j, k2.bin AS kk,
+        |    CAST(round_even(1000000.0 *
+        |      CAST(k2.ck - (j.ck - j.k) AS DOUBLE) /
+        |      CAST(k2.cn - (j.cn - j.n) AS DOUBLE), 0) AS BIGINT) AS m
+        |  FROM c j JOIN c k2 ON j.bin <= k2.bin),
+        |mn AS (SELECT i.bin AS i, jk.j AS j, min(jk.m) AS mn
+        |  FROM jk JOIN c i ON jk.j <= i.bin AND i.bin <= jk.kk
+        |  GROUP BY 1, 2),
+        |fit AS (SELECT i, CAST(max(mn) AS BIGINT) AS iso_micro
+        |  FROM mn GROUP BY 1)
+        |SELECT c.bin, c.n, c.k AS urgent,
+        |  round_even(CAST(c.k AS DOUBLE) / CAST(c.n AS DOUBLE), 6)
+        |    AS raw_rate,
+        |  round_even(CAST(iso_micro AS DOUBLE) / 1000000.0, 6)
+        |    AS iso_rate
+        |FROM c JOIN fit ON c.bin = fit.i
+        |ORDER BY bin""".stripMargin),
 
     // Matrix profile (UCR) of the daily series: for every length-7
     // subsequence, the z-normalized distance to its nearest
@@ -1285,7 +2113,7 @@ object Inference {
     // 6dp BEFORE the per-i argmin (day tiebreak) so the nearest
     // neighbor can't flap on ulps. Zero-variance subsequences are
     // excluded both as queries and as neighbors.
-    "matrix_profile" -> ((s, dir) => {
+    QueryDef("matrix_profile", (s, dir) => {
       val dd = dailySeries(s, dir)
       val w = Window.orderBy("day") // bounded: one row per day
       val idx = dd.select(col("day"), col("x"),
@@ -1334,884 +2162,7 @@ object Inference {
           date_format(col("nd"), "yyyy-MM-dd").as("nn_day"),
           col("d2").as("mp_dist"))
         .orderBy("sub_day")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    // unrolled 4-level integer pyramid; signs from index parity
-    "haar_decompose" -> {
-      val levels = (1 to 4).map { l =>
-        s""",
-           |l$l AS MATERIALIZED (SELECT i // 2 AS i,
-           |    CAST(sum(x) AS BIGINT) AS x,
-           |    CAST(sum(CASE WHEN i % 2 = 0 THEN x ELSE -x END)
-           |      AS BIGINT) AS det
-           |  FROM l${l - 1} GROUP BY 1)""".stripMargin
-      }.mkString
-      val dets = (1 to 4).map { l =>
-        s"""SELECT CAST($l AS INT) AS level, CAST(i AS INT) AS idx,
-           |  'detail' AS kind, det AS coeff FROM l$l""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH daily AS (SELECT
-         |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS d,
-         |    CAST(count(*) AS BIGINT) AS x
-         |  FROM events GROUP BY 1),
-         |l0 AS (SELECT CAST(g.range AS INT) AS i, coalesce(x, 0) AS x
-         |  FROM range(16) g LEFT JOIN daily ON daily.d = g.range)$levels
-         |$dets
-         |UNION ALL SELECT 4, CAST(i AS INT), 'approx', x FROM l4
-         |ORDER BY level, kind, idx""".stripMargin
     },
-    // same bin grid, same cumulative, same integer-exact Gini chain
-    "gini_split" ->
-      """WITH o AS (SELECT o_custkey,
-        |    CAST(round_even(o_totalprice * 100, 0) AS BIGINT) // 100000
-        |      AS bin
-        |  FROM orders),
-        |c AS (SELECT c_custkey AS o_custkey,
-        |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS y
-        |  FROM customer),
-        |b AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS pos
-        |  FROM o JOIN c USING (o_custkey) GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-        |    CAST(sum(pos) AS BIGINT) AS pt FROM b),
-        |cum AS (SELECT bin,
-        |    CAST(sum(n) OVER (ORDER BY bin) AS BIGINT) AS nl,
-        |    CAST(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS pl
-        |  FROM b)
-        |SELECT bin, nl, pl,
-        |  CAST(round_even(2000000.0 / nt *
-        |    (CAST(pl AS DOUBLE) * (nl - pl) / nl
-        |      + CAST(pt - pl AS DOUBLE) * ((nt - nl) - (pt - pl))
-        |        / (nt - nl)), 0) AS BIGINT) AS gini_micros
-        |FROM cum, t WHERE nl < nt
-        |ORDER BY gini_micros, bin LIMIT 5""".stripMargin,
-    // the order statistic is a plain row_number here (DuckDB sorts
-    // globally anyway); k = ⌈0.9(n+1)⌉ in exact integers
-    "conformal_threshold" ->
-      """WITH j AS (SELECT o_orderkey,
-        |    CAST(round_even(o_totalprice * 100, 0) AS BIGINT) AS cents,
-        |    c_mktsegment AS seg
-        |  FROM orders JOIN customer ON o_custkey = c_custkey),
-        |cal AS (SELECT * FROM j WHERE o_orderkey % 2 = 0),
-        |mu AS (SELECT seg,
-        |    CAST(round_even(CAST(sum(cents) AS DOUBLE) / count(*), 0)
-        |      AS BIGINT) AS m
-        |  FROM cal GROUP BY 1),
-        |r AS (SELECT o_orderkey, abs(cents - m) AS r
-        |  FROM cal JOIN mu USING (seg)),
-        |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_calib,
-        |    CAST(((count(*) + 1) * 9 + 9) // 10 AS BIGINT) AS k
-        |  FROM r),
-        |rk AS (SELECT r,
-        |    row_number() OVER (ORDER BY r, o_orderkey) AS rn FROM r),
-        |q AS (SELECT n_calib, k, r AS q_cents FROM rk, nk WHERE rn = k),
-        |ts AS (SELECT abs(cents - m) AS r FROM j JOIN mu USING (seg)
-        |  WHERE o_orderkey % 2 = 1)
-        |SELECT max(q.n_calib) AS n_calib, max(q.k) AS k,
-        |  max(q.q_cents) AS q_cents,
-        |  CAST(count(*) AS BIGINT) AS n_test,
-        |  CAST(sum(CASE WHEN ts.r <= q.q_cents THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS covered,
-        |  round(CAST(sum(CASE WHEN ts.r <= q.q_cents THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / count(*), 6) AS coverage
-        |FROM ts, q""".stripMargin,
-    "permutation_test" ->
-      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c,
-        |    CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
-        |      AS BIGINT) AS sv
-        |  FROM events GROUP BY 1),
-        |ob AS (SELECT abs(
-        |    CAST(sum(CASE WHEN arm = 0 THEN sv END) AS DOUBLE)
-        |      / CAST(sum(CASE WHEN arm = 0 THEN c END) AS DOUBLE)
-        |    - CAST(sum(CASE WHEN arm = 1 THEN sv END) AS DOUBLE)
-        |      / CAST(sum(CASE WHEN arm = 1 THEN c END) AS DOUBLE))
-        |    AS obs_d
-        |  FROM (SELECT u.*,
-        |      CAST(CAST('0x' || substr(md5('ab:' || user_id), 1, 7)
-        |        AS BIGINT) % 2 AS INT) AS arm
-        |    FROM u)),
-        |p AS (SELECT j, abs(
-        |    CAST(sum(CASE WHEN arm = 0 THEN sv END) AS DOUBLE)
-        |      / CAST(sum(CASE WHEN arm = 0 THEN c END) AS DOUBLE)
-        |    - CAST(sum(CASE WHEN arm = 1 THEN sv END) AS DOUBLE)
-        |      / CAST(sum(CASE WHEN arm = 1 THEN c END) AS DOUBLE))
-        |    AS d
-        |  FROM (SELECT u.*, t.j,
-        |      CAST(CAST('0x' || substr(md5('perm:' || t.j || ':'
-        |        || user_id), 1, 7) AS BIGINT) % 2 AS INT) AS arm
-        |    FROM u, range(0, 63) t(j))
-        |  GROUP BY 1)
-        |SELECT
-        |  CAST(round_even(max(ob.obs_d), 4) AS DOUBLE)
-        |    AS obs_diff_micros,
-        |  CAST(count(*) AS BIGINT) AS n_perms,
-        |  CAST(sum(CASE WHEN p.d >= ob.obs_d THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_ge,
-        |  CAST(round_even(
-        |    CAST(sum(CASE WHEN p.d >= ob.obs_d THEN 1 ELSE 0 END) + 1
-        |      AS DOUBLE)
-        |    / CAST(count(*) + 1 AS DOUBLE), 6) AS DOUBLE) AS p_value
-        |FROM p CROSS JOIN ob""".stripMargin,
-    "durbin_watson" ->
-      """WITH daily AS (SELECT event_type,
-        |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS d,
-        |    CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS sy FROM daily GROUP BY 1),
-        |e AS (SELECT d.event_type, d.d, t.n,
-        |    CAST(t.n AS HUGEINT) * d.y - t.sy AS et
-        |  FROM daily d JOIN tot t USING (event_type)),
-        |l AS (SELECT event_type, n, et,
-        |    lag(et) OVER (PARTITION BY event_type ORDER BY d) AS ep
-        |  FROM e)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_days,
-        |  CASE WHEN sum(et * et) <> 0 THEN
-        |    CAST(round_even(
-        |      CAST(sum(CASE WHEN ep IS NOT NULL
-        |        THEN (et - ep) * (et - ep) END) AS DOUBLE)
-        |      / CAST(sum(et * et) AS DOUBLE), 6) AS DOUBLE) END AS dw
-        |FROM l GROUP BY 1 ORDER BY 1""".stripMargin,
-    "weighted_median" ->
-      """WITH li AS (SELECT l_returnflag AS g,
-        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS v,
-        |    CAST(round_even(l_quantity * 100, 0) AS BIGINT) AS wt
-        |  FROM lineitem),
-        |grid AS (SELECT g, v, CAST(sum(wt) AS BIGINT) AS w
-        |  FROM li GROUP BY 1, 2),
-        |cum AS (SELECT g, v, w, sum(w) OVER (PARTITION BY g ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM grid),
-        |tot AS (SELECT g, CAST(sum(w) AS BIGINT) AS tw,
-        |    CAST(count(*) AS BIGINT) AS n_prices FROM grid GROUP BY 1)
-        |SELECT c.g, max(t.tw) AS total_weight,
-        |  max(t.n_prices) AS n_prices,
-        |  CAST(min(CASE WHEN c.cum >= (t.tw + 1) // 2 THEN c.v END)
-        |    AS BIGINT) AS wmedian_cents
-        |FROM cum c JOIN tot t ON c.g = t.g
-        |GROUP BY c.g ORDER BY c.g""".stripMargin,
-    "quantile_align" ->
-      """WITH ev AS (SELECT event_type,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
-        |  FROM events),
-        |grid AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS c
-        |  FROM ev GROUP BY 1, 2),
-        |cumt AS (SELECT event_type, v, sum(c) OVER (
-        |    PARTITION BY event_type ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM grid),
-        |nt AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n,
-        |    CAST((10 * sum(c) + 99) // 100 AS BIGINT) AS rk10,
-        |    CAST((50 * sum(c) + 99) // 100 AS BIGINT) AS rk50,
-        |    CAST((90 * sum(c) + 99) // 100 AS BIGINT) AS rk90
-        |  FROM grid GROUP BY 1),
-        |qt AS (SELECT c.event_type,
-        |    min(CASE WHEN c.cum >= n.rk10 THEN c.v END) AS q10,
-        |    min(CASE WHEN c.cum >= n.rk50 THEN c.v END) AS q50,
-        |    min(CASE WHEN c.cum >= n.rk90 THEN c.v END) AS q90
-        |  FROM cumt c JOIN nt n USING (event_type) GROUP BY 1),
-        |ggrid AS (SELECT v, CAST(sum(c) AS BIGINT) AS c
-        |  FROM grid GROUP BY 1),
-        |cumg AS (SELECT v, sum(c) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM ggrid),
-        |ng AS (SELECT CAST((10 * sum(c) + 99) // 100 AS BIGINT) AS rk10,
-        |    CAST((50 * sum(c) + 99) // 100 AS BIGINT) AS rk50,
-        |    CAST((90 * sum(c) + 99) // 100 AS BIGINT) AS rk90
-        |  FROM ggrid),
-        |qg AS (SELECT
-        |    min(CASE WHEN c.cum >= ng.rk10 THEN c.v END) AS g10,
-        |    min(CASE WHEN c.cum >= ng.rk50 THEN c.v END) AS g50,
-        |    min(CASE WHEN c.cum >= ng.rk90 THEN c.v END) AS g90
-        |  FROM cumg c CROSS JOIN ng)
-        |SELECT qt.event_type, qt.q10, qt.q50, qt.q90,
-        |  qg.g10, qg.g50, qg.g90,
-        |  qt.q50 - qg.g50 AS shift50_micros
-        |FROM qt CROSS JOIN qg ORDER BY qt.event_type""".stripMargin,
-    "als_step" ->
-      """WITH li AS (SELECT l_suppkey AS user_id,
-        |    (l_partkey % 7) - 3 AS y1, (l_partkey % 5) - 2 AS y2,
-        |    CAST(round_even(l_quantity, 0) AS BIGINT) AS r
-        |  FROM lineitem),
-        |m AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y1 * y1) + 1 AS BIGINT) AS a11,
-        |    CAST(sum(y1 * y2) AS BIGINT) AS a12,
-        |    CAST(sum(y2 * y2) + 1 AS BIGINT) AS a22,
-        |    CAST(sum(y1 * r) AS BIGINT) AS b1,
-        |    CAST(sum(y2 * r) AS BIGINT) AS b2
-        |  FROM li GROUP BY 1)
-        |SELECT user_id, n, a11, a12, a22, b1, b2,
-        |  CAST(round_even(CAST(a22 * b1 - a12 * b2 AS DOUBLE)
-        |    / CAST(a11 * a22 - a12 * a12 AS DOUBLE), 6) AS DOUBLE) AS x1,
-        |  CAST(round_even(CAST(a11 * b2 - a12 * b1 AS DOUBLE)
-        |    / CAST(a11 * a22 - a12 * a12 AS DOUBLE), 6) AS DOUBLE) AS x2
-        |FROM m ORDER BY user_id""".stripMargin,
-    "spearman_corr" ->
-      """WITH li AS (SELECT l_returnflag AS g, l_quantity AS x,
-        |    l_extendedprice AS y FROM lineitem),
-        |gx AS (SELECT g, x, count(*) AS t FROM li GROUP BY 1, 2),
-        |rx AS (SELECT g, x, 2 * coalesce(sum(t) OVER (PARTITION BY g
-        |    ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    0) + t + 1 AS r2x FROM gx),
-        |gy AS (SELECT g, y, count(*) AS t FROM li GROUP BY 1, 2),
-        |ry AS (SELECT g, y, 2 * coalesce(sum(t) OVER (PARTITION BY g
-        |    ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    0) + t + 1 AS r2y FROM gy),
-        |j AS (SELECT li.g, r2x, r2y FROM li
-        |  JOIN rx ON rx.g = li.g AND rx.x = li.x
-        |  JOIN ry ON ry.g = li.g AND ry.y = li.y),
-        |m AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(r2x AS HUGEINT)) AS HUGEINT) AS sx,
-        |    CAST(sum(CAST(r2y AS HUGEINT)) AS HUGEINT) AS sy,
-        |    CAST(sum(CAST(r2x AS HUGEINT) * r2x) AS HUGEINT) AS sxx,
-        |    CAST(sum(CAST(r2y AS HUGEINT) * r2y) AS HUGEINT) AS syy,
-        |    CAST(sum(CAST(r2x AS HUGEINT) * r2y) AS HUGEINT) AS sxy
-        |  FROM j GROUP BY 1),
-        |f AS (SELECT g, n,
-        |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS dx,
-        |    CAST(n AS HUGEINT) * syy - sy * sy AS dy
-        |  FROM m)
-        |SELECT g AS returnflag, n,
-        |  round_even(CASE WHEN dx > 0 AND dy > 0 THEN
-        |    CAST(num AS DOUBLE)
-        |    / (sqrt(CAST(dx AS DOUBLE)) * sqrt(CAST(dy AS DOUBLE)))
-        |    END, 6) AS rho
-        |FROM f ORDER BY returnflag""".stripMargin,
-
-    "seasonal_decompose" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1),
-        |t AS (SELECT day, x,
-        |    count(*) OVER w AS cnt7, sum(x) OVER w AS sum7,
-        |    (day - DATE '2024-01-01') % 7 AS dow
-        |  FROM d WINDOW w AS (ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |t2 AS (SELECT *, CASE WHEN cnt7 = 7 THEN
-        |    CAST(round_even(sum7 * 1000000.0 / 7.0, 0) AS BIGINT)
-        |    END AS trend_micros FROM t),
-        |s AS (SELECT dow, CAST(round_even(
-        |    CAST(sum(x * 1000000 - trend_micros) AS DOUBLE) / count(*),
-        |    0) AS BIGINT) AS seasonal_micros
-        |  FROM t2 WHERE trend_micros IS NOT NULL GROUP BY 1)
-        |SELECT strftime(t2.day, '%Y-%m-%d') AS day, t2.x,
-        |  t2.trend_micros, s.seasonal_micros,
-        |  CASE WHEN t2.trend_micros IS NOT NULL
-        |    AND s.seasonal_micros IS NOT NULL
-        |    THEN t2.x * 1000000 - t2.trend_micros - s.seasonal_micros
-        |    END AS resid_micros
-        |FROM t2 LEFT JOIN s USING (dow) ORDER BY day""".stripMargin,
-
-    "prop_ztest" ->
-      """WITH u AS (SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS conv,
-        |    user_id % 2 AS grp
-        |  FROM events GROUP BY user_id),
-        |a AS (SELECT
-        |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN grp = 0 THEN conv ELSE 0 END) AS BIGINT) AS x1,
-        |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |    CAST(sum(CASE WHEN grp = 1 THEN conv ELSE 0 END) AS BIGINT) AS x2
-        |  FROM u)
-        |SELECT n1, x1, n2, x2,
-        |  round_even(CASE WHEN n1 > 0 AND n2 > 0 AND
-        |    (CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
-        |      * (1.0 - CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
-        |      * (1.0 / n1 + 1.0 / n2) > 0.0 THEN
-        |    (CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2)
-        |    / sqrt((CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
-        |      * (1.0 - CAST(x1 + x2 AS DOUBLE) / (CAST(n1 AS DOUBLE) + n2))
-        |      * (1.0 / n1 + 1.0 / n2)) END, 6) AS z
-        |FROM a""".stripMargin,
-
-    "mannwhitney_u" ->
-      """WITH g AS (SELECT event_type, value FROM events
-        |  WHERE event_type IN ('purchase', 'view') AND value IS NOT NULL),
-        |grid AS (SELECT value,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c1,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c2
-        |  FROM g GROUP BY value),
-        |rk AS (SELECT c1, c2, c1 + c2 AS t,
-        |    COALESCE(sum(c1 + c2) OVER (ORDER BY value
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum
-        |  FROM grid),
-        |a AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
-        |    CAST(sum(c2) AS BIGINT) AS n2,
-        |    CAST(sum(CAST(c1 AS HUGEINT) * (2 * cum + t + 1)) AS HUGEINT)
-        |      AS r1x2,
-        |    CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS ties
-        |  FROM rk)
-        |SELECT n1, n2,
-        |  CAST(r1x2 - CAST(n1 AS HUGEINT) * (n1 + 1) AS BIGINT) AS u1_x2,
-        |  CASE WHEN CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 12.0 *
-        |      ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0) -
-        |        CAST(ties AS DOUBLE) /
-        |        ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE)) *
-        |         (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 1.0))) > 0.0
-        |  THEN round_even(
-        |    ((CAST(r1x2 - CAST(n1 AS HUGEINT) * (n1 + 1) AS DOUBLE) -
-        |       CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) / 2.0) /
-        |    sqrt(CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) / 12.0 *
-        |      ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) + 1.0) -
-        |        CAST(ties AS DOUBLE) /
-        |        ((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE)) *
-        |         (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 1.0)))), 6)
-        |  END AS z
-        |FROM a""".stripMargin,
-    // same five HUGEINT moments, same closed-form 2×2 solve chain
-    "logistic_irls_step" ->
-      """WITH ev AS (SELECT
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END AS t,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS x
-        |  FROM events),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(t) AS BIGINT) AS st,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-        |    sum(CAST(x AS HUGEINT) * t) AS sxt
-        |  FROM ev),
-        |c AS (SELECT n, sx, st,
-        |    CAST(CAST(n AS HUGEINT) * sxx
-        |      - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS det,
-        |    CAST(sxx * CAST(st AS HUGEINT)
-        |      - CAST(sx AS HUGEINT) * sxt AS DOUBLE) AS num0,
-        |    CAST(CAST(n AS HUGEINT) * sxt
-        |      - CAST(sx AS HUGEINT) * CAST(st AS HUGEINT) AS DOUBLE)
-        |      AS num1
-        |  FROM m)
-        |SELECT n,
-        |  CASE WHEN det <> 0 THEN CAST(round_even(
-        |    2.0 * num0 / det, 6) AS DOUBLE) END AS beta0,
-        |  CASE WHEN det <> 0 THEN CAST(round_even(
-        |    2.0 * num1 / det * 1000000.0, 6) AS DOUBLE) END
-        |    AS beta1_per_unit,
-        |  CASE WHEN det <> 0 THEN CAST(round_even(
-        |    1.0 / (1.0 + exp(-(2.0 * num0 / det
-        |      + 2.0 * num1 / det
-        |        * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))))), 6)
-        |    AS DOUBLE) END AS p_at_mean
-        |FROM c""".stripMargin,
-    // the same fold as a single-row recursive CTE: state after prefix
-    // j, stepped by y_{j+1}; arithmetic mirrored node-for-node
-    "holt_linear" ->
-      """WITH RECURSIVE d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |s AS MATERIALIZED (SELECT CAST(x AS DOUBLE) AS y,
-        |    row_number() OVER (ORDER BY day) AS i
-        |  FROM d),
-        |hw(j, l, b) AS (
-        |  SELECT 1, (SELECT y FROM s WHERE i = 1),
-        |    (SELECT y FROM s WHERE i = 2) - (SELECT y FROM s WHERE i = 1)
-        |  UNION ALL
-        |  SELECT hw.j + 1,
-        |    0.5 * s.y + 0.5 * (hw.l + hw.b),
-        |    0.3 * (0.5 * s.y + 0.5 * (hw.l + hw.b) - hw.l) + 0.7 * hw.b
-        |  FROM hw JOIN s ON s.i = hw.j + 1),
-        |last AS (SELECT l, b FROM hw
-        |  WHERE j = (SELECT max(i) FROM s))
-        |SELECT CAST(h AS BIGINT) AS h, round_even(l, 6) AS level,
-        |  round_even(b, 6) AS trend,
-        |  round_even(l + CAST(h AS DOUBLE) * b, 6) AS forecast
-        |FROM last, range(1, 8) t(h) ORDER BY h""".stripMargin,
-    "acf_daily" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |base AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(x) AS HUGEINT) AS s,
-        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-        |  FROM d),
-        |p AS (SELECT k.lag,
-        |    CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(CAST(a.x AS HUGEINT) * b.x) AS HUGEINT) AS c,
-        |    CAST(sum(CAST(a.x AS HUGEINT)) AS HUGEINT) AS sa,
-        |    CAST(sum(CAST(b.x AS HUGEINT)) AS HUGEINT) AS sb
-        |  FROM d a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS lag) k
-        |  JOIN d b ON b.day = a.day + CAST(k.lag AS INTEGER)
-        |  GROUP BY 1)
-        |SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
-        |  CASE WHEN n * (n * sxx - s * s) <> 0 THEN
-        |    round_even(
-        |      CAST(n * n * c - n * s * (sa + sb) +
-        |        CAST(n_pairs AS HUGEINT) * s * s AS DOUBLE) /
-        |      CAST(n * (n * sxx - s * s) AS DOUBLE), 6)
-        |  END AS r
-        |FROM p CROSS JOIN base
-        |ORDER BY lag""".stripMargin,
-    "cusum_changepoint" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS HUGEINT) AS s
-        |  FROM d),
-        |c AS (SELECT day,
-        |    CAST(sum(x) OVER (ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS HUGEINT)
-        |      AS cum,
-        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-        |  FROM d)
-        |SELECT strftime(day, '%Y-%m-%d') AS change_day, n AS n_days,
-        |  round_even(CAST(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * s
-        |      AS DOUBLE) / CAST(n AS DOUBLE), 6) AS cusum
-        |FROM c CROSS JOIN tot
-        |ORDER BY abs(CAST(n AS HUGEINT) * cum - CAST(t AS HUGEINT) * s)
-        |  DESC, day ASC
-        |LIMIT 1""".stripMargin,
-    "theilsen_trend" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |sl AS (SELECT CAST(round_even(
-        |      CAST(b.x - a.x AS DOUBLE) / CAST(b.day - a.day AS DOUBLE)
-        |      * 1000000.0, 0) AS BIGINT) AS s_micro
-        |  FROM d a JOIN d b ON a.day < b.day)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round_even(quantile_cont(CAST(s_micro AS DOUBLE), 0.5)
-        |    / 1000000.0, 6) AS slope_per_day
-        |FROM sl""".stripMargin,
-    "mutual_info" ->
-      """WITH cell AS (SELECT o_orderstatus, o_orderpriority,
-        |    CAST(count(*) AS BIGINT) AS cxy
-        |  FROM orders GROUP BY 1, 2),
-        |rowm AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cx
-        |  FROM orders GROUP BY 1),
-        |colm AS (SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cy
-        |  FROM orders GROUP BY 1),
-        |nt AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM orders),
-        |mi AS (SELECT CAST(sum(CAST(cxy AS HUGEINT) *
-        |      CAST(round_even(ln(
-        |        (CAST(cxy AS DOUBLE) * CAST(nn AS DOUBLE)) /
-        |        (CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)))
-        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS mi_n
-        |  FROM cell JOIN rowm USING (o_orderstatus)
-        |    JOIN colm USING (o_orderpriority) CROSS JOIN nt),
-        |hx AS (SELECT CAST(count(*) AS BIGINT) AS levels_x,
-        |    CAST(sum(CAST(cx AS HUGEINT) *
-        |      CAST(round_even(ln(CAST(cx AS DOUBLE) / CAST(nn AS DOUBLE))
-        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS hx_n,
-        |    max(nn) AS nn
-        |  FROM rowm CROSS JOIN nt),
-        |hy AS (SELECT CAST(count(*) AS BIGINT) AS levels_y,
-        |    CAST(sum(CAST(cy AS HUGEINT) *
-        |      CAST(round_even(ln(CAST(cy AS DOUBLE) / CAST(nn AS DOUBLE))
-        |        * 1000000000000.0, 0) AS BIGINT)) AS HUGEINT) AS hy_n
-        |  FROM colm CROSS JOIN nt)
-        |SELECT levels_x, levels_y,
-        |  round_even(CAST(mi_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    / 1000000000000.0, 6) AS mi_nats,
-        |  CASE WHEN (-CAST(hx_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |        / 1000000000000.0) *
-        |      (-CAST(hy_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |        / 1000000000000.0) > 0.0 THEN
-        |    round_even((CAST(mi_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |        / 1000000000000.0) /
-        |      sqrt((-CAST(hx_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |          / 1000000000000.0) *
-        |        (-CAST(hy_n AS DOUBLE) / CAST(nn AS DOUBLE)
-        |          / 1000000000000.0)), 6)
-        |  END AS nmi
-        |FROM mi CROSS JOIN hx CROSS JOIN hy""".stripMargin,
-    "adamic_adar" ->
-      """WITH e AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-        |  FROM lineitem),
-        |degw AS (SELECT pk,
-        |    CAST(round_even(1000000000000.0 /
-        |      ln(CAST(count(*) AS DOUBLE)), 0) AS BIGINT) AS w_pico
-        |  FROM e GROUP BY pk HAVING count(*) >= 2)
-        |SELECT a.sk AS sa, b.sk AS sb,
-        |  CAST(count(*) AS BIGINT) AS n_common,
-        |  round_even(CAST(CAST(sum(w_pico) AS HUGEINT) AS DOUBLE)
-        |    / 1000000000000.0, 6) AS aa_score
-        |FROM e a JOIN degw USING (pk) JOIN e b USING (pk)
-        |WHERE a.sk < b.sk
-        |GROUP BY 1, 2
-        |ORDER BY aa_score DESC, sa ASC, sb ASC
-        |LIMIT 20""".stripMargin,
-    "containment_neardup" ->
-      """WITH tk AS (SELECT doc_id, regexp_extract_all(lower(text), '\S+')
-        |    AS tk FROM documents),
-        |tok AS (SELECT DISTINCT doc_id,
-        |    CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS gram
-        |  FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
-        |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS gram
-        |    FROM tk WHERE len(tk) >= 3)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY 1),
-        |df AS (SELECT gram, count(*) AS df FROM tok GROUP BY 1),
-        |rk AS (SELECT tok.doc_id, tok.gram, sz.sz,
-        |    row_number() OVER (PARTITION BY tok.doc_id
-        |      ORDER BY df.df, tok.gram) AS rn
-        |  FROM tok JOIN df USING (gram) JOIN sz USING (doc_id)),
-        |pre AS (SELECT doc_id, gram FROM rk
-        |  WHERE rn <= sz - ceil(0.8 * sz) + 1),
-        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM pre a JOIN tok b
-        |  ON a.gram = b.gram AND a.doc_id <> b.doc_id),
-        |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cand c JOIN tok ta ON ta.doc_id = c.doc_a
-        |    JOIN tok tb ON tb.doc_id = c.doc_b AND ta.gram = tb.gram
-        |  GROUP BY 1, 2)
-        |SELECT i.doc_a, i.doc_b, CAST(inter AS BIGINT) AS inter,
-        |  round(CAST(inter AS DOUBLE) / sa.sz, 6) AS containment
-        |FROM inter i JOIN sz sa ON sa.doc_id = i.doc_a
-        |WHERE CAST(inter AS DOUBLE) / sa.sz >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "set_ops_all" ->
-      """SELECT * FROM
-        |(SELECT CAST(count(*) AS BIGINT) AS both_all_cnt FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  WHERE o_orderpriority = '1-URGENT'
-        |  INTERSECT ALL
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))
-        |CROSS JOIN
-        |(SELECT CAST(count(*) AS BIGINT) AS only_urgent_all_cnt FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  WHERE o_orderpriority = '1-URGENT'
-        |  EXCEPT ALL
-        |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))"""
-        .stripMargin,
-
-    "user_diversity" ->
-      """WITH pc AS (SELECT user_id, event_type,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |pu AS (SELECT user_id, CAST(sum(c) AS BIGINT) AS n,
-        |    CAST(sum(c * c) AS BIGINT) AS c2
-        |  FROM pc GROUP BY 1),
-        |dm AS (SELECT CAST(round_even(1000000.0 *
-        |      CAST(n * n - c2 AS DOUBLE) / CAST(n * n AS DOUBLE), 0)
-        |      AS BIGINT) AS d_micro
-        |  FROM pu)
-        |SELECT d_micro // 10000 AS pct,
-        |  CAST(count(*) AS BIGINT) AS n_users
-        |FROM dm GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "burstiness" ->
-      """WITH ev AS (SELECT user_id,
-        |    CAST(epoch_us(ts) AS BIGINT) AS us
-        |  FROM events),
-        |gp AS (SELECT user_id,
-        |    us - lag(us, 1) OVER (PARTITION BY user_id
-        |      ORDER BY us) AS g
-        |  FROM ev),
-        |per AS (SELECT user_id, CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(g) AS HUGEINT) AS sg,
-        |    CAST(sum(CAST(g AS HUGEINT) * g) AS HUGEINT) AS qg
-        |  FROM gp WHERE g IS NOT NULL GROUP BY 1
-        |  HAVING count(*) >= 2),
-        |bb AS (SELECT
-        |    CAST(round_even((sqrt(CAST(CAST(ng AS HUGEINT) * qg
-        |        - sg * sg AS DOUBLE)) - CAST(sg AS DOUBLE)) /
-        |      (sqrt(CAST(CAST(ng AS HUGEINT) * qg - sg * sg
-        |        AS DOUBLE)) + CAST(sg AS DOUBLE)) * 10.0, 0)
-        |      AS BIGINT) AS bucket
-        |  FROM per WHERE sg > 0)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_users
-        |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "rolling_regression" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |ix AS (SELECT day, x,
-        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-        |  FROM d),
-        |mom AS (SELECT day,
-        |    count(*) OVER wr AS m,
-        |    CAST(sum(t) OVER wr AS BIGINT) AS st,
-        |    CAST(sum(x) OVER wr AS BIGINT) AS sx,
-        |    CAST(sum(t * t) OVER wr AS BIGINT) AS stt,
-        |    CAST(sum(t * x) OVER wr AS BIGINT) AS stx
-        |  FROM ix WINDOW wr AS (ORDER BY day
-        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-        |SELECT strftime(day, '%Y-%m-%d') AS day,
-        |  round_even(CASE WHEN 14 * stt - st * st <> 0
-        |    THEN CAST(14 * stx - st * sx AS DOUBLE) /
-        |      CAST(14 * stt - st * st AS DOUBLE) END, 6)
-        |    AS slope_per_day
-        |FROM mom WHERE m = 14 ORDER BY day""".stripMargin,
-
-    "cuped_adjust" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS vm
-        |  FROM events),
-        |sp AS (SELECT min(day) + 15 AS cut FROM ev),
-        |per AS (SELECT user_id,
-        |    COALESCE(CAST(sum(CASE WHEN day < cut THEN vm END)
-        |      AS BIGINT), 0) AS x,
-        |    COALESCE(CAST(sum(CASE WHEN day >= cut THEN vm END)
-        |      AS BIGINT), 0) AS y,
-        |    CAST('0x' || substr(md5('arm:'
-        |      || CAST(user_id AS VARCHAR)), 1, 7) AS BIGINT) % 2 AS arm
-        |  FROM ev CROSS JOIN sp GROUP BY user_id),
-        |mom AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS HUGEINT) AS sx,
-        |    CAST(sum(y) AS HUGEINT) AS sy,
-        |    CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-        |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-        |    CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-        |  FROM per),
-        |gm AS (SELECT n, sx,
-        |    CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE) AS covn,
-        |    CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE) AS varx,
-        |    CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DOUBLE) AS vary
-        |  FROM mom),
-        |arms AS (SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-        |    CAST(CAST(sum(x) AS HUGEINT) AS DOUBLE) AS sxg,
-        |    CAST(CAST(sum(y) AS HUGEINT) AS DOUBLE) AS syg
-        |  FROM per GROUP BY 1)
-        |SELECT arm, n_users,
-        |  round_even(syg / CAST(n_users AS DOUBLE) / 1000000.0, 6)
-        |    AS raw_mean,
-        |  round_even((syg / CAST(n_users AS DOUBLE) -
-        |    (CASE WHEN varx > 0.0 THEN covn / varx END) *
-        |    (sxg / CAST(n_users AS DOUBLE) -
-        |      CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))) / 1000000.0, 6)
-        |    AS cuped_mean,
-        |  round_even(CASE WHEN varx > 0.0 THEN covn / varx END, 6)
-        |    AS theta,
-        |  round_even(100.0 * (CASE WHEN varx > 0.0 AND vary > 0.0
-        |    THEN covn * covn / (varx * vary) END), 3)
-        |    AS var_reduction_pct
-        |FROM arms CROSS JOIN gm ORDER BY arm""".stripMargin,
-
-    "ridge_regression" ->
-      """WITH li AS (SELECT CAST(l_quantity AS BIGINT) AS q,
-        |    CAST(round_even(l_discount * 1000000, 0) AS BIGINT) AS d,
-        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(q) AS HUGEINT) AS s1,
-        |    CAST(sum(d) AS HUGEINT) AS s2,
-        |    CAST(sum(y) AS HUGEINT) AS sy,
-        |    CAST(sum(CAST(q AS HUGEINT) * q) AS HUGEINT) AS s11,
-        |    CAST(sum(CAST(d AS HUGEINT) * d) AS HUGEINT) AS s22,
-        |    CAST(sum(CAST(q AS HUGEINT) * d) AS HUGEINT) AS s12,
-        |    CAST(sum(CAST(q AS HUGEINT) * y) AS HUGEINT) AS s1y,
-        |    CAST(sum(CAST(d AS HUGEINT) * y) AS HUGEINT) AS s2y
-        |  FROM li),
-        |gm AS (SELECT n,
-        |    CAST(CAST(n AS HUGEINT) * s11 - s1 * s1 AS DOUBLE) AS a11,
-        |    CAST(CAST(n AS HUGEINT) * s22 - s2 * s2 AS DOUBLE) AS a22,
-        |    CAST(CAST(n AS HUGEINT) * s12 - s1 * s2 AS DOUBLE) AS a12,
-        |    CAST(CAST(n AS HUGEINT) * s1y - s1 * sy AS DOUBLE) AS b1,
-        |    CAST(CAST(n AS HUGEINT) * s2y - s2 * sy AS DOUBLE) AS b2
-        |  FROM m)
-        |SELECT n,
-        |  round_even(CASE WHEN (a11 + a11 / 1000.0) * (a22 + a22
-        |      / 1000.0) - a12 * a12 <> 0.0
-        |    THEN ((a22 + a22 / 1000.0) * b1 - a12 * b2) /
-        |      ((a11 + a11 / 1000.0) * (a22 + a22 / 1000.0) - a12 * a12)
-        |      / 100.0 END, 6) AS ridge_qty,
-        |  round_even(CASE WHEN (a11 + a11 / 1000.0) * (a22 + a22
-        |      / 1000.0) - a12 * a12 <> 0.0
-        |    THEN ((a11 + a11 / 1000.0) * b2 - a12 * b1) /
-        |      ((a11 + a11 / 1000.0) * (a22 + a22 / 1000.0) - a12 * a12)
-        |      * 10000.0 END, 6) AS ridge_disc,
-        |  round_even(CASE WHEN a11 * a22 - a12 * a12 <> 0.0
-        |    THEN (a22 * b1 - a12 * b2) / (a11 * a22 - a12 * a12)
-        |      / 100.0 END, 6) AS ols_qty,
-        |  round_even(CASE WHEN a11 * a22 - a12 * a12 <> 0.0
-        |    THEN (a11 * b2 - a12 * b1) / (a11 * a22 - a12 * a12)
-        |      * 10000.0 END, 6) AS ols_disc
-        |FROM gm""".stripMargin,
-
-    "cross_corr" ->
-      """WITH v AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS v
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |p AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS p
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |pr AS (SELECT l.lag AS lag,
-        |    CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(v.v) AS HUGEINT) AS sv,
-        |    CAST(sum(p.p) AS HUGEINT) AS sp,
-        |    CAST(sum(CAST(v.v AS HUGEINT) * v.v) AS HUGEINT) AS svv,
-        |    CAST(sum(CAST(p.p AS HUGEINT) * p.p) AS HUGEINT) AS spp,
-        |    CAST(sum(CAST(v.v AS HUGEINT) * p.p) AS HUGEINT) AS svp
-        |  FROM v CROSS JOIN range(-7, 8) l(lag)
-        |  JOIN p ON p.day = v.day + CAST(l.lag AS INT)
-        |  GROUP BY 1)
-        |SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
-        |  round_even(CASE WHEN n_pairs * svv - sv * sv > 0
-        |      AND n_pairs * spp - sp * sp > 0
-        |    THEN CAST(n_pairs * svp - sv * sp AS DOUBLE) /
-        |      sqrt(CAST((n_pairs * svv - sv * sv)
-        |        * (n_pairs * spp - sp * sp) AS DOUBLE)) END, 6) AS r
-        |FROM pr ORDER BY lag""".stripMargin,
-
-    "period_scan" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |ix AS (SELECT x,
-        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) - 1 AS t
-        |  FROM d),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx FROM ix),
-        |fold AS (SELECT pp.p AS p, ix.t % pp.p AS g,
-        |    CAST(count(*) AS BIGINT) AS ng,
-        |    CAST(sum(x) AS BIGINT) AS sg
-        |  FROM ix CROSS JOIN range(2, 15) pp(p)
-        |  GROUP BY 1, 2),
-        |ssb AS (SELECT p, CAST(sum(sg * sg // ng) AS BIGINT) AS ssb_raw
-        |  FROM fold GROUP BY 1)
-        |SELECT p, round_even(CASE WHEN sxx - sx * sx // n <> 0
-        |    THEN CAST(ssb_raw - sx * sx // n AS DOUBLE) /
-        |      CAST(sxx - sx * sx // n AS DOUBLE) END, 6) AS r2
-        |FROM ssb CROSS JOIN tot ORDER BY p""".stripMargin,
-
-    "hurst_rs" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |ix AS (SELECT x,
-        |    CAST(row_number() OVER (ORDER BY day) AS BIGINT) - 1 AS t
-        |  FROM d),
-        |bl AS (SELECT mm.m AS m, ix.t // mm.m AS blk, ix.t % mm.m AS j,
-        |    ix.x AS x
-        |  FROM ix CROSS JOIN (SELECT unnest([4, 8, 16]) AS m) mm),
-        |z AS (SELECT m, blk, j, x,
-        |    CAST(sum(x) OVER (PARTITION BY m, blk ORDER BY j
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum
-        |  FROM bl),
-        |bs AS (SELECT m, blk, CAST(count(*) AS BIGINT) AS len,
-        |    CAST(sum(x) AS BIGINT) AS sb,
-        |    CAST(sum(x * x) AS BIGINT) AS ssqb
-        |  FROM z GROUP BY 1, 2),
-        |zj AS (SELECT z.m, z.blk, bs.sb, bs.ssqb,
-        |    z.m * z.cum - (z.j + 1) * bs.sb AS mz
-        |  FROM z JOIN bs ON z.m = bs.m AND z.blk = bs.blk
-        |  WHERE bs.len = z.m),
-        |rs AS (SELECT m, blk,
-        |    CAST(round_even(1000000.0 *
-        |      CAST(greatest(max(mz), 0) - least(min(mz), 0) AS DOUBLE) /
-        |      sqrt(CAST(m * max(ssqb) - max(sb) * max(sb) AS DOUBLE)),
-        |      0) AS BIGINT) AS rs_micro
-        |  FROM zj GROUP BY 1, 2
-        |  HAVING m * max(ssqb) - max(sb) * max(sb) > 0),
-        |bysize AS (SELECT m, CAST(count(*) AS BIGINT) AS n_blocks,
-        |    CAST(sum(rs_micro) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |      / 1000000.0 AS mean_rs
-        |  FROM rs GROUP BY 1),
-        |h AS (SELECT (ln(max(CASE WHEN m = 16 THEN mean_rs END)) -
-        |    ln(max(CASE WHEN m = 4 THEN mean_rs END))) / (2.0 * ln(2.0))
-        |    AS hurst
-        |  FROM bysize)
-        |SELECT CAST(m AS BIGINT) AS m, n_blocks,
-        |  round_even(mean_rs, 6) AS mean_rs,
-        |  round_even(hurst, 6) AS hurst
-        |FROM bysize CROSS JOIN h ORDER BY m""".stripMargin,
-
-    "kendall_tau" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |cd AS (SELECT
-        |    CAST(sum(CASE WHEN (a.x < b.x AND a.y < b.y)
-        |        OR (a.x > b.x AND a.y > b.y) THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS concordant,
-        |    CAST(sum(CASE WHEN (a.x < b.x AND a.y > b.y)
-        |        OR (a.x > b.x AND a.y < b.y) THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS discordant
-        |  FROM d a JOIN d b ON a.day < b.day),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
-        |    CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS n0 FROM d),
-        |t1 AS (SELECT COALESCE(CAST(sum(c * (c - 1) // 2) AS BIGINT),
-        |      0) AS n1
-        |  FROM (SELECT CAST(count(*) AS BIGINT) AS c FROM d GROUP BY x)),
-        |t2 AS (SELECT COALESCE(CAST(sum(c * (c - 1) // 2) AS BIGINT),
-        |      0) AS n2
-        |  FROM (SELECT CAST(count(*) AS BIGINT) AS c FROM d GROUP BY y))
-        |SELECT n_days, concordant, discordant,
-        |  round_even(CAST(concordant - discordant AS DOUBLE) /
-        |    sqrt(CAST((n0 - n1) * (n0 - n2) AS DOUBLE)), 6) AS tau_b
-        |FROM cd, n, t1, t2""".stripMargin,
-
-    "runs_test" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS nall,
-        |    CAST(sum(x) AS BIGINT) AS sx FROM d),
-        |sg AS (SELECT day,
-        |    CAST(CASE WHEN x * nall > sx THEN 1 ELSE 0 END AS BIGINT)
-        |      AS sgn
-        |  FROM d, tot WHERE x * nall <> sx),
-        |fl AS (SELECT sgn,
-        |    CASE WHEN lag(sgn) OVER (ORDER BY day) IS NULL
-        |      OR lag(sgn) OVER (ORDER BY day) <> sgn
-        |    THEN 1 ELSE 0 END AS flip
-        |  FROM sg),
-        |r AS (SELECT
-        |    CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_above,
-        |    CAST(sum(CASE WHEN sgn = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_below,
-        |    CAST(sum(flip) AS BIGINT) AS runs
-        |  FROM fl)
-        |SELECT n_above, n_below, runs,
-        |  round_even(CASE
-        |    WHEN n_above > 0 AND n_below > 0 AND n_above + n_below > 1
-        |    THEN (CAST(runs AS DOUBLE) -
-        |        (CAST(2 * n_above * n_below AS DOUBLE) /
-        |          CAST(n_above + n_below AS DOUBLE) + 1.0)) /
-        |      sqrt(CAST((2 * n_above * n_below) *
-        |          (2 * n_above * n_below - (n_above + n_below))
-        |          AS DOUBLE) /
-        |        (CAST(n_above + n_below AS DOUBLE) *
-        |          CAST(n_above + n_below AS DOUBLE) *
-        |          CAST(n_above + n_below - 1 AS DOUBLE)))
-        |    END, 6) AS z
-        |FROM r""".stripMargin,
-
-    "isotonic_calibration" ->
-      """WITH b AS (SELECT
-        |    LEAST(CAST(round_even(o_totalprice * 100, 0) AS BIGINT)
-        |      // 3000000, 18) AS bin,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM orders GROUP BY 1),
-        |c AS (SELECT bin, n, k,
-        |    CAST(sum(n) OVER (ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cn,
-        |    CAST(sum(k) OVER (ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS ck
-        |  FROM b),
-        |jk AS (SELECT j.bin AS j, k2.bin AS kk,
-        |    CAST(round_even(1000000.0 *
-        |      CAST(k2.ck - (j.ck - j.k) AS DOUBLE) /
-        |      CAST(k2.cn - (j.cn - j.n) AS DOUBLE), 0) AS BIGINT) AS m
-        |  FROM c j JOIN c k2 ON j.bin <= k2.bin),
-        |mn AS (SELECT i.bin AS i, jk.j AS j, min(jk.m) AS mn
-        |  FROM jk JOIN c i ON jk.j <= i.bin AND i.bin <= jk.kk
-        |  GROUP BY 1, 2),
-        |fit AS (SELECT i, CAST(max(mn) AS BIGINT) AS iso_micro
-        |  FROM mn GROUP BY 1)
-        |SELECT c.bin, c.n, c.k AS urgent,
-        |  round_even(CAST(c.k AS DOUBLE) / CAST(c.n AS DOUBLE), 6)
-        |    AS raw_rate,
-        |  round_even(CAST(iso_micro AS DOUBLE) / 1000000.0, 6)
-        |    AS iso_rate
-        |FROM c JOIN fit ON c.bin = fit.i
-        |ORDER BY bin""".stripMargin,
-
-    "matrix_profile" ->
       """WITH d AS (SELECT CAST(ts AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS x
         |  FROM events GROUP BY 1),
@@ -2251,4 +2202,5 @@ object Inference {
         |SELECT strftime(qd, '%Y-%m-%d') AS sub_day,
         |  strftime(nd, '%Y-%m-%d') AS nn_day, d2 AS mp_dist
         |FROM pk WHERE rk = 1 ORDER BY sub_day""".stripMargin)
+  )
 }

@@ -148,7 +148,7 @@ object Insights {
     } else s.read.parquet(sink)
   }
 
-  /** [[queries]]' `connected_components` body, returning (result,
+  /** [[defs]]' `connected_components` body, returning (result,
     * propagation rounds actually RUN) so InsightsSpec can gate the
     * early exit.
     *
@@ -280,7 +280,7 @@ object Insights {
       "ssj_" + Relational.sfTag(dir))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val defs: Seq[QueryDef] = Seq(
 
     // Time-to-convert between consecutive funnel stages (the metric the
     // reference's funnel report implies but never computes — it counts
@@ -293,7 +293,7 @@ object Insights {
     // the mean is the one IEEE division, mirrored. Scale shape: one
     // groupBy(user) pivot-aggregate (map-side combinable), then windows
     // over the converting-user set partitioned by 3 hop keys.
-    "funnel_conversion_time" -> ((s, dir) => {
+    QueryDef("funnel_conversion_time", (s, dir) => {
       def firstTs(et: String) =
         min(when(col("event_type") === et, unix_micros(col("ts"))))
       val f = Tables.events(s, dir)
@@ -323,7 +323,34 @@ object Insights {
           max("dus").as("max_us"),
           bround(max("s").cast("double") / max("n"), 3).as("avg_us"))
         .orderBy("hop")
-    }),
+    },
+      """WITH f AS (SELECT user_id,
+        |    min(CASE WHEN event_type='signup' THEN epoch_us(ts) END) AS t_signup,
+        |    min(CASE WHEN event_type='view' THEN epoch_us(ts) END) AS t_view,
+        |    min(CASE WHEN event_type='click' THEN epoch_us(ts) END) AS t_click,
+        |    min(CASE WHEN event_type='purchase' THEN epoch_us(ts) END) AS t_purchase
+        |  FROM events GROUP BY 1),
+        |d AS (
+        |  SELECT '1:signup>view' AS hop, t_view - t_signup AS dus
+        |    FROM f WHERE t_view > t_signup
+        |  UNION ALL SELECT '2:view>click', t_click - t_view
+        |    FROM f WHERE t_click > t_view
+        |  UNION ALL SELECT '3:click>purchase', t_purchase - t_click
+        |    FROM f WHERE t_purchase > t_click),
+        |r AS (SELECT hop, dus,
+        |    row_number() OVER (PARTITION BY hop ORDER BY dus) AS rn,
+        |    count(*) OVER (PARTITION BY hop) AS n,
+        |    sum(dus) OVER (PARTITION BY hop) AS s
+        |  FROM d)
+        |SELECT hop, CAST(max(n) AS BIGINT) AS n_users,
+        |  CAST(min(dus) AS BIGINT) AS min_us,
+        |  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN dus END) AS BIGINT)
+        |    AS median_us,
+        |  CAST(max(CASE WHEN rn = (9 * n + 9) // 10 THEN dus END) AS BIGINT)
+        |    AS p90_us,
+        |  CAST(max(dus) AS BIGINT) AS max_us,
+        |  round_even(CAST(max(s) AS DOUBLE) / max(n), 3) AS avg_us
+        |FROM r GROUP BY hop ORDER BY hop""".stripMargin),
 
     // Exact Pearson correlation matrix over lineitem's numeric columns.
     // Inputs quantize to integer units (quantity is integral; price and
@@ -333,7 +360,7 @@ object Insights {
     // corr(x,y) = (n·Sxy − Sx·Sy) / (√(n·Sxx − Sx²)·√(n·Syy − Sy²)).
     // ONE map-side-combined aggregate over the table; 1 output row —
     // the 100 TB shape is a single pass regardless of column count.
-    "correlation_matrix" -> ((s, dir) => {
+    QueryDef("correlation_matrix", (s, dir) => {
       val li = t(s, dir, "lineitem").select(
         col("l_quantity").cast("long").as("q"),
         bround(col("l_extendedprice") * 100).cast("long").as("p"),
@@ -375,7 +402,41 @@ object Insights {
           .as("corr_qty_discount"),
         corr(col("spd"), col("sp"), col("sd"), col("spp"), col("sdd"))
           .as("corr_price_discount"))
-    }),
+    },
+      """WITH x AS (SELECT CAST(l_quantity AS BIGINT) AS q,
+        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS p,
+        |    CAST(round_even(l_discount * 100, 0) AS BIGINT) AS d
+        |  FROM lineitem),
+        |a AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+        |    CAST(sum(q) AS HUGEINT) AS sq, CAST(sum(p) AS HUGEINT) AS sp,
+        |    CAST(sum(d) AS HUGEINT) AS sd,
+        |    CAST(sum(CAST(q AS HUGEINT) * q) AS HUGEINT) AS sqq,
+        |    CAST(sum(CAST(p AS HUGEINT) * p) AS HUGEINT) AS spp,
+        |    CAST(sum(CAST(d AS HUGEINT) * d) AS HUGEINT) AS sdd,
+        |    CAST(sum(CAST(q AS HUGEINT) * p) AS HUGEINT) AS sqp,
+        |    CAST(sum(CAST(q AS HUGEINT) * d) AS HUGEINT) AS sqd,
+        |    CAST(sum(CAST(p AS HUGEINT) * d) AS HUGEINT) AS spd
+        |  FROM x)
+        |SELECT CAST(n AS BIGINT) AS n_rows,
+        |  CASE WHEN sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
+        |            sqrt(CAST(n * spp - sp * sp AS DOUBLE)) <> 0 THEN
+        |    round_even(CAST(n * sqp - sq * sp AS DOUBLE) /
+        |      (sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
+        |       sqrt(CAST(n * spp - sp * sp AS DOUBLE))), 6)
+        |  END AS corr_qty_price,
+        |  CASE WHEN sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
+        |            sqrt(CAST(n * sdd - sd * sd AS DOUBLE)) <> 0 THEN
+        |    round_even(CAST(n * sqd - sq * sd AS DOUBLE) /
+        |      (sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
+        |       sqrt(CAST(n * sdd - sd * sd AS DOUBLE))), 6)
+        |  END AS corr_qty_discount,
+        |  CASE WHEN sqrt(CAST(n * spp - sp * sp AS DOUBLE)) *
+        |            sqrt(CAST(n * sdd - sd * sd AS DOUBLE)) <> 0 THEN
+        |    round_even(CAST(n * spd - sp * sd AS DOUBLE) /
+        |      (sqrt(CAST(n * spp - sp * sp AS DOUBLE)) *
+        |       sqrt(CAST(n * sdd - sd * sd AS DOUBLE))), 6)
+        |  END AS corr_price_discount
+        |FROM a""".stripMargin),
 
     // Connected components on the supplier–part bipartite graph by k=3
     // rounds of min-label propagation (nodes: supplier→2k, part→2k+1;
@@ -386,8 +447,27 @@ object Insights {
     // both sides hash-partition on the join key and the label table
     // keeps that partitioning across rounds — no per-round re-shuffle
     // of the edge table beyond the first.
-    "connected_components" -> ((s, dir) =>
-      connectedComponents(s, dir)._1),
+    QueryDef("connected_components", (s, dir) =>
+      connectedComponents(s, dir)._1,
+      """WITH e0 AS (SELECT DISTINCT l_suppkey * 2 AS src,
+        |    l_partkey * 2 + 1 AS dst FROM lineitem),
+        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+        |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e),
+        |l1 AS (SELECT node, min(lbl) AS lbl FROM (
+        |    SELECT node, lbl FROM l0
+        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l0 t
+        |      ON e.dst = t.node) u GROUP BY node),
+        |l2 AS (SELECT node, min(lbl) AS lbl FROM (
+        |    SELECT node, lbl FROM l1
+        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l1 t
+        |      ON e.dst = t.node) u GROUP BY node),
+        |l3 AS (SELECT node, min(lbl) AS lbl FROM (
+        |    SELECT node, lbl FROM l2
+        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l2 t
+        |      ON e.dst = t.node) u GROUP BY node),
+        |c AS (SELECT lbl, CAST(count(*) AS BIGINT) AS sz FROM l3 GROUP BY lbl)
+        |SELECT sz, CAST(count(*) AS BIGINT) AS n_groups
+        |FROM c GROUP BY sz ORDER BY sz""".stripMargin),
 
     // Flesch-style readability per language over the documents corpus.
     // Per-doc word/sentence/syllable counts are exact regexp counts
@@ -396,7 +476,7 @@ object Insights {
     // integers per lang and the three ratios + the Flesch chain
     // (206.835 − 1.015·W/S − 84.6·Y/W) are the single mirrored IEEE
     // tail. Map-only until a |langs|-row aggregate — the 100 TB shape.
-    "readability_score" -> ((s, dir) => {
+    QueryDef("readability_score", (s, dir) => {
       val d = t(s, dir, "documents").select(col("lang"),
         expr("regexp_count(text, '[A-Za-z]+')").as("w"),
         expr("regexp_count(lower(text), '[aeiouy]+')").as("y"),
@@ -413,14 +493,33 @@ object Insights {
           bround(lit(206.835) - lit(1.015) * wps - lit(84.6) * spw, 6)
             .as("flesch"))
         .orderBy("lang")
-    }),
+    },
+      """WITH d AS (SELECT lang,
+        |    len(regexp_extract_all(text, '[A-Za-z]+')) AS w,
+        |    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS y,
+        |    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS sn
+        |  FROM documents),
+        |a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(w) AS BIGINT) AS words,
+        |    CAST(sum(sn) AS BIGINT) AS sentences,
+        |    CAST(sum(y) AS BIGINT) AS syllables
+        |  FROM d GROUP BY lang)
+        |SELECT lang, n_docs, words, sentences, syllables,
+        |  round_even(CAST(words AS DOUBLE) / sentences, 6)
+        |    AS words_per_sentence,
+        |  round_even(CAST(syllables AS DOUBLE) / words, 6)
+        |    AS syllables_per_word,
+        |  round_even(206.835
+        |    - 1.015 * (CAST(words AS DOUBLE) / sentences)
+        |    - 84.6 * (CAST(syllables AS DOUBLE) / words), 6) AS flesch
+        |FROM a ORDER BY lang""".stripMargin),
 
     // TPC-H Q7-flavored cross-border volume: revenue between (supplier
     // nation, customer nation) pairs by ship year. Nation (25 rows)
     // broadcasts to both legs; lineitem⋈orders⋈customer/supplier are
     // the shuffle joins AQE sizes at runtime. Revenue accumulates in
     // DECIMAL(18,2) and only the final scalar casts to double.
-    "tpch_q7_like" -> ((s, dir) => {
+    QueryDef("tpch_q7_like", (s, dir) => {
       def money(c: String) = col(c).cast(DecimalType(18, 2))
       val n1 = t(s, dir, "nation")
         .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
@@ -445,7 +544,21 @@ object Insights {
         .agg(count(lit(1)).as("n_items"),
           sum("vol").cast("double").as("revenue"))
         .orderBy("supp_nation", "cust_nation", "ship_year")
-    }),
+    },
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  year(l_shipdate) AS ship_year,
+        |  CAST(count(*) AS BIGINT) AS n_items,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
+        |    AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE n1.n_name <> n2.n_name
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
     // TPC-H Q5-shaped composite (local-supplier volume): the 6-way
     // star join — region→nation broadcast-prunes customers AND
@@ -454,7 +567,7 @@ object Insights {
     // applies as a post-join filter on two already-joined dim columns,
     // never as a join explosion. The deepest join tree in the suite;
     // revenue stays DECIMAL until the final cast.
-    "tpch_q5_like" -> ((s, dir) => {
+    QueryDef("tpch_q5_like", (s, dir) => {
       def money(c: String) = col(c).cast(DecimalType(18, 2))
       val nr = t(s, dir, "nation")
         .join(broadcast(t(s, dir, "region")
@@ -481,7 +594,23 @@ object Insights {
         .agg(count(lit(1)).as("n_items"),
           sum("vol").cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("nation"))
-    }),
+    },
+      """SELECT n.n_name AS nation, CAST(count(*) AS BIGINT) AS n_items,
+        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
+        |    * (CAST(1 AS DECIMAL(18,2))
+        |       - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+        |    AS revenue
+        |FROM lineitem l
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |JOIN customer c ON o.o_custkey = c.c_custkey
+        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        |JOIN nation n ON s.s_nationkey = n.n_nationkey
+        |JOIN region r ON n.n_regionkey = r.r_regionkey
+        |WHERE c.c_nationkey = s.s_nationkey
+        |  AND r.r_name = 'ASIA'
+        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY 1 ORDER BY revenue DESC, nation""".stripMargin),
 
     // Join-key skew audit over events.user_id — the "do I need to salt
     // this join" planning query. ONE map-side-combinable count per key,
@@ -491,7 +620,7 @@ object Insights {
     // at extreme key cardinality the production path is the
     // approx-quantile gate (quantile_gate), and the top-share/max here
     // stay exact either way.
-    "skew_stats" -> ((s, dir) => {
+    QueryDef("skew_stats", (s, dir) => {
       val c = Tables.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("c"))
       val w = Window.partitionBy(lit(1))
@@ -512,7 +641,23 @@ object Insights {
             .as("skew_ratio"),
           bround(col("max_rows").cast("double") / col("total_rows"), 6)
             .as("top_share"))
-    }),
+    },
+      """WITH c AS (SELECT user_id, count(*) AS c FROM events GROUP BY 1),
+        |r AS (SELECT c,
+        |    row_number() OVER (ORDER BY c, user_id) AS rn,
+        |    count(*) OVER () AS n, sum(c) OVER () AS tot
+        |  FROM c)
+        |SELECT CAST(max(n) AS BIGINT) AS n_keys,
+        |  CAST(max(tot) AS BIGINT) AS total_rows,
+        |  CAST(max(c) AS BIGINT) AS max_rows,
+        |  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN c END) AS BIGINT)
+        |    AS p50_rows,
+        |  CAST(max(CASE WHEN rn = (99 * n + 99) // 100 THEN c END)
+        |    AS BIGINT) AS p99_rows,
+        |  round_even(CAST(max(c) AS DOUBLE)
+        |    / max(CASE WHEN rn = (n + 1) // 2 THEN c END), 6) AS skew_ratio,
+        |  round_even(CAST(max(c) AS DOUBLE) / max(tot), 6) AS top_share
+        |FROM r""".stripMargin),
 
     // Per-source duplicate inflation: rows vs distinct normalized-text
     // fingerprints (the corpus-hygiene number that says which source is
@@ -520,7 +665,7 @@ object Insights {
     // [[TextAnalysis.fingerprint]] ≙ the oracle's md5 twin (pinned by
     // doc_fingerprint's MATCH). Hash-agg on 16-byte digests — the same
     // shape as exact dedup at 100 TB.
-    "dup_inflation" -> ((s, dir) => {
+    QueryDef("dup_inflation", (s, dir) => {
       t(s, dir, "documents").groupBy("source").agg(
           count(lit(1)).as("n_docs"),
           countDistinct(TextAnalysis.fingerprint(col("text")))
@@ -533,7 +678,19 @@ object Insights {
             col("n_docs").cast("double") / col("n_unique")), 6)
             .as("inflation"))
         .orderBy("source")
-    }),
+    },
+      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(DISTINCT md5(trim(regexp_replace(lower(text),
+        |    '\s+', ' ', 'g')))) AS BIGINT) AS n_unique,
+        |  CAST(count(*) - count(DISTINCT md5(trim(regexp_replace(
+        |    lower(text), '\s+', ' ', 'g')))) AS BIGINT) AS dup_rows,
+        |  CASE WHEN count(DISTINCT md5(trim(regexp_replace(lower(text),
+        |      '\s+', ' ', 'g')))) <> 0 THEN
+        |    round_even(CAST(count(*) AS DOUBLE)
+        |      / count(DISTINCT md5(trim(regexp_replace(lower(text),
+        |        '\s+', ' ', 'g')))), 6)
+        |  END AS inflation
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
 
     // Corpus self-overlap (diversity) on a deterministic sample: 30
     // docs by md5 order (the ivf seed-sample idiom), all C(30,2) pairs,
@@ -542,7 +699,7 @@ object Insights {
     // double sum would be order-dependent); the mean is the one final
     // IEEE chain. The pair join is a 30-row broadcast self-join — the
     // corpus-scale work is only the sample scan, at any data size.
-    "self_overlap_sample" -> ((s, dir) => {
+    QueryDef("self_overlap_sample", (s, dir) => {
       // sample BEFORE building gram sets: the eligibility filter is the
       // cheap token count (≙ the oracle's len(t) >= 3), so the corpus
       // pass is one regexp scan and the interpreted shingle HOF runs on
@@ -569,7 +726,29 @@ object Insights {
         .crossJoin(nd)
         .select(col("n_docs"), col("n_pairs"), col("avg_jaccard"),
           col("max_jaccard"))
-    }),
+    },
+      """WITH toks AS (
+        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t
+        |  FROM documents),
+        |gsets AS (
+        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
+        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM toks WHERE len(t) >= 3),
+        |smp AS (SELECT doc_id, grams FROM gsets
+        |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 30),
+        |p AS (
+        |  SELECT CAST(round_even(
+        |      (CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+        |        / len(list_distinct(a.grams || b.grams)))
+        |      * 1000000000000.0, 0) AS BIGINT) AS pj
+        |  FROM smp a JOIN smp b ON a.doc_id < b.doc_id)
+        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM smp) AS n_docs,
+        |  CAST(count(*) AS BIGINT) AS n_pairs,
+        |  round_even(CAST(sum(pj) AS DOUBLE) / count(*)
+        |    / 1000000000000.0, 6) AS avg_jaccard,
+        |  round_even(CAST(max(pj) AS DOUBLE) / 1000000000000.0, 6)
+        |    AS max_jaccard
+        |FROM p""".stripMargin),
 
     // The reference's funnel arithmetic applied to the data-cleaning
     // pipeline itself: survivors and drop-% through cumulative filter
@@ -579,7 +758,7 @@ object Insights {
     // the funnel itself is two 1-row aggregates unioned into 3 rows —
     // at 100 TB the report costs one scan plus one survivor-set window,
     // same as the cleaning job it audits.
-    "filter_funnel" -> ((s, dir) => {
+    QueryDef("filter_funnel", (s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         TextAnalysis.tokenCount(col("text")).as("toks"),
         TextAnalysis.fingerprint(col("text")).as("fp"))
@@ -604,7 +783,41 @@ object Insights {
         .unionByName(stage(2, "lang in (en,de,fr)", col("n1"), col("n2")))
         .unionByName(stage(3, "exact-dedup", col("n2"), col("n3")))
         .orderBy("stage_idx")
-    }),
+    },
+      """WITH d AS (SELECT doc_id, lang,
+        |    len(regexp_extract_all(text, '\S+')) AS toks,
+        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        |  FROM documents),
+        |p AS (SELECT doc_id, fp, (toks >= 30) AS pass1,
+        |    (toks >= 30 AND lang IN ('en','de','fr')) AS pass2
+        |  FROM d),
+        |r AS (SELECT doc_id,
+        |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+        |  FROM p WHERE pass2),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n0,
+        |    CAST(sum(CASE WHEN pass1 THEN 1 END) AS BIGINT) AS n1,
+        |    CAST(sum(CASE WHEN pass2 THEN 1 END) AS BIGINT) AS n2
+        |  FROM p),
+        |b AS (SELECT CAST(sum(CASE WHEN rn = 1 THEN 1 END) AS BIGINT)
+        |    AS n3 FROM r),
+        |w AS (SELECT * FROM a, b)
+        |SELECT * FROM (
+        |  SELECT 1 AS stage_idx, 'tokens>=30' AS stage, n0 AS n_in,
+        |    n1 AS n_out, n0 - n1 AS n_dropped,
+        |    CASE WHEN n0 > 0
+        |      THEN round_even(100.0 * (n0 - n1) / n0, 1) END AS drop_pct
+        |  FROM w
+        |  UNION ALL
+        |  SELECT 2, 'lang in (en,de,fr)', n1, n2, n1 - n2,
+        |    CASE WHEN n1 > 0
+        |      THEN round_even(100.0 * (n1 - n2) / n1, 1) END
+        |  FROM w
+        |  UNION ALL
+        |  SELECT 3, 'exact-dedup', n2, n3, n2 - n3,
+        |    CASE WHEN n2 > 0
+        |      THEN round_even(100.0 * (n2 - n3) / n2, 1) END
+        |  FROM w)
+        |ORDER BY stage_idx""".stripMargin),
 
     // Position-based (U-shape) multi-touch attribution: every purchase
     // distributes exactly 1,000,000 micro-credits over its 3-day
@@ -616,7 +829,7 @@ object Insights {
     // pairing is a per-user range join — per-user-bounded fan-out, the
     // funnel_ordered precedent; credit-weighted value accumulates in
     // DECIMAL(38,0) ≙ HUGEINT.
-    "attribution_ushape" -> ((s, dir) => {
+    QueryDef("attribution_ushape", (s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
       val ev = Tables.events(s, dir).select(col("user_id"),
         col("event_id"), unix_micros(col("ts")).as("ts_us"),
@@ -660,7 +873,44 @@ object Insights {
             .as("credited_purchases"),
           bround(col("wv").cast("double") / 1e12, 6).as("credited_value"))
         .orderBy("channel")
-    }),
+    },
+      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    event_type,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
+        |  FROM events),
+        |tou AS (SELECT user_id AS t_uid, event_id AS t_eid,
+        |    ts_us AS t_ts, event_type AS ch
+        |  FROM ev WHERE event_type IN ('click', 'view')),
+        |pur AS (SELECT user_id, event_id AS p_eid, ts_us AS p_ts, v
+        |  FROM ev WHERE event_type = 'purchase'),
+        |m AS (SELECT p.user_id, p.p_eid, p.v, t.ch,
+        |    row_number() OVER (PARTITION BY p.user_id, p.p_eid
+        |      ORDER BY t.t_ts, t.t_eid) AS rn,
+        |    count(*) OVER (PARTITION BY p.user_id, p.p_eid) AS k
+        |  FROM pur p JOIN tou t ON t.t_uid = p.user_id
+        |    AND (t.t_ts < p.p_ts OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
+        |    AND t.t_ts >= p.p_ts - 259200000000),
+        |touched AS (SELECT ch AS channel,
+        |    CASE WHEN k = 1 THEN 1000000
+        |      WHEN k = 2 THEN 500000
+        |      WHEN rn = 1 THEN 400000
+        |      WHEN rn = k THEN 400000 + 200000 % (k - 2)
+        |      ELSE 200000 // (k - 2) END AS cr, v
+        |  FROM m),
+        |untouched AS (SELECT 'none' AS channel, 1000000 AS cr, p.v
+        |  FROM pur p WHERE NOT EXISTS (SELECT 1 FROM tou t
+        |    WHERE t.t_uid = p.user_id
+        |      AND (t.t_ts < p.p_ts
+        |        OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
+        |      AND t.t_ts >= p.p_ts - 259200000000)),
+        |u AS (SELECT * FROM touched UNION ALL SELECT * FROM untouched)
+        |SELECT channel, CAST(count(*) AS BIGINT) AS touches,
+        |  CAST(sum(cr) AS BIGINT) AS credit_micros,
+        |  round_even(CAST(sum(cr) AS DOUBLE) / 1000000.0, 6)
+        |    AS credited_purchases,
+        |  round_even(CAST(sum(CAST(v AS HUGEINT) * cr) AS DOUBLE)
+        |    / 1000000000000.0, 6) AS credited_value
+        |FROM u GROUP BY channel ORDER BY channel""".stripMargin),
 
     // Time-decay multi-touch attribution — the fourth member of the
     // attribution family (last-touch / U-shape / Shapley): each touch's
@@ -670,7 +920,7 @@ object Insights {
     // pinned to the LAST touch (the ushape discipline: credits always
     // sum to 1e6). Same per-user-bounded range join, same anti-join
     // "none" leg, same DECIMAL(38,0) value accumulation.
-    "attribution_decay" -> ((s, dir) => {
+    QueryDef("attribution_decay", (s, dir) => {
       val lookbackUs = 259200000000L // 3 days in µs
       val dayUs = 86400000000L
       val ev = Tables.events(s, dir).select(col("user_id"),
@@ -715,7 +965,53 @@ object Insights {
             .as("credited_purchases"),
           bround(col("wv").cast("double") / 1e12, 6).as("credited_value"))
         .orderBy("channel")
-    }),
+    },
+      // same halving weights (4 >> age-days), same floor+remainder
+      // integer split; the remainder window is a second cumulative over
+      // the identical partition
+      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    event_type,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
+        |  FROM events),
+        |tou AS (SELECT user_id AS t_uid, event_id AS t_eid,
+        |    ts_us AS t_ts, event_type AS ch
+        |  FROM ev WHERE event_type IN ('click', 'view')),
+        |pur AS (SELECT user_id, event_id AS p_eid, ts_us AS p_ts, v
+        |  FROM ev WHERE event_type = 'purchase'),
+        |m AS (SELECT p.user_id, p.p_eid, p.v, t.ch,
+        |    CAST(4 // (1 << CAST(least((p.p_ts - t.t_ts) // 86400000000,
+        |      2) AS INT)) AS BIGINT) AS r,
+        |    row_number() OVER (PARTITION BY p.user_id, p.p_eid
+        |      ORDER BY t.t_ts, t.t_eid) AS rn,
+        |    count(*) OVER (PARTITION BY p.user_id, p.p_eid) AS k
+        |  FROM pur p JOIN tou t ON t.t_uid = p.user_id
+        |    AND (t.t_ts < p.p_ts OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
+        |    AND t.t_ts >= p.p_ts - 259200000000),
+        |m2 AS (SELECT *,
+        |    CAST(sum(r) OVER (PARTITION BY user_id, p_eid) AS BIGINT)
+        |      AS rt
+        |  FROM m),
+        |m3 AS (SELECT *, CAST((1000000 * r) // rt AS BIGINT) AS fl,
+        |    CAST(sum((1000000 * r) // rt)
+        |      OVER (PARTITION BY user_id, p_eid) AS BIGINT) AS fs
+        |  FROM m2),
+        |touched AS (SELECT ch AS channel,
+        |    fl + CASE WHEN rn = k THEN 1000000 - fs ELSE 0 END AS cr, v
+        |  FROM m3),
+        |untouched AS (SELECT 'none' AS channel, 1000000 AS cr, p.v
+        |  FROM pur p WHERE NOT EXISTS (SELECT 1 FROM tou t
+        |    WHERE t.t_uid = p.user_id
+        |      AND (t.t_ts < p.p_ts
+        |        OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
+        |      AND t.t_ts >= p.p_ts - 259200000000)),
+        |u AS (SELECT * FROM touched UNION ALL SELECT * FROM untouched)
+        |SELECT channel, CAST(count(*) AS BIGINT) AS touches,
+        |  CAST(sum(cr) AS BIGINT) AS credit_micros,
+        |  round_even(CAST(sum(cr) AS DOUBLE) / 1000000.0, 6)
+        |    AS credited_purchases,
+        |  round_even(CAST(sum(CAST(v AS HUGEINT) * cr) AS DOUBLE)
+        |    / 1000000000000.0, 6) AS credited_value
+        |FROM u GROUP BY channel ORDER BY channel""".stripMargin),
 
     // Structured Streaming, driver-gated: the SAME tumbling-day
     // aggregation the streaming module ships ([[FunnelStream
@@ -725,7 +1021,7 @@ object Insights {
     // batch oracle's GROUP BY day. Stream/batch parity stops being a
     // claim in a spec and becomes a hash-checked gate. The stream's ts
     // type is the batch reader's ([[Tables.eventsStream]]).
-    "stream_daily_counts" -> ((s, dir) => {
+    QueryDef("stream_daily_counts", (s, dir) => {
       val ev = Tables.eventsStream(s, dir)
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.dailyEventCounts(ev),
@@ -733,7 +1029,10 @@ object Insights {
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("cnt"))
         .orderBy("day", "event_type")
-    }),
+    },
+      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
+        |  CAST(count(*) AS BIGINT) AS cnt
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // Streaming QUANTILE sketch under the value oracle: the 512-bin
     // grid state (the engine's mergeable value sketch) accumulated as
@@ -742,7 +1041,7 @@ object Insights {
     // parity of the sketch STATE itself, gated by the identical
     // oracle. Streaming state is |types|·512 counters, the fixed
     // memory a 100 TB stream pays for percentiles.
-    "stream_quantile" -> ((s, dir) => {
+    QueryDef("stream_quantile", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), Signals.gridBin(col("value")))
@@ -753,7 +1052,10 @@ object Insights {
         ev.groupBy("event_type", "bin").agg(count(lit(1)).as("c")),
         "complete", "quant_" + Relational.sfTag(dir))
       Signals.gridQuantileReadout(s, grid)
-    }),
+    },
+      // stream/batch parity IS the claim: the batch sketch's oracle
+      // serves the streaming grid unchanged
+      QueryDef.oracle(Signals.defs, "sketch_quantiles")),
 
     // Streaming HLL — approximate distinct users per type with
     // CONSTANT state on an unbounded stream (64 registers per group vs
@@ -763,7 +1065,7 @@ object Insights {
     // sketch reads out register-identical to the batch hll_distinct —
     // whose oracle serves unchanged. Exact witnesses come from one
     // batch pass beside the stream.
-    "stream_hll" -> ((s, dir) => {
+    QueryDef("stream_hll", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val hll = udaf(new graft.functions.HyperLogLogAgg(),
         org.apache.spark.sql.Encoders.STRING)
@@ -784,7 +1086,9 @@ object Insights {
           graft.functions.HyperLogLogAgg.zeroRegs(col("regs"))
             .as("zero_regs"))
         .orderBy("event_type")
-    }),
+    },
+      // register-identical to the batch sketch → the batch oracle serves
+      QueryDef.oracle(Relational.defs, "hll_distinct")),
 
     // Streaming KMV — the fifth streaming sketch, extending the
     // merge-algebra square to a LATTICE op: HLL merges by max, CMS/grid
@@ -797,7 +1101,7 @@ object Insights {
     // gates θ itself. Constant |types|·k·8 B state on an unbounded
     // stream, and the sketch that comes out supports set algebra with
     // any batch-built sketch (kmv_theta_intersect).
-    "stream_kmv" -> ((s, dir) => {
+    QueryDef("stream_kmv", (s, dir) => {
       val kmv = udaf(new graft.functions.KmvSketchAgg(64),
         org.apache.spark.sql.Encoders.STRING)
       val ev = Tables.eventsStream(s, dir)
@@ -817,7 +1121,29 @@ object Insights {
             .as("est_distinct"),
           col("true_distinct"))
         .orderBy("event_type")
-    }),
+    },
+      // the streamed k-min list is deterministic, so θ and u_size gate
+      // the sketch STATE itself, not just a readout
+      """WITH fp AS (SELECT DISTINCT event_type,
+        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
+        |      AS BIGINT) AS h
+        |  FROM events WHERE user_id IS NOT NULL),
+        |rk AS (SELECT event_type, h,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+        |  FROM fp),
+        |st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS u_size,
+        |    max(h) AS theta_fp
+        |  FROM rk WHERE rn <= 64 GROUP BY 1),
+        |tru AS (SELECT event_type,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS true_distinct
+        |  FROM events GROUP BY 1)
+        |SELECT s.event_type, s.u_size, s.theta_fp,
+        |  round(CASE WHEN s.u_size < 64 THEN CAST(s.u_size AS DOUBLE)
+        |    ELSE 63.0 * power(2.0, 60) / CAST(s.theta_fp AS DOUBLE) END, 4)
+        |    AS est_distinct,
+        |  t.true_distinct
+        |FROM st s JOIN tru t USING (event_type)
+        |ORDER BY s.event_type""".stripMargin),
 
     // Streaming EXACT distinct via OR-merged bitmap words — the
     // precise-count partner of stream_hll on the stream (the same
@@ -827,7 +1153,7 @@ object Insights {
     // state where HLL pays 64 registers — both gated, that trade IS
     // the readout), and popcounts must land exactly on the batch
     // countDistinct.
-    "stream_bitmap" -> ((s, dir) => {
+    QueryDef("stream_bitmap", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir).select(col("event_type"),
         expr("CAST(user_id DIV 62 AS BIGINT)").as("w"),
@@ -843,7 +1169,23 @@ object Insights {
         .agg(countDistinct("user_id").as("distinct_exact"))
       counts.join(exact, Seq("event_type"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH w AS (SELECT event_type,
+        |    CAST(user_id // 62 AS BIGINT) AS w,
+        |    CAST(1 AS BIGINT) << CAST(user_id % 62 AS INT) AS m
+        |  FROM events),
+        |bm AS (SELECT event_type, w, bit_or(m) AS bm
+        |  FROM w GROUP BY 1, 2),
+        |c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_words,
+        |    CAST(sum(bit_count(bm)) AS BIGINT) AS distinct_bitmap
+        |  FROM bm GROUP BY 1),
+        |e AS (SELECT event_type,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_exact
+        |  FROM events GROUP BY 1)
+        |SELECT c.event_type, c.n_words, c.distinct_bitmap,
+        |  e.distinct_exact
+        |FROM c JOIN e USING (event_type)
+        |ORDER BY c.event_type""".stripMargin),
 
     // Streaming Bloom — the fourth streaming sketch, closing the
     // merge-algebra square: HLL registers merge by MAX, grid/CMS
@@ -854,7 +1196,7 @@ object Insights {
     // (constant 256 Kib state), then a fixed 2000-key probe grid is
     // tested against it: the md5 filter is deterministic, so pass,
     // present, and even the false-positive count are hash-gated.
-    "stream_bloom" -> ((s, dir) => {
+    QueryDef("stream_bloom", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val nBits = 262144
       val k = 7
@@ -887,7 +1229,47 @@ object Insights {
             bround(col("n_fp").cast("double")
               / (col("n_probes") - col("n_present")).cast("double"), 6))
             .as("fpr"))
-    }),
+    },
+      // the stream-built filter is bit-identical to a batch build, so
+      // the oracle rebuilds the k=7 positions and replays all probes
+      """WITH bl AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS kk
+        |  FROM events WHERE event_type = 'purchase'),
+        |blh AS (SELECT
+        |    CAST('0x' || substr(md5(kk), 1, 7) AS BIGINT) AS h1,
+        |    CAST('0x' || substr(md5(kk), 8, 7) AS BIGINT) | 1 AS h2
+        |  FROM bl),
+        |blpos AS (SELECT DISTINCT (h1 + t.i * h2) % 262144 AS pos
+        |  FROM blh, range(0, 7) t(i)),
+        |keys AS (SELECT t.u AS user_id FROM range(0, 2000) t(u)),
+        |kh AS (SELECT user_id,
+        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 7)
+        |      AS BIGINT) AS h1,
+        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 8, 7)
+        |      AS BIGINT) | 1 AS h2
+        |  FROM keys),
+        |kpos AS (SELECT k.user_id, (k.h1 + t.i * k.h2) % 262144 AS pos
+        |  FROM kh k, range(0, 7) t(i)),
+        |hit AS (SELECT p.user_id, count(b.pos) AS nhit
+        |  FROM kpos p LEFT JOIN blpos b USING (pos)
+        |  GROUP BY 1),
+        |x AS (SELECT h.user_id, h.nhit = 7 AS pass,
+        |    h.user_id IN (SELECT CAST(kk AS BIGINT) FROM bl) AS present
+        |  FROM hit h)
+        |SELECT CAST(count(*) AS BIGINT) AS n_probes,
+        |  CAST(sum(CASE WHEN pass THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_pass,
+        |  CAST(sum(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_present,
+        |  CAST(sum(CASE WHEN pass AND NOT present THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_fp,
+        |  CASE WHEN count(*) - sum(CASE WHEN present THEN 1 ELSE 0 END)
+        |      > 0
+        |    THEN CAST(round_even(
+        |      CAST(sum(CASE WHEN pass AND NOT present THEN 1 ELSE 0 END)
+        |        AS DOUBLE)
+        |      / CAST(count(*) - sum(CASE WHEN present THEN 1 ELSE 0 END)
+        |        AS DOUBLE), 6) AS DOUBLE) END AS fpr
+        |FROM x""".stripMargin),
 
     // Streaming CMS — the third streaming sketch beside stream_hll
     // (distinct) and stream_quantile (percentiles): frequency
@@ -896,7 +1278,7 @@ object Insights {
     // materialized sketch equals the batch one-shot and
     // cms_heavy_hitters' oracle serves unchanged; the probe and exact
     // witnesses come from one batch pass beside the stream.
-    "stream_cms" -> ((s, dir) => {
+    QueryDef("stream_cms", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val depth = 4
       val width = 64
@@ -918,7 +1300,8 @@ object Insights {
         .crossJoin(broadcast(sketch))
         .select(col("event_type"), est.as("est_cnt"), col("true_cnt"))
         .orderBy("event_type")
-    }),
+    },
+      QueryDef.oracle(Relational.defs, "cms_heavy_hitters")),
 
     // streaming Misra–Gries top-k: the deterministic-guarantee member
     // of the streaming sketch square (exact bitmap / HLL / CMS / Bloom
@@ -927,7 +1310,7 @@ object Insights {
     // makes micro-batch partials associative, so the replayed stream
     // ends register-identical to the batch summary and reuses the
     // batch oracle (same exact-regime capacity: 16 ≥ ~5 event types).
-    "stream_topk" -> ((s, dir) => {
+    QueryDef("stream_topk", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val mgU = udaf(new graft.functions.MisraGriesAgg(16),
         org.apache.spark.sql.Encoders.STRING)
@@ -943,7 +1326,8 @@ object Insights {
           col("true_cnt"),
           size(col("summary")).as("summary_size"))
         .orderBy("event_type")
-    }),
+    },
+      QueryDef.oracle(Relational.defs, "misra_gries_topk")),
 
     // Streaming stateful DEDUP under the value oracle: dropDuplicates
     // state keeps first-arrival per (user_id, event_type) across
@@ -954,7 +1338,7 @@ object Insights {
     // production watermark-bounded eviction is
     // [[graft.streaming.FunnelStream.dedupedEvents]], pinned in
     // FunnelStreamSpec (its cross-batch replay-drop test).
-    "stream_dedup_counts" -> ((s, dir) => {
+    QueryDef("stream_dedup_counts", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
       parquetSinkReadback(s,
@@ -964,7 +1348,10 @@ object Insights {
             .agg(count(lit(1)).as("distinct_users")),
           "complete", "dedup_" + Relational.sfTag(dir))
         .orderBy("event_type")
-    }),
+    },
+      // streaming first-per-key dedup ≡ batch count distinct
+      """SELECT event_type, count(DISTINCT user_id) AS distinct_users
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Stream-STATIC broadcast enrichment under the value oracle
     // ([[graft.streaming.FunnelStream.enrichedDailyCounts]], previously
@@ -974,7 +1361,7 @@ object Insights {
     // daily per-segment counts must equal the batch GROUP BY. The
     // segment dimension derives deterministically from user_id so the
     // oracle can rebuild it.
-    "stream_enriched_counts" -> ((s, dir) => {
+    QueryDef("stream_enriched_counts", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
       val dim = Tables.events(s, dir)
@@ -988,7 +1375,12 @@ object Insights {
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("segment"), col("cnt"))
         .orderBy("day", "segment")
-    }),
+    },
+      // stream-static broadcast enrichment ≡ batch join + daily GROUP BY
+      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+        |  'seg' || CAST(user_id % 4 AS VARCHAR) AS segment,
+        |  CAST(count(*) AS BIGINT) AS cnt
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // STREAM-STREAM watermarked inner join under the value oracle — the
     // last canonical Structured Streaming operator (the others: global
@@ -1015,7 +1407,7 @@ object Insights {
     // it — THE mechanism behind star-schema date-dim filtering. The
     // DynamicPruningExpression in the fact scan is asserted in
     // PlanSpec; the values must match the plain join oracle.
-    "dpp_join" -> ((s, dir) => {
+    QueryDef("dpp_join", (s, dir) => {
       GraftSession.tune(s)
       val p = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_dpp_" + Relational.sfTag(dir)).getAbsolutePath
@@ -1036,7 +1428,19 @@ object Insights {
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("n"), col("value_micros"))
         .orderBy("day")
-    }),
+    },
+      // the partitioned mirror holds exactly the events rows, so the
+      // oracle is the plain filtered join over the source table
+      """WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
+        |sel AS (SELECT day FROM d
+        |  WHERE (day - DATE '2024-01-01') % 7 < 2),
+        |f AS (SELECT CAST(ts AS DATE) AS day, value FROM events)
+        |SELECT strftime(f.day, '%Y-%m-%d') AS day,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
+        |    AS BIGINT) AS value_micros
+        |FROM f JOIN sel USING (day)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // The flatMapGroupsWithState SESSIONIZER under the batch oracle —
     // the last spec-only streaming operator promoted to a hash-checked
@@ -1052,7 +1456,7 @@ object Insights {
     // `sessionize` query computes, byte-identical under the same
     // oracle; the sentinel user's own never-closed session is the only
     // state left behind, filtered by user_id ≥ 0.
-    "stream_sessionize" -> ((s, dir) => {
+    QueryDef("stream_sessionize", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
@@ -1102,7 +1506,11 @@ object Insights {
           unix_micros(col("session_start")).as("start_us"),
           unix_micros(col("session_end")).as("end_us"))
         .orderBy("user_id", "sess_no")
-    }),
+    },
+      // stream/batch sessionization parity IS the claim: the streaming
+      // flatMapGroupsWithState result answers to the SAME oracle as the
+      // batch window query
+      QueryDef.oracle(Relational.defs, "sessionize")),
 
     // Watermark LATE-DATA semantics under the hash oracle — the
     // dropped-rows contract itself becomes the gate: the replay
@@ -1116,7 +1524,7 @@ object Insights {
     // would trip. The sentinel's own window never finalizes, so it
     // never reaches the sink. State = |days|·|types| windows, bounded
     // by the watermark — the 100 TB streaming-agg posture.
-    "stream_late_data" -> ((s, dir) => {
+    QueryDef("stream_late_data", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -1171,7 +1579,12 @@ object Insights {
         .filter(col("day") <=
           date_format(timestamp_micros(lit(maxUs)), "yyyy-MM-dd"))
         .orderBy("day", "event_type")
-    }),
+    },
+      // the duplicates the replay injects MUST have been dropped by the
+      // watermark for this to match the plain batch daily counts
+      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
+        |  CAST(count(*) AS BIGINT) AS cnt
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // Malformed-input accounting: a scratch CSV where every 13th line
     // carries a non-numeric token in a LONG column, read PERMISSIVE
@@ -1182,7 +1595,7 @@ object Insights {
     // the expected good/bad split in CLOSED FORM from the generation
     // rule (the synthetic_source trick) — it never parses the file, so
     // only correct quarantine semantics can match it.
-    "corrupt_records" -> ((s, dir) => {
+    QueryDef("corrupt_records", (s, dir) => {
       GraftSession.tune(s)
       val p = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_corrupt_" + Relational.sfTag(dir)).getAbsolutePath
@@ -1216,14 +1629,27 @@ object Insights {
           // corrupt rows keep their parseable columns (id) — the
           // quarantine preserves what it can
           sum(when(col("_bad").isNotNull, col("id"))).as("corrupt_id_sum"))
-    }),
+    },
+      // closed form from the generation rule — the oracle never parses
+      // the corrupt file
+      """WITH g AS (SELECT i FROM range(0, 10000) t(i))
+        |SELECT
+        |  CAST(sum(CASE WHEN i % 13 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_good,
+        |  CAST(sum(CASE WHEN i % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_corrupt,
+        |  CAST(sum(CASE WHEN i % 13 <> 0 THEN i * 7 END) AS BIGINT)
+        |    AS good_sum,
+        |  CAST(sum(CASE WHEN i % 13 = 0 THEN i END) AS BIGINT)
+        |    AS corrupt_id_sum
+        |FROM g""".stripMargin),
 
     // Empty-input aggregate semantics — the edge every engine must
     // agree on before any of the 200+ aggregates above can be trusted
     // on a filtered-to-nothing slice: a GLOBAL aggregate over zero rows
     // returns ONE row (count 0, sum/avg/min NULL), a GROUPED aggregate
     // returns ZERO rows (witnessed by a count over it).
-    "empty_relations" -> ((s, dir) => {
+    QueryDef("empty_relations", (s, dir) => {
       val e = Tables.events(s, dir).filter(col("event_type") === "nope")
       val global = e.agg(
         count(lit(1)).as("n"),
@@ -1234,7 +1660,14 @@ object Insights {
         .agg(count(lit(1)).as("c"))
         .agg(count(lit(1)).as("grouped_rows"))
       global.crossJoin(grouped)
-    }),
+    },
+      """WITH e AS (SELECT * FROM events WHERE event_type = 'nope'),
+        |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(value) AS DOUBLE) AS s, avg(value) AS a,
+        |    min(user_id) AS mn FROM e),
+        |gr AS (SELECT CAST(count(*) AS BIGINT) AS grouped_rows FROM (
+        |  SELECT event_type, count(*) AS c FROM e GROUP BY 1))
+        |SELECT g.n, g.s, g.a, g.mn, gr.grouped_rows FROM g, gr""".stripMargin),
 
     // Multi-format federation under one checksum: the SAME canonical
     // rows written once as parquet, ORC, and headered CSV, read back
@@ -1247,7 +1680,7 @@ object Insights {
     // micros BEFORE the write so the CSV text round-trip is exact by
     // construction, the same reason a 100 TB interchange layer never
     // ships raw doubles through text.
-    "federated_union" -> ((s, dir) => {
+    QueryDef("federated_union", (s, dir) => {
       GraftSession.tune(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_fed_" + Relational.sfTag(dir)).getAbsolutePath
@@ -1278,7 +1711,24 @@ object Insights {
           countDistinct("event_id").as("n_ids"),
           sum("vm").as("vm_sum"),
           sum("fp").cast(D38).cast("string").as("checksum"))
-    }),
+    },
+      // the oracle never reads our files: if all three format readers
+      // round-trip, every aggregate is exactly 3x the logical table's
+      """WITH c AS (SELECT event_id, user_id, event_type,
+        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS vm
+        |  FROM events),
+        |f AS (SELECT event_id, vm, CAST('0x' || substr(md5(
+        |      CAST(event_id AS VARCHAR) || '|' ||
+        |      CAST(user_id AS VARCHAR) || '|' ||
+        |      event_type || '|' ||
+        |      coalesce(CAST(vm AS VARCHAR), '')), 1, 15) AS BIGINT) AS fp
+        |  FROM c)
+        |SELECT CAST(3 * count(*) AS BIGINT) AS n_rows,
+        |  count(DISTINCT event_id) AS n_ids,
+        |  CAST(3 * sum(vm) AS BIGINT) AS vm_sum,
+        |  CAST(CAST(3 * sum(CAST(fp AS DECIMAL(38,0)))
+        |    AS DECIMAL(38,0)) AS VARCHAR) AS checksum
+        |FROM f""".stripMargin),
 
     // The mapGroupsWithState per-user funnel tracker under a value
     // oracle: the AvailableNow file source delivers the whole fixture
@@ -1289,7 +1739,7 @@ object Insights {
     // per-user and partition-parallel; the cross-batch accumulation
     // semantics are pinned separately in FunnelStreamSpec (this gate
     // pins the arithmetic against DuckDB).
-    "stream_user_funnel" -> ((s, dir) => {
+    QueryDef("stream_user_funnel", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ds = Tables.eventsStream(s, dir)
@@ -1302,10 +1752,28 @@ object Insights {
         .groupBy("events", "purchases", "converted")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("events", "purchases", "converted")
-    }),
+    },
+      // one update per user (single-batch replay) ≡ the batch per-user
+      // rollup, histogrammed to stay bounded
+      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS events,
+        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS purchases
+        |  FROM events GROUP BY 1)
+        |SELECT events, purchases, purchases > 0 AS converted,
+        |  CAST(count(*) AS BIGINT) AS n_users
+        |FROM u GROUP BY 1, 2, 3
+        |ORDER BY events, purchases, converted""".stripMargin),
 
-    "stream_stream_join" -> ((s, dir) =>
-      streamStreamJoinDaily(s, dir).orderBy("p_day")),
+    QueryDef("stream_stream_join", (s, dir) =>
+      streamStreamJoinDaily(s, dir).orderBy("p_day"),
+      """SELECT strftime(CAST(p.ts AS DATE), '%Y-%m-%d') AS p_day,
+        |  CAST(count(*) AS BIGINT) AS n_pairs,
+        |  count(DISTINCT p.user_id) AS n_users
+        |FROM events v JOIN events p
+        |  ON v.user_id = p.user_id
+        | AND v.event_type = 'view' AND p.event_type = 'purchase'
+        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 7 DAY
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Spark 4's STATE STORE READER — the ops surface a 100 TB/day
     // streaming deployment lives on (state audits, skew diagnosis,
@@ -1318,7 +1786,7 @@ object Insights {
     // buffer per key. Fresh checkpoint per run (uuid) keeps bench
     // passes identical; the state read is partition-parallel (one
     // state file per shuffle partition, `partition_id` exposed).
-    "stream_state_read" -> ((s, dir) => {
+    QueryDef("stream_state_read", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_ss_read_" + Relational.sfTag(dir) + "_" +
@@ -1353,512 +1821,15 @@ object Insights {
           .localCheckpoint()
       }
       }
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    // stream/batch parity IS the claim: the batch sketch's oracle
-    // serves the streaming grid unchanged
-    "stream_quantile" -> Signals.oracles("sketch_quantiles"),
-    // register-identical to the batch sketch → the batch oracle serves
-    "stream_hll" -> Relational.oracles("hll_distinct"),
-    "stream_cms" -> Relational.oracles("cms_heavy_hitters"),
-    "stream_topk" -> Relational.oracles("misra_gries_topk"),
-    // the streamed k-min list is deterministic, so θ and u_size gate
-    // the sketch STATE itself, not just a readout
-    "stream_kmv" ->
-      """WITH fp AS (SELECT DISTINCT event_type,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)
-        |      AS BIGINT) AS h
-        |  FROM events WHERE user_id IS NOT NULL),
-        |rk AS (SELECT event_type, h,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-        |  FROM fp),
-        |st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS u_size,
-        |    max(h) AS theta_fp
-        |  FROM rk WHERE rn <= 64 GROUP BY 1),
-        |tru AS (SELECT event_type,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS true_distinct
-        |  FROM events GROUP BY 1)
-        |SELECT s.event_type, s.u_size, s.theta_fp,
-        |  round(CASE WHEN s.u_size < 64 THEN CAST(s.u_size AS DOUBLE)
-        |    ELSE 63.0 * power(2.0, 60) / CAST(s.theta_fp AS DOUBLE) END, 4)
-        |    AS est_distinct,
-        |  t.true_distinct
-        |FROM st s JOIN tru t USING (event_type)
-        |ORDER BY s.event_type""".stripMargin,
-    "stream_bitmap" ->
-      """WITH w AS (SELECT event_type,
-        |    CAST(user_id // 62 AS BIGINT) AS w,
-        |    CAST(1 AS BIGINT) << CAST(user_id % 62 AS INT) AS m
-        |  FROM events),
-        |bm AS (SELECT event_type, w, bit_or(m) AS bm
-        |  FROM w GROUP BY 1, 2),
-        |c AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(sum(bit_count(bm)) AS BIGINT) AS distinct_bitmap
-        |  FROM bm GROUP BY 1),
-        |e AS (SELECT event_type,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_exact
-        |  FROM events GROUP BY 1)
-        |SELECT c.event_type, c.n_words, c.distinct_bitmap,
-        |  e.distinct_exact
-        |FROM c JOIN e USING (event_type)
-        |ORDER BY c.event_type""".stripMargin,
-    // the stream-built filter is bit-identical to a batch build, so
-    // the oracle rebuilds the k=7 positions and replays all probes
-    "stream_bloom" ->
-      """WITH bl AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS kk
-        |  FROM events WHERE event_type = 'purchase'),
-        |blh AS (SELECT
-        |    CAST('0x' || substr(md5(kk), 1, 7) AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(kk), 8, 7) AS BIGINT) | 1 AS h2
-        |  FROM bl),
-        |blpos AS (SELECT DISTINCT (h1 + t.i * h2) % 262144 AS pos
-        |  FROM blh, range(0, 7) t(i)),
-        |keys AS (SELECT t.u AS user_id FROM range(0, 2000) t(u)),
-        |kh AS (SELECT user_id,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 7)
-        |      AS BIGINT) AS h1,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 8, 7)
-        |      AS BIGINT) | 1 AS h2
-        |  FROM keys),
-        |kpos AS (SELECT k.user_id, (k.h1 + t.i * k.h2) % 262144 AS pos
-        |  FROM kh k, range(0, 7) t(i)),
-        |hit AS (SELECT p.user_id, count(b.pos) AS nhit
-        |  FROM kpos p LEFT JOIN blpos b USING (pos)
-        |  GROUP BY 1),
-        |x AS (SELECT h.user_id, h.nhit = 7 AS pass,
-        |    h.user_id IN (SELECT CAST(kk AS BIGINT) FROM bl) AS present
-        |  FROM hit h)
-        |SELECT CAST(count(*) AS BIGINT) AS n_probes,
-        |  CAST(sum(CASE WHEN pass THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_pass,
-        |  CAST(sum(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_present,
-        |  CAST(sum(CASE WHEN pass AND NOT present THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_fp,
-        |  CASE WHEN count(*) - sum(CASE WHEN present THEN 1 ELSE 0 END)
-        |      > 0
-        |    THEN CAST(round_even(
-        |      CAST(sum(CASE WHEN pass AND NOT present THEN 1 ELSE 0 END)
-        |        AS DOUBLE)
-        |      / CAST(count(*) - sum(CASE WHEN present THEN 1 ELSE 0 END)
-        |        AS DOUBLE), 6) AS DOUBLE) END AS fpr
-        |FROM x""".stripMargin,
-    "tpch_q5_like" ->
-      """SELECT n.n_name AS nation, CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-        |    * (CAST(1 AS DECIMAL(18,2))
-        |       - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |    AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE c.c_nationkey = s.s_nationkey
-        |  AND r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY revenue DESC, nation""".stripMargin,
-    "funnel_conversion_time" ->
-      """WITH f AS (SELECT user_id,
-        |    min(CASE WHEN event_type='signup' THEN epoch_us(ts) END) AS t_signup,
-        |    min(CASE WHEN event_type='view' THEN epoch_us(ts) END) AS t_view,
-        |    min(CASE WHEN event_type='click' THEN epoch_us(ts) END) AS t_click,
-        |    min(CASE WHEN event_type='purchase' THEN epoch_us(ts) END) AS t_purchase
-        |  FROM events GROUP BY 1),
-        |d AS (
-        |  SELECT '1:signup>view' AS hop, t_view - t_signup AS dus
-        |    FROM f WHERE t_view > t_signup
-        |  UNION ALL SELECT '2:view>click', t_click - t_view
-        |    FROM f WHERE t_click > t_view
-        |  UNION ALL SELECT '3:click>purchase', t_purchase - t_click
-        |    FROM f WHERE t_purchase > t_click),
-        |r AS (SELECT hop, dus,
-        |    row_number() OVER (PARTITION BY hop ORDER BY dus) AS rn,
-        |    count(*) OVER (PARTITION BY hop) AS n,
-        |    sum(dus) OVER (PARTITION BY hop) AS s
-        |  FROM d)
-        |SELECT hop, CAST(max(n) AS BIGINT) AS n_users,
-        |  CAST(min(dus) AS BIGINT) AS min_us,
-        |  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN dus END) AS BIGINT)
-        |    AS median_us,
-        |  CAST(max(CASE WHEN rn = (9 * n + 9) // 10 THEN dus END) AS BIGINT)
-        |    AS p90_us,
-        |  CAST(max(dus) AS BIGINT) AS max_us,
-        |  round_even(CAST(max(s) AS DOUBLE) / max(n), 3) AS avg_us
-        |FROM r GROUP BY hop ORDER BY hop""".stripMargin,
-    "correlation_matrix" ->
-      """WITH x AS (SELECT CAST(l_quantity AS BIGINT) AS q,
-        |    CAST(round_even(l_extendedprice * 100, 0) AS BIGINT) AS p,
-        |    CAST(round_even(l_discount * 100, 0) AS BIGINT) AS d
-        |  FROM lineitem),
-        |a AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(q) AS HUGEINT) AS sq, CAST(sum(p) AS HUGEINT) AS sp,
-        |    CAST(sum(d) AS HUGEINT) AS sd,
-        |    CAST(sum(CAST(q AS HUGEINT) * q) AS HUGEINT) AS sqq,
-        |    CAST(sum(CAST(p AS HUGEINT) * p) AS HUGEINT) AS spp,
-        |    CAST(sum(CAST(d AS HUGEINT) * d) AS HUGEINT) AS sdd,
-        |    CAST(sum(CAST(q AS HUGEINT) * p) AS HUGEINT) AS sqp,
-        |    CAST(sum(CAST(q AS HUGEINT) * d) AS HUGEINT) AS sqd,
-        |    CAST(sum(CAST(p AS HUGEINT) * d) AS HUGEINT) AS spd
-        |  FROM x)
-        |SELECT CAST(n AS BIGINT) AS n_rows,
-        |  CASE WHEN sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
-        |            sqrt(CAST(n * spp - sp * sp AS DOUBLE)) <> 0 THEN
-        |    round_even(CAST(n * sqp - sq * sp AS DOUBLE) /
-        |      (sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
-        |       sqrt(CAST(n * spp - sp * sp AS DOUBLE))), 6)
-        |  END AS corr_qty_price,
-        |  CASE WHEN sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
-        |            sqrt(CAST(n * sdd - sd * sd AS DOUBLE)) <> 0 THEN
-        |    round_even(CAST(n * sqd - sq * sd AS DOUBLE) /
-        |      (sqrt(CAST(n * sqq - sq * sq AS DOUBLE)) *
-        |       sqrt(CAST(n * sdd - sd * sd AS DOUBLE))), 6)
-        |  END AS corr_qty_discount,
-        |  CASE WHEN sqrt(CAST(n * spp - sp * sp AS DOUBLE)) *
-        |            sqrt(CAST(n * sdd - sd * sd AS DOUBLE)) <> 0 THEN
-        |    round_even(CAST(n * spd - sp * sd AS DOUBLE) /
-        |      (sqrt(CAST(n * spp - sp * sp AS DOUBLE)) *
-        |       sqrt(CAST(n * sdd - sd * sd AS DOUBLE))), 6)
-        |  END AS corr_price_discount
-        |FROM a""".stripMargin,
-    "connected_components" ->
-      """WITH e0 AS (SELECT DISTINCT l_suppkey * 2 AS src,
-        |    l_partkey * 2 + 1 AS dst FROM lineitem),
-        |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-        |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e),
-        |l1 AS (SELECT node, min(lbl) AS lbl FROM (
-        |    SELECT node, lbl FROM l0
-        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l0 t
-        |      ON e.dst = t.node) u GROUP BY node),
-        |l2 AS (SELECT node, min(lbl) AS lbl FROM (
-        |    SELECT node, lbl FROM l1
-        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l1 t
-        |      ON e.dst = t.node) u GROUP BY node),
-        |l3 AS (SELECT node, min(lbl) AS lbl FROM (
-        |    SELECT node, lbl FROM l2
-        |    UNION ALL SELECT e.src AS node, t.lbl FROM e JOIN l2 t
-        |      ON e.dst = t.node) u GROUP BY node),
-        |c AS (SELECT lbl, CAST(count(*) AS BIGINT) AS sz FROM l3 GROUP BY lbl)
-        |SELECT sz, CAST(count(*) AS BIGINT) AS n_groups
-        |FROM c GROUP BY sz ORDER BY sz""".stripMargin,
-    "readability_score" ->
-      """WITH d AS (SELECT lang,
-        |    len(regexp_extract_all(text, '[A-Za-z]+')) AS w,
-        |    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS y,
-        |    greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS sn
-        |  FROM documents),
-        |a AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(w) AS BIGINT) AS words,
-        |    CAST(sum(sn) AS BIGINT) AS sentences,
-        |    CAST(sum(y) AS BIGINT) AS syllables
-        |  FROM d GROUP BY lang)
-        |SELECT lang, n_docs, words, sentences, syllables,
-        |  round_even(CAST(words AS DOUBLE) / sentences, 6)
-        |    AS words_per_sentence,
-        |  round_even(CAST(syllables AS DOUBLE) / words, 6)
-        |    AS syllables_per_word,
-        |  round_even(206.835
-        |    - 1.015 * (CAST(words AS DOUBLE) / sentences)
-        |    - 84.6 * (CAST(syllables AS DOUBLE) / words), 6) AS flesch
-        |FROM a ORDER BY lang""".stripMargin,
-    "tpch_q7_like" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  year(l_shipdate) AS ship_year,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |    AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE n1.n_name <> n2.n_name
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "skew_stats" ->
-      """WITH c AS (SELECT user_id, count(*) AS c FROM events GROUP BY 1),
-        |r AS (SELECT c,
-        |    row_number() OVER (ORDER BY c, user_id) AS rn,
-        |    count(*) OVER () AS n, sum(c) OVER () AS tot
-        |  FROM c)
-        |SELECT CAST(max(n) AS BIGINT) AS n_keys,
-        |  CAST(max(tot) AS BIGINT) AS total_rows,
-        |  CAST(max(c) AS BIGINT) AS max_rows,
-        |  CAST(max(CASE WHEN rn = (n + 1) // 2 THEN c END) AS BIGINT)
-        |    AS p50_rows,
-        |  CAST(max(CASE WHEN rn = (99 * n + 99) // 100 THEN c END)
-        |    AS BIGINT) AS p99_rows,
-        |  round_even(CAST(max(c) AS DOUBLE)
-        |    / max(CASE WHEN rn = (n + 1) // 2 THEN c END), 6) AS skew_ratio,
-        |  round_even(CAST(max(c) AS DOUBLE) / max(tot), 6) AS top_share
-        |FROM r""".stripMargin,
-    "dup_inflation" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(DISTINCT md5(trim(regexp_replace(lower(text),
-        |    '\s+', ' ', 'g')))) AS BIGINT) AS n_unique,
-        |  CAST(count(*) - count(DISTINCT md5(trim(regexp_replace(
-        |    lower(text), '\s+', ' ', 'g')))) AS BIGINT) AS dup_rows,
-        |  CASE WHEN count(DISTINCT md5(trim(regexp_replace(lower(text),
-        |      '\s+', ' ', 'g')))) <> 0 THEN
-        |    round_even(CAST(count(*) AS DOUBLE)
-        |      / count(DISTINCT md5(trim(regexp_replace(lower(text),
-        |        '\s+', ' ', 'g')))), 6)
-        |  END AS inflation
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "self_overlap_sample" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t
-        |  FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
-        |  FROM toks WHERE len(t) >= 3),
-        |smp AS (SELECT doc_id, grams FROM gsets
-        |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 30),
-        |p AS (
-        |  SELECT CAST(round_even(
-        |      (CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-        |        / len(list_distinct(a.grams || b.grams)))
-        |      * 1000000000000.0, 0) AS BIGINT) AS pj
-        |  FROM smp a JOIN smp b ON a.doc_id < b.doc_id)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM smp) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_pairs,
-        |  round_even(CAST(sum(pj) AS DOUBLE) / count(*)
-        |    / 1000000000000.0, 6) AS avg_jaccard,
-        |  round_even(CAST(max(pj) AS DOUBLE) / 1000000000000.0, 6)
-        |    AS max_jaccard
-        |FROM p""".stripMargin,
-    "filter_funnel" ->
-      """WITH d AS (SELECT doc_id, lang,
-        |    len(regexp_extract_all(text, '\S+')) AS toks,
-        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |p AS (SELECT doc_id, fp, (toks >= 30) AS pass1,
-        |    (toks >= 30 AND lang IN ('en','de','fr')) AS pass2
-        |  FROM d),
-        |r AS (SELECT doc_id,
-        |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        |  FROM p WHERE pass2),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN pass1 THEN 1 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN pass2 THEN 1 END) AS BIGINT) AS n2
-        |  FROM p),
-        |b AS (SELECT CAST(sum(CASE WHEN rn = 1 THEN 1 END) AS BIGINT)
-        |    AS n3 FROM r),
-        |w AS (SELECT * FROM a, b)
-        |SELECT * FROM (
-        |  SELECT 1 AS stage_idx, 'tokens>=30' AS stage, n0 AS n_in,
-        |    n1 AS n_out, n0 - n1 AS n_dropped,
-        |    CASE WHEN n0 > 0
-        |      THEN round_even(100.0 * (n0 - n1) / n0, 1) END AS drop_pct
-        |  FROM w
-        |  UNION ALL
-        |  SELECT 2, 'lang in (en,de,fr)', n1, n2, n1 - n2,
-        |    CASE WHEN n1 > 0
-        |      THEN round_even(100.0 * (n1 - n2) / n1, 1) END
-        |  FROM w
-        |  UNION ALL
-        |  SELECT 3, 'exact-dedup', n2, n3, n2 - n3,
-        |    CASE WHEN n2 > 0
-        |      THEN round_even(100.0 * (n2 - n3) / n2, 1) END
-        |  FROM w)
-        |ORDER BY stage_idx""".stripMargin,
-    "attribution_ushape" ->
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    event_type,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
-        |  FROM events),
-        |tou AS (SELECT user_id AS t_uid, event_id AS t_eid,
-        |    ts_us AS t_ts, event_type AS ch
-        |  FROM ev WHERE event_type IN ('click', 'view')),
-        |pur AS (SELECT user_id, event_id AS p_eid, ts_us AS p_ts, v
-        |  FROM ev WHERE event_type = 'purchase'),
-        |m AS (SELECT p.user_id, p.p_eid, p.v, t.ch,
-        |    row_number() OVER (PARTITION BY p.user_id, p.p_eid
-        |      ORDER BY t.t_ts, t.t_eid) AS rn,
-        |    count(*) OVER (PARTITION BY p.user_id, p.p_eid) AS k
-        |  FROM pur p JOIN tou t ON t.t_uid = p.user_id
-        |    AND (t.t_ts < p.p_ts OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
-        |    AND t.t_ts >= p.p_ts - 259200000000),
-        |touched AS (SELECT ch AS channel,
-        |    CASE WHEN k = 1 THEN 1000000
-        |      WHEN k = 2 THEN 500000
-        |      WHEN rn = 1 THEN 400000
-        |      WHEN rn = k THEN 400000 + 200000 % (k - 2)
-        |      ELSE 200000 // (k - 2) END AS cr, v
-        |  FROM m),
-        |untouched AS (SELECT 'none' AS channel, 1000000 AS cr, p.v
-        |  FROM pur p WHERE NOT EXISTS (SELECT 1 FROM tou t
-        |    WHERE t.t_uid = p.user_id
-        |      AND (t.t_ts < p.p_ts
-        |        OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
-        |      AND t.t_ts >= p.p_ts - 259200000000)),
-        |u AS (SELECT * FROM touched UNION ALL SELECT * FROM untouched)
-        |SELECT channel, CAST(count(*) AS BIGINT) AS touches,
-        |  CAST(sum(cr) AS BIGINT) AS credit_micros,
-        |  round_even(CAST(sum(cr) AS DOUBLE) / 1000000.0, 6)
-        |    AS credited_purchases,
-        |  round_even(CAST(sum(CAST(v AS HUGEINT) * cr) AS DOUBLE)
-        |    / 1000000000000.0, 6) AS credited_value
-        |FROM u GROUP BY channel ORDER BY channel""".stripMargin,
-    // same halving weights (4 >> age-days), same floor+remainder
-    // integer split; the remainder window is a second cumulative over
-    // the identical partition
-    "attribution_decay" ->
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    event_type,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v
-        |  FROM events),
-        |tou AS (SELECT user_id AS t_uid, event_id AS t_eid,
-        |    ts_us AS t_ts, event_type AS ch
-        |  FROM ev WHERE event_type IN ('click', 'view')),
-        |pur AS (SELECT user_id, event_id AS p_eid, ts_us AS p_ts, v
-        |  FROM ev WHERE event_type = 'purchase'),
-        |m AS (SELECT p.user_id, p.p_eid, p.v, t.ch,
-        |    CAST(4 // (1 << CAST(least((p.p_ts - t.t_ts) // 86400000000,
-        |      2) AS INT)) AS BIGINT) AS r,
-        |    row_number() OVER (PARTITION BY p.user_id, p.p_eid
-        |      ORDER BY t.t_ts, t.t_eid) AS rn,
-        |    count(*) OVER (PARTITION BY p.user_id, p.p_eid) AS k
-        |  FROM pur p JOIN tou t ON t.t_uid = p.user_id
-        |    AND (t.t_ts < p.p_ts OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
-        |    AND t.t_ts >= p.p_ts - 259200000000),
-        |m2 AS (SELECT *,
-        |    CAST(sum(r) OVER (PARTITION BY user_id, p_eid) AS BIGINT)
-        |      AS rt
-        |  FROM m),
-        |m3 AS (SELECT *, CAST((1000000 * r) // rt AS BIGINT) AS fl,
-        |    CAST(sum((1000000 * r) // rt)
-        |      OVER (PARTITION BY user_id, p_eid) AS BIGINT) AS fs
-        |  FROM m2),
-        |touched AS (SELECT ch AS channel,
-        |    fl + CASE WHEN rn = k THEN 1000000 - fs ELSE 0 END AS cr, v
-        |  FROM m3),
-        |untouched AS (SELECT 'none' AS channel, 1000000 AS cr, p.v
-        |  FROM pur p WHERE NOT EXISTS (SELECT 1 FROM tou t
-        |    WHERE t.t_uid = p.user_id
-        |      AND (t.t_ts < p.p_ts
-        |        OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))
-        |      AND t.t_ts >= p.p_ts - 259200000000)),
-        |u AS (SELECT * FROM touched UNION ALL SELECT * FROM untouched)
-        |SELECT channel, CAST(count(*) AS BIGINT) AS touches,
-        |  CAST(sum(cr) AS BIGINT) AS credit_micros,
-        |  round_even(CAST(sum(cr) AS DOUBLE) / 1000000.0, 6)
-        |    AS credited_purchases,
-        |  round_even(CAST(sum(CAST(v AS HUGEINT) * cr) AS DOUBLE)
-        |    / 1000000000000.0, 6) AS credited_value
-        |FROM u GROUP BY channel ORDER BY channel""".stripMargin,
-    // the partitioned mirror holds exactly the events rows, so the
-    // oracle is the plain filtered join over the source table
-    "dpp_join" ->
-      """WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
-        |sel AS (SELECT day FROM d
-        |  WHERE (day - DATE '2024-01-01') % 7 < 2),
-        |f AS (SELECT CAST(ts AS DATE) AS day, value FROM events)
-        |SELECT strftime(f.day, '%Y-%m-%d') AS day,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
-        |    AS BIGINT) AS value_micros
-        |FROM f JOIN sel USING (day)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // stream/batch sessionization parity IS the claim: the streaming
-    // flatMapGroupsWithState result answers to the SAME oracle as the
-    // batch window query
-    "stream_sessionize" -> Relational.oracles("sessionize"),
-    // closed form from the generation rule — the oracle never parses
-    // the corrupt file
-    "corrupt_records" ->
-      """WITH g AS (SELECT i FROM range(0, 10000) t(i))
-        |SELECT
-        |  CAST(sum(CASE WHEN i % 13 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_good,
-        |  CAST(sum(CASE WHEN i % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_corrupt,
-        |  CAST(sum(CASE WHEN i % 13 <> 0 THEN i * 7 END) AS BIGINT)
-        |    AS good_sum,
-        |  CAST(sum(CASE WHEN i % 13 = 0 THEN i END) AS BIGINT)
-        |    AS corrupt_id_sum
-        |FROM g""".stripMargin,
-    "empty_relations" ->
-      """WITH e AS (SELECT * FROM events WHERE event_type = 'nope'),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(value) AS DOUBLE) AS s, avg(value) AS a,
-        |    min(user_id) AS mn FROM e),
-        |gr AS (SELECT CAST(count(*) AS BIGINT) AS grouped_rows FROM (
-        |  SELECT event_type, count(*) AS c FROM e GROUP BY 1))
-        |SELECT g.n, g.s, g.a, g.mn, gr.grouped_rows FROM g, gr""".stripMargin,
-    // the oracle never reads our files: if all three format readers
-    // round-trip, every aggregate is exactly 3x the logical table's
-    "federated_union" ->
-      """WITH c AS (SELECT event_id, user_id, event_type,
-        |    CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS vm
-        |  FROM events),
-        |f AS (SELECT event_id, vm, CAST('0x' || substr(md5(
-        |      CAST(event_id AS VARCHAR) || '|' ||
-        |      CAST(user_id AS VARCHAR) || '|' ||
-        |      event_type || '|' ||
-        |      coalesce(CAST(vm AS VARCHAR), '')), 1, 15) AS BIGINT) AS fp
-        |  FROM c)
-        |SELECT CAST(3 * count(*) AS BIGINT) AS n_rows,
-        |  count(DISTINCT event_id) AS n_ids,
-        |  CAST(3 * sum(vm) AS BIGINT) AS vm_sum,
-        |  CAST(CAST(3 * sum(CAST(fp AS DECIMAL(38,0)))
-        |    AS DECIMAL(38,0)) AS VARCHAR) AS checksum
-        |FROM f""".stripMargin,
-    // one update per user (single-batch replay) ≡ the batch per-user
-    // rollup, histogrammed to stay bounded
-    "stream_user_funnel" ->
-      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS events,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS purchases
-        |  FROM events GROUP BY 1)
-        |SELECT events, purchases, purchases > 0 AS converted,
-        |  CAST(count(*) AS BIGINT) AS n_users
-        |FROM u GROUP BY 1, 2, 3
-        |ORDER BY events, purchases, converted""".stripMargin,
-    "stream_daily_counts" ->
-      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
-        |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // the duplicates the replay injects MUST have been dropped by the
-    // watermark for this to match the plain batch daily counts
-    "stream_late_data" ->
-      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, event_type,
-        |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // streaming first-per-key dedup ≡ batch count distinct
-    "stream_dedup_counts" ->
-      """SELECT event_type, count(DISTINCT user_id) AS distinct_users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // stream-static broadcast enrichment ≡ batch join + daily GROUP BY
-    "stream_enriched_counts" ->
-      """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-        |  'seg' || CAST(user_id % 4 AS VARCHAR) AS segment,
-        |  CAST(count(*) AS BIGINT) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // watermarked stream-stream join ≡ batch self-join with the same
-    // event-time range predicate (AvailableNow delivers every row before
-    // the watermark can drop any, so the match set is exact)
-    // the state store must hold exactly the batch aggregate — the
-    // oracle never sees a stream or a checkpoint
-    "stream_state_read" ->
+    },
+      // watermarked stream-stream join ≡ batch self-join with the same
+      // event-time range predicate (AvailableNow delivers every row before
+      // the watermark can drop any, so the match set is exact)
+      // the state store must hold exactly the batch aggregate — the
+      // oracle never sees a stream or a checkpoint
       """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
         |  CAST(sum(CAST(round_even(value * 1000000.0, 0) AS BIGINT))
         |    AS BIGINT) AS value_micros
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "stream_stream_join" ->
-      """SELECT strftime(CAST(p.ts AS DATE), '%Y-%m-%d') AS p_day,
-        |  CAST(count(*) AS BIGINT) AS n_pairs,
-        |  count(DISTINCT p.user_id) AS n_users
-        |FROM events v JOIN events p
-        |  ON v.user_id = p.user_id
-        | AND v.event_type = 'view' AND p.event_type = 'purchase'
-        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 7 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
   )
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.Suite
+import graft.queries.QueryDef
 
 /** Dump `.explain("formatted")` for named registered queries to files —
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
@@ -27,7 +28,7 @@ object ExplainDump {
     val suffix = args(1)
     val queries = Suite.select(args.lift(2), "ExplainDump")
     val spark = Suite.session()
-    queries.foreach { case (name, fn) =>
+    queries.foreach { case QueryDef(name, fn, _) =>
       val txt = Suite.run(spark, Suite.sfDir, name, fn) {
         _.queryExecution.explainString(FormattedMode)
       }.fold(e => s"EXPLAIN FAILED: ${e.getClass.getName}: ${e.getMessage}",

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Suite
+import graft.queries.QueryDef
 
 /** Per-query breakdown profiler for optimization rounds: runs named
   * registered queries as Bench does (conf overlay, noop sink, one warm
@@ -23,7 +24,7 @@ object QueryProfile {
     spark.sparkContext.addSparkListener(listener)
     def failure(e: Throwable) = s"FAILED: ${e.getClass.getName}: ${e.getMessage}"
 
-    queries.foreach { case (name, fn) =>
+    queries.foreach { case QueryDef(name, fn, _) =>
       // warm pass (codegen + JIT), untimed
       Suite.run(spark, sfDir, name, fn)(Suite.noop).left
         .foreach(e => println(s"$name WARM ${failure(e)}"))

@@ -100,7 +100,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"),
         timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = graft.queries.Analytics.queries("session_window_agg")(
+    val got = SparkEntry.queries("session_window_agg")(
         spark, dir).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
         r.getAs[Long]("start_us"), r.getAs[Long]("end_us")))
@@ -118,7 +118,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // them; 57 DIV 7 = 8 chains one level deeper
     Seq(1L, 2L, 3L, 8L, 15L, 21L, 57L).toDF("s_suppkey")
       .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    val got = graft.queries.Signals.queries("recursive_tree")(spark, dir)
+    val got = SparkEntry.queries("recursive_tree")(spark, dir)
       .collect().map(r => (r.getInt(0), r.getAs[Long]("n"),
         r.getAs[Long]("key_sum"), r.getAs[Long]("n_roots")))
     assert(got === Array(
@@ -135,7 +135,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = graft.queries.Relational.queries("variant_json")(spark, dir)
+    val r = SparkEntry.queries("variant_json")(spark, dir)
       .collect()(0)
     assert((r.getAs[String]("event_type"), r.getAs[Long]("n"),
       r.getAs[Long]("n_users"), r.getAs[Long]("amount_micros"),
@@ -231,7 +231,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (3L, "t1 t2 t3 t4 t5 t6 t7 t8"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Analytics.queries("contamination_score")(spark, dir)
+    val out = SparkEntry.queries("contamination_score")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(out === Map(

@@ -52,7 +52,7 @@ class CountMinSketchSpec extends AnyFunSuite {
     rows.toDF("us", "event_type")
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"))
       .write.parquet(s"$dir/events.parquet")
-    val out = graft.queries.Relational.queries("cms_rollup")(spark, dir)
+    val out = SparkEntry.queries("cms_rollup")(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") -> r).toMap
     for ((k, n) <- Seq("x" -> 3L, "y" -> 4L)) {
       val r = out(k)

@@ -2,8 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Curation
-
 /** Planted-data semantics for the curation/eval batch: AUC rank
   * arithmetic (incl. ties and the degenerate one-class group),
   * calibration bin boundaries on the QUANTIZED score, the centered
@@ -32,7 +30,7 @@ class CurationSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         (col("ts_us") * 1000).as("ts")) // Long nanos encoding
       .write.parquet(s"$dir/events.parquet")
-    val out = Curation.queries("scd2_audit")(spark, dir).collect()
+    val out = SparkEntry.queries("scd2_audit")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4),
         r.getLong(5))).toMap
@@ -53,7 +51,7 @@ class CurationSpec extends AnyFunSuite {
       .toDF("o_orderkey", "o_custkey")
       .write.parquet(s"$dir/orders.parquet")
     Seq(Tuple1(100L)).toDF("c_custkey").write.parquet(s"$dir/customer.parquet")
-    val r = Curation.queries("referential_orphans")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("referential_orphans")(spark, dir).collect()(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ===
       ((1L, 1L, 3L, 2L)))
   }
@@ -71,7 +69,7 @@ class CurationSpec extends AnyFunSuite {
       ("D", 9.0, "F"), ("D", 8.0, "F"), ("D", 1.0, "O"))
       .toDF("o_orderpriority", "o_totalprice", "o_orderstatus")
       .write.parquet(s"$dir/orders.parquet")
-    val out = Curation.queries("auc_roc")(spark, dir).collect()
+    val out = SparkEntry.queries("auc_roc")(spark, dir).collect()
     val byPri = out.map(r => r.getAs[String]("priority") -> r).toMap
     assert(byPri("A").getAs[Double]("auc") === 0.5)
     assert(byPri("B").getAs[Double]("auc") === 0.5)
@@ -96,7 +94,7 @@ class CurationSpec extends AnyFunSuite {
       (ns(0), 3L, "purchase", 50.0), (ns(0), 4L, "view", 49.99))
       .toDF("ts", "user_id", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val out = Curation.queries("calibration_bins")(spark, dir).collect()
+    val out = SparkEntry.queries("calibration_bins")(spark, dir).collect()
     val byBin = out.map(r => r.getAs[Int]("bin") -> r).toMap
     assert(byBin.keySet === Set(0, 1, 9))
     assert(byBin(9).getAs[Long]("n") === 2L)
@@ -116,7 +114,7 @@ class CurationSpec extends AnyFunSuite {
     Seq((1L, Array(1.0f, 2.0f)), (2L, Array(3.0f, 4.0f)))
       .toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
-    val out = Curation.queries("embed_covariance")(spark, dir).collect()
+    val out = SparkEntry.queries("embed_covariance")(spark, dir).collect()
     assert(out.length === 3)
     out.foreach { r =>
       assert(r.getAs[Long]("n") === 2L)
@@ -136,7 +134,7 @@ class CurationSpec extends AnyFunSuite {
       (3L, Array(0.5f, 0.0f)), (4L, Array(-0.5f, 0.0f)))
       .toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
-    val out = Curation.queries("embed_power_iter")(spark, dir).collect()
+    val out = SparkEntry.queries("embed_power_iter")(spark, dir).collect()
       .map(r => (r.getAs[Int]("dim"), r.getAs[Long]("v_micros"),
         r.getAs[Long]("lambda_nanos")))
     assert(out.toSeq === Seq((0, 1000000L, 625000000000000L),
@@ -150,7 +148,7 @@ class CurationSpec extends AnyFunSuite {
       (2L, "a c c d", "src1"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Curation.queries("vocab_coverage")(spark, dir).collect()
+    val out = SparkEntry.queries("vocab_coverage")(spark, dir).collect()
     val bySrc = out.map(r => r.getAs[String]("source") -> r).toMap
     assert(bySrc("src0").getAs[Long]("oov_tokens") === 0L)
     assert(bySrc("src1").getAs[Long]("n_tokens") === 4L)
@@ -179,7 +177,7 @@ class CurationSpec extends AnyFunSuite {
     val (nbA, padA, maxA) = waste(lens)
     val (nbS, padS, maxS) =
       waste(lens.zipWithIndex.sortBy { case (l, i) => (l, i) }.map(_._1))
-    val out = Curation.queries("batch_padding")(spark, dir).collect()
+    val out = SparkEntry.queries("batch_padding")(spark, dir).collect()
     assert(out.length === 2)
     val byP = out.map(r => r.getAs[String]("policy") -> r).toMap
     for ((p, (nb, pad, mx)) <- Seq("arrival" -> ((nbA, padA, maxA)),
@@ -207,7 +205,7 @@ class CurationSpec extends AnyFunSuite {
     rows.toDF("l_orderkey", "l_linenumber", "l_returnflag",
         "l_linestatus", "l_suppkey", "l_partkey", "l_shipdate")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Curation.queries("encoding_audit")(spark, dir).collect()
+    val out = SparkEntry.queries("encoding_audit")(spark, dir).collect()
       .map(r => r.getAs[String]("col_name") -> ((r.getAs[Long]("n"),
         r.getAs[Long]("n_distinct"), r.getAs[Long]("runs"),
         r.getAs[Long]("bytes_plain"), r.getAs[Int]("dict_bits"),
@@ -237,7 +235,7 @@ class CurationSpec extends AnyFunSuite {
     rows.map { case (k, d) => (k, ts(d)) }
       .toDF("l_orderkey", "l_shipdate")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Curation.queries("zonemap_skip")(spark, dir).collect()
+    val out = SparkEntry.queries("zonemap_skip")(spark, dir).collect()
       .map(r => r.getAs[String]("layout") -> ((r.getAs[Long]("n_files"),
         r.getAs[Long]("files_scanned"), r.getAs[Long]("rows_scanned"),
         r.getAs[Long]("total_rows"), r.getAs[Long]("selected_rows"),
@@ -252,7 +250,7 @@ class CurationSpec extends AnyFunSuite {
     Seq((1L, "en", "s1"), (2L, "fr", "s1"), (9L, "en", "s2"))
       .toDF("doc_id", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Curation.queries("url_extract")(spark, dir).collect()
+    val out = SparkEntry.queries("url_extract")(spark, dir).collect()
       .map(r => r.getAs[String]("host") -> ((r.getAs[Long]("n_urls"),
         r.getAs[Long]("n_paths"), r.getAs[Long]("n_refs"),
         r.getAs[Long]("n_tracked"), r.getAs[String]("first_path"))))
@@ -268,7 +266,7 @@ class CurationSpec extends AnyFunSuite {
     (0 until 10).map(i => (i.toLong, s"w$i common"))
       .toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Curation.queries("vocab_growth")(spark, dir).collect()
+    val out = SparkEntry.queries("vocab_growth")(spark, dir).collect()
     assert(out.length === 10)
     val byK = out.map(r => r.getAs[Int]("k") -> r).toMap
     assert(byK(1).getAs[Long]("n_docs") === 1L)
@@ -290,7 +288,7 @@ class CurationSpec extends AnyFunSuite {
       doc(4, "b", "aa", 1), doc(5, "b", "bb", 6))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Curation.queries("compaction_bins")(spark, dir).collect()
+    val out = SparkEntry.queries("compaction_bins")(spark, dir).collect()
       .map(r => (r.getAs[Int]("bin"), r.getAs[Long]("n_files"),
         r.getAs[Long]("bytes"), r.getAs[String]("first_file"),
         r.getAs[String]("last_file")))
@@ -310,7 +308,7 @@ class CurationSpec extends AnyFunSuite {
       .write.parquet(s"$dir/orders.parquet")
     Seq((1L, "AAA"), (2L, "BBB")).toDF("c_custkey", "c_mktsegment")
       .write.parquet(s"$dir/customer.parquet")
-    val out = Curation.queries("target_encode")(spark, dir).collect()
+    val out = SparkEntry.queries("target_encode")(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3)))
     assert(out.toSeq === Seq(("AAA", 10L, 100.0, 215.151515),

@@ -612,9 +612,9 @@ class FunnelStreamSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"),
         col("user_id"))
       .write.parquet(s"$dir/events.parquet")
-    val stream = graft.queries.Insights.queries("stream_hll")(spark, dir)
+    val stream = SparkEntry.queries("stream_hll")(spark, dir)
       .collect().map(_.toSeq)
-    val batch = graft.queries.Relational.queries("hll_distinct")(
+    val batch = SparkEntry.queries("hll_distinct")(
       spark, dir).collect().map(_.toSeq)
     assert(stream.toSeq === batch.toSeq)
   }
@@ -632,7 +632,7 @@ class FunnelStreamSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         col("event_type"))
       .write.parquet(s"$dir/events.parquet")
-    val out = graft.queries.Insights.queries("stream_bitmap")(spark, dir)
+    val out = SparkEntry.queries("stream_bitmap")(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") ->
         ((r.getAs[Long]("n_words"), r.getAs[Long]("distinct_bitmap"),
           r.getAs[Long]("distinct_exact")))).toMap
@@ -654,7 +654,7 @@ class FunnelStreamSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         col("event_type"))
       .write.parquet(s"$dir/events.parquet")
-    val r = graft.queries.Insights.queries("stream_bloom")(spark, dir)
+    val r = SparkEntry.queries("stream_bloom")(spark, dir)
       .collect()(0)
     assert(r.getAs[Long]("n_probes") === 2000L)
     assert(r.getAs[Long]("n_present") === 10L) // only in-grid members
@@ -673,9 +673,9 @@ class FunnelStreamSpec extends AnyFunSuite {
       .toDF("us", "event_type")
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"))
       .write.parquet(s"$dir/events.parquet")
-    val stream = graft.queries.Insights.queries("stream_cms")(spark, dir)
+    val stream = SparkEntry.queries("stream_cms")(spark, dir)
       .collect().map(_.toSeq)
-    val batch = graft.queries.Relational.queries("cms_heavy_hitters")(
+    val batch = SparkEntry.queries("cms_heavy_hitters")(
       spark, dir).collect().map(_.toSeq)
     assert(stream.toSeq === batch.toSeq)
   }
@@ -692,9 +692,9 @@ class FunnelStreamSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"),
         col("value"))
       .write.parquet(s"$dir/events.parquet")
-    val stream = graft.queries.Insights.queries("stream_quantile")(
+    val stream = SparkEntry.queries("stream_quantile")(
       spark, dir).collect().map(_.toSeq)
-    val batch = graft.queries.Signals.queries("sketch_quantiles")(
+    val batch = SparkEntry.queries("sketch_quantiles")(
       spark, dir).collect().map(_.toSeq)
     assert(stream.toSeq === batch.toSeq)
   }
@@ -742,7 +742,7 @@ class FunnelStreamSpec extends AnyFunSuite {
           col("event_type"))
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       // dropDuplicates state through the real registered entry
-      val got = graft.queries.Insights.queries("stream_dedup_counts")(
+      val got = SparkEntry.queries("stream_dedup_counts")(
         spark, dir).collect()
       assert(got.nonEmpty)
       // progress events are async — poll for the stateful batches

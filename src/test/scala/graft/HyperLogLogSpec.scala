@@ -75,9 +75,9 @@ class HyperLogLogSpec extends AnyFunSuite {
         col("user_id"),
         org.apache.spark.sql.functions.lit("a").as("event_type"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val roll = graft.queries.Relational.queries("hll_rollup")(spark, dir)
+    val roll = SparkEntry.queries("hll_rollup")(spark, dir)
       .collect()(0)
-    val flat = graft.queries.Relational.queries("hll_distinct")(spark, dir)
+    val flat = SparkEntry.queries("hll_distinct")(spark, dir)
       .collect()(0)
     assert(roll.getAs[Long]("n_days") === 2L)
     assert(roll.getAs[Long]("sum_day_distinct") === 6L)
@@ -102,7 +102,7 @@ class HyperLogLogSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         lit("a").as("event_type"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.queries.Relational.queries("rolling_hll_reach")(spark, dir)
+    val out = SparkEntry.queries("rolling_hll_reach")(spark, dir)
       .collect().map(r => r.getAs[Int]("d") -> r).toMap
     assert(out.keySet === Set(0, 1, 2))
     assert(out(0).getAs[Long]("true_reach") === 2L)
@@ -139,7 +139,7 @@ class HyperLogLogSpec extends AnyFunSuite {
           .timestamp_micros(col("us")).as("ts"),
         col("user_id"), col("event_type"))
       .write.parquet(s"$dir/events.parquet")
-    val r = graft.queries.Relational.queries("hll_set_ops")(spark, dir)
+    val r = SparkEntry.queries("hll_set_ops")(spark, dir)
       .collect()(0)
     assert(r.getAs[Long]("true_a") === 10L)
     assert(r.getAs[Long]("true_b") === 10L)

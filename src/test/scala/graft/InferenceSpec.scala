@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Inference
-
 /** Planted-data semantics for the round-11 inference batch: every
   * expected value below is hand-derived from the closed-form statistic,
   * so a drift in the rank/moment/quantization arithmetic fails against
@@ -30,7 +28,7 @@ class InferenceSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("haar").toString
     ev.toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Inference.queries("haar_decompose")(spark, dir).collect()
+    val out = SparkEntry.queries("haar_decompose")(spark, dir).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getLong(3)))
     val exp = Seq((4, 0, "approx", 20L)) ++
       Seq((1, 0, 4L), (1, 1, 4L), (2, 0, 4L), (3, 0, 20L), (4, 0, 20L))
@@ -53,7 +51,7 @@ class InferenceSpec extends AnyFunSuite {
     Seq((1L, "BUILDING"), (2L, "MACHINERY"))
       .toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = Inference.queries("gini_split")(spark, dir).collect()
+    val out = SparkEntry.queries("gini_split")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq === Seq((1L, 3L, 2L, 266667L), (0L, 2L, 1L, 466667L)))
   }
@@ -70,7 +68,7 @@ class InferenceSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((1L, "A")).toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = Inference.queries("conformal_threshold")(spark, dir)
+    val out = SparkEntry.queries("conformal_threshold")(spark, dir)
       .collect()(0)
     assert((out.getLong(0), out.getLong(1), out.getLong(2),
       out.getLong(3), out.getLong(4)) === ((19L, 18L, 900L, 3L, 2L)))
@@ -90,7 +88,7 @@ class InferenceSpec extends AnyFunSuite {
     // β1=2·4e6/4e12=2e−6/micro → 2.0/unit; η at x̄=2e6 is 0 → p=½
     val dir = eventsDir(Seq(
       (ns(0), 1L, "view", 1.0), (ns(0), 2L, "purchase", 3.0)))
-    val out = graft.queries.Inference.queries("logistic_irls_step")(
+    val out = SparkEntry.queries("logistic_irls_step")(
       spark, dir).collect()
     assert(out.length === 1)
     val r = out.head
@@ -115,7 +113,7 @@ class InferenceSpec extends AnyFunSuite {
     }
     def r6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble
-    val out = graft.queries.Inference.queries("holt_linear")(spark, dir)
+    val out = SparkEntry.queries("holt_linear")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3)))
@@ -131,7 +129,7 @@ class InferenceSpec extends AnyFunSuite {
       (ns(0), 1L, "purchase", 1.0), (ns(0), 2L, "purchase", 2.0),
       (ns(0), 3L, "view", 2.0), (ns(0), 4L, "view", 3.0),
       (ns(0), 5L, "click", 99.0))) // non-member type must be ignored
-    val r = Inference.queries("mannwhitney_u")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("mannwhitney_u")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n1") === 2L)
     assert(r.getAs[Long]("n2") === 2L)
     assert(r.getAs[Long]("u1_x2") === 1L)
@@ -141,7 +139,7 @@ class InferenceSpec extends AnyFunSuite {
   test("mannwhitney_u: all values tied yields zero variance, NULL z") {
     val dir = eventsDir(Seq(
       (ns(0), 1L, "purchase", 5.0), (ns(0), 2L, "view", 5.0)))
-    val r = Inference.queries("mannwhitney_u")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("mannwhitney_u")(spark, dir).collect()(0)
     assert(r.isNullAt(r.fieldIndex("z")))
   }
 
@@ -153,7 +151,7 @@ class InferenceSpec extends AnyFunSuite {
     val extra = (0 until 10).filter(_ % 2 == 1).map(d =>
       (ns(d), 100L + d, "click", 0.0))
     val dir = eventsDir(rows ++ extra)
-    val out = Inference.queries("acf_daily")(spark, dir).collect()
+    val out = SparkEntry.queries("acf_daily")(spark, dir).collect()
     val byLag = out.map(r => r.getAs[Long]("lag") ->
       (r.getAs[Long]("n_pairs"), r.getAs[Double]("r"))).toMap
     assert(byLag(1L) === ((9L, -0.9)))
@@ -163,7 +161,7 @@ class InferenceSpec extends AnyFunSuite {
 
   test("acf_daily: constant series has zero denominator, NULL r") {
     val dir = eventsDir((0 until 5).map(d => (ns(d), d.toLong, "view", 0.0)))
-    val out = Inference.queries("acf_daily")(spark, dir).collect()
+    val out = SparkEntry.queries("acf_daily")(spark, dir).collect()
     assert(out.nonEmpty)
     assert(out.forall(_.isNullAt(2)))
   }
@@ -175,7 +173,7 @@ class InferenceSpec extends AnyFunSuite {
       Seq(3, 4, 5).flatMap(d => (0 until 5).map(i =>
         (ns(d), (10 * d + i).toLong, "view", 0.0)))
     val dir = eventsDir(rows)
-    val r = Inference.queries("cusum_changepoint")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("cusum_changepoint")(spark, dir).collect()(0)
     assert(r.getAs[String]("change_day") === "2024-01-03")
     assert(r.getAs[Long]("n_days") === 6L)
     assert(r.getAs[Double]("cusum") === -6.0)
@@ -186,7 +184,7 @@ class InferenceSpec extends AnyFunSuite {
     val rows = (0 until 6).flatMap(d => (0 until 3 * d + 10).map(i =>
       (ns(d), (100 * d + i).toLong, "view", 0.0)))
     val dir = eventsDir(rows)
-    val r = Inference.queries("theilsen_trend")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("theilsen_trend")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n_pairs") === 15L)
     assert(r.getAs[Double]("slope_per_day") === 3.0)
   }
@@ -202,7 +200,7 @@ class InferenceSpec extends AnyFunSuite {
     val dir = ordersDir(Seq(
       (1L, "F", "1-URGENT"), (2L, "F", "1-URGENT"),
       (3L, "O", "2-HIGH"), (4L, "O", "2-HIGH")))
-    val r = Inference.queries("mutual_info")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("mutual_info")(spark, dir).collect()(0)
     assert(r.getAs[Long]("levels_x") === 2L)
     assert(r.getAs[Long]("levels_y") === 2L)
     assert(r.getAs[Double]("mi_nats") === 0.693147)
@@ -213,7 +211,7 @@ class InferenceSpec extends AnyFunSuite {
     val dir = ordersDir(for {
       s <- Seq("F", "O"); p <- Seq("1-URGENT", "2-HIGH")
     } yield (1L, s, p))
-    val r = Inference.queries("mutual_info")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("mutual_info")(spark, dir).collect()(0)
     assert(r.getAs[Double]("mi_nats") === 0.0)
     assert(r.getAs[Double]("nmi") === 0.0)
   }
@@ -224,7 +222,7 @@ class InferenceSpec extends AnyFunSuite {
     val dir = ordersDir(Seq(
       (1L, "O", "1-URGENT"), (1L, "P", "1-URGENT"), (2L, "O", "1-URGENT"),
       (1L, "F", "3-MEDIUM"), (3L, "F", "3-MEDIUM")))
-    val r = Inference.queries("set_ops_all")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("set_ops_all")(spark, dir).collect()(0)
     assert(r.getAs[Long]("both_all_cnt") === 1L)
     assert(r.getAs[Long]("only_urgent_all_cnt") === 2L)
   }
@@ -239,7 +237,7 @@ class InferenceSpec extends AnyFunSuite {
     Seq((1L, quote), (2L, s"$pad $quote"), (3L, "one two three four five"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Inference.queries("containment_neardup")(spark, dir).collect()
+    val out = SparkEntry.queries("containment_neardup")(spark, dir).collect()
     assert(out.length === 1)
     val r = out(0)
     assert((r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) === ((1L, 2L)))
@@ -254,7 +252,7 @@ class InferenceSpec extends AnyFunSuite {
     Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 20L), (2L, 20L))
       .toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = Inference.queries("adamic_adar")(spark, dir).collect()
+    val out = SparkEntry.queries("adamic_adar")(spark, dir).collect()
     assert(out.length === 3)
     assert((out(0).getAs[Long]("sa"), out(0).getAs[Long]("sb")) === ((1L, 2L)))
     assert(out(0).getAs[Long]("n_common") === 2L)
@@ -273,7 +271,7 @@ class InferenceSpec extends AnyFunSuite {
     Seq((1L, 3L, 4.0), (1L, 10L, 2.0), (1L, 4L, 10.0), (2L, 4L, 8.0))
       .toDF("l_suppkey", "l_partkey", "l_quantity")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Inference.queries("als_step")(spark, dir).collect()
+    val out = SparkEntry.queries("als_step")(spark, dir).collect()
       .map(r => r.getAs[Long]("user_id") -> ((r.getAs[Long]("n"),
         r.getAs[Long]("a11"), r.getAs[Long]("a12"), r.getAs[Long]("a22"),
         r.getAs[Long]("b1"), r.getAs[Long]("b2"),
@@ -290,7 +288,7 @@ class InferenceSpec extends AnyFunSuite {
       (11 to 20).map(k => ("b", k * 1e-6))
     rows.toDF("event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val out = Inference.queries("quantile_align")(spark, dir).collect()
+    val out = SparkEntry.queries("quantile_align")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> ((r.getAs[Long]("q10"),
         r.getAs[Long]("q50"), r.getAs[Long]("q90"), r.getAs[Long]("g10"),
         r.getAs[Long]("g50"), r.getAs[Long]("g90"),
@@ -307,7 +305,7 @@ class InferenceSpec extends AnyFunSuite {
     Seq(("A", 1.00, 1.00), ("A", 2.00, 3.00), ("B", 5.00, 2.00))
       .toDF("l_returnflag", "l_extendedprice", "l_quantity")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Inference.queries("weighted_median")(spark, dir).collect()
+    val out = SparkEntry.queries("weighted_median")(spark, dir).collect()
       .map(r => r.getAs[String]("g") -> ((r.getAs[Long]("total_weight"),
         r.getAs[Long]("n_prices"), r.getAs[Long]("wmedian_cents"))))
       .toMap
@@ -326,7 +324,7 @@ class InferenceSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"),
         lit("a").as("event_type"), col("value"))
       .write.parquet(s"$dir/events.parquet")
-    val r = Inference.queries("durbin_watson")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("durbin_watson")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n_days") === 3L)
     assert(r.getAs[Double]("dw") === 1.0)
   }
@@ -340,9 +338,9 @@ class InferenceSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         col("value"))
       .write.parquet(s"$dir/events.parquet")
-    val run1 = Inference.queries("permutation_test")(spark, dir)
+    val run1 = SparkEntry.queries("permutation_test")(spark, dir)
       .collect()(0)
-    val run2 = Inference.queries("permutation_test")(spark, dir)
+    val run2 = SparkEntry.queries("permutation_test")(spark, dir)
       .collect()(0)
     assert(run1.toSeq === run2.toSeq) // md5 permutations, no rand()
     assert(run1.getAs[Long]("n_perms") === 63L)
@@ -365,7 +363,7 @@ class InferenceSpec extends AnyFunSuite {
       (ns(2), 5L, "view", 1.0),
       (ns(3), 1L, "view", 1.0), (ns(3), 2L, "view", 1.0),
       (ns(3), 3L, "view", 1.0), (ns(3), 4L, "view", 1.0)))
-    val out = Inference.queries("kendall_tau")(spark, dir).collect()
+    val out = SparkEntry.queries("kendall_tau")(spark, dir).collect()
     assert(out.length === 1)
     val r = out.head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((4L, 5L, 0L)))
@@ -380,7 +378,7 @@ class InferenceSpec extends AnyFunSuite {
       val x = if (d % 2 == 0) 5 else 1
       (0 until x).map(i => (ns(d), i.toLong, "view", 1.0))
     }
-    val out = Inference.queries("runs_test")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("runs_test")(spark, eventsDir(rows))
       .collect()
     assert(out.length === 1)
     val r = out.head
@@ -400,7 +398,7 @@ class InferenceSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("inf_iso").toString
     rows.toDF("o_totalprice", "o_orderpriority")
       .write.parquet(s"$dir/orders.parquet")
-    val out = Inference.queries("isotonic_calibration")(spark, dir)
+    val out = SparkEntry.queries("isotonic_calibration")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4)))
@@ -409,7 +407,7 @@ class InferenceSpec extends AnyFunSuite {
     // the theorem gate on real data: the fit is nondecreasing in bin
     val sf = "/root/testdata/sf0.001"
     if (new java.io.File(s"$sf/orders.parquet").exists()) {
-      val iso = Inference.queries("isotonic_calibration")(spark, sf)
+      val iso = SparkEntry.queries("isotonic_calibration")(spark, sf)
         .collect().map(_.getDouble(4))
       assert(iso.sliding(2).forall(p => p.length < 2 || p(0) <= p(1)))
     }
@@ -423,7 +421,7 @@ class InferenceSpec extends AnyFunSuite {
         (ns(2), 2L, "click", 1.0), (ns(3), 2L, "click", 1.0)) ++
       Seq((ns(0), 3L, "view", 1.0), (ns(1), 3L, "click", 1.0),
         (ns(2), 3L, "purchase", 1.0), (ns(3), 3L, "signup", 1.0))
-    val out = Inference.queries("user_diversity")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("user_diversity")(spark, eventsDir(rows))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq === Seq((0L, 1L), (50L, 1L), (75L, 1L)))
   }
@@ -442,7 +440,7 @@ class InferenceSpec extends AnyFunSuite {
       (math.sqrt(disc) + sg.toDouble)
     val exp2 = BigDecimal(b * 10.0)
       .setScale(0, BigDecimal.RoundingMode.HALF_EVEN).toLong
-    val out = Inference.queries("burstiness")(spark,
+    val out = SparkEntry.queries("burstiness")(spark,
       eventsDir(u1 ++ u2)).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq === Seq((-10L, 1L), (exp2, 1L)).sortBy(_._1))
@@ -455,7 +453,7 @@ class InferenceSpec extends AnyFunSuite {
       val x = 2 * (d + 1) + 3
       (0 until x).map(i => (ns(d), i.toLong, "view", 1.0))
     }
-    val out = Inference.queries("rolling_regression")(
+    val out = SparkEntry.queries("rolling_regression")(
       spark, eventsDir(rows)).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
     assert(out.length === 7)
@@ -474,7 +472,7 @@ class InferenceSpec extends AnyFunSuite {
       Seq((ns(0), (i + 1).toLong, "view", xv),
         (ns(20), (i + 1).toLong, "view", 2 * xv + 6))
     }
-    val out = Inference.queries("cuped_adjust")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("cuped_adjust")(spark, eventsDir(rows))
       .collect()
     assert(out.map(_.getLong(1)).sum === 4L)
     out.foreach { r =>
@@ -513,7 +511,7 @@ class InferenceSpec extends AnyFunSuite {
     val det0 = a11 * a22 - a12 * a12
     def r6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_EVEN).toDouble
-    val out = Inference.queries("ridge_regression")(spark, dir)
+    val out = SparkEntry.queries("ridge_regression")(spark, dir)
       .collect()(0)
     assert(out.getLong(0) === 5L)
     assert(out.getDouble(1) === r6((r22 * b1 - a12 * b2) / detR / 100.0))
@@ -535,7 +533,7 @@ class InferenceSpec extends AnyFunSuite {
       (0 until 2).map(i => (ns(1), 100L + i, "purchase", 1.0)) ++
       (0 until 4).map(i => (ns(2), 100L + i, "purchase", 1.0)) ++
       (0 until 6).map(i => (ns(3), 100L + i, "purchase", 1.0))
-    val out = Inference.queries("cross_corr")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("cross_corr")(spark, eventsDir(rows))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2))))
@@ -552,7 +550,7 @@ class InferenceSpec extends AnyFunSuite {
       val x = if (d % 7 == 0) 10 else 1
       (0 until x).map(i => (ns(d), i.toLong, "view", 1.0))
     }
-    val out = Inference.queries("period_scan")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("period_scan")(spark, eventsDir(rows))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out.size === 13)
     assert(out(7L) === 1.0)
@@ -570,7 +568,7 @@ class InferenceSpec extends AnyFunSuite {
       val x = if (d % 2 == 0) 1 else 3
       (0 until x).map(i => (ns(d), i.toLong, "view", 1.0))
     }
-    val out = Inference.queries("hurst_rs")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("hurst_rs")(spark, eventsDir(rows))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3)))
@@ -587,7 +585,7 @@ class InferenceSpec extends AnyFunSuite {
       val x = d % 7 + 1
       (0 until x).map(i => (ns(d), i.toLong, "view", 1.0))
     }
-    val out = Inference.queries("matrix_profile")(spark, eventsDir(rows))
+    val out = SparkEntry.queries("matrix_profile")(spark, eventsDir(rows))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     assert(out.toSeq === Seq(

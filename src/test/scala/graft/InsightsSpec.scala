@@ -32,7 +32,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("funnel_conversion_time")(spark, dir)
+    val got = SparkEntry.queries("funnel_conversion_time")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5), r.getDouble(6))).toMap
@@ -53,7 +53,7 @@ class InsightsSpec extends AnyFunSuite {
     Seq(1.0, 2.0, 3.0, 4.0).map(q => (q, 2.0 * q, (10 - q) / 100.0))
       .toDF("l_quantity", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = Insights.queries("correlation_matrix")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("correlation_matrix")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n_rows") === 4L)
     assert(r.getAs[Double]("corr_qty_price") === 1.0)
     assert(r.getAs[Double]("corr_qty_discount") === -1.0)
@@ -68,7 +68,7 @@ class InsightsSpec extends AnyFunSuite {
     Seq((1L, 1L), (2L, 1L), (3L, 2L))
       .toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = Insights.queries("connected_components")(spark, dir)
+    val got = SparkEntry.queries("connected_components")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(2L -> 1L, 3L -> 1L))
   }
@@ -93,7 +93,7 @@ class InsightsSpec extends AnyFunSuite {
     Seq((1L, "The cat sat. The dog ran!", "en"))
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = Insights.queries("readability_score")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("readability_score")(spark, dir).collect()(0)
     assert(r.getAs[Long]("words") === 6L)
     assert(r.getAs[Long]("sentences") === 2L)
     assert(r.getAs[Long]("syllables") === 6L)
@@ -114,7 +114,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = Insights.queries("skew_stats")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("skew_stats")(spark, dir).collect()(0)
     assert((r.getAs[Long]("n_keys"), r.getAs[Long]("total_rows"),
       r.getAs[Long]("max_rows"), r.getAs[Long]("p50_rows"),
       r.getAs[Long]("p99_rows")) === ((10L, 20L, 11L, 1L, 11L)))
@@ -129,7 +129,7 @@ class InsightsSpec extends AnyFunSuite {
       (3L, "another doc", "A"), (4L, "doc one", "B"), (5L, "doc two", "B"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Insights.queries("dup_inflation")(spark, dir).collect()
+    val got = SparkEntry.queries("dup_inflation")(spark, dir).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     assert(got === Map("A" -> ((3L, 2L, 1L, 1.5)), "B" -> ((2L, 2L, 0L, 1.0))))
@@ -142,7 +142,7 @@ class InsightsSpec extends AnyFunSuite {
     Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "x y z w"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = Insights.queries("self_overlap_sample")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("self_overlap_sample")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n_docs") === 3L)
     assert(r.getAs[Long]("n_pairs") === 3L)
     // pairs: 1/3, 0, 0 -> mean 1/9 (pico-quantized), max 1/3
@@ -174,7 +174,7 @@ class InsightsSpec extends AnyFunSuite {
       (4L, "too short", "en"))
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Insights.queries("filter_funnel")(spark, dir).collect()
+    val got = SparkEntry.queries("filter_funnel")(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5)))
     assert(got === Array(
@@ -204,7 +204,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"), col("value"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("attribution_ushape")(spark, dir).collect()
+    val got = SparkEntry.queries("attribution_ushape")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toMap
     assert(got === Map(
@@ -241,7 +241,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("stream_daily_counts")(spark, dir)
+    val got = SparkEntry.queries("stream_daily_counts")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(got === Array(
       ("1970-01-02", "click", 1L), ("1970-01-02", "view", 2L),
@@ -322,7 +322,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"), col("value"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("attribution_decay")(spark, dir).collect()
+    val got = SparkEntry.queries("attribution_decay")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toMap
     assert(got === Map(
@@ -345,7 +345,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("stream_late_data")(spark, dir).collect()
+    val got = SparkEntry.queries("stream_late_data")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(got.toSeq === Seq(
       ("1970-01-02", "view", 3L), ("1970-01-03", "view", 1L)))
@@ -353,7 +353,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("attribution_ushape: range join stays an equi-join on user (plan)") {
     assume(new java.io.File("/root/testdata/sf0.001/events.parquet").exists())
-    val plan = Insights.queries("attribution_ushape")(
+    val plan = SparkEntry.queries("attribution_ushape")(
         spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     // the touch↔purchase pairing must hash on the user equality; losing
@@ -366,7 +366,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("tpch_q7_like: nation joins broadcast (plan shape)") {
     assume(new java.io.File("/root/testdata/sf0.001/lineitem.parquet").exists())
-    val plan = Insights.queries("tpch_q7_like")(spark, "/root/testdata/sf0.001")
+    val plan = SparkEntry.queries("tpch_q7_like")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       "25-row nation dims must broadcast, not shuffle")
@@ -384,7 +384,7 @@ class InsightsSpec extends AnyFunSuite {
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         col("event_type"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Insights.queries("stream_dedup_counts")(spark, dir)
+    val got = SparkEntry.queries("stream_dedup_counts")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("a" -> 2L, "b" -> 1L))
   }
@@ -413,7 +413,7 @@ class InsightsSpec extends AnyFunSuite {
       (2L, 1L, 100.0, 0.0), (3L, 1L, 100.0, 0.0))
       .toDF("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Insights.queries("tpch_q5_like")(spark, dir).collect()
+    val out = SparkEntry.queries("tpch_q5_like")(spark, dir).collect()
     assert(out.length === 1)
     assert((out(0).getAs[String]("nation"), out(0).getAs[Long]("n_items"),
       out(0).getAs[Double]("revenue")) === (("CHINA", 1L, 90.0)))

@@ -895,7 +895,7 @@ class LlmSpec extends AnyFunSuite {
       4L -> "zulu something else")
     val dir = java.nio.file.Files.createTempDirectory("llm_snm").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.LlmQueries.queries("sorted_neighborhood")(spark, dir)
+    val out = SparkEntry.queries("sorted_neighborhood")(spark, dir)
       .collect()
       .map(r => (r.getAs[String]("blk"), r.getAs[Long]("a"),
         r.getAs[Long]("b"), r.getAs[Double]("jw")))

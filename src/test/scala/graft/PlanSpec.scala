@@ -267,49 +267,42 @@ class PlanSpec extends AnyFunSuite {
     assert(scans <= 1, s"fact table scanned more than once\n${p.take(1500)}")
   }
 
-  test("registry: module maps are disjoint and every query has an oracle") {
-    // The SparkEntry map is a ++ of per-module maps, so a key
-    // registered twice silently shadows the earlier query (and its
-    // oracle) — this gate makes the collision a test failure instead.
-    import graft.queries._
-    val mods = Seq(
-      "Relational" -> Relational.queries.keySet,
-      "LlmQueries" -> LlmQueries.queries.keySet,
-      "Analytics" -> Analytics.queries.keySet,
-      "Scoring" -> Scoring.queries.keySet,
-      "Signals" -> Signals.queries.keySet,
-      "Insights" -> Insights.queries.keySet,
-      "Inference" -> Inference.queries.keySet,
-      "Curation" -> Curation.queries.keySet)
-    for {
-      (Seq((na, a), (nb, b))) <- mods.combinations(2)
-      clash = a.intersect(b)
-    } assert(clash.isEmpty, s"$na and $nb both register: $clash")
-    val qk = SparkEntry.queries.keySet
-    val ok = SparkEntry.oracleSql.keySet
-    assert((qk -- ok).isEmpty, s"queries without an oracle: ${qk -- ok}")
-    assert((ok -- qk).isEmpty, s"oracles without a query: ${ok -- qk}")
-    assert(qk.size === mods.map(_._2.size).sum + 5) // 5 SparkEntry-level
+  test("registry: duplicate names rejected, every def has an oracle") {
+    import graft.queries.QueryDef
+    // a name registered twice is rejected at construction, within one
+    // list and across two, and the error names the duplicate
+    val a = QueryDef("dup_a", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val b = QueryDef("other", a.build, "SELECT 2")
+    val within = intercept[IllegalArgumentException](
+      QueryDef.registry(Seq(a, b, a)))
+    assert(within.getMessage.contains("dup_a") &&
+      !within.getMessage.contains("other"), within.getMessage)
+    val across = intercept[IllegalArgumentException](
+      QueryDef.registry(Seq(a, b), Seq(a.copy(oracle = "SELECT 3"))))
+    assert(across.getMessage.contains("dup_a") &&
+      !across.getMessage.contains("other"), across.getMessage)
+    assert(QueryDef.registry(Seq(a), Seq(b)) === Seq(a, b))
+    val blank = SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size === SparkEntry.registry.length)
   }
 
   test("per-query conf overlays are registered, scoped, and restored") {
-    // r17 (r16 verdict item 2): the shuffle-width posture is
-    // engine-visible — a query declares its conf overlay and the
-    // runners apply it ONLY inside that query's scope
+    // a query declares its conf overlay and the runners apply it ONLY
+    // inside that query's scope
     val overlays = SparkEntry.confOverlays
     assert(overlays.keySet.subsetOf(SparkEntry.queries.keySet),
       s"overlay for unregistered query: " +
         s"${overlays.keySet -- SparkEntry.queries.keySet}")
-    // r18: the r16 assoc_rules initialPartitionNum overlay was removed
-    // (its sf10 justification measured anti-scale on re-validation:
-    // 53.6 s without vs 62.0 s with, tools output in OPTIMIZATION_r18);
-    // the small-partition floor for starved fan-out stages is the r18
-    // overlay family, pinned here via adamic_adar
+    // an overlay stays only while its measured benefit reproduces
+    // (assoc_rules' did not); the small-partition floor for starved
+    // fan-out stages is pinned here via adamic_adar
     assert(!overlays.contains("assoc_rules"),
-      "the refuted assoc_rules overlay must stay removed (r18 sf10 A/B)")
+      "assoc_rules carries no overlay: its scale benefit did not reproduce")
     assert(overlays.contains("adamic_adar"),
-      "adamic_adar must carry its small-partition AQE floor (r18 A/B: " +
-        "pair fan-out starved at bytes/1MB partitions)")
+      "adamic_adar must carry its small-partition AQE floor " +
+        "(pair fan-out starved at bytes/1MB partitions)")
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     val prior = spark.conf.getOption(key)
     var inside = ""

@@ -183,7 +183,7 @@ class PropertySpec extends AnyFunSuite {
         base.getTime + rnd.nextInt(2500).toLong * 86400000L))
     }.toDF("l_orderkey", "l_shipdate")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Curation.queries("zonemap_skip")(spark, dir)
+    val out = SparkEntry.queries("zonemap_skip")(spark, dir)
       .collect().map(r => r.getAs[String]("layout") -> r).toMap
     val (nat, srt) = (out("natural"), out("sorted"))
     // a zone map may over-scan but can NEVER lose selected rows, and
@@ -235,7 +235,7 @@ class PropertySpec extends AnyFunSuite {
       }
       (pr, cnt)
     }
-    val got = graft.queries.Scoring.queries("bpe_train_rounds")(spark, dir)
+    val got = SparkEntry.queries("bpe_train_rounds")(spark, dir)
       .collect()
       .map(r => (r.getAs[String]("merged_pair"), r.getAs[Long]("cnt")))
     assert(got.toSeq === expect)
@@ -265,7 +265,7 @@ class PropertySpec extends AnyFunSuite {
       (a, b, sab, sa, sb, r0(sab.toDouble * 1e6 / sa.toDouble),
         r0(n * sab.toDouble * 1e6 / (sa.toDouble * sb.toDouble)))
     }.sortBy { case (a, b, _, _, _, c, l) => (-l, -c, a, b) }.take(25)
-    val got = graft.queries.Signals.queries("assoc_rules")(spark, dir)
+    val got = SparkEntry.queries("assoc_rules")(spark, dir)
       .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Long]("sab"), r.getAs[Long]("sa"), r.getAs[Long]("sb"),
         r.getAs[Long]("conf_micros"), r.getAs[Long]("lift_micros")))
@@ -295,7 +295,7 @@ class PropertySpec extends AnyFunSuite {
         .foreach { case (v, _) => med = v }
       g -> ((tw, grid.size.toLong, med))
     }
-    val got = graft.queries.Inference.queries("weighted_median")(
+    val got = SparkEntry.queries("weighted_median")(
         spark, dir).collect()
       .map(r => r.getAs[String]("g") -> ((r.getAs[Long]("total_weight"),
         r.getAs[Long]("n_prices"), r.getAs[Long]("wmedian_cents"))))
@@ -320,7 +320,7 @@ class PropertySpec extends AnyFunSuite {
     val (padA, _) = waste(lens)
     val (padS, _) =
       waste(lens.zipWithIndex.sortBy { case (l, i) => (l, i) }.map(_._1))
-    val out = graft.queries.Curation.queries("batch_padding")(spark, dir)
+    val out = SparkEntry.queries("batch_padding")(spark, dir)
       .collect().map(r => r.getAs[String]("policy") ->
         r.getAs[Long]("pad_tokens")).toMap
     assert(out("arrival") === padA)

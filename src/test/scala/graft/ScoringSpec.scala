@@ -291,7 +291,7 @@ class ScoringSpec extends AnyFunSuite {
       .toDF("l_suppkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("pr").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Scoring.queries("pagerank_iter")(spark, dir)
+    val out = SparkEntry.queries("pagerank_iter")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // p1 receives 1e6/4 from s1 and 1e6/1 from s2: 150000 + .85*1250000
     assert(out("p1") === 150000L + math.round(0.85 * 1250000.0))
@@ -310,7 +310,7 @@ class ScoringSpec extends AnyFunSuite {
       .toDF("l_suppkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("ppr").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Scoring.queries("ppr_seeded")(spark, dir)
+    val out = SparkEntry.queries("ppr_seeded")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(out.toSeq === Seq(
       ("s1", 90312L + 3 * 180625L + 150000L), ("s2", 90312L),
@@ -325,7 +325,7 @@ class ScoringSpec extends AnyFunSuite {
       .toDF("l_suppkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("hits").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Scoring.queries("hits_scores")(spark, dir)
+    val out = SparkEntry.queries("hits_scores")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(out.toSeq === Seq(
       ("auth", "p2", 5L), ("auth", "p1", 3L),
@@ -347,7 +347,7 @@ class ScoringSpec extends AnyFunSuite {
         lit("{}").as("props"))
     val dir = java.nio.file.Files.createTempDirectory("rd").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.queries.Scoring.queries("rolling_distinct")(spark, dir)
+    val out = SparkEntry.queries("rolling_distinct")(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     // observed days are 0, 3, 10; windows ending at each:
     assert(out === Map(0 -> 1L, 3 -> 1L, 10 -> 1L))
@@ -427,7 +427,7 @@ class ScoringSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("mad").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.queries.Scoring.queries("mad_outliers")(spark, dir).collect()
+    val r = SparkEntry.queries("mad_outliers")(spark, dir).collect()
     assert(r.length === 1)
     assert(r(0).getDouble(2) === 100.0) // median
     assert(r(0).getDouble(3) === 2.0)   // MAD
@@ -440,7 +440,7 @@ class ScoringSpec extends AnyFunSuite {
       .toDF("o_orderkey", "o_totalprice", "o_orderstatus")
     val dir = java.nio.file.Files.createTempDirectory("bd").toString
     od.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = graft.queries.Scoring.queries("bucketize_depth")(spark, dir)
+    val out = SparkEntry.queries("bucketize_depth")(spark, dir)
       .collect()
     assert(out.length === 10)
     assert(out.forall(_.getLong(1) === 10L), "100 rows → 10 per decile")
@@ -460,7 +460,7 @@ class ScoringSpec extends AnyFunSuite {
       ("A", 2L, 2, 3.00), ("B", 3L, 1, 5.00), ("B", 3L, 2, 5.00))
       .toDF("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Scoring.queries("stratified_sample")(spark, dir)
+    val out = SparkEntry.queries("stratified_sample")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5))).toMap
@@ -479,7 +479,7 @@ class ScoringSpec extends AnyFunSuite {
       (4L, "x y", "en"))
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Scoring.queries("ngram_novelty")(spark, dir)
+    val out = SparkEntry.queries("ngram_novelty")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     assert(out("en") === ((2L, 4L, 3L, 0.75)))
@@ -496,7 +496,7 @@ class ScoringSpec extends AnyFunSuite {
     // r3 merges 'a b' (2)
     Seq((1L, "aaa aaa aaa ab ab")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Scoring.queries("bpe_train_rounds")(
+    val out = SparkEntry.queries("bpe_train_rounds")(
         spark, dir).collect()
       .map(r => (r.getAs[Int]("round"), r.getAs[String]("merged_pair"),
         r.getAs[Long]("cnt")))
@@ -514,7 +514,7 @@ class ScoringSpec extends AnyFunSuite {
       Seq((9L, 1900L), (10L, 1950L))
     rows.toDF("doc_id", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Scoring.queries("distribution_match")(
+    val out = SparkEntry.queries("distribution_match")(
         spark, dir).collect()
       .map(r => r.getAs[Int]("bin") -> ((r.getAs[Long]("before_cnt"),
         r.getAs[Long]("target_cnt"), r.getAs[Long]("kept_cnt"),
@@ -541,7 +541,7 @@ class ScoringSpec extends AnyFunSuite {
       (4L, "A", 1.00), (5L, "B", 10000.00), (6L, "B", 0.02)))
       .toDF("o_orderkey", "o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val out = graft.queries.Scoring.queries("pps_systematic")(spark, dir)
+    val out = SparkEntry.queries("pps_systematic")(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5), r.getLong(6)))).toMap
@@ -558,7 +558,7 @@ class ScoringSpec extends AnyFunSuite {
     Seq(("a", 1.00), ("a", 3.00), ("b", 5.00))
       .toDF("event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val out = graft.queries.Scoring.queries("ips_offpolicy")(spark, dir)
+    val out = SparkEntry.queries("ips_offpolicy")(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
       .toMap

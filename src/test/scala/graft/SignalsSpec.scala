@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{Dedup, Ranking, TextAnalysis}
-import graft.queries.Signals
 
 /** Round-8 (cont.) operator tests on hand-computable fixtures: EWMA
   * weight arithmetic, feature-hash invariants, bigram-LM closed forms,
@@ -37,7 +36,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("user_id", "event_id", "ts", "value", "event_type")
     val dir = java.nio.file.Files.createTempDirectory("sig_ewma").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("ewma_smooth")(spark, dir).collect()
+    val out = SparkEntry.queries("ewma_smooth")(spark, dir).collect()
     assert(out.length === 3, "view events are excluded")
     val r3 = out.find(_.getAs[Int]("rn") == 3).get
     assert(math.abs(r3.getAs[Double]("ewma") - 6.0 / 1.75) < 1e-5)
@@ -99,7 +98,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("sig_win").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.queries.Signals.queries("winsorize")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("winsorize")(spark, dir).collect()(0)
     assert(r.getAs[Double]("lo") === 2.0 && r.getAs[Double]("hi") === 20.0)
     assert(r.getAs[Long]("clipped_low") === 1L)
     assert(r.getAs[Long]("clipped_high") === 1L)
@@ -112,7 +111,7 @@ class SignalsSpec extends AnyFunSuite {
       .withColumn("n_chars", col("doc_id") * 10) // weights 10..500
     val dir = java.nio.file.Files.createTempDirectory("sig_ws").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Signals.queries("weighted_sample")(spark, dir)
+    val out = SparkEntry.queries("weighted_sample")(spark, dir)
       .collect().map(_.getAs[Long]("doc_id")).toSeq
     def key(id: Long): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -136,7 +135,7 @@ class SignalsSpec extends AnyFunSuite {
     val li = rows.toDF("l_orderkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("sig_tri").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = graft.queries.Signals.queries("triangle_count")(spark, dir)
+    val r = SparkEntry.queries("triangle_count")(spark, dir)
       .collect()(0)
     assert(r.getAs[Long]("edges") === 3L)     // (1,2)(1,3)(2,3)
     assert(r.getAs[Long]("wedges") === 3L)    // C(2,2)·3 vertices
@@ -158,7 +157,7 @@ class SignalsSpec extends AnyFunSuite {
       .withColumn("value", lit(1.0))
     val dir = java.nio.file.Files.createTempDirectory("sig_tj").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.queries.Signals.queries("top_journeys")(spark, dir)
+    val out = SparkEntry.queries("top_journeys")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     assert(out === Seq("view>click>purchase" -> 2L, "error" -> 1L))
   }
@@ -175,7 +174,7 @@ class SignalsSpec extends AnyFunSuite {
         "o_orderpriority", "o_orderdate")
     val dir = java.nio.file.Files.createTempDirectory("sig_pt").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val rows = graft.queries.Signals.queries("profile_table")(spark, dir)
+    val rows = SparkEntry.queries("profile_table")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getString(3), r.getString(4))).toMap
     assert(rows("o_custkey") === ((1L, 2L, "10", "20")))
@@ -196,7 +195,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("user_id", "event_id", "ts", "value", "event_type")
     val dir = java.nio.file.Files.createTempDirectory("sig_ds").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = graft.queries.Signals.queries("decayed_sum")(spark, dir).collect()
+    val r = SparkEntry.queries("decayed_sum")(spark, dir).collect()
     assert(r.length === 1 && r(0).getAs[Long]("user_id") === 1L)
     assert(r(0).getAs[Long]("n_events") === 3L)
     assert(r(0).getAs[Long]("decayed_micros") === 112L * 1000000L)
@@ -206,7 +205,7 @@ class SignalsSpec extends AnyFunSuite {
     val d = docs((0L to 19L).map(i => i -> s"doc $i"): _*)
     val dir = java.nio.file.Files.createTempDirectory("sig_ns").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Signals.queries("negative_sample")(spark, dir)
+    val out = SparkEntry.queries("negative_sample")(spark, dir)
       .collect()
     // single lang ("en") fixture → one matrix cell; total pairs =
     // 20 docs × 3 slots − self-collisions, recomputed with the recipe
@@ -234,7 +233,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("l_suppkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("sig_bfs").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Signals.queries("bfs_levels")(spark, dir)
+    val out = SparkEntry.queries("bfs_levels")(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(out === Map(0 -> 1L, 1 -> 1L, 2 -> 1L, 3 -> 1L, 4 -> 1L))
   }
@@ -264,7 +263,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("l_orderkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("truss").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = Signals.queries("ktruss_edges")(spark, dir).collect()
+    val out = SparkEntry.queries("ktruss_edges")(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq === Seq((1, 5L, 6L), (2, 4L, 6L), (3, 4L, 6L)))
   }
@@ -286,7 +285,7 @@ class SignalsSpec extends AnyFunSuite {
       val s = Seq("7", "7", "9").map(sign(j, _)).sum
       s * s
     }.sum
-    val out = Signals.queries("ams_f2_sketch")(spark, dir).collect()(0)
+    val out = SparkEntry.queries("ams_f2_sketch")(spark, dir).collect()(0)
     assert(out.getLong(0) === 5L)
     assert(out.getLong(1) === expSum8)
     assert(out.getDouble(2) === expSum8 / 8.0)
@@ -310,7 +309,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("user_id", "event_id", "ts", "event_type")
     val dir = java.nio.file.Files.createTempDirectory("sig_shap").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("shapley_attribution")(spark, dir)
+    val out = SparkEntry.queries("shapley_attribution")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq === Seq(
       ("click", 11L, 1.833333), ("signup", 2L, 0.333333),
@@ -350,7 +349,7 @@ class SignalsSpec extends AnyFunSuite {
       a <- pts; b <- pts if a._1 < b._1
       d = r6(hav(a, b)) if d <= 300.0
     } yield (a._1, b._1, d)).sortBy(t => (t._3, t._1, t._2))
-    val out = graft.queries.Signals.queries("geo_cell_join")(spark, dir)
+    val out = SparkEntry.queries("geo_cell_join")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.forall(_._1 === expect.size.toLong))
@@ -382,7 +381,7 @@ class SignalsSpec extends AnyFunSuite {
       .filter(a => pts.exists(b =>
         b._1 != a._1 && core(b._1) && d2(a, b) <= 2500L))
       .map(_._1).toSet
-    val out = graft.queries.Signals.queries("dbscan_core")(spark, dir)
+    val out = SparkEntry.queries("dbscan_core")(spark, dir)
       .collect()
     assert(out.length === 1)
     val r = out.head
@@ -406,7 +405,7 @@ class SignalsSpec extends AnyFunSuite {
       dir
     }
     def tree(dir: String): Seq[(Long, Long, Long)] =
-      graft.queries.Signals.queries("merkle_tree")(spark, dir).collect()
+      SparkEntry.queries("merkle_tree")(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val rows = (1L to 40L).map(k =>
       (k, k % 7, "O", 100.0 + k, "3-MEDIUM"))
@@ -508,7 +507,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("o_orderkey", "o_totalprice", "o_orderdate")
     val dir = java.nio.file.Files.createTempDirectory("sig_sky").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = graft.queries.Signals.queries("skyline")(spark, dir).collect()
+    val out = SparkEntry.queries("skyline")(spark, dir).collect()
       .map(r => (r.getDouble(0), r.getInt(1), r.getLong(2))).toSeq
     assert(out === Seq((100.0, 5, 1L), (90.0, 3, 2L), (80.0, 1, 1L)))
   }
@@ -525,7 +524,7 @@ class SignalsSpec extends AnyFunSuite {
     }
     val base = (1L to 100L).map(i =>
       (i, i % 7, "O", i * 1.5, "3-MEDIUM"))
-    val ck = (dir: String) => graft.queries.Signals
+    val ck = (dir: String) => SparkEntry
       .queries("table_checksum")(spark, dir).collect()(0)
       .getAs[String]("checksum")
     val a = ck(orders(base, 1))
@@ -543,7 +542,7 @@ class SignalsSpec extends AnyFunSuite {
       .withColumn("source", when(col("doc_id") === 6, "b").otherwise("a"))
     val dir = java.nio.file.Files.createTempDirectory("sig_ka").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.queries.Signals.queries("kanonymity")(spark, dir)
+    val r = SparkEntry.queries("kanonymity")(spark, dir)
       .collect()(0)
     assert(r.getAs[Long]("classes") === 3L)
     assert(r.getAs[Long]("k_anonymity") === 1L)
@@ -601,7 +600,7 @@ class SignalsSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("sig_kl").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Signals.queries("kl_drift")(spark, dir).collect()
+    val out = SparkEntry.queries("kl_drift")(spark, dir).collect()
       .map(r => r.getAs[String]("slice") ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("vocab_size"),
           r.getAs[Long]("kl_picos"))).toMap
@@ -633,7 +632,7 @@ class SignalsSpec extends AnyFunSuite {
     val o = rows.toDF("o_orderkey", "o_orderpriority", "o_totalprice")
     val dir = java.nio.file.Files.createTempDirectory("sig_boot").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = Signals.queries("bootstrap_ci")(spark, dir).collect()
+    val out = SparkEntry.queries("bootstrap_ci")(spark, dir).collect()
       .map(r => r.getAs[String]("grp") ->
         (r.getAs[Long]("n_orders"), r.getAs[Long]("mean_micros"),
           r.getAs[Long]("lo_micros"), r.getAs[Long]("hi_micros"))).toMap
@@ -683,7 +682,7 @@ class SignalsSpec extends AnyFunSuite {
     val o = rows.toDF("o_orderkey", "o_orderdate", "o_totalprice")
     val dir = java.nio.file.Files.createTempDirectory("sig_psi").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = Signals.queries("psi_drift")(spark, dir).collect()
+    val out = SparkEntry.queries("psi_drift")(spark, dir).collect()
       .map(r => r.getAs[Int]("yr") ->
         (r.getAs[Long]("n_orders"), r.getAs[Long]("psi_picos"))).toMap
     assert(out(1995) === ((10L, 0L)))
@@ -706,7 +705,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("user_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("sig_tt").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("welch_ttest")(spark, dir).collect()
+    val out = SparkEntry.queries("welch_ttest")(spark, dir).collect()
     assert(out.length === 1)
     val r = out(0)
     def arm(u: Long): Int = (java.lang.Long.parseLong(
@@ -750,7 +749,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("ts", "event_type", "value", "user_id")
     val dir = java.nio.file.Files.createTempDirectory("sig_ols").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("ols_fit")(spark, dir).collect()
+    val out = SparkEntry.queries("ols_fit")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
     val line = out("view")
     assert(line.getAs[Double]("slope") === 2.0)
@@ -773,7 +772,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("user_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("sig_ks").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("ks_test")(spark, dir).collect()
+    val out = SparkEntry.queries("ks_test")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
     val sep = out("sep")
     assert(sep.getAs[Long]("n0") === 7L)
@@ -798,7 +797,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("user_id", "event_type")
     val dir = java.nio.file.Files.createTempDirectory("sig_chi").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("chi_square")(spark, dir).collect()
+    val out = SparkEntry.queries("chi_square")(spark, dir).collect()
     assert(out.length === 1)
     val r = out(0)
     assert(r.getAs[Long]("r_levels") === 2L)
@@ -824,7 +823,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
     val dir = java.nio.file.Files.createTempDirectory("sig_ld").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("ldiversity")(spark, dir).collect()
+    val out = SparkEntry.queries("ldiversity")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("classes"), r.getAs[Long]("min_l"),
           r.getAs[Long]("classes_below_l3"),
@@ -846,7 +845,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("sig_sq").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = Signals.queries("sketch_quantiles")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("sketch_quantiles")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n") === 200L)
     // JVM recompute of the grid readout
     val W = 400.0 / 512.0
@@ -888,7 +887,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts", "value")
     val dir = java.nio.file.Files.createTempDirectory("sig_att").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("attribution")(spark, dir).collect()
+    val out = SparkEntry.queries("attribution")(spark, dir).collect()
       .map(r => r.getAs[String]("channel") ->
         (r.getAs[Long]("purchases"), r.getAs[Long]("value_micros"))).toMap
     assert(out === Map(
@@ -905,7 +904,7 @@ class SignalsSpec extends AnyFunSuite {
     val e = vecs.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("sig_eds").toString
     e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = Signals.queries("embed_dim_stats")(spark, dir).collect()
+    val out = SparkEntry.queries("embed_dim_stats")(spark, dir).collect()
       .map(r => r.getAs[Int]("dim") ->
         (r.getAs[Long]("n"), r.getAs[Long]("zeros"),
           r.getAs[Double]("mean"), r.getAs[Double]("variance"))).toMap
@@ -923,9 +922,9 @@ class SignalsSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
     }
-    val a = Signals.queries("dense_ids")(spark, write(1)).collect()
+    val a = SparkEntry.queries("dense_ids")(spark, write(1)).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("sid"))
-    val b = Signals.queries("dense_ids")(spark, write(8)).collect()
+    val b = SparkEntry.queries("dense_ids")(spark, write(8)).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("sid"))
     assert(a.toMap === b.toMap, "ids must not depend on input layout")
     assert(a.map(_._2).sorted.toSeq === (0L until 100L),
@@ -943,7 +942,7 @@ class SignalsSpec extends AnyFunSuite {
       8L -> "unique eight content also unshared entirely")
     val dir = java.nio.file.Files.createTempDirectory("sig_slk").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.LlmQueries.queries("split_leakage")(spark, dir)
+    val out = SparkEntry.queries("split_leakage")(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_pairs"))
       .toMap
@@ -966,7 +965,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("event_id", "user_id", "event_type", "ts")
     val dir = java.nio.file.Files.createTempDirectory("sig_km").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("survival_curve")(spark, dir).collect()
+    val out = SparkEntry.queries("survival_curve")(spark, dir).collect()
       .map(r => r.getAs[Int]("w") ->
         (r.getAs[Long]("n_risk"), r.getAs[Long]("deaths"),
           r.getAs[Long]("censored"), r.getAs[Double]("survival"))).toMap
@@ -994,7 +993,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
     val dir = java.nio.file.Files.createTempDirectory("sig_sdow").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Signals.queries("seasonal_dow")(spark, dir).collect()
+    val out = SparkEntry.queries("seasonal_dow")(spark, dir).collect()
       .map(r => r.getAs[Int]("dow") ->
         (r.getAs[Long]("n_days"), r.getAs[Double]("seasonal_index"))).toMap
     // full-window days 3..17: dow 3 occurs 3x, every other dow 2x
@@ -1014,7 +1013,7 @@ class SignalsSpec extends AnyFunSuite {
       "o_totalprice")
     val dir = java.nio.file.Files.createTempDirectory("sig_rfm").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = Signals.queries("rfm_segments")(spark, dir).collect()
+    val out = SparkEntry.queries("rfm_segments")(spark, dir).collect()
       .map(r => (r.getAs[Int]("r"), r.getAs[Int]("f"), r.getAs[Int]("m")) ->
         (r.getAs[Long]("n_customers"),
           r.getAs[Double]("segment_value")))
@@ -1032,7 +1031,7 @@ class SignalsSpec extends AnyFunSuite {
     val li = edges.toDF("l_suppkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("sig_pl").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = Signals.queries("powerlaw_alpha")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("powerlaw_alpha")(spark, dir).collect()(0)
     val picos = Seq(2.0, 4.0, 8.0)
       .map(d => math.rint(math.log(d / 1.5) * 1e12).toLong).sum
     val exp = new java.math.BigDecimal(1.0 + 3.0 / (picos / 1e12))
@@ -1049,7 +1048,7 @@ class SignalsSpec extends AnyFunSuite {
       (4L, 4L, 70.0)).toDF("o_orderkey", "o_custkey", "o_totalprice")
     val dir = java.nio.file.Files.createTempDirectory("sig_cc").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = Signals.queries("concentration")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("concentration")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n") === 4L)
     assert(r.getAs[Double]("gini") === 0.45)
     assert(r.getAs[Double]("hhi") === 0.52)
@@ -1116,9 +1115,9 @@ class SignalsSpec extends AnyFunSuite {
         col("event_type"), col("value"))
     val dir = java.nio.file.Files.createTempDirectory("sig_sqr").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val roll = Signals.queries("sketch_quantile_rollup")(spark, dir)
+    val roll = SparkEntry.queries("sketch_quantile_rollup")(spark, dir)
       .collect()(0)
-    val flat = Signals.queries("sketch_quantiles")(spark, dir).collect()(0)
+    val flat = SparkEntry.queries("sketch_quantiles")(spark, dir).collect()(0)
     assert(roll.getAs[Long]("n_days") === 2L)
     assert(roll.getAs[Long]("n") === flat.getAs[Long]("n"))
     for (p <- Seq("p50", "p90", "p99"))
@@ -1138,7 +1137,7 @@ class SignalsSpec extends AnyFunSuite {
     }.toDF("l_orderkey", "l_partkey")
     val dir = java.nio.file.Files.createTempDirectory("sig_kcore").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = Signals.queries("kcore_decompose")(spark, dir).collect()
+    val out = SparkEntry.queries("kcore_decompose")(spark, dir).collect()
       .map(r => (r.getAs[Int]("rnd"), r.getAs[Long]("n_vertices"),
         r.getAs[Long]("n_edges")))
     assert(out.toSeq === Seq((0, 5L, 7L), (1, 4L, 6L), (2, 4L, 6L),
@@ -1155,7 +1154,7 @@ class SignalsSpec extends AnyFunSuite {
       (3L, 1L), (3L, 3L))
     rows.toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Signals.queries("assoc_rules")(spark, dir).collect()
+    val out = SparkEntry.queries("assoc_rules")(spark, dir).collect()
       .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Long]("sab"), r.getAs[Long]("sa"), r.getAs[Long]("sb"),
         r.getAs[Long]("conf_micros"), r.getAs[Long]("lift_micros")))
@@ -1172,7 +1171,7 @@ class SignalsSpec extends AnyFunSuite {
       .map { case (v, i) => (i.toLong, "a", v) }
       .toDF("event_id", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val r = Signals.queries("wilson_ci")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("wilson_ci")(spark, dir).collect()(0)
     assert((r.getAs[Long]("n"), r.getAs[Long]("k"),
       r.getAs[Double]("p_hat")) === ((4L, 1L, 0.25)))
     // mini-oracle: the identical IEEE chain
@@ -1195,7 +1194,7 @@ class SignalsSpec extends AnyFunSuite {
     val rows = for (o <- Seq(1L, 2L); p <- Seq(1L, 2L, 3L)) yield (o, p)
     rows.toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Signals.queries("graph_jaccard")(spark, dir).collect()
+    val out = SparkEntry.queries("graph_jaccard")(spark, dir).collect()
       .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Long]("common"), r.getAs[Long]("uni"),
         r.getAs[Long]("jac_micros")))
@@ -1221,7 +1220,7 @@ class SignalsSpec extends AnyFunSuite {
       val b = java.lang.Long.parseLong(hex, 16) % 268435456L
       math.floor(-math.log((b + 1.0) / 268435456.0)).toLong
     }
-    val out = Signals.queries("dp_counts")(spark, dir).collect()
+    val out = SparkEntry.queries("dp_counts")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> ((r.getAs[Long]("n_true"),
         r.getAs[Long]("noise"), r.getAs[Long]("n_noisy")))).toMap
     for ((et, n) <- Seq("view" -> 7L, "purchase" -> 3L)) {
@@ -1241,7 +1240,7 @@ class SignalsSpec extends AnyFunSuite {
       .map { case (id, nc) => (id, "en", nc) }
       .toDF("doc_id", "lang", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val r = Signals.queries("cohens_kappa")(spark, dir).collect()(0)
+    val r = SparkEntry.queries("cohens_kappa")(spark, dir).collect()(0)
     assert((r.getAs[Long]("n"), r.getAs[Long]("n11"),
       r.getAs[Long]("n10"), r.getAs[Long]("n01"),
       r.getAs[Long]("n00")) === ((4L, 1L, 0L, 2L, 1L)))
@@ -1260,7 +1259,7 @@ class SignalsSpec extends AnyFunSuite {
       (5 to 8).map(i => (i.toLong, "en", "s2", 1900L))
     rows.toDF("doc_id", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val out = Signals.queries("t_closeness")(spark, dir).collect()
+    val out = SparkEntry.queries("t_closeness")(spark, dir).collect()
       .map(r => (r.getAs[String]("source"),
         r.getAs[Long]("n"), r.getAs[Double]("t_emd")))
     assert(out.toSeq === Seq(("s1", 4L, 0.5), ("s2", 4L, 0.5)))
@@ -1285,7 +1284,7 @@ class SignalsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("sig_lpa").toString
     rows.toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
-    val out = Signals.queries("label_propagation")(spark, dir).collect()
+    val out = SparkEntry.queries("label_propagation")(spark, dir).collect()
       .map(r => (r.getAs[Long]("label"), r.getAs[Long]("members")))
     assert(out.toSeq === Seq((1L, 3L), (3L, 3L)))
   }
@@ -1307,7 +1306,7 @@ class SignalsSpec extends AnyFunSuite {
       .write.parquet(s"$dir/lineitem.parquet")
     val qc = math.rint((3.0 / 7.0 - (7.0 / 14.0) * (7.0 / 14.0))
       * 1000000.0).toLong
-    val out = Signals.queries("modularity_score")(spark, dir).collect()
+    val out = SparkEntry.queries("modularity_score")(spark, dir).collect()
       .map(r => (r.getAs[Long]("label"), r.getAs[Long]("members"),
         r.getAs[Long]("intra_edges"), r.getAs[Long]("degree_sum"),
         r.getAs[Long]("q_contrib_micros"), r.getAs[Long]("global_q_micros")))
@@ -1334,7 +1333,7 @@ class SignalsSpec extends AnyFunSuite {
     val t1 = lp(0.4 * (0.4 * ((0.0 + 1.0) / (6.0 + 3.0)))) // "b c d"
     val t2 = lp(0.4 * (2.0 / 2.0))                          // "x b c"
     val t3b = lp(1.0 / 2.0)                                 // "b c a"
-    val out = Signals.queries("stupid_backoff")(spark, dir).collect()
+    val out = SparkEntry.queries("stupid_backoff")(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     val d2 = out(2L)
     assert(d2.getAs[Long]("n_trigrams") === 2L)
@@ -1346,7 +1345,7 @@ class SignalsSpec extends AnyFunSuite {
     assert((d3.getAs[Long]("hits3"), d3.getAs[Long]("hits2"),
       d3.getAs[Long]("hits1")) === ((1L, 1L, 0L)))
     // doc 2 is the lower-likelihood doc: the OOV tier dominates
-    val order = Signals.queries("stupid_backoff")(spark, dir).collect()
+    val order = SparkEntry.queries("stupid_backoff")(spark, dir).collect()
       .map(_.getAs[Long]("doc_id")).toSeq
     assert(order === Seq(2L, 3L))
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SuiteSpec extends AnyFunSuite {
 
   private def names(spec: Option[String]): Seq[String] =
-    Suite.select(spec, "TEST").map(_._1)
+    Suite.select(spec, "TEST").map(_.name)
 
   test("select: names trimmed, empties dropped, sorted; blank or absent selects every query") {
     assert(names(Some(" filters , ,adamic_adar,")) === Seq("adamic_adar", "filters"))

@@ -12,7 +12,8 @@ DuckDB HUGEINT (pandas float64/object) against a Spark BIGINT (int64)
 must FAIL here, because it fails at the driver (round-7 lesson: the old
 Python-value compare passed three oracles the driver rejected). An
 unsortable column (e.g. a raw ARRAY) is likewise a FAIL, mirroring the
-driver's pandas sort_values throw. Prints one line per query + summary.
+driver's pandas sort_values throw. An oracle with no result directory is
+a FAIL (MISSING-RESULT). Prints one line per query + summary.
 """
 import json
 import sys
@@ -89,6 +90,11 @@ def main():
             bad = s_c[neq.any(axis=1)].head(3)
             results[name] = (f"VALUE-MISMATCH rows={neq.any(axis=1).sum()} "
                              f"first_spark_rows={bad.to_dict('records')}")
+
+    # an oracle with no result (the query failed, or never ran) counts as
+    # a failure, so the summary's denominator is every oracle name
+    for name in oracle:
+        results.setdefault(name, "MISSING-RESULT")
 
     ok = sum(1 for v in results.values() if v.startswith(("MATCH", "NO-ORACLE")))
     strict_ok = sum(1 for v in results.values() if v.startswith("MATCH"))
