@@ -78,15 +78,9 @@ object FunnelCsvFixture {
     }
   }
 
-  /** Write-once fixture for the registered `csv_funnel_report` query and
-    * the demo app: two days spanning a month boundary.
+  /** The two days, spanning a month boundary, of the registered
+    * `csv_funnel_report` query's fixture.
     */
   val defaultDays: Seq[LocalDate] =
     Seq(LocalDate.of(2026, 1, 31), LocalDate.of(2026, 2, 1))
-
-  def ensureDefault(baseDir: String): String = {
-    if (!Files.exists(Paths.get(baseDir, DateSpec.formatDay(defaultDays.head))))
-      write(baseDir, defaultDays)
-    baseDir
-  }
 }

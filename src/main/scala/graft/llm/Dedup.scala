@@ -125,8 +125,8 @@ object Dedup {
     * [[minhashPairs]]'s per-table signature explode, the join carries
     * only (doc_id, band key).
     *
-    * Hot-band skew at scale (measured, tools/skew_probe.scala +
-    * PLANS.md round 13): a boilerplate near-dup family creates a hot
+    * Hot-band skew at scale (measured, tools/skew_probe.scala): a
+    * boilerplate near-dup family creates a hot
     * band key whose reducer partition serializes the k² pair products
     * in one task — AQE's skew split cut a planted 20k-family join
     * from 458 s to 126 s at sf10 (72 partial splits, identical
@@ -135,8 +135,8 @@ object Dedup {
     * compress ~10× in shuffle stats, and >2000 reducers switch to
     * `HighlyCompressedMapStatus`, which averages per-block sizes below
     * `spark.shuffle.accurateBlockThreshold` — the skew becomes
-    * statistically invisible and the 458 s straggler returns. So since
-    * r14 the operator carries its OWN defense, upstream of any runtime
+    * statistically invisible and the 458 s straggler returns. So the
+    * operator carries its OWN defense, upstream of any runtime
     * detector: band-bucket sizes are counted in the candidate stage
     * and buckets above `hotBucketCap` rows are salt-split (scheme
     * below). AQE skew handling stays on as the second line for skew
@@ -568,13 +568,13 @@ object Dedup {
       .filter(graft.functions.BloomFilterAgg.mayContain(
         col("__bloom"), col("__fp"), bits, k))
       .select(col(idCol), col("__fp"))
-    // Single-probe routing (r17): the old clean/candidate split consumed
-    // the probe join TWICE (a left_anti AND a left_semi over `hitIds`),
-    // so the salted shuffle-hash probe subplan materialized twice in the
-    // pinned plan (shj=2) — 2× probe work at exactly the scale this
-    // operator targets. Instead: bloom-positive candidates carry their
-    // fingerprint out of the ONE probe, the exact re-check confirms them
-    // against the distinct blocklist fingerprints (same join the
+    // Single-probe routing: a clean/candidate split would consume the
+    // probe join TWICE (a left_anti AND a left_semi over the hit ids),
+    // materializing the salted shuffle-hash probe subplan twice — 2×
+    // probe work at exactly the scale this operator targets. Instead:
+    // bloom-positive candidates carry their fingerprint out of the ONE
+    // probe, the exact re-check confirms them against the distinct
+    // blocklist fingerprints (same join the
     // fallback [[decontaminate]] runs, but over only the candidate
     // sliver), and one anti-join routes the corpus around the confirmed
     // ids. Row-identical: a blocked fingerprint is always bloom-positive
@@ -740,10 +740,9 @@ object Dedup {
           .join(prev.select(col("id").as("nid"), col("cluster").as("ncl")),
             col("dst") === col("nid"))
           .groupBy(col("src")).agg(min("ncl").as("nbr_min"))
-        // stepped materializes once (r17): the pointer jump consumes it
-        // on BOTH sides of its self-join — unmaterialized, the
-        // edges⋈labels + min-aggregate chain ran twice per round (and a
-        // third time in the old derived change witness)
+        // stepped materializes once: the pointer jump consumes it on
+        // BOTH sides of its self-join — unmaterialized, the
+        // edges⋈labels + min-aggregate chain would run twice per round
         val stepped = prev
           .join(nbrMin, prev("id") === nbrMin("src"), "left")
           .select(prev("id"),
@@ -1027,12 +1026,11 @@ object Dedup {
     val hot = df.filter(col("df") > hotBucketCap)
       .select(col("gram"), col("df").as("bucket_n"))
     val cand = if (hot.isEmpty) {
-      // Alias-only join sides + SHUFFLE_HASH (r18): the old spelling
-      // put a column-RENAMING Project on each side, which defeats plan
-      // canonicalization, so no exchange was shared and the planner
-      // (picking broadcast at small SF) rebuilt the whole df+rank
-      // prefix pipeline on the probe side — the window stage ran twice
-      // in the executed plan. Bare as("a")/as("b") aliases keep the two
+      // Alias-only join sides + SHUFFLE_HASH: a column-RENAMING Project
+      // on each side defeats plan canonicalization, so no exchange is
+      // shared and the planner (picking broadcast at small SF) rebuilds
+      // the whole df+rank prefix pipeline on the probe side — the
+      // window stage runs twice in the executed plan. Bare as("a")/as("b") aliases keep the two
       // subplans canonically identical (the minhashBandedPairs
       // precedent, where reuse is verified to fire), and the shuffle
       // spelling gives them a common Exchange(gram) to collapse into —

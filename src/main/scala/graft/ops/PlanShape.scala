@@ -117,11 +117,11 @@ object PlanShape {
     * runners ([[graft.queries.Insights]]'s parquetSinkReadback and
     * [[graft.queries.FunnelOverEvents]]'s runStreamFunnel) record the
     * last micro-batch's fingerprint here right after each drain, keyed
-    * by the runner's sink tag. PlanShapeSpec drains the registry around
+    * by the runner's stream tag. PlanShapeSpec drains the registry around
     * each registered stream query and asserts the committed
     * `PLANSHAPES_STREAM.json` snapshot. Always-on: a record is one map
-    * put of a short string per stream RUN (tags are reused across runs
-    * at the same SF, so the map stays bounded).
+    * put of a short string per stream RUN (each runner reuses its one
+    * tag, so the map stays bounded).
     */
   object streamShapes {
     private val shapes =

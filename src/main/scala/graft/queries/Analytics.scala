@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
 
@@ -66,8 +66,6 @@ object Analytics {
     */
   private def bucket1000(salt: String, idCol: Column): Column =
     Dedup.hashBucket1000(idCol, salt)
-
-  private def sfTag(dir: String): String = Relational.sfTag(dir)
 
   /** Strict-order funnel fold (see the `funnel_ordered` registration).
     *
@@ -1257,7 +1255,7 @@ object Analytics {
     // the correctness contract of every incremental pipeline. Disjoint
     // partition appends never rewrite old data.
     QueryDef("incremental_agg", (s, dir) => {
-      val path = s"/root/repo/target/incremental/daily_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "incremental_daily")
       val ev = Tables.events(s, dir)
         .withColumn("d", expr("datediff(to_date(ts), date'2024-01-01')"))
       def daily(f: Column) = ev.filter(f).groupBy("d", "event_type")
@@ -1285,7 +1283,7 @@ object Analytics {
     // static overwrite the early days would vanish; if the repair
     // missed, the zeros would surface — either way the gate trips.
     QueryDef("dynamic_overwrite", (s, dir) => {
-      val path = s"/root/repo/target/incremental/dyn_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "incremental_dyn")
       val daily = Tables.events(s, dir)
         .withColumn("d", expr("datediff(to_date(ts), date'2024-01-01')"))
         .groupBy("d", "event_type").agg(count(lit(1)).as("cnt"))
@@ -1310,7 +1308,7 @@ object Analytics {
     // absent columns — the contract that lets a 100 TB table add
     // columns without rewriting history
     QueryDef("schema_merge", (s, dir) => {
-      val path = s"/root/repo/target/roundtrip/evolve_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "evolve")
       val d = t(s, dir, "documents")
       org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)

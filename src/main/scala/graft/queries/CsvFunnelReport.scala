@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftSession
 import graft.core.{DateSpec, Schemas}
 import graft.engine.FunnelTable
-import graft.io.{FunnelCsvFixture, FunnelSources}
+import graft.io.{FunnelCsvFixture, FunnelSources, Scratch}
 
 /** The CSV source layer exercised END TO END against a DuckDB oracle:
   * path-templated day scans, the month-glob + `dd-MM-yyyy` range
@@ -16,17 +16,33 @@ import graft.io.{FunnelCsvFixture, FunnelSources}
   */
 object CsvFunnelReport {
 
-  val fixtureBase = "/root/repo/target/funnel-csv-fixture"
   val entity = "fiu-a"
   val dateSpecText = "31_01_2026 -> 01_02_2026"
 
+  /** The fixture: the two default days plus a 30_01 decoy day outside
+    * the query range, written by its own `write` call so its values
+    * equal the 31_01 day's (day-index 0 both times). Only a correct
+    * range post-filter or partition pruning drops the decoy: keeping
+    * it would overcount every stage sum and fail the oracle. It lives
+    * in [[Scratch.shared]] because DuckDB's `read_csv` oracle reads
+    * these files after the JVM exits.
+    */
+  val fixtureDir: String = Scratch.shared("funnel-csv-fixture")
+  private val decoyDay = java.time.LocalDate.of(2026, 1, 30)
+
+  private def fixture(): String = Scratch.once(fixtureDir) { tmp =>
+    FunnelCsvFixture.write(tmp, FunnelCsvFixture.defaultDays)
+    FunnelCsvFixture.write(tmp, Seq(decoyDay))
+  }
+
   /** The registered query: generate-once fixture, Range spec over a
-    * month boundary (two month globs), entity filter, four source scans
-    * into [[FunnelTable.buildFromRaw]].
+    * month boundary (two month globs, the January one post-filtered
+    * past the decoy), entity filter, four source scans into
+    * [[FunnelTable.buildFromRaw]].
     */
   def query(s: SparkSession, ignoredSfDir: String): DataFrame = {
     GraftSession.tune(s)
-    val base = FunnelCsvFixture.ensureDefault(fixtureBase)
+    val base = fixture()
     val spec = DateSpec.parse(dateSpecText)
     val e = Some(entity)
     FunnelTable.buildFromRaw(
@@ -37,30 +53,16 @@ object CsvFunnelReport {
       .orderBy("row_idx")
   }
 
-  /** Hive-partitioned variant bases: a 3-day CSV fixture (the default
-    * two days PLUS a 30_01 decoy day outside the query range) ingested
-    * once into a `date=YYYY-MM-DD/` parquet table. The decoy makes the
-    * partition pruning load-bearing: an unpruned scan would read
-    * 30_01's rows and overcount every stage sum, failing the oracle.
+  /** The fixture's three stage days ingested once per JVM into a
+    * `date=YYYY-MM-DD/` parquet table, decoy included.
     */
-  val partitionedCsvBase = "/root/repo/target/funnel-csv-fixture-3day"
-  val partitionedDir = "/root/repo/target/funnel-partitioned-stages"
-  private val decoyDay = java.time.LocalDate.of(2026, 1, 30)
-
-  private def ensurePartitioned(s: SparkSession): String = synchronized {
-    import java.nio.file.{Files, Paths}
-    if (!Files.exists(Paths.get(partitionedDir, "_SUCCESS"))) {
-      FunnelCsvFixture.ensureDefault(partitionedCsvBase)
-      if (!Files.exists(
-          Paths.get(partitionedCsvBase, DateSpec.formatDay(decoyDay))))
-        FunnelCsvFixture.write(partitionedCsvBase, Seq(decoyDay))
+  private def partitionedStages(s: SparkSession, base: String): String =
+    Scratch.once(Scratch.dir(base, "partitioned_stages")) { tmp =>
       FunnelSources.ingestPartitioned(
-        FunnelSources.stages(s, partitionedCsvBase,
+        FunnelSources.stages(s, base,
           DateSpec.parse("30_01_2026 -> 01_02_2026")),
-        partitionedDir)
+        tmp)
     }
-    partitionedDir
-  }
 
   /** The partitioned-layout twin of [[query]]: the stages source reads
     * the `date=` parquet table through [[FunnelSources
@@ -74,8 +76,8 @@ object CsvFunnelReport {
     */
   def partitionedQuery(s: SparkSession, ignoredSfDir: String): DataFrame = {
     GraftSession.tune(s)
-    val base = FunnelCsvFixture.ensureDefault(fixtureBase)
-    val dir = ensurePartitioned(s)
+    val base = fixture()
+    val dir = partitionedStages(s, base)
     val spec = DateSpec.parse(dateSpecText)
     val e = Some(entity)
     FunnelTable.buildFromRaw(
@@ -98,7 +100,7 @@ object CsvFunnelReport {
   def lineageQuery(s: SparkSession, ignoredSfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     GraftSession.tune(s)
-    val base = FunnelCsvFixture.ensureDefault(fixtureBase)
+    val base = fixture()
     val days = DateSpec.parse(dateSpecText).days
     val paths = days.map { d =>
       val tok = DateSpec.formatDay(d)
@@ -120,7 +122,7 @@ object CsvFunnelReport {
     val days = DateSpec.parse(dateSpecText).days
     val files = days.map { d =>
       val tok = DateSpec.formatDay(d)
-      s"'$fixtureBase/$tok/${FunnelSources.userFunnelPrefix}-$tok.csv'"
+      s"'$fixtureDir/$tok/${FunnelSources.userFunnelPrefix}-$tok.csv'"
     }.mkString("[", ", ", "]")
     s"""SELECT regexp_extract(filename, '[^/]+$$') AS file,
        |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -138,7 +140,7 @@ object CsvFunnelReport {
     *  - otp: plain double sums (`Total_*`), truncated later in `w`;
     *  - discovery: NULLIF('') before the cast;
     *  - fi: status-filtered conditional counts;
-    *  - `w`: the wideFromJoined projection (casts included).
+    *  - `w`: the shared [[FunnelOracleGen.wide]] projection.
     * The shared [[FunnelOracleGen.tableSql]] emits survivors + rows.
     */
   val oracle: String = {
@@ -149,7 +151,7 @@ object CsvFunnelReport {
     def files(prefix: String): String =
       days.map { d =>
         val tok = DateSpec.formatDay(d)
-        s"'$fixtureBase/$tok/$prefix-$tok.csv'"
+        s"'$fixtureDir/$tok/$prefix-$tok.csv'"
       }.mkString("[", ", ", "]")
     def readCsv(prefix: String): String =
       s"read_csv(${files(prefix)}, header = true, all_varchar = true)"
@@ -163,35 +165,6 @@ object CsvFunnelReport {
       s"sum(CAST($c AS DOUBLE)) AS Total_$c").mkString(",\n    ")
     val dscAggs = Schemas.discoveryColumns.map(c =>
       s"sum(CAST(nullif($c, '') AS DOUBLE)) AS $c").mkString(",\n    ")
-
-    // wideFromJoined's casts: stage cols arrive long; discovery/otp
-    // doubles truncate toward zero with null -> 0
-    def dl(c: String): String = s"coalesce(CAST(trunc($c) AS BIGINT), 0)"
-
-    val wide =
-      s"""(AA_client_Initialization + OTP_Based_Sign_in_Sign_up +
-         |   View_Consent_Details + Discovery + Linking +
-         |   Rejected_Consent_Requests + Approved_Consent_Requests) AS total_users,
-         |  AA_client_Initialization AS d1,
-         |  OTP_Based_Sign_in_Sign_up AS d2,
-         |  View_Consent_Details AS view_drop,
-         |  (OTP_Based_Sign_in_Sign_up + View_Consent_Details) AS auth_drop,
-         |  (${dl("Account_Discovered")} + ${dl("Account_not_Found")} +
-         |   ${dl("FIP_Not_Selected")} + ${dl("Failure")} + ${dl("NO_STATUS")}) AS d3,
-         |  Linking AS d4,
-         |  Rejected_Consent_Requests AS rej,
-         |  Approved_Consent_Requests AS appr,
-         |  FIP_Rejected_Consent_Artefacts AS fip_rej,
-         |  FIP_Accepted_Consent_Artefacts AS fip_ok,
-         |  Data_Fetch_Success AS fetch_ok,
-         |  Data_Fetch_Not_Attempted AS not_attempted,
-         |  (fi_success_cnt + fi_failed_cnt) AS fi_req_ok,
-         |  ${dl("Total_Incorrect_OTP_Entered")} AS otp_wrong,
-         |  ${dl("Total_OTP_Not_Entered")} AS otp_miss,
-         |  ${dl("Account_not_Found")} AS no_rec,
-         |  ${dl("NO_STATUS")} AS fip_fail,
-         |  ${dl("Failure")} AS some_fail,
-         |  (${dl("Account_Discovered")} + ${dl("FIP_Not_Selected")}) AS found_not_linked""".stripMargin
 
     FunnelOracleGen.tableSql(
       s"""WITH stg AS (
@@ -216,7 +189,7 @@ object CsvFunnelReport {
          |      AS fi_failed_cnt
          |  FROM ${readCsv(FunnelSources.userFunnelPrefix)}
          |  WHERE entity_id = '$entity'),
-         |w AS (SELECT $wide FROM stg, otp, dsc, fi)""".stripMargin)
+         |w AS (SELECT ${FunnelOracleGen.wide} FROM stg, otp, dsc, fi)""".stripMargin)
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -35,6 +35,39 @@ object FunnelOracleGen {
     case None     => s"CAST(NULL AS BIGINT) AS $cnt, CAST(NULL AS DOUBLE) AS $pc"
   }
 
+  /** The [[FunnelTable.wideFromJoined]] projection, casts included, for
+    * the body of a caller's `w`: it reads the [[graft.core.Schemas]]
+    * names — stage columns as BIGINT, `Total_<otp>` and discovery
+    * columns as DOUBLE (truncated toward zero, null -> 0), and
+    * `fi_success_cnt`/`fi_failed_cnt`.
+    */
+  val wide: String = {
+    def dl(c: String): String = s"coalesce(CAST(trunc($c) AS BIGINT), 0)"
+    s"""(AA_client_Initialization + OTP_Based_Sign_in_Sign_up +
+       |   View_Consent_Details + Discovery + Linking +
+       |   Rejected_Consent_Requests + Approved_Consent_Requests) AS total_users,
+       |  AA_client_Initialization AS d1,
+       |  OTP_Based_Sign_in_Sign_up AS d2,
+       |  View_Consent_Details AS view_drop,
+       |  (OTP_Based_Sign_in_Sign_up + View_Consent_Details) AS auth_drop,
+       |  (${dl("Account_Discovered")} + ${dl("Account_not_Found")} +
+       |   ${dl("FIP_Not_Selected")} + ${dl("Failure")} + ${dl("NO_STATUS")}) AS d3,
+       |  Linking AS d4,
+       |  Rejected_Consent_Requests AS rej,
+       |  Approved_Consent_Requests AS appr,
+       |  FIP_Rejected_Consent_Artefacts AS fip_rej,
+       |  FIP_Accepted_Consent_Artefacts AS fip_ok,
+       |  Data_Fetch_Success AS fetch_ok,
+       |  Data_Fetch_Not_Attempted AS not_attempted,
+       |  (fi_success_cnt + fi_failed_cnt) AS fi_req_ok,
+       |  ${dl("Total_Incorrect_OTP_Entered")} AS otp_wrong,
+       |  ${dl("Total_OTP_Not_Entered")} AS otp_miss,
+       |  ${dl("Account_not_Found")} AS no_rec,
+       |  ${dl("NO_STATUS")} AS fip_fail,
+       |  ${dl("Failure")} AS some_fail,
+       |  (${dl("Account_Discovered")} + ${dl("FIP_Not_Selected")}) AS found_not_linked""".stripMargin
+  }
+
   /** `<withPrefix>, w2 AS (...) <18 row SELECTs> ORDER BY row_idx`. */
   def tableSql(withPrefix: String): String = {
     val rowSelects = FunnelTable.rowSpecs.map { sp =>

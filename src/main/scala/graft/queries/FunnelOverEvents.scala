@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.core.Schemas
 import graft.engine.FunnelTable
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 
 /** The full funnel pipeline (SURVEY §2.9, `report_engine.py:233-319`)
   * exercised over the harness's `events` table, so the driver's DuckDB
@@ -91,10 +91,7 @@ object FunnelOverEvents {
     * it).
     */
   def streamQuery(s: SparkSession, dir: String): DataFrame = {
-    val sink = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_funnel_" + Relational.sfTag(dir) + "_" +
-        java.util.UUID.randomUUID.toString.replace("-", "").take(12))
-      .getAbsolutePath
+    val sink = Scratch.fresh("stream_funnel")
     runStreamFunnel(s, dir, sink)
     FunnelTable.rows(FunnelTable.wideFromJoined(s.read.parquet(sink)))
       .orderBy("row_idx")
@@ -135,48 +132,35 @@ object FunnelOverEvents {
         val q = ckpt.map(c => writer.option("checkpointLocation", c))
           .getOrElse(writer).start()
         q.awaitTermination()
-        graft.ops.PlanShape.streamShapes.record(
-          "funnel_" + Relational.sfTag(dir), q)
+        graft.ops.PlanShape.streamShapes.record("funnel", q)
       }
     }
   }
 
-  /** DuckDB twin of [[query]]: source-specific CTEs down to the wide
-    * single-row `w`, then the shared table generator
-    * ([[FunnelOracleGen.tableSql]]) for survivors + the 18 rows.
+  /** DuckDB twin of [[query]]: source-specific CTEs that emit the
+    * [[Schemas]] column names down to the wide single-row `w` (the shared
+    * [[FunnelOracleGen.wide]] projection), then the shared table
+    * generator ([[FunnelOracleGen.tableSql]]) for survivors + the 18 rows.
+    * OTP and discovery counts are DOUBLE, as the Spark side casts them.
     */
   val oracle: String = {
-    def counts(mod: Int, prefix: String, n: Int): String =
-      (0 until n).map(i =>
-        s"count(*) FILTER (WHERE event_id % $mod = $i) AS ${prefix}$i")
-        .mkString(", ")
+    def counts(mod: Int, cols: Seq[String], typ: String): String =
+      cols.zipWithIndex.map { case (c, i) =>
+        s"CAST(count(*) FILTER (WHERE event_id % $mod = $i) AS $typ) AS $c"
+      }.mkString(",\n  ")
 
-    // c0..c10 follow Schemas.stageColumns order (SURVEY §1.3 S1).
-    val wide =
-      """c0+c1+c2+c3+c4+c5+c6 AS total_users,
-        |  c0 AS d1, c1 AS d2, c2 AS view_drop, c1+c2 AS auth_drop,
-        |  d0+d1_+d2_+d3_+d4_ AS d3,
-        |  c4 AS d4, c5 AS rej, c6 AS appr, c7 AS fip_rej, c8 AS fip_ok,
-        |  c9 AS fetch_ok, c10 AS not_attempted,
-        |  fi_s + fi_f AS fi_req_ok,
-        |  o1 AS otp_wrong, o2 AS otp_miss,
-        |  d1_ AS no_rec, d4_ AS fip_fail, d3_ AS some_fail,
-        |  d0 + d2_ AS found_not_linked""".stripMargin
-
-    // d0,d1_,... underscore-suffixed to dodge the d1..d4 metric names.
     FunnelOracleGen.tableSql(
-      s"""WITH stg AS (SELECT ${counts(11, "c", 11)} FROM events),
-         |otp AS (SELECT ${counts(3, "o", 3)} FROM events),
-         |dsc AS (SELECT
-         |  count(*) FILTER (WHERE event_id % 5 = 0) AS d0,
-         |  count(*) FILTER (WHERE event_id % 5 = 1) AS d1_,
-         |  count(*) FILTER (WHERE event_id % 5 = 2) AS d2_,
-         |  count(*) FILTER (WHERE event_id % 5 = 3) AS d3_,
-         |  count(*) FILTER (WHERE event_id % 5 = 4) AS d4_ FROM events),
+      s"""WITH stg AS (SELECT ${counts(11, Schemas.stageColumns, "BIGINT")}
+         |  FROM events),
+         |otp AS (SELECT ${counts(3, Schemas.otpColumns.map("Total_" + _), "DOUBLE")}
+         |  FROM events),
+         |dsc AS (SELECT ${counts(5, Schemas.discoveryColumns, "DOUBLE")}
+         |  FROM events),
          |fi AS (SELECT
-         |  count(*) FILTER (WHERE event_type = 'purchase') AS fi_s,
-         |  count(*) FILTER (WHERE event_type = 'error') AS fi_f FROM events),
-         |w AS (SELECT $wide FROM stg, otp, dsc, fi)""".stripMargin)
+         |  count(*) FILTER (WHERE event_type = 'purchase') AS fi_success_cnt,
+         |  count(*) FILTER (WHERE event_type = 'error') AS fi_failed_cnt
+         |  FROM events),
+         |w AS (SELECT ${FunnelOracleGen.wide} FROM stg, otp, dsc, fi)""".stripMargin)
   }
 
   val defs: Seq[QueryDef] = Seq(

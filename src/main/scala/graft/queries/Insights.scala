@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
 
@@ -20,45 +20,6 @@ import graft.llm.{Dedup, TextAnalysis}
 object Insights {
 
   private val D38 = DecimalType(38, 0)
-
-  /** Content-addressed, atomically-published replay fixture for the
-    * staggered-modtime streaming replays (stream_sessionize /
-    * stream_late_data / the stream-stream sentinel stream).
-    *
-    * `fp` must fingerprint the SOURCE content (count/max-ts/key-sum of
-    * the events feeding the build): the fixture directory name embeds
-    * it, so a REGENERATED events table at the same SF gets a fresh
-    * fixture instead of silently reusing a stale replay (the round-12
-    * advice item — a stale reuse surfaced as a confusing oracle
-    * mismatch). The build lands in a private temp dir and is RENAMED
-    * into place (same-filesystem atomic move): concurrent sessions
-    * can't observe a half-built fixture, and the loser of a publish
-    * race discards its copy and uses the winner's.
-    */
-  private def replayFixture(name: String, fp: String)(
-      build: java.io.File => Unit): java.io.File = {
-    val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
-    val target = new java.io.File(tmpRoot, s"${name}_$fp")
-    if (!new java.io.File(target, "_GRAFT_REPLAY_READY").exists) {
-      val tmp = new java.io.File(tmpRoot, s"${name}_${fp}.build_" +
-        java.util.UUID.randomUUID.toString.replace("-", "").take(12))
-      build(tmp)
-      new java.io.File(tmp, "_GRAFT_REPLAY_READY").createNewFile()
-      try
-        java.nio.file.Files.move(tmp.toPath, target.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          // lost a publish race (target now exists) — drop our build
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm))
-            f.delete(); ()
-          }
-          rm(tmp)
-      }
-    }
-    target
-  }
 
   /** Runs a streaming DataFrame to completion (AvailableNow) through a
     * PARQUET sink and reads the settled result back — so the
@@ -80,18 +41,16 @@ object Insights {
     *    (max batchId per `lastWinsKey`), correct under any micro-batch
     *    split the trigger picks.
     *
-    * Fresh UUID sink + checkpoint per invocation: bench's three passes
-    * stay independent; restart-recovery over a SHARED checkpoint is
-    * exercised separately in FunnelStreamSpec.
+    * Fresh sink + checkpoint per invocation ([[Scratch.fresh]]):
+    * bench's three passes stay independent; restart-recovery over a
+    * SHARED checkpoint is exercised separately in FunnelStreamSpec.
     */
   private[graft] def parquetSinkReadback(s: SparkSession, df: DataFrame,
       mode: String, tag: String,
       lastWinsKey: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.{Dataset, Row}
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_fsink_" + tag + "_" +
-        java.util.UUID.randomUUID.toString.replace("-", "").take(12))
+    val base = new java.io.File(Scratch.fresh("fsink_" + tag))
     val sink = new java.io.File(base, "out").getAbsolutePath
     val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
     // every engine stream query verifies under the RocksDB state-store
@@ -245,18 +204,16 @@ object Insights {
     import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     GraftSession.tune(s)
-    // the sentinel fixture is a pure function of nothing (fp = its
-    // layout version); the atomic publish still guards races
-    val scratch = replayFixture("graft_stream_ssj_sentinel", "v1") { tmp =>
+    val scratch = Scratch.once(Scratch.dir(dir, "ssj_sentinel")) { tmp =>
       Seq((-1L, "view"), (-2L, "purchase")).toDF("user_id", "event_type")
         .select(col("user_id"),
           to_timestamp(lit("2100-01-01 00:00:00")).as("ts"),
           col("event_type"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
     val real = Tables.eventsStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
-    val sentinels = Tables.stream(s, scratch.getAbsolutePath)
+    val sentinels = Tables.stream(s, scratch)
     val ev = real.unionByName(sentinels)
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
@@ -276,8 +233,7 @@ object Insights {
         count(lit(1)).as("n_users"))
       .select(date_format(col("day.start"), "yyyy-MM-dd").as("p_day"),
         col("n_pairs"), col("n_users"))
-    parquetSinkReadback(s, grid, "append",
-      "ssj_" + Relational.sfTag(dir))
+    parquetSinkReadback(s, grid, "append", "ssj")
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -1025,7 +981,7 @@ object Insights {
       val ev = Tables.eventsStream(s, dir)
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.dailyEventCounts(ev),
-          "complete", "daily_" + Relational.sfTag(dir))
+          "complete", "daily")
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("cnt"))
         .orderBy("day", "event_type")
@@ -1050,7 +1006,7 @@ object Insights {
       // attribute-dedup workaround (the old memory-sink MemoryPlan did)
       val grid = parquetSinkReadback(s,
         ev.groupBy("event_type", "bin").agg(count(lit(1)).as("c")),
-        "complete", "quant_" + Relational.sfTag(dir))
+        "complete", "quant")
       Signals.gridQuantileReadout(s, grid)
     },
       // stream/batch parity IS the claim: the batch sketch's oracle
@@ -1073,7 +1029,7 @@ object Insights {
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val regs = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(hll(col("uid")).as("regs")),
-        "complete", "hll_" + Relational.sfTag(dir))
+        "complete", "hll")
       val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       regs.join(exact, Seq("event_type"))
@@ -1108,7 +1064,7 @@ object Insights {
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
       val sk = parquetSinkReadback(s,
         ev.groupBy("event_type").agg(kmv(col("uid")).as("sk")),
-        "complete", "kmv_" + Relational.sfTag(dir))
+        "complete", "kmv")
       val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       sk.join(exact, Seq("event_type"))
@@ -1161,7 +1117,7 @@ object Insights {
           .as("m"))
       val counts = parquetSinkReadback(s,
           ev.groupBy("event_type", "w").agg(bit_or(col("m")).as("bm")),
-          "complete", "bitmap_" + Relational.sfTag(dir))
+          "complete", "bitmap")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_words"),
           sum(bit_count(col("bm"))).cast("long").as("distinct_bitmap"))
@@ -1207,7 +1163,7 @@ object Insights {
         .select(col("user_id").cast("string").as("uid"))
       val bits = parquetSinkReadback(s,
         ev.groupBy().agg(bloomAgg(col("uid")).as("bits")),
-        "complete", "bloom_" + Relational.sfTag(dir))
+        "complete", "bloom")
       val present = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id")).distinct()
@@ -1287,7 +1243,7 @@ object Insights {
       val ev = Tables.eventsStream(s, dir).select(col("event_type"))
       val sketch = parquetSinkReadback(s,
         ev.groupBy().agg(cmsU(col("event_type")).as("sketch")),
-        "complete", "cms_" + Relational.sfTag(dir))
+        "complete", "cms")
       val (h1, h2) =
         graft.functions.CountMinSketchAgg.hashPairCols(col("event_type"))
       val est = (0 until depth).map { i =>
@@ -1317,7 +1273,7 @@ object Insights {
       val ev = Tables.eventsStream(s, dir).select(col("event_type"))
       val summary = parquetSinkReadback(s,
         ev.groupBy().agg(mgU(col("event_type")).as("summary")),
-        "complete", "topk_" + Relational.sfTag(dir))
+        "complete", "topk")
       Tables.events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(summary))
@@ -1346,7 +1302,7 @@ object Insights {
             .dropDuplicates("user_id", "event_type")
             .groupBy("event_type")
             .agg(count(lit(1)).as("distinct_users")),
-          "complete", "dedup_" + Relational.sfTag(dir))
+          "complete", "dedup")
         .orderBy("event_type")
     },
       // streaming first-per-key dedup ≡ batch count distinct
@@ -1371,7 +1327,7 @@ object Insights {
       parquetSinkReadback(s,
           graft.streaming.FunnelStream
             .enrichedDailyCounts(ev.select("ts", "user_id"), dim),
-          "complete", "enrich_" + Relational.sfTag(dir))
+          "complete", "enrich")
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("segment"), col("cnt"))
         .orderBy("day", "segment")
@@ -1409,12 +1365,11 @@ object Insights {
     // PlanSpec; the values must match the plain join oracle.
     QueryDef("dpp_join", (s, dir) => {
       GraftSession.tune(s)
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_dpp_" + Relational.sfTag(dir)).getAbsolutePath
-      if (!new java.io.File(p, "_SUCCESS").exists)
+      val p = Scratch.once(Scratch.dir(dir, "dpp")) { tmp =>
         Tables.events(s, dir)
           .select(to_date(col("ts")).as("day"), col("value"))
-          .write.mode("overwrite").partitionBy("day").parquet(p)
+          .write.mode("overwrite").partitionBy("day").parquet(tmp)
+      }
       val fact = s.read.parquet(p)
       val dim = Tables.events(s, dir)
         .select(to_date(col("ts")).as("day")).distinct()
@@ -1469,11 +1424,10 @@ object Insights {
       val fp = java.lang.Long.toHexString(meta.getLong(1)) + "_" +
         java.lang.Long.toHexString(maxUs) + "_" +
         java.lang.Long.toHexString(meta.getLong(2))
-      val scratch = replayFixture(
-          "graft_stream_sess_" + Relational.sfTag(dir), fp) { tmp =>
-        val tp = tmp.getAbsolutePath
+      val p = Scratch.once(Scratch.dir(dir, s"stream_sess_$fp")) { tp =>
         def dataFiles: Set[java.io.File] =
-          Option(tmp.listFiles).map(_.toSet).getOrElse(Set.empty)
+          Option(new java.io.File(tp).listFiles).map(_.toSet)
+            .getOrElse(Set.empty)
             .filter(f => !f.getName.startsWith("_") &&
               !f.getName.startsWith("."))
         ev.coalesce(1).write.mode("overwrite").parquet(tp)
@@ -1490,14 +1444,13 @@ object Insights {
         sentinel(maxUs + yearUs, t0 - 40000)
         sentinel(maxUs + 2 * yearUs, t0 - 20000)
       }
-      val p = scratch.getAbsolutePath
       val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val ds = src
         .select(col("user_id"), col("ts"), lit("e").as("event_type"))
         .as[graft.streaming.FunnelStream.UserEvent]
       val sessions = parquetSinkReadback(s,
         graft.streaming.FunnelStream.userSessions(ds, 30, "1 hour").toDF(),
-        "append", "sess_" + Relational.sfTag(dir))
+        "append", "sess")
       val w = Window.partitionBy("user_id").orderBy("session_start")
       sessions.filter(col("user_id") >= 0)
         .select(col("user_id"),
@@ -1535,11 +1488,10 @@ object Insights {
       val fp = java.lang.Long.toHexString(meta.getLong(1)) + "_" +
         java.lang.Long.toHexString(maxUs) + "_" +
         java.lang.Long.toHexString(meta.getLong(2))
-      val scratch = replayFixture(
-          "graft_stream_late_" + Relational.sfTag(dir), fp) { tmp =>
-        val tp = tmp.getAbsolutePath
+      val p = Scratch.once(Scratch.dir(dir, s"stream_late_$fp")) { tp =>
         def dataFiles: Set[java.io.File] =
-          Option(tmp.listFiles).map(_.toSet).getOrElse(Set.empty)
+          Option(new java.io.File(tp).listFiles).map(_.toSet)
+            .getOrElse(Set.empty)
             .filter(f => !f.getName.startsWith("_") &&
               !f.getName.startsWith("."))
         ev.coalesce(1).write.mode("overwrite").parquet(tp)
@@ -1564,13 +1516,12 @@ object Insights {
         appendBatch(ev.filter(pmod(col("user_id"), lit(10)) === 0),
           t0 - 15000)
       }
-      val p = scratch.getAbsolutePath
       val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val settled = parquetSinkReadback(s,
         src.withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("cnt")),
-        "append", "late_" + Relational.sfTag(dir))
+        "append", "late")
       // a finalized SENTINEL window (year-away) is fixture scaffolding,
       // not data — the readout keeps only real-horizon days
       settled
@@ -1597,19 +1548,16 @@ object Insights {
     // only correct quarantine semantics can match it.
     QueryDef("corrupt_records", (s, dir) => {
       GraftSession.tune(s)
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_corrupt_" + Relational.sfTag(dir)).getAbsolutePath
       val n = 10000
-      if (!new java.io.File(p).exists) {
-        val tmp = new java.io.File(p + ".tmp")
-        val w = new java.io.PrintWriter(tmp, "UTF-8")
+      val p = Scratch.once(Scratch.dir(dir, "corrupt")) { tmp =>
+        val w = new java.io.PrintWriter(
+          new java.io.File(tmp, "records.csv"), "UTF-8")
         try {
           (0 until n).foreach { i =>
             val v = if (i % 13 == 0) s"bad_$i" else (i.toLong * 7).toString
             w.println(s"$i,$v")
           }
         } finally w.close()
-        tmp.renameTo(new java.io.File(p))
       }
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
@@ -1682,24 +1630,19 @@ object Insights {
     // ships raw doubles through text.
     QueryDef("federated_union", (s, dir) => {
       GraftSession.tune(s)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_fed_" + Relational.sfTag(dir)).getAbsolutePath
       val canon = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))
-      def ensure(sub: String)(write: String => Unit): String = {
-        val p = s"$base/$sub"
-        if (!new java.io.File(p, "_SUCCESS").exists) write(p)
-        p
+      val base = Scratch.once(Scratch.dir(dir, "fed")) { tmp =>
+        canon.write.mode("overwrite").parquet(s"$tmp/p")
+        canon.write.mode("overwrite").orc(s"$tmp/o")
+        canon.write.mode("overwrite").option("header", "true").csv(s"$tmp/c")
       }
-      val pq = ensure("p")(canon.write.mode("overwrite").parquet(_))
-      val orc = ensure("o")(canon.write.mode("overwrite").orc(_))
-      val csv = ensure("c")(canon.write.mode("overwrite")
-        .option("header", "true").csv(_))
       val sch = canon.schema
-      val all = s.read.parquet(pq)
-        .unionByName(s.read.orc(orc))
-        .unionByName(s.read.schema(sch).option("header", "true").csv(csv))
+      val all = s.read.parquet(s"$base/p")
+        .unionByName(s.read.orc(s"$base/o"))
+        .unionByName(s.read.schema(sch).option("header", "true")
+          .csv(s"$base/c"))
       // coalesce, not concat_ws's null-skip: DuckDB mirrors '' exactly
       all.select(graft.llm.Dedup.fingerprint60(concat_ws("|",
           col("event_id").cast("string"), col("user_id").cast("string"),
@@ -1747,7 +1690,7 @@ object Insights {
         .as[graft.streaming.FunnelStream.UserEvent]
       parquetSinkReadback(s,
           graft.streaming.FunnelStream.userFunnelState(ds).toDF(),
-          "update", "ufun_" + Relational.sfTag(dir),
+          "update", "ufun",
           lastWinsKey = Seq("user_id"))
         .groupBy("events", "purchases", "converted")
         .agg(count(lit(1)).as("n_users"))
@@ -1783,15 +1726,12 @@ object Insights {
     // and emit the answer FROM THE STATE, never from the sink. The
     // oracle is the plain batch GROUP BY — so the gate proves the
     // persisted state holds exactly the aggregate's (count, sum)
-    // buffer per key. Fresh checkpoint per run (uuid) keeps bench
-    // passes identical; the state read is partition-parallel (one
+    // buffer per key. Fresh checkpoint per run (Scratch.fresh) keeps
+    // bench passes identical; the state read is partition-parallel (one
     // state file per shuffle partition, `partition_id` exposed).
     QueryDef("stream_state_read", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ss_read_" + Relational.sfTag(dir) + "_" +
-          java.util.UUID.randomUUID.toString.replace("-", "").take(12))
-        .getAbsolutePath
+      val ckpt = Scratch.fresh("ss_read")
       val counts = Tables.eventsStream(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"),
@@ -1811,8 +1751,7 @@ object Insights {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        graft.ops.PlanShape.streamShapes.record(
-          "ssread_" + Relational.sfTag(dir), q)
+        graft.ops.PlanShape.streamShapes.record("ssread", q)
         s.read.format("statestore").load(ckpt)
           .select(col("key.event_type").as("event_type"),
             col("value.count").as("cnt"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{CorpusReport, Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -1134,7 +1134,7 @@ object LlmQueries {
     // 100 TB ANN layout under the driver's hard oracle
     QueryDef("ann_ivf_probe", (s, dir) =>
       Similarity.ivfProbeGated(t(s, dir, "embeddings"),
-        s"/root/repo/target/ivf_index_${Relational.sfTag(dir)}",
+        Scratch.dir(dir, "ivf_index"),
         k = 10, nlist = 16, nprobe = 8, minRecall = 0.6),
       cosineTopKOracle),
     // the oracle-checkable IVF: deterministic sampled coarse quantizer,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
+import graft.io.Scratch
 import graft.io.Tables.{events, read => t}
 
 /** Relational operator queries for the driver's DuckDB-oracle gate: each
@@ -29,24 +30,7 @@ object Relational {
 
   private def money(c: String) = col(c).cast(DecimalType(18, 2))
 
-  /** Per-JVM scratch token (pid@host, sanitized): two concurrent runs
-    * at the SAME sf must not share scratch paths or temp table names
-    * either (round-7 advice) — the token is stable within a JVM (a
-    * query re-run overwrites its own scratch) and unique across JVMs,
-    * so Verify and Bench can overlap freely at any sf combination.
-    */
-  private val runToken: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "_")
-
-  /** Identifier-safe tag of an sf dir + the per-JVM run token, for
-    * per-scale scratch paths and table names.
-    */
-  private[queries] def sfTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+", "") +
-      "_" + runToken
-
-  /** Column checksums both sink round-trips must preserve (computed by
+  /** Column checksums every format round-trip must preserve (computed by
     * DuckDB from the parquet originals).
     */
   private val roundtripChecksumOracle: String =
@@ -56,6 +40,14 @@ object Relational {
       |  CAST(count(DISTINCT lang) AS BIGINT) AS langs,
       |  CAST(sum(length(text)) AS BIGINT) AS text_len
       |FROM documents""".stripMargin
+
+  /** The Spark side of [[roundtripChecksumOracle]]. */
+  private def roundtripChecksum(d: DataFrame): DataFrame = d.agg(
+    count(lit(1)).as("n"),
+    sum("doc_id").as("id_sum"),
+    sum("n_chars").as("chars"),
+    countDistinct("lang").as("langs"),
+    sum(length(col("text")).cast("long")).as("text_len"))
 
   val defs: Seq[QueryDef] = Seq(
     // GROUP BY + COUNT (SURVEY §2.4; report_engine.py:179-183)
@@ -1918,11 +1910,10 @@ object Relational {
     // keys joined daily; BucketingSpec asserts the zero-Exchange plan,
     // this query asserts the VALUES survive the bucketed write+read.
     QueryDef("join_bucketed", (s, dir) => {
-      // path + table names keyed by the sf dir: a Verify (sf0.01) and a
-      // Bench (sf0.1) overlapping in time must not clobber each other's
-      // tables mid-query
-      val tag = sfTag(dir)
-      val base = s"/root/repo/target/bucketed_$tag"
+      // table names keyed by the sf dir like the path: queries over two
+      // sf dirs in one session must not clobber each other's tables
+      val tag = Scratch.slug(dir)
+      val base = Scratch.dir(dir, "bucketed")
       graft.ops.Bucketing.writeBucketed(
         t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
         s"graft_orders_b_$tag", s"$base/orders_b", "o_custkey", 8)
@@ -1950,14 +1941,9 @@ object Relational {
     // mangles (escaping, unicode, nulls) breaks the hash.
     QueryDef("jsonl_roundtrip", (s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_jsonl_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "documents_jsonl")
       d.write.mode("overwrite").json(path)
-      s.read.schema(d.schema).json(path).agg(
-        count(lit(1)).as("n"),
-        sum("doc_id").as("id_sum"),
-        sum("n_chars").as("chars"),
-        countDistinct("lang").as("langs"),
-        sum(length(col("text")).cast("long")).as("text_len"))
+      roundtripChecksum(s.read.schema(d.schema).json(path))
     },
       // the round-trip checksums must equal the parquet originals' — one
       // definition for both formats, so the equality claims can't desync
@@ -1966,14 +1952,9 @@ object Relational {
     // same round-trip through the columnar ORC source/sink
     QueryDef("orc_roundtrip", (s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_orc_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "documents_orc")
       d.write.mode("overwrite").orc(path)
-      s.read.schema(d.schema).orc(path).agg(
-        count(lit(1)).as("n"),
-        sum("doc_id").as("id_sum"),
-        sum("n_chars").as("chars"),
-        countDistinct("lang").as("langs"),
-        sum(length(col("text")).cast("long")).as("text_len"))
+      roundtripChecksum(s.read.schema(d.schema).orc(path))
     },
       roundtripChecksumOracle),
 
@@ -1986,18 +1967,13 @@ object Relational {
     // text_len on whitespace-padded docs)
     QueryDef("xml_roundtrip", (s, dir) => {
       val d = t(s, dir, "documents")
-      val path = s"/root/repo/target/roundtrip/documents_xml_${sfTag(dir)}"
+      val path = Scratch.dir(dir, "documents_xml")
       d.write.mode("overwrite").format("xml")
         .option("rowTag", "doc").save(path)
-      s.read.schema(d.schema).format("xml")
+      roundtripChecksum(s.read.schema(d.schema).format("xml")
         .option("rowTag", "doc")
         .option("ignoreSurroundingSpaces", "false")
-        .load(path).agg(
-          count(lit(1)).as("n"),
-          sum("doc_id").as("id_sum"),
-          sum("n_chars").as("chars"),
-          countDistinct("lang").as("langs"),
-          sum(length(col("text")).cast("long")).as("text_len"))
+        .load(path))
     },
       roundtripChecksumOracle),
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftSession
-import graft.io.Tables
+import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
 
@@ -295,7 +295,7 @@ object Scoring {
     // pruning — the retrieval-index layout under the hard value oracle
     // (the oracle rebuilds df + sorted postings straight from documents)
     QueryDef("inverted_probe", (s, dir) => {
-      val idx = s"/root/repo/target/inv_index_${Relational.sfTag(dir)}"
+      val idx = Scratch.dir(dir, "inv_index")
       TextAnalysis.invertedIndexWrite(t(s, dir, "documents"), idx)
       TextAnalysis.invertedIndexProbe(s, idx, bm25Terms)
     },

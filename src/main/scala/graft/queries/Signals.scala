@@ -96,9 +96,9 @@ object Signals {
     // 10× fixture this was the difference between re-shuffling 12M
     // edges four times (21.6 s) and four map-side hash probes. The
     // visited anti-join broadcasts for the same reason.
-    // visited lives OUTSIDE the harness state (r17, the mis_luby
-    // accumulator pattern): as a state frame, every round re-
-    // checkpointed visited-so-far — an O(|visited|) copy job per round.
+    // visited lives OUTSIDE the harness state (the mis_luby
+    // accumulator pattern): as a state frame, every round would re-
+    // checkpoint visited-so-far — an O(|visited|) copy job per round.
     // A driver-side union of the ≤4 checkpointed per-round frontiers
     // (visited0 is a 1-row local relation) has bounded lineage, and the
     // anti-join broadcast scans the materialized deltas directly.
@@ -154,11 +154,10 @@ object Signals {
     val und0 = edges.select(col("src").as("node")).distinct()
       .select(col("node"), pkeyOf(col("node")).as("pkey"))
       .localCheckpoint()
-    // The in/out accumulators live OUTSIDE the iteration state (r17):
-    // as state frames, every round's union-with-delta was re-
+    // The in/out accumulators live OUTSIDE the iteration state: as
+    // state frames, every round's union-with-delta would be re-
     // checkpointed — an O(total-so-far) copy job per round per
-    // accumulator (profiled at sf0.1: 60 driver-side jobs over 144
-    // tasks, wall 5.0 s vs 12.6 s task time). The per-round deltas are
+    // accumulator. The per-round deltas are
     // already materialized (the harness checkpoints newIn; newOut
     // pre-checkpoints below), so the accumulators are a driver-side
     // list of checkpointed frames, unioned ONCE after the schedule —
@@ -169,8 +168,8 @@ object Signals {
     val (st, rounds) = graft.ops.IterateUntilFixed.frontier(
       Map("und" -> und0), 6) { (st, _) =>
       val und = st("und")
-      // no src∈und pre-filter (r18, -1 broadcast and -1 join per round):
-      // mn may now carry minima for already-DECIDED srcs, but the
+      // no src∈und pre-filter (one broadcast and one join fewer per
+      // round): mn may carry minima for already-DECIDED srcs, but the
       // left_outer probe below is keyed on und's own nodes, so those
       // extra build rows never match anything — newIn is row-identical.
       // The aggregate's extra input (edges whose dst is undecided but
@@ -185,26 +184,25 @@ object Signals {
         .select(col("node"), col("pkey"))
     } { (st, newIn, _) =>
       val und = st("und")
-      // no distinct (r18): the left_semi/anti probes below ignore
-      // build-side duplicates, and the distinct paid an exchange inside
-      // every round's broadcast-build job
+      // no distinct: the left_semi/anti probes below ignore build-side
+      // duplicates, and a distinct would pay an exchange inside every
+      // round's broadcast-build job
       val outNodes = edges
         .join(broadcast(newIn.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node"))
-      // newOut stays LAZY (r18): it derives entirely from materialized
+      // newOut stays LAZY: it derives entirely from materialized
       // frames (und, newIn, the checkpointed edges), so its lineage is
       // bounded without a checkpoint — and its only consumer is the
       // final count aggregate after the schedule, so materializing it
-      // per round paid a checkpoint job whose rows were read once.
+      // per round would pay a checkpoint job whose rows are read once.
       val newOut = und
         .join(broadcast(outNodes), Seq("node"), "left_semi")
         .select(col("node"), col("pkey"))
       inDeltas += newIn
       outDeltas += newOut
-      // ONE anti-join per round (r18, was two chained anti-joins with
-      // two broadcast builds): retire newIn ∪ N(newIn) together —
-      // anti-joining against nodes outside `und` is a no-op, so this
-      // equals the old newIn-then-newOut removal exactly
+      // ONE anti-join (one broadcast build) per round: retire
+      // newIn ∪ N(newIn) together — anti-joining against nodes outside
+      // `und` is a no-op, so this equals removing newIn, then newOut
       Map(
         "und" -> und
           .join(broadcast(newIn.select("node")
@@ -1406,8 +1404,8 @@ object Signals {
         .filter(col("c") >= 2).select("p1", "p2")
         .localCheckpoint()
       // trajectory rows accumulate driver-side over the checkpointed
-      // per-round edge sets (r17, the mis_luby accumulator pattern):
-      // as a state frame, `out` was re-checkpointed union-so-far each
+      // per-round edge sets (the mis_luby accumulator pattern): as a
+      // state frame, `out` would be re-checkpointed union-so-far each
       // round — one extra job per round for a ≤4-row frame
       val rows = scala.collection.mutable.ArrayBuffer(stats(0, e0))
       graft.ops.IterateUntilFixed.fixed(Map("e" -> e0), 3) { (st, r) =>
@@ -1476,7 +1474,7 @@ object Signals {
         .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2).select("p1", "p2")
         .localCheckpoint()
-      // trajectory rows accumulate driver-side (r17, the kcore pattern)
+      // trajectory rows accumulate driver-side (the kcore pattern)
       val rows = scala.collection.mutable.ArrayBuffer[DataFrame]()
       graft.ops.IterateUntilFixed.fixed(Map("e" -> e0), 3) { (st, r) =>
         val e = st("e")
@@ -1585,11 +1583,11 @@ object Signals {
         .join(labels.select(col("v").as("p2"), col("label").as("lb")), "p2")
         .filter(col("la") === col("lb"))
         .groupBy(col("la").as("label")).agg(count(lit(1)).as("intra_edges"))
-      // members and degree_sum fused into ONE pass over labels⋈deg (r18,
-      // guide §2.3 — one wide aggregate instead of two readers): every
-      // labeled vertex comes from the edge list, so the inner deg join
-      // keeps exactly the rows the old separate `sizes` aggregate
-      // counted, and count/sum read off the same joined row.
+      // members and degree_sum fused into ONE pass over labels⋈deg
+      // (one wide aggregate instead of two readers): every labeled
+      // vertex comes from the edge list, so the inner deg join keeps
+      // exactly the labeled rows, and count/sum read off the same
+      // joined row.
       val deg = und.select(col("p1").as("v"))
         .unionByName(und.select(col("p2").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -1986,7 +1984,7 @@ object Signals {
     // exact values in, same doubles out). regr_slope-style built-ins
     // are deliberately NOT used on either side: their streaming-update
     // accumulation orders differ between engines. Zero-variance
-    // denominators → NULL on both sides (ADVICE r10). Map-side combine
+    // denominators → NULL on both sides. Map-side combine
     // collapses to |types| rows before the shuffle.
     QueryDef("ols_fit", (s, dir) => {
       val d38 = "decimal(38,0)"

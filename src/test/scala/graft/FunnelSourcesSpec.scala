@@ -134,6 +134,18 @@ class FunnelSourcesSpec extends AnyFunSuite {
       csv.collect().map(_.toSeq).toSeq)
   }
 
+  test("registered csv fixture: the stage month glob reads the decoy day, the Range post-filter drops it") {
+    import graft.queries.CsvFunnelReport
+    CsvFunnelReport.query(spark, "") // builds the shared fixture
+    val base = CsvFunnelReport.fixtureDir
+    def dates(spec: String): Seq[String] =
+      FunnelSources.stages(spark, base, DateSpec.parse(spec), Some("fiu-a"))
+        .select("Date").collect().map(_.getString(0)).toSeq.sorted
+    assert(dates("*01_2026") === Seq("30-01-2026", "31-01-2026"))
+    assert(dates(CsvFunnelReport.dateSpecText) ===
+      Seq("01-02-2026", "31-01-2026"))
+  }
+
   test("union-of-days equals one multi-day scan (partial/final agg equivalence)") {
     val spec = DateSpec.parse("30_01_2026 -> 31_01_2026")
     val once = FunnelAggregates.otpTotals(

@@ -105,9 +105,8 @@ class PlanShapeSpec extends AnyFunSuite {
         assert(recorded.nonEmpty,
           s"$name ran no stream the runners recorded a micro-batch " +
             "plan for — recording hook lost?")
-        // values only: the registry tags embed the per-JVM run token
-        // (they're scratch-path tags), and the drain-per-query protocol
-        // already attributes shapes to the query name
+        // values only: the drain-per-query protocol already attributes
+        // shapes to the query name
         val fp = recorded.values.toSeq.sorted.mkString("; ")
         assert(!fp.exists(c => c == '"' || c == '\\'),
           s"stream fingerprint for '$name' needs JSON escaping: $fp")
