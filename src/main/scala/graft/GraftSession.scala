@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.Scratch
+
 /** Standard session configuration for the graft engine.
   *
   * - `spark.sql.ansi.enabled=false`: the funnel sources are string-typed CSVs
@@ -15,6 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   cluster this is overridden by AQE coalescing anyway.
   * - AQE on: runtime re-plan (skew-join split, partition coalescing) is the
   *   100 TB posture — plans are sized by observed stats, not guesses.
+  * - `spark.sql.warehouse.dir` under [[graft.io.Scratch]]: managed tables
+  *   live and die with the JVM's scratch root, and no session creates a
+  *   `spark-warehouse/` in its working directory. A later `.config` on
+  *   the returned builder overrides it.
   */
 object GraftSession {
   def builder(cores: String): SparkSession.Builder = {
@@ -35,6 +41,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", Scratch.fresh("spark-warehouse"))
     sys.env.get("SPARK_GRAFT_JARS").fold(b)(b.config("spark.jars", _))
   }
 

@@ -2,8 +2,7 @@ package graft.app
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
@@ -93,42 +92,33 @@ object RunReports {
   private def reportForEntity(spark: SparkSession, args: Args,
       dateSpec: String, entity: String,
       recipients: Option[Recipients]): String = {
-    // stage rows are counted while the stage aggregate scans them, so the
-    // emptiness check costs no job of its own
-    val stageRows = Observation("stage_rows")
-    def counted(stages: DataFrame): DataFrame =
-      stages.observe(stageRows, count(lit(1)).as("n"))
-
-    val wide: DataFrame =
+    val totals: DataFrame =
       if (args.demo)
-        // demo mode: the reference's mock fetch outputs (report_engine.py:326-367)
-        FunnelTable.wide(
-          FunnelAggregates.stageTotals(counted(MockData.stages(spark))),
-          MockData.otpTotals(spark), MockData.discoveryTotals(spark),
-          MockData.fiStatusCounts(spark))
+        // demo mode: raw rows whose totals are the reference's mock fetch
+        // outputs (report_engine.py:326-367)
+        FunnelAggregates.totals(MockData.stages(spark), MockData.rawOtp(spark),
+          MockData.rawDiscovery(spark), MockData.rawUserFunnel(spark))
       else {
         val base = args.base.getOrElse(
           throw new IllegalArgumentException("--base required without --demo"))
         val spec = DateSpec.parse(dateSpec)
-        FunnelTable.wide(
-          FunnelAggregates.stageTotals(counted(
-            FunnelSources.stages(spark, base, spec, Some(entity)))),
-          FunnelAggregates.otpTotals(
-            FunnelSources.otp(spark, base, spec, Some(entity))),
-          FunnelAggregates.discoveryTotals(
-            FunnelSources.discovery(spark, base, spec, Some(entity))),
-          FunnelAggregates.fiStatusCounts(
-            FunnelSources.userFunnel(spark, base, spec, Some(entity))))
+        val e = Some(entity)
+        FunnelAggregates.totals(
+          FunnelSources.stages(spark, base, spec, e),
+          FunnelSources.otp(spark, base, spec, e),
+          FunnelSources.discovery(spark, base, spec, e),
+          FunnelSources.userFunnel(spark, base, spec, e))
       }
 
-    // The one action over the sources: every aggregate is a scalar, so the
+    // The one action over the sources: every total is a scalar, so the
     // report is a function of this single row. Everything below runs over
     // a one-row local relation and never re-reads the CSV files.
+    val wide = FunnelTable.wideFromJoined(totals)
     val wideRow = wide.collect().head
     // empty stage fetch -> skip entity, the reference's posture
     // (run_reports.py:219-221); the built table would be 18 zero rows,
     // which must never ship as a report
-    if (stageRows.get("n") == 0L)
+    if (wideRow.getAs[Long](FunnelAggregates.StageRows) == 0L)
       throw new IllegalStateException(s"no data for $entity @ $dateSpec")
     val one = spark.createDataFrame(java.util.List.of(wideRow), wide.schema)
     val table = FunnelTable.rows(one)
@@ -137,17 +127,20 @@ object RunReports {
     val prefix = if (args.demo) "demo_funnel_report" else s"funnel_report-$entity"
     val stem = s"${args.out}/$prefix-$tag"
 
-    Sinks.parquet(table, s"$stem.parquet")
-    val grid = FunnelRender.grid(table, FunnelTable.summary(one))
-    // presentation-sized collect, already in `ord` order: the csv is
-    // written from these rows as they are, and the xlsx built from them
-    val gridRows = grid.collect().toSeq
-    Sinks.csv(spark.createDataFrame(gridRows.asJava, grid.schema), s"$stem.grid.csv")
-    // The reference's excel writer prepends one blank row above the grid
-    // (run_reports.py:66-67), making the golden file 25 rows.
-    val blank = Row.fromSeq(Seq.fill(7)(""))
-    Sinks.xlsxFunnel(blank +: gridRows.map(r => Row.fromSeq(r.toSeq.tail)),
-      s"$stem.xlsx")
+    alongside(Sinks.parquet(table, s"$stem.parquet")) {
+      val grid = FunnelRender.unsortedGrid(table, FunnelTable.summary(one))
+      // presentation-sized collect, put in `ord` order here (the order of
+      // FunnelRender.grid): the csv is written from these rows as they
+      // are, and the xlsx built from them
+      val gridRows = grid.collect().sortBy(_.getInt(0)).toSeq
+      Sinks.csv(spark.createDataFrame(gridRows.asJava, grid.schema),
+        s"$stem.grid.csv")
+      // The reference's excel writer prepends one blank row above the grid
+      // (run_reports.py:66-67), making the golden file 25 rows.
+      val blank = Row.fromSeq(Seq.fill(7)(""))
+      Sinks.xlsxFunnel(blank +: gridRows.map(r => Row.fromSeq(r.toSeq.tail)),
+        s"$stem.xlsx")
+    }
 
     recipients.foreach { r =>
       Sinks.emailOrSkip(
@@ -155,5 +148,28 @@ object RunReports {
         s"Funnel report $entity $dateSpec", s"$stem.xlsx")
     }
     s"$stem.{parquet,grid.csv,xlsx}"
+  }
+
+  /** Runs `side` on a new thread while `body` runs on this one, and
+    * returns `body`'s result once both have ended; a failure of either
+    * is thrown (`body`'s first, with `side`'s suppressed). The thread is
+    * created here so it inherits this thread's Spark local properties
+    * (job group, scheduler pool, any caller's tags): its jobs stay
+    * attributed to the caller's work, which a pooled thread would not
+    * guarantee.
+    */
+  private[graft] def alongside[A](side: => Unit)(body: => A): A = {
+    var sideFailure: Option[Throwable] = None // read after join
+    val t = new Thread(() =>
+      try side catch { case e: Throwable => sideFailure = Some(e) },
+      "report-sink")
+    t.start()
+    val result = try Right(body) catch { case e: Throwable => Left(e) }
+    t.join()
+    (result, sideFailure) match {
+      case (Right(a), None) => a
+      case (Right(_), Some(e)) => throw e
+      case (Left(e), other) => other.foreach(e.addSuppressed); throw e
+    }
   }
 }

@@ -36,31 +36,32 @@ object FunnelAggregates {
     * `report_engine.py:222-225`). Missing data sums to null -> coalesce 0,
     * matching the reference's "empty frame -> entity skipped / zero" posture.
     */
-  def stageTotals(stages: DataFrame): DataFrame = {
-    val aggs = Schemas.stageColumns.map(c =>
-      coalesce(sum(truncLong(col(c))), lit(0L)).as(c))
-    stages.agg(aggs.head, aggs.tail: _*)
-  }
+  def stageTotals(stages: DataFrame): DataFrame = aggOf(stages, stageSums)
+
+  private def stageSums: Seq[Column] = Schemas.stageColumns.map(c =>
+    coalesce(sum(truncLong(col(c))), lit(0L)).as(c))
+
+  private def aggOf(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    df.agg(aggs.head, aggs.tail: _*)
 
   /** OTP totals: grand sums of the three OTP columns cast to double
     * (`fetch_otp_totals`, `report_engine.py:115-141`). Output column names
     * `Total_<col>` match the reference's SQL aliases.
     */
-  def otpTotals(otp: DataFrame): DataFrame = {
-    val aggs = Schemas.otpColumns.map(c =>
-      sum(col(c).cast("double")).as("Total_" + c))
-    otp.agg(aggs.head, aggs.tail: _*)
-  }
+  def otpTotals(otp: DataFrame): DataFrame = aggOf(otp, otpSums)
+
+  private def otpSums: Seq[Column] = Schemas.otpColumns.map(c =>
+    sum(col(c).cast("double")).as("Total_" + c))
 
   /** Discovery totals: grand sums with `NULLIF(x,'')` before the cast —
     * empty strings are skipped by SUM, exactly as in the reference's Drill
     * SQL (`fetch_discovery_totals`, `report_engine.py:145-171`).
     */
-  def discoveryTotals(discovery: DataFrame): DataFrame = {
-    val aggs = Schemas.discoveryColumns.map(c =>
-      sum(nullif(col(c), lit("")).cast("double")).as(c))
-    discovery.agg(aggs.head, aggs.tail: _*)
-  }
+  def discoveryTotals(discovery: DataFrame): DataFrame =
+    aggOf(discovery, discoverySums)
+
+  private def discoverySums: Seq[Column] = Schemas.discoveryColumns.map(c =>
+    sum(nullif(col(c), lit("")).cast("double")).as(c))
 
   /** FI status counts over the per-user fact table: keep only the three known
     * statuses, drop null/empty, group + count (`fetch_fi_status_counts`,
@@ -76,6 +77,50 @@ object FunnelAggregates {
           col("fetch_status").isNotNull && col("fetch_status") =!= "")
       .groupBy("fetch_status")
       .agg(count("fetch_status").as("Count"))
+
+  /** Column of [[totals]] counting the stage rows the scan kept. */
+  val StageRows = "stage_rows"
+
+  /** Every source total of one report in ONE aggregate: the 11 stage sums,
+    * the 3 `Total_*` OTP sums, the 5 discovery sums, `fi_success_cnt` /
+    * `fi_failed_cnt` and [[StageRows]], over a `union` of the four raw
+    * families. Each branch projects to the shared string columns, with
+    * typed nulls for the columns its family lacks, so each sum sees
+    * exactly the rows of its own family. One scan stage and one final
+    * aggregate, instead of four aggregates joined afterwards.
+    *
+    * The values equal [[stageTotals]], [[otpTotals]], [[discoveryTotals]]
+    * and the [[FunnelTable.wide]] pivot of [[fiStatusCounts]], double sums
+    * bit for bit: `union` keeps each branch's scan and its split into
+    * partitions, so every partial sum is the one the per-family aggregate
+    * computes; the other branches' partitions contribute null buffers,
+    * which a sum merge skips, and the final merge reads the non-null
+    * partials in the same relative (map-index) order. A filtered
+    * `groupBy` count pivoted to two columns is the conditional count
+    * `count(when(fetch_status === s))`: rows of other statuses, nulls and
+    * empties never match, and no matching row counts 0.
+    */
+  def totals(stages: DataFrame, otp: DataFrame, discovery: DataFrame,
+      userFunnel: DataFrame): DataFrame = {
+    val shared = Schemas.stageColumns ++ Schemas.otpColumns ++
+      Schemas.discoveryColumns :+ "fetch_status"
+    def branch(df: DataFrame, own: Seq[String], stageRow: Column) =
+      df.select(shared.map(c =>
+        (if (own.contains(c)) col(c) else lit(null)).cast("string").as(c)) :+
+        stageRow.as(StageRows): _*)
+    val noRow = lit(null).cast("int")
+    val fiCounts = Seq("Success" -> "fi_success_cnt", "Failed" -> "fi_failed_cnt")
+      .map { case (status, name) =>
+        count(when(col("fetch_status") === status, lit(1))).as(name)
+      }
+    aggOf(
+      branch(stages, Schemas.stageColumns, lit(1))
+        .union(branch(otp, Schemas.otpColumns, noRow))
+        .union(branch(discovery, Schemas.discoveryColumns, noRow))
+        .union(branch(userFunnel, Seq("fetch_status"), noRow)),
+      stageSums ++ otpSums ++ discoverySums ++ fiCounts :+
+        count(col(StageRows)).as(StageRows))
+  }
 
   /** Filter a source frame to one entity. The reference splices the entity id
     * into SQL text (`report_engine.py:99`, an injection hazard); here it is a

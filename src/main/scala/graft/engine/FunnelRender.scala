@@ -27,7 +27,14 @@ import org.apache.spark.sql.functions._
 object FunnelRender {
 
   /** One ordered 24-row grid; `ord` is the presentation row index. */
-  def grid(rows: DataFrame, summary: DataFrame): DataFrame = {
+  def grid(rows: DataFrame, summary: DataFrame): DataFrame =
+    unsortedGrid(rows, summary).orderBy("ord")
+
+  /** The 24 rows of [[grid]] in no defined order. `ord` is unique per
+    * row, so sorting them by `ord` anywhere, on the driver too, gives
+    * [[grid]]'s order.
+    */
+  def unsortedGrid(rows: DataFrame, summary: DataFrame): DataFrame = {
     def s(c: org.apache.spark.sql.Column) = coalesce(c.cast("string"), lit(""))
 
     val head = summary.select(
@@ -68,6 +75,6 @@ object FunnelRender {
       s(col("drop_count")).as("c5"),
       s(col("drop_pct")).as("c6"))
 
-    head.unionByName(data).orderBy("ord")
+    head.unionByName(data)
   }
 }

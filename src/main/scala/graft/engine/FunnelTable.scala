@@ -3,15 +3,19 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Schemas
+
 /** The funnel report table — the reference's core product
   * (`build_report_table`, `report_engine.py:233-319`).
   *
-  * Built as a single Catalyst plan: the four single-row aggregates are
-  * cross-joined into one wide row (SURVEY §2.3 option 2 — trivially cheap,
-  * every side is one row, and it keeps the whole computation
-  * oracle-verifiable as pure SQL), derived metrics are computed as columns,
-  * and the 18 data rows are produced by exploding an array of structs —
-  * the idiomatic Spark form of the reference's driver-side list-of-lists.
+  * Built as a single Catalyst plan over ONE single-row frame of source
+  * totals ([[wideFromJoined]]): raw sources reach it through the one
+  * aggregate [[FunnelAggregates.totals]], pre-aggregated frames through
+  * [[wide]]'s cross join of single-row sides. Derived metrics are
+  * computed as columns, and the 18 data rows are produced by exploding an
+  * array of structs — the idiomatic Spark form of the reference's
+  * driver-side list-of-lists. Either route yields the same row, so the
+  * whole computation stays oracle-verifiable as pure SQL.
   *
   * Quirks preserved verbatim (SURVEY §2.9; all verified against the golden
   * xlsx decoded in FIXTURES.md §3):
@@ -66,11 +70,12 @@ object FunnelTable {
 
   /** Derived-metric projection over ONE single-row frame that already
     * carries all source columns (11 stage + 3 `Total_*` otp + 5
-    * discovery + `fi_success_cnt`/`fi_failed_cnt`). Callers that can
-    * compute every aggregate in a single scan of one table (e.g. the
-    * funnel-over-events oracle query) use this directly and skip the
-    * four-frame cross join — one pass over the fact table instead of
-    * four, which at 100 TB is the whole game.
+    * discovery + `fi_success_cnt`/`fi_failed_cnt`). Those 21 are replaced
+    * by the derived metrics; any other column (e.g.
+    * [[FunnelAggregates.StageRows]]) passes through unchanged. Callers
+    * that compute every aggregate in one pass ([[FunnelAggregates.totals]],
+    * the funnel-over-events query) use this directly and skip the
+    * four-frame cross join.
     */
   def wideFromJoined(joined: DataFrame): DataFrame = {
 
@@ -82,7 +87,9 @@ object FunnelTable {
     // otp total: `int(...)` with empty-frame -> 0 (report_engine.py:284-285)
     def otp(c: String): Column = coalesce(col(c).cast("double").cast("long"), lit(0L))
 
-    joined.select(
+    val passThrough = joined.columns.toSeq.filterNot(sourceColumns).map(col)
+
+    joined.select(Seq(
       // total_users: 7 stage columns incl. the Discovery STAGE column
       // (quirk 1) — report_engine.py:239-247
       (st("AA_client_Initialization") + st("OTP_Based_Sign_in_Sign_up") +
@@ -111,7 +118,7 @@ object FunnelTable {
       disc("NO_STATUS").as("fip_fail"),
       disc("Failure").as("some_fail"),
       (disc("Account_Discovered") + disc("FIP_Not_Selected")).as("found_not_linked")
-    ).select(
+    ) ++ passThrough: _*).select(
       col("*"),
       // survivors by successive subtraction (report_engine.py:271-275)
       col("total_users").as("n_consent"),
@@ -124,6 +131,10 @@ object FunnelTable {
       (col("d2") - (col("otp_wrong") + col("otp_miss")) + col("view_drop")).as("otp_ok_drop")
     )
   }
+
+  private val sourceColumns: Set[String] = (Schemas.stageColumns ++
+    Schemas.otpColumns.map("Total_" + _) ++ Schemas.discoveryColumns ++
+    Seq("fi_success_cnt", "fi_failed_cnt")).toSet
 
   private val nullLong = lit(null).cast("long")
   private val nullDouble = lit(null).cast("double")
@@ -238,17 +249,15 @@ object FunnelTable {
       fiStatusCounts))
 
   /** Full pipeline from the four RAW source frames (S1-S4 shapes, see
-    * [[graft.core.Schemas]]): applies all four [[FunnelAggregates]] first —
-    * the path a real scan feeds ([[graft.io.FunnelSources]]).
+    * [[graft.core.Schemas]]) through the one aggregate
+    * [[FunnelAggregates.totals]] — the path a real scan feeds
+    * ([[graft.io.FunnelSources]]).
     */
   def buildFromRaw(
       rawStages: DataFrame,
       rawOtp: DataFrame,
       rawDiscovery: DataFrame,
       rawUserFunnel: DataFrame): DataFrame =
-    rows(wide(
-      FunnelAggregates.stageTotals(rawStages),
-      FunnelAggregates.otpTotals(rawOtp),
-      FunnelAggregates.discoveryTotals(rawDiscovery),
-      FunnelAggregates.fiStatusCounts(rawUserFunnel)))
+    rows(wideFromJoined(FunnelAggregates.totals(
+      rawStages, rawOtp, rawDiscovery, rawUserFunnel)))
 }

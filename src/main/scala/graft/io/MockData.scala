@@ -66,10 +66,10 @@ object MockData {
       schema)
   }
 
-  // ---- Raw-shaped fixtures (S2-S4 schemas) for the buildFromRaw path.
-  // Aggregating these with FunnelAggregates reproduces the pre-aggregated
-  // frames above, so build(mock aggs) == buildFromRaw(mock raws) is the
-  // composition test the round-2 regression lacked.
+  // ---- Raw-shaped fixtures (S2-S4 schemas) for the buildFromRaw path and
+  // demo mode. Aggregating these with FunnelAggregates reproduces the
+  // pre-aggregated frames above, so build(mock aggs) == buildFromRaw(mock
+  // raws) tests the raw path against the reference's mock outputs.
 
   /** One raw OTP summary row whose grand sums equal [[otpTotals]]. */
   def rawOtp(spark: SparkSession): DataFrame =

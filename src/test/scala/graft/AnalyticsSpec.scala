@@ -28,7 +28,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("bitmap_distinct: 62-bit word arithmetic matches exact distincts across the month rollup") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bitmap_distinct").toString
+    val dir = Tmp.dir("bitmap_distinct").toString
     def d(y: Int, m: Int): java.sql.Timestamp =
       java.sql.Timestamp.valueOf(f"$y-$m%02d-15 00:00:00")
     // custkeys straddle the 62-bit word boundary (61 | 62) and repeat
@@ -50,7 +50,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("subseq_count: all view<click<purchase index triples, exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("subseq").toString
+    val dir = Tmp.dir("subseq").toString
     // user 1 timeline v v c p c p: triples = v{1,2}·c3·p{4,6} (4)
     // + v{1,2}·c5·p6 (2) = 6; user 2 has a purchase but no prefix
     val ev = Seq(
@@ -68,7 +68,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("try_arithmetic: row-level NULL degradation, not job failure") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("try_arith").toString
+    val dir = Tmp.dir("try_arith").toString
     // event_id 0 hits ALL THREE pathological residues (0 % m = 0): its
     // divisor vanishes and its cast input is the non-numeric
     // event_type; ids 997 % 1000 = 997 stays under the overflow
@@ -86,7 +86,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("session_window_agg: exact-gap event merges, gap+1µs splits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sess_win").toString
+    val dir = Tmp.dir("sess_win").toString
     val gap = 1800000000L // 30 min in µs
     // the empirical boundary pin: u2's event at EXACTLY last+gap still
     // merges (session_window's merge test is next <= last + gap — the
@@ -113,7 +113,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("recursive_tree: planted 2-level forest walks to exact depths") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rec_cte").toString
+    val dir = Tmp.dir("rec_cte").toString
     // roots 1..3 (< 7); 8 DIV 7 = 1, 15 DIV 7 = 2, 21 DIV 7 = 3 parent
     // them; 57 DIV 7 = 8 chains one level deeper
     Seq(1L, 2L, 3L, 8L, 15L, 21L, 57L).toDF("s_suppkey")
@@ -129,7 +129,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("variant_json: missing path extracts null, fields round-trip typed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("var_json").toString
+    val dir = Tmp.dir("var_json").toString
     Seq((1L, 10L, "view", 0.125, 0L), (2L, 11L, "view", 2.5, 0L))
       .toDF("event_id", "user_id", "event_type", "value", "us")
       .select(col("event_id"), col("user_id"), col("event_type"),
@@ -145,7 +145,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("peak_concurrency: sweep-line peak, inclusive ends, midnight-spanning session") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("peak_conc").toString
+    val dir = Tmp.dir("peak_conc").toString
     val m = 60000000L // 1 min in µs
     val day = 86400000000L
     // day 0: u1 [0,20m], u3 [12m,22m], u2 [13m,13m] -> all three open
@@ -179,7 +179,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (2L, 0L * h, 5L, "view"), (2L, 1L * h, 6L, "signup"),
       (3L, 0L * h, 7L, "signup"), (3L, 10L * h, 8L, "view"),
       (4L, 0L * h, 9L, "click"))
-    val dir = java.nio.file.Files.createTempDirectory("funnel_ordered").toString
+    val dir = Tmp.dir("funnel_ordered").toString
     rows.toDF("user_id", "ts_us", "event_id", "event_type")
       .select(col("user_id"), col("event_id"), col("event_type"),
         // events.parquet carries ns-precision stamps read as Long nanos
@@ -204,7 +204,7 @@ class AnalyticsSpec extends AnyFunSuite {
           (1L, 2L * h, 3L, "view"), (1L, 3L * h, 4L, "click"),
           (1L, 4L * h, 5L, "purchase"),
           (2L, 0L, 6L, "error"), (2L, 1000L, 7L, "other"))
-    val dir = java.nio.file.Files.createTempDirectory("funnel_cap").toString
+    val dir = Tmp.dir("funnel_cap").toString
     rows.toDF("user_id", "ts_us", "event_id", "event_type")
       .select(col("user_id"), col("event_id"), col("event_type"),
         (col("ts_us") * 1000).as("ts"))
@@ -223,7 +223,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // doc 20 is held out (%20==0) with grams {t1..t8, t2..t9}; doc 1
     // shares its first 8-gram only (1/2 → band 5), doc 2 shares none
     // (band 0), doc 3 IS the 8-gram (1/1 → band 10).
-    val dir = java.nio.file.Files.createTempDirectory("contam").toString
+    val dir = Tmp.dir("contam").toString
     Seq(
       (20L, "t1 t2 t3 t4 t5 t6 t7 t8 t9"),
       (1L, "t1 t2 t3 t4 t5 t6 t7 t8 x1"),
@@ -242,7 +242,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("tpch_q18_like: HAVING cut in cents, dims join the pruned set") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q18").toString
+    val dir = Tmp.dir("q18").toString
     // order 1 sums to 30000 cents (> 28000), order 2 only 10000
     Seq((1L, 150.0), (1L, 150.0), (2L, 100.0))
       .toDF("l_orderkey", "l_quantity")
@@ -263,7 +263,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("join_size_estimate: uniform per-bucket frequencies are exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jse").toString
+    val dir = Tmp.dir("jse").toString
     // every key appears 2x on the fact side, 1x on the dim side:
     // per bucket ra = 2·da, rb = db = da → est = Σ 2·da = 40 = actual
     val keys = (1L to 20L)
@@ -280,7 +280,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("merge_cdc_delete: tombstones drop rows, survivors checksum") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc_del").toString
+    val dir = Tmp.dir("cdc_del").toString
     // 3 → delete (3%7=3); 20 → update +100 (20%10=0, 20%7=6);
     // 7 → keep AND spawns insert -8 @1.00 (7%1000=7); 5 → keep
     Seq((3L, 1.00), (20L, 4.00), (7L, 3.00), (5L, 2.00))
@@ -297,7 +297,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("bloom_join_reduction: no false negatives, exact join untouched") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bloom_join").toString
+    val dir = Tmp.dir("bloom_join").toString
     Seq((1L, "1-URGENT"), (2L, "3-MEDIUM"), (3L, "1-URGENT"))
       .toDF("o_orderkey", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -325,7 +325,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (1L, 3, 1L, 1L, 1.0, ts("2024-02-01")),
       (2L, 1, 1L, 2L, 30.0, ts("2024-01-01")),
       (2L, 2, 1L, 2L, 25.0, ts("2024-01-11")))
-    val dir = java.nio.file.Files.createTempDirectory("an_ivj").toString
+    val dir = Tmp.dir("an_ivj").toString
     rows.toDF("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey",
         "l_quantity", "l_shipdate")
       .write.parquet(s"$dir/lineitem.parquet")
@@ -341,7 +341,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (63L, "purchase"), (100L, "purchase"), (200L, "purchase"),
       (201L, "purchase"), (999L, "click")) // non-member type ignored
       .map { case (u, t0) => (1704067200000000L + u, u, t0, 1.0) }
-    val dir = java.nio.file.Files.createTempDirectory("an_bmi").toString
+    val dir = Tmp.dir("an_bmi").toString
     rows.toDF("us", "user_id", "event_type", "value")
       .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -362,7 +362,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (ts(1), 1L, "view", 1.0), (ts(2), 1L, "click", 1.0),
       (ts(3), 1L, "purchase", 1.0),
       (ts(1), 2L, "click", 1.0), (ts(2), 2L, "view", 1.0))
-    val dir = java.nio.file.Files.createTempDirectory("an_sq").toString
+    val dir = Tmp.dir("an_sq").toString
     rows.toDF("ts", "user_id", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("seq_patterns")(spark, dir).collect()

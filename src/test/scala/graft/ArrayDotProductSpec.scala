@@ -97,7 +97,7 @@ class ArrayDotProductSpec extends AnyFunSuite {
     // ConvertToLocalRelation so the fused expression survives into the
     // optimized plan
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fusedot").toString
+    val dir = Tmp.dir("fusedot").toString
     Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
@@ -115,7 +115,7 @@ class ArrayDotProductSpec extends AnyFunSuite {
         if (rnd.nextInt(15) == 0) None
         else Some(math.rint((rnd.nextDouble() * 10 - 5) * 100) / 100)))
     val rows = (1 to 300).map(i => (i.toLong, arr(), arr()))
-    val dir = java.nio.file.Files.createTempDirectory("fuseprop").toString
+    val dir = Tmp.dir("fuseprop").toString
     rows.toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
     val got = spark.read.parquet(dir)
       .selectExpr("id",

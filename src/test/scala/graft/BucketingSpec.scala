@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +15,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("same-bucketed tables sort-merge join with zero exchanges") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("buckets").toString
+    val dir = Tmp.dir("buckets").toString
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .withColumnRenamed("l_orderkey", "o_orderkey")

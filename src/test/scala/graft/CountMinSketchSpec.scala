@@ -44,7 +44,7 @@ class CountMinSketchSpec extends AnyFunSuite {
   test("cms_rollup: day-merged counters equal one-shot, weight conserved") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("cms_roll").toString
+    val dir = Tmp.dir("cms_roll").toString
     val day = 86400000000L // µs
     // day 1: x,x,y ; day 2: x,y,y,y → merged: x=3, y=4
     val rows = Seq((1L, "x"), (2L, "x"), (3L, "y"),

@@ -13,7 +13,7 @@ class CurationSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Tmp.dir(prefix).toString
 
   test("scd2_audit: consecutive runs collapse, open interval carries NULL") {
     import org.apache.spark.sql.functions._
@@ -302,7 +302,7 @@ class CurationSpec extends AnyFunSuite {
     // A: 10 orders at $100; B: one $2000 order. N=11, S=$3000.
     // enc = (N*sum_g + 20*S)/(N*(n_g+20)) cents:
     // A → 7,100,000/330 = $215.151515; B → 8,200,000/231 = $354.978355
-    val dir = java.nio.file.Files.createTempDirectory("cur_te").toString
+    val dir = Tmp.dir("cur_te").toString
     (Seq.fill(10)((1L, 100.0)) ++ Seq((2L, 2000.0)))
       .toDF("o_custkey", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")

@@ -30,7 +30,7 @@ class EventsLoaderSpec extends AnyFunSuite {
   private def writeFixture(sub: String)(f: org.apache.spark.sql.Column
       => org.apache.spark.sql.Column): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"evload_$sub").toString
+    val dir = Tmp.dir(s"evload_$sub").toString
     instantsUs.zipWithIndex.toDF("us", "event_id")
       .select(col("event_id").cast("long"), f(col("us")).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -82,7 +82,7 @@ class EventsLoaderSpec extends AnyFunSuite {
 
   test("events stream: single-file table next to a sibling table") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evload_file").toString
+    val dir = Tmp.dir("evload_file").toString
     TablesSpec.singleFile(instantsUs.zipWithIndex.toDF("us", "event_id")
       .select(col("event_id").cast("long"),
         timestamp_micros(col("us")).as("ts")),

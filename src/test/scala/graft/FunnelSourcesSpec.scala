@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.SparkSession
@@ -20,7 +19,7 @@ class FunnelSourcesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
 
   private lazy val base: String = {
-    val dir = Files.createTempDirectory("funnel-csv").toString
+    val dir = Tmp.dir("funnel-csv").toString
     FunnelCsvFixture.write(dir, Seq(
       LocalDate.of(2026, 1, 30), LocalDate.of(2026, 1, 31),
       LocalDate.of(2026, 2, 1)))
@@ -52,7 +51,7 @@ class FunnelSourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned-parquet layout: planner prunes date partitions and results match the CSV path") {
-    val out = Files.createTempDirectory("funnel-part").toString + "/stages"
+    val out = Tmp.dir("funnel-part").toString + "/stages"
     // ingest the whole 3-day CSV corpus once into date=... partitions
     FunnelSources.ingestPartitioned(
       FunnelSources.stages(spark, base, DateSpec.parse("30_01_2026 -> 01_02_2026")),

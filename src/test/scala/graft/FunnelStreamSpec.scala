@@ -255,8 +255,8 @@ class FunnelStreamSpec extends AnyFunSuite {
     // exactly-once across the restart boundary.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("funnel_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("funnel_sink").toString
+    val ckpt = Tmp.dir("funnel_ckpt").toString
+    val outDir = Tmp.dir("funnel_sink").toString
     val input = MemoryStream[(Long, Timestamp, String)]
     def start() = FunnelStream
       .dedupedEvents(input.toDF().toDF("event_id", "ts", "event_type"))
@@ -337,7 +337,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     val prior = spark.conf.getOption(provider)
     spark.conf.set(provider,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("tws_ckpt").toString
+    val ckpt = Tmp.dir("tws_ckpt").toString
     val input = MemoryStream[FunnelStream.UserEvent]
     // foreachBatch: the one Update-mode sink that supports checkpoint
     // recovery (memory sink refuses to restart from a checkpoint)
@@ -458,7 +458,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     val prior = spark.conf.getOption(provider)
     spark.conf.set(provider,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("ssj_ckpt").toString
+    val ckpt = Tmp.dir("ssj_ckpt").toString
     val views = MemoryStream[(Long, Timestamp)]
     val purchases = MemoryStream[(Long, Timestamp)]
     val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
@@ -605,7 +605,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_hll is register-identical to the batch sketch") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("fs_hll").toString
+    val dir = Tmp.dir("fs_hll").toString
     (1 to 300).map(i => (i.toLong * 1000000L,
         if (i % 2 == 0) "a" else "b", (i % 40).toLong))
       .toDF("us", "event_type", "user_id")
@@ -622,7 +622,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_bitmap: OR-merged words count exactly, straddling a word") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("fs_bmap").toString
+    val dir = Tmp.dir("fs_bmap").toString
     // users straddle the 62-bit word boundary (61 | 62) and repeat
     val rows = Seq((0L, "a"), (61L, "a"), (62L, "a"), (61L, "a"),
       (124L, "a"), (5L, "b"))
@@ -643,7 +643,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_bloom: no false negatives, probe counts reconcile") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("fs_bloom").toString
+    val dir = Tmp.dir("fs_bloom").toString
     // purchase users 10..19 are inside the 0..1999 probe grid
     val rows = (10L to 19L).map(u => (u, "purchase")) ++
       (5000L to 5004L).map(u => (u, "purchase")) ++ // outside the grid
@@ -667,7 +667,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_cms counters equal the batch sketch's estimates") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("fs_cms").toString
+    val dir = Tmp.dir("fs_cms").toString
     (1 to 200).map(i => (i.toLong * 1000000L,
         Seq("a", "b", "c")(i % 3)))
       .toDF("us", "event_type")
@@ -683,7 +683,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_quantile equals batch sketch_quantiles row for row") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("fs_quant").toString
+    val dir = Tmp.dir("fs_quant").toString
     val rnd = new scala.util.Random(3)
     (1 to 400).map { i =>
       (i.toLong * 1000000L, if (i % 2 == 0) "a" else "b",
@@ -734,7 +734,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     }
     spark.streams.addListener(listener)
     try {
-      val dir = java.nio.file.Files.createTempDirectory("srocks").toString
+      val dir = Tmp.dir("srocks").toString
       Seq((1L, 1L, "a"), (2L, 1L, "a"), (3L, 1L, "a"), (4L, 1L, "b"),
         (5L, 2L, "a"))
         .toDF("us", "user_id", "event_type")
@@ -762,7 +762,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   test("stream_funnel_table restart-recovery: crash mid-stream, " +
       "resume from checkpoint, settle to batch parity") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fs_restart").toString
+    val dir = Tmp.dir("fs_restart").toString
     // 4 data files → 4 micro-batches under maxFilesPerTrigger=1
     (0 until 400).map { i =>
       (i.toLong, i.toLong % 7,
@@ -772,7 +772,7 @@ class FunnelStreamSpec extends AnyFunSuite {
         timestamp_micros(col("us")).as("ts"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val base = java.nio.file.Files.createTempDirectory("fs_restart_run")
+    val base = Tmp.dir("fs_restart_run")
     val sink = s"$base/out"
     val ckpt = s"$base/ckpt"
     // run 1: injected crash BEFORE batch 1's write — batch 0's offsets

@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.scalatest.Assertions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Schemas
 import graft.engine.{FunnelAggregates, FunnelTable}
 import graft.io.MockData
 
@@ -125,11 +128,97 @@ class FunnelTableSpec extends AnyFunSuite {
     (0 until 18).foreach { i => assert(raw(i) === table(i), s"row $i") }
   }
 
+  private def frame(schema: StructType, rows: Seq[Seq[String]]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
+
+  private def mockRaw: Seq[DataFrame] = Seq(MockData.stages(spark),
+    MockData.rawOtp(spark), MockData.rawDiscovery(spark),
+    MockData.rawUserFunnel(spark))
+
+  test("one aggregate equals the four per-family aggregates: MockData raw " +
+      "frames, whole and with each family missing in turn") {
+    val schemas = Seq(Schemas.stages, Schemas.otpSummary,
+      Schemas.discoverySummary, Schemas.userFunnel)
+    (None +: schemas.indices.map(Some(_))).foreach { missing =>
+      val raw = mockRaw
+      val Seq(st, otp, disc, facts) = raw.indices.map(i =>
+        if (missing.contains(i)) frame(schemas(i), Nil) else raw(i))
+      FunnelTableSpec.assertTotalsMatch(st, otp, disc, facts,
+        missing.fold("mock")(i => s"missing ${schemas(i).fieldNames(1)}"))
+    }
+  }
+
+  test("one aggregate equals the four per-family aggregates: malformed " +
+      "cells and fractional sums over several partitions") {
+    // non-ANSI casts turn "12x", "abc" and "1e" into null, which SUM skips;
+    // 12 fractional rows make a several-partition local scan, so the
+    // double sums are order-sensitive and must still agree bit for bit
+    val stages = frame(Schemas.stages, Seq(
+      Seq("example-fiu", "15-02-2026") ++ Schemas.stageColumns.indices.map(
+        c => if (c == 3) "12x" else s"${c + 1}.9"),
+      Seq("example-fiu", "16-02-2026") ++ Schemas.stageColumns.indices.map(
+        c => s"-${c + 2}.5")))
+    val otp = frame(Schemas.otpSummary, (1 to 12).map(i =>
+      Seq("example-fiu", s"0.$i", if (i == 5) "abc" else s"${i}e15",
+        s"${1.0 / (i + 2)}")))
+    val disc = frame(Schemas.discoverySummary, (1 to 12).map(i =>
+      Seq("example-fiu", "", s"$i.01", if (i % 4 == 0) "1e" else s"0.$i$i",
+        s"-$i.3", s"${1.0 / (3 * i)}")))
+    val facts = frame(Schemas.userFunnel, Seq("Success", "Failed", "Success",
+      null, "", "Bogus", "Not Attempted", "success").map(st =>
+      Seq("example-fiu", st)))
+    assert(otp.rdd.getNumPartitions > 1)
+    FunnelTableSpec.assertTotalsMatch(stages, otp, disc, facts, "malformed")
+  }
+
   test("subcause success cells are null and flagged is_subcause") {
     Seq(3, 4, 5, 7, 8, 9, 10, 13, 14).foreach { i =>
       assert(table(i).getAs[jl.Long]("success_count") === null)
       assert(table(i).getAs[jl.Double]("success_pct") === null)
       assert(table(i).getAs[Boolean]("is_subcause"))
     }
+  }
+}
+
+object FunnelTableSpec {
+
+  private def bits(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case other => other
+  }
+
+  /** [[FunnelAggregates.totals]] over the four raw frames equals the four
+    * per-family aggregates, column by column with doubles compared bit for
+    * bit; its stage-row count equals the stage frame's; and its wide row,
+    * less that count, equals [[FunnelTable.wide]] over the four
+    * aggregates, schema included.
+    */
+  def assertTotalsMatch(stages: DataFrame, otp: DataFrame,
+      discovery: DataFrame, facts: DataFrame, clue: String): Unit = {
+    val one = FunnelAggregates.totals(stages, otp, discovery, facts)
+    val got = one.collect().head
+    val four = FunnelAggregates.stageTotals(stages)
+      .crossJoin(FunnelAggregates.otpTotals(otp))
+      .crossJoin(FunnelAggregates.discoveryTotals(discovery))
+    val want = four.collect().head
+    four.schema.foreach { f =>
+      assert(bits(got.getAs[Any](f.name)) === bits(want.getAs[Any](f.name)),
+        s"$clue: ${f.name} ${got.getAs[Any](f.name)} vs ${want.getAs[Any](f.name)}")
+      assert(one.schema(f.name) === f, s"$clue: ${f.name} type")
+    }
+    val fi = FunnelAggregates.fiStatusCounts(facts).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.getAs[Long]("fi_success_cnt") === fi.getOrElse("Success", 0L), clue)
+    assert(got.getAs[Long]("fi_failed_cnt") === fi.getOrElse("Failed", 0L), clue)
+    assert(got.getAs[Long](FunnelAggregates.StageRows) === stages.count(), clue)
+
+    // the stage-row count passes through the wide projection
+    val wideOne = FunnelTable.wideFromJoined(one).drop(FunnelAggregates.StageRows)
+    val wideFour = FunnelTable.wide(FunnelAggregates.stageTotals(stages),
+      FunnelAggregates.otpTotals(otp), FunnelAggregates.discoveryTotals(discovery),
+      FunnelAggregates.fiStatusCounts(facts))
+    assert(wideOne.schema === wideFour.schema, clue)
+    assert(wideOne.collect().toSeq === wideFour.collect().toSeq, clue)
   }
 }

@@ -67,7 +67,7 @@ class HyperLogLogSpec extends AnyFunSuite {
     // per-day distinct sum 6 — the rollup must count the overlap once
     // and land register-identical to the flat hll_distinct sketch.
     val day = 86400L * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("hll_roll").toString
+    val dir = Tmp.dir("hll_roll").toString
     Seq((1L, 1L), (2L, 2L), (3L, 3L), (day + 1, 2L), (day + 2, 3L),
       (day + 3, 4L))
       .toDF("us", "user_id")
@@ -94,7 +94,7 @@ class HyperLogLogSpec extends AnyFunSuite {
     // ending on observed days reach {1,2} / {1,2,3} / {1,2,3,4}
     val base = 1704067200L * 1000000L // 2024-01-01 UTC, micros
     val day = 86400L * 1000000L
-    val dir = java.nio.file.Files.createTempDirectory("hll_reach").toString
+    val dir = Tmp.dir("hll_reach").toString
     Seq((base + 1, 1L), (base + 2, 2L),
       (base + day + 1, 2L), (base + day + 2, 3L),
       (base + 2 * day + 1, 4L))
@@ -126,7 +126,7 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("hll_set_ops: exact witnesses and the inclusion–exclusion identity") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hll_set").toString
+    val dir = Tmp.dir("hll_set").toString
     // A = view users 1..10, B = purchase users 6..15 → |A∩B| = 5;
     // click rows must not leak into either sketch
     val rows =

@@ -25,7 +25,7 @@ class InferenceSpec extends AnyFunSuite {
       (8 until 12).map(i => (i.toLong, ns(1))) ++
       (12 until 18).map(i => (i.toLong, ns(2))) ++
       (18 until 20).map(i => (i.toLong, ns(3)))
-    val dir = java.nio.file.Files.createTempDirectory("haar").toString
+    val dir = Tmp.dir("haar").toString
     ev.toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("haar_decompose")(spark, dir).collect()
@@ -45,7 +45,7 @@ class InferenceSpec extends AnyFunSuite {
     // split ≤ b0 → 400000·(1/2 + 2/3) = 466667.
     val orders = Seq((1L, 1L, 500.0), (2L, 1L, 1500.0), (3L, 2L, 500.0),
       (4L, 2L, 2500.0), (5L, 2L, 2600.0))
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
+    val dir = Tmp.dir("gini").toString
     orders.toDF("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((1L, "BUILDING"), (2L, "MACHINERY"))
@@ -63,7 +63,7 @@ class InferenceSpec extends AnyFunSuite {
     // covered 2/3.
     val cal = (1 to 19).map(i => (2L * i, 1L, i.toDouble))
     val tst = Seq((101L, 1L, 15.0), (103L, 1L, 25.0), (105L, 1L, 10.0))
-    val dir = java.nio.file.Files.createTempDirectory("conf").toString
+    val dir = Tmp.dir("conf").toString
     (cal ++ tst).toDF("o_orderkey", "o_custkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((1L, "A")).toDF("c_custkey", "c_mktsegment")
@@ -76,7 +76,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("inf_ev").toString
+    val dir = Tmp.dir("inf_ev").toString
     rows.toDF("ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -190,7 +190,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   private def ordersDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("inf_ord").toString
+    val dir = Tmp.dir("inf_ord").toString
     rows.toDF("o_custkey", "o_orderstatus", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     dir
@@ -233,7 +233,7 @@ class InferenceSpec extends AnyFunSuite {
     // the reverse direction (2→1) must NOT appear. Doc 3 is unrelated.
     val quote = "alpha beta gamma delta epsilon zeta"
     val pad = (1 to 40).map(i => s"filler$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("inf_doc").toString
+    val dir = Tmp.dir("inf_doc").toString
     Seq((1L, quote), (2L, s"$pad $quote"), (3L, "one two three four five"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -248,7 +248,7 @@ class InferenceSpec extends AnyFunSuite {
   test("adamic_adar: rare shared parts outweigh common ones") {
     // p1 shared by s1,s2,s3 (deg 3); p2 shared by s1,s2 (deg 2):
     // score(1,2) = 1/ln2 + 1/ln3, score(1,3) = score(2,3) = 1/ln3
-    val dir = java.nio.file.Files.createTempDirectory("inf_li").toString
+    val dir = Tmp.dir("inf_li").toString
     Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 20L), (2L, 20L))
       .toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -264,7 +264,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   test("als_step: Cramer solve of the 2x2 ridge normal equations") {
-    val dir = java.nio.file.Files.createTempDirectory("inf_als").toString
+    val dir = Tmp.dir("inf_als").toString
     // item factors: partkey 3 -> (0,1), 10 -> (0,-2), 4 -> (1,2)
     // user 1: a=(2,2,10), b=(10,20), det=16 -> x=(3.75, 1.25)
     // user 2: a=(2,2,5),  b=(8,16),  det=6  -> x=(4/3, 8/3)
@@ -281,7 +281,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   test("quantile_align: lower quantiles on the grid, exact rank cuts") {
-    val dir = java.nio.file.Files.createTempDirectory("inf_qa").toString
+    val dir = Tmp.dir("inf_qa").toString
     // a: 1..10 micros -> q10/50/90 = 1/5/9; b: 11..20 -> 11/15/19;
     // pooled 1..20 -> 2/10/18
     val rows = (1 to 10).map(k => ("a", k * 1e-6)) ++
@@ -298,7 +298,7 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   test("weighted_median: cumulative weight clears the ceil(W/2) cut") {
-    val dir = java.nio.file.Files.createTempDirectory("inf_wm").toString
+    val dir = Tmp.dir("inf_wm").toString
     // A: 100c at weight 100, 200c at weight 300 -> W=400, cut 200,
     //    cum(100c)=100 < 200, cum(200c)=400 -> median 200c
     // B: single price is its own median
@@ -315,7 +315,7 @@ class InferenceSpec extends AnyFunSuite {
 
   test("durbin_watson: linear ramp residuals give DW exactly 1.0") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("inf_dw").toString
+    val dir = Tmp.dir("inf_dw").toString
     // daily sums 1,2,3 micros -> scaled residuals -3,0,3:
     // num = 9+9 = 18, den = 9+0+9 = 18 -> DW = 1.0
     val day = 86400000000L
@@ -331,7 +331,7 @@ class InferenceSpec extends AnyFunSuite {
 
   test("permutation_test: p-value arithmetic and determinism") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("inf_pt").toString
+    val dir = Tmp.dir("inf_pt").toString
     (1 to 40).map(u => (u.toLong * 1000000L, u.toLong,
         (u % 7).toDouble * 1e-6))
       .toDF("us", "user_id", "value")
@@ -395,7 +395,7 @@ class InferenceSpec extends AnyFunSuite {
       Seq.fill(2)((10000.0, "5-LOW")) ++
       Seq.fill(2)((40000.0, "1-URGENT")) ++
       Seq.fill(2)((70000.0, "5-LOW"))
-    val dir = java.nio.file.Files.createTempDirectory("inf_iso").toString
+    val dir = Tmp.dir("inf_iso").toString
     rows.toDF("o_totalprice", "o_orderpriority")
       .write.parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("isotonic_calibration")(spark, dir)
@@ -489,7 +489,7 @@ class InferenceSpec extends AnyFunSuite {
     // λ = A_ii/1000), so shrink arithmetic fails against math
     val rows = Seq((1L, 0.0, 100.0), (2L, 0.0, 200.0),
       (1L, 0.10, 90.0), (2L, 0.10, 190.0), (3L, 0.05, 290.0))
-    val dir = java.nio.file.Files.createTempDirectory("inf_rr").toString
+    val dir = Tmp.dir("inf_rr").toString
     rows.toDF("l_quantity", "l_discount", "l_extendedprice")
       .select(col("l_quantity").cast("double").as("l_quantity"),
         col("l_discount"), col("l_extendedprice"))

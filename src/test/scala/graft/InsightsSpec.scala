@@ -27,7 +27,7 @@ class InsightsSpec extends AnyFunSuite {
       (2L, 5L, "signup", 0L), (2L, 6L, "click", 1 * h),
       (2L, 7L, "view", 2 * h),
       (3L, 8L, "view", 0L), (3L, 9L, "signup", 1 * h))
-    val dir = java.nio.file.Files.createTempDirectory("ins_fct").toString
+    val dir = Tmp.dir("ins_fct").toString
     rows.toDF("user_id", "event_id", "event_type", "us")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
@@ -49,7 +49,7 @@ class InsightsSpec extends AnyFunSuite {
     import spark.implicits._
     // price = 2·qty exactly => corr +1; discount = (10−qty)/100 =>
     // corr(qty, disc) = −1 and corr(price, disc) = −1
-    val dir = java.nio.file.Files.createTempDirectory("ins_corr").toString
+    val dir = Tmp.dir("ins_corr").toString
     Seq(1.0, 2.0, 3.0, 4.0).map(q => (q, 2.0 * q, (10 - q) / 100.0))
       .toDF("l_quantity", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -64,7 +64,7 @@ class InsightsSpec extends AnyFunSuite {
     import spark.implicits._
     // edges (supplier, part): s1–p1–s2 is one component (3 nodes);
     // s3–p2 is another (2 nodes); 3 propagation rounds reach both
-    val dir = java.nio.file.Files.createTempDirectory("ins_cc").toString
+    val dir = Tmp.dir("ins_cc").toString
     Seq((1L, 1L), (2L, 1L), (3L, 2L))
       .toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -77,7 +77,7 @@ class InsightsSpec extends AnyFunSuite {
     import spark.implicits._
     // single edge s1 - p1 (nodes 2, 3): round 1 relabels node 3, round
     // 2 changes nothing -> empty delta must stop before round 3
-    val dir = java.nio.file.Files.createTempDirectory("ins_cc_ee").toString
+    val dir = Tmp.dir("ins_cc_ee").toString
     Seq((1L, 1L)).toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val (res, rounds) = Insights.connectedComponents(spark, dir)
@@ -88,7 +88,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("readability_score: regexp count definitions on a known text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ins_read").toString
+    val dir = Tmp.dir("ins_read").toString
     // words=6, sentences=2, vowel-group "syllables"=6
     Seq((1L, "The cat sat. The dog ran!", "en"))
       .toDF("doc_id", "text", "lang")
@@ -109,7 +109,7 @@ class InsightsSpec extends AnyFunSuite {
     // p50 = rank 5 -> 1, p99 = rank 10 -> 11
     val rows = (1L to 9L).map(u => (u, u, "view", u * 1000000L)) ++
       (1L to 11L).map(i => (10L, 100L + i, "view", i * 1000000L))
-    val dir = java.nio.file.Files.createTempDirectory("ins_skew").toString
+    val dir = Tmp.dir("ins_skew").toString
     rows.toDF("user_id", "event_id", "event_type", "us")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
@@ -124,7 +124,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("dup_inflation: normalization-equal texts collapse per source") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ins_dup").toString
+    val dir = Tmp.dir("ins_dup").toString
     Seq((1L, "Hello  world", "A"), (2L, "hello world", "A"),
       (3L, "another doc", "A"), (4L, "doc one", "B"), (5L, "doc two", "B"))
       .toDF("doc_id", "text", "source")
@@ -137,7 +137,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("self_overlap_sample: three docs with one overlapping gram pair") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ins_ovl").toString
+    val dir = Tmp.dir("ins_ovl").toString
     // grams: {abc,bcd} vs {abc,bce} share 1 of 3; the third is disjoint
     Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "x y z w"))
       .toDF("doc_id", "text")
@@ -152,7 +152,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("label_noise_detect: minority lang in a near-dup cluster flagged") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ins_noise").toString
+    val dir = Tmp.dir("ins_noise").toString
     val txt = "the quick brown fox jumps over the lazy dog again and again"
     Seq((1L, txt, "en"), (2L, txt, "en"), (3L, txt, "de"),
       (4L, "totally unrelated content lives here by itself", "fr"))
@@ -168,7 +168,7 @@ class InsightsSpec extends AnyFunSuite {
   test("filter_funnel: cumulative stage drops with funnel percentages") {
     import spark.implicits._
     val long = (1 to 40).map(i => s"w$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("ins_ff").toString
+    val dir = Tmp.dir("ins_ff").toString
     // d4 fails the token floor, d3 the lang allowlist, d2 is d1's dup
     Seq((1L, long, "en"), (2L, long, "en"), (3L, long, "zh"),
       (4L, "too short", "en"))
@@ -199,7 +199,7 @@ class InsightsSpec extends AnyFunSuite {
       (4L, 8L, "view", 0L, 0.0), (4L, 9L, "purchase", 1 * h, 4.0),
       (5L, 10L, "click", 0L, 0.0), (5L, 11L, "view", 1 * h, 0.0),
       (5L, 12L, "purchase", 2 * h, 8.0))
-    val dir = java.nio.file.Files.createTempDirectory("ins_ush").toString
+    val dir = Tmp.dir("ins_ush").toString
     rows.toDF("user_id", "event_id", "event_type", "us", "value")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"), col("value"))
@@ -216,7 +216,7 @@ class InsightsSpec extends AnyFunSuite {
   test("near_dup_eval: identical pair estimates perfectly") {
     import spark.implicits._
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val dir = java.nio.file.Files.createTempDirectory("ins_nde").toString
+    val dir = Tmp.dir("ins_nde").toString
     Seq((1L, txt), (2L, txt),
       (3L, "completely different words occupy this other document here"))
       .toDF("doc_id", "text")
@@ -236,7 +236,7 @@ class InsightsSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, 1L, "view", 1 * day + 5L), (2L, 2L, "view", 1 * day + 6L),
       (3L, 3L, "click", 1 * day + 7L), (4L, 4L, "view", 2 * day + 8L))
-    val dir = java.nio.file.Files.createTempDirectory("ins_str").toString
+    val dir = Tmp.dir("ins_str").toString
     rows.toDF("user_id", "event_id", "event_type", "us")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
@@ -259,7 +259,7 @@ class InsightsSpec extends AnyFunSuite {
       (1L, 3L, "purchase", 2 * day + 6L), (1L, 4L, "purchase", 5 * day),
       (2L, 5L, "view", 1 * day), (2L, 6L, "purchase", 20 * day),
       (3L, 7L, "purchase", 2 * day + 9L))
-    val dir = java.nio.file.Files.createTempDirectory("ins_ssj").toString
+    val dir = Tmp.dir("ins_ssj").toString
     rows.toDF("user_id", "event_id", "event_type", "us")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
@@ -278,7 +278,7 @@ class InsightsSpec extends AnyFunSuite {
   test("dedup_threshold_sweep: identical pair lands in the top bin") {
     import spark.implicits._
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val dir = java.nio.file.Files.createTempDirectory("ins_sweep").toString
+    val dir = Tmp.dir("ins_sweep").toString
     Seq((1L, txt), (2L, txt),
       (3L, "unrelated words that share nothing with the others at all"))
       .toDF("doc_id", "text")
@@ -293,7 +293,7 @@ class InsightsSpec extends AnyFunSuite {
     import spark.implicits._
     val a = "first blocklisted document with enough words to matter"
     val b = "second blocklisted document thoroughly different from the first"
-    val dir = java.nio.file.Files.createTempDirectory("ins_bloom").toString
+    val dir = Tmp.dir("ins_bloom").toString
     // odd ids form the blocklist; doc 2 duplicates a blocklisted text
     // (true member), doc 4 is novel (true negative; with 8 of 2048 bits
     // set its 4 probe positions are deterministically unset)
@@ -317,7 +317,7 @@ class InsightsSpec extends AnyFunSuite {
       (1L, 1L, "view", 2 * h, 0.0), (1L, 2L, "view", 36 * h, 0.0),
       (1L, 3L, "click", 60 * h, 0.0), (1L, 4L, "purchase", 72 * h, 1.0),
       (2L, 5L, "purchase", 0L, 2.0))
-    val dir = java.nio.file.Files.createTempDirectory("ins_dec").toString
+    val dir = Tmp.dir("ins_dec").toString
     rows.toDF("user_id", "event_id", "event_type", "us", "value")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"), col("value"))
@@ -340,7 +340,7 @@ class InsightsSpec extends AnyFunSuite {
     val rows = Seq(
       (10L, 1L, "view", 1 * day), (10L, 2L, "view", 1 * day + 100L),
       (10L, 3L, "view", 2 * day), (3L, 4L, "view", 1 * day + 200L))
-    val dir = java.nio.file.Files.createTempDirectory("ins_late").toString
+    val dir = Tmp.dir("ins_late").toString
     rows.toDF("user_id", "event_id", "event_type", "us")
       .select(col("user_id"), col("event_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
@@ -377,7 +377,7 @@ class InsightsSpec extends AnyFunSuite {
     // user 1 fires "a" three times and "b" once; user 2 fires "a"
     // once — streaming dropDuplicates state must collapse to
     // a→2 users, b→1 user.
-    val dir = java.nio.file.Files.createTempDirectory("sdedup").toString
+    val dir = Tmp.dir("sdedup").toString
     Seq((1L, 1L, "a"), (2L, 1L, "a"), (3L, 1L, "a"), (4L, 1L, "b"),
       (5L, 2L, "a"))
       .toDF("us", "user_id", "event_type")
@@ -391,7 +391,7 @@ class InsightsSpec extends AnyFunSuite {
 
   test("tpch_q5_like: region prune, date cut, and the LOCAL condition") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("q5").toString
+    val dir = Tmp.dir("q5").toString
     Seq((1L, "ASIA"), (2L, "EUROPE")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
     Seq((1L, "CHINA", 1L), (2L, "JAPAN", 1L), (3L, "FRANCE", 2L))

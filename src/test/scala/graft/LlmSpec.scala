@@ -467,7 +467,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("persisted IVF index: probe is partition-pruned and full-probe equals exact") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-index").toString
+    val dir = Tmp.dir("ivf-index").toString
     Similarity.ivfWriteIndex(emb, dir, nlist = 8)
     val qvec = emb.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect().head
@@ -893,7 +893,7 @@ class LlmSpec extends AnyFunSuite {
       2L -> "alpha beta gamma delte",
       3L -> "alpha completely different text here",
       4L -> "zulu something else")
-    val dir = java.nio.file.Files.createTempDirectory("llm_snm").toString
+    val dir = Tmp.dir("llm_snm").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("sorted_neighborhood")(spark, dir)
       .collect()

@@ -176,7 +176,7 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(7)
-    val dir = java.nio.file.Files.createTempDirectory("prop_zm").toString
+    val dir = Tmp.dir("prop_zm").toString
     val base = java.sql.Timestamp.valueOf("1995-01-01 00:00:00")
     (1 to 500).map { _ =>
       (rnd.nextInt(200).toLong, new java.sql.Timestamp(
@@ -202,7 +202,7 @@ class PropertySpec extends AnyFunSuite {
   test("bpe_train_rounds matches a brute-force reference on random words") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
-    val dir = java.nio.file.Files.createTempDirectory("prop_bpe").toString
+    val dir = Tmp.dir("prop_bpe").toString
     val alphabet = "abc"
     val words = (1 to 60).map(_ =>
       (1 to (2 + rnd.nextInt(5))).map(_ =>
@@ -244,7 +244,7 @@ class PropertySpec extends AnyFunSuite {
   test("assoc_rules matches a brute-force reference on random baskets") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
-    val dir = java.nio.file.Files.createTempDirectory("prop_ar").toString
+    val dir = Tmp.dir("prop_ar").toString
     val baskets = (1 to 30).map(o =>
       o.toLong -> rnd.shuffle((1L to 8L).toList).take(2 + rnd.nextInt(3)))
     baskets.flatMap { case (o, ps) => ps.map(p => (o, p)) }
@@ -275,7 +275,7 @@ class PropertySpec extends AnyFunSuite {
   test("weighted_median matches a brute-force reference on random data") {
     import spark.implicits._
     val rnd = new scala.util.Random(19)
-    val dir = java.nio.file.Files.createTempDirectory("prop_wm").toString
+    val dir = Tmp.dir("prop_wm").toString
     val rows = (1 to 200).map { _ =>
       (Seq("A", "B", "C")(rnd.nextInt(3)),
         (1 + rnd.nextInt(50)).toDouble, (1 + rnd.nextInt(9)).toDouble)
@@ -306,7 +306,7 @@ class PropertySpec extends AnyFunSuite {
   test("batch_padding matches the packing mini-oracle on random lengths") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
-    val dir = java.nio.file.Files.createTempDirectory("prop_pad").toString
+    val dir = Tmp.dir("prop_pad").toString
     val lens = (1 to 100).map(_ => 1 + rnd.nextInt(60))
     lens.zipWithIndex.map { case (len, i) =>
       (i.toLong, Seq.fill(len)("w").mkString(" "), "en")

@@ -40,7 +40,7 @@ class RenderSinksSpec extends AnyFunSuite {
   }
 
   test("xlsx sink writes a valid zip with the golden values as cells") {
-    val path = Files.createTempFile("funnel", ".xlsx").toString
+    val path = Tmp.file("funnel", ".xlsx").toString
     val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))
     Sinks.xlsxFunnel(blank +: grid.drop("ord").collect().toSeq, path)
     val zf = new ZipFile(path)
@@ -131,7 +131,7 @@ class RenderSinksSpec extends AnyFunSuite {
 
   test("styled workbook reproduces the golden's merges, widths, and per-cell styles") {
     assume(Files.exists(Paths.get(goldenPath)))
-    val path = Files.createTempFile("funnel-styled", ".xlsx").toString
+    val path = Tmp.file("funnel-styled", ".xlsx").toString
     val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))
     Sinks.xlsxFunnel(blank +: grid.drop("ord").collect().toSeq, path)
 
@@ -169,7 +169,7 @@ class RenderSinksSpec extends AnyFunSuite {
     // quirk, summary cells :114-120, stage merges :122-125) — so
     // styling parity survives refactors even without the reference
     // artifact on disk.
-    val path = Files.createTempFile("funnel-rt", ".xlsx").toString
+    val path = Tmp.file("funnel-rt", ".xlsx").toString
     val blank = org.apache.spark.sql.Row.fromSeq(Seq.fill(7)(""))
     Sinks.xlsxFunnel(blank +: grid.drop("ord").collect().toSeq, path)
     val (cells, merges, widths) = parseWorkbook(path)
@@ -236,12 +236,12 @@ class RenderSinksSpec extends AnyFunSuite {
   test("real-source mode: full orchestration over the CSV fixture with per-entity isolation") {
     import graft.app.RunReports
     import graft.io.{FunnelCsvFixture => Fx}
-    val base = Files.createTempDirectory("run-e2e").toString
+    val base = Tmp.dir("run-e2e").toString
     Fx.write(base, Fx.defaultDays)
-    val out = Files.createTempDirectory("run-e2e-out").toString
+    val out = Tmp.dir("run-e2e-out").toString
     // fiu-a and fiu-b have data; ghost-fiu must fail in isolation
     // without killing the run
-    val rec = Files.createTempFile("recipients", ".json")
+    val rec = Tmp.file("recipients", ".json")
     Files.writeString(rec,
       """{"to": {"fiu-a": ["a@x"], "fiu-b": ["b@x"], "ghost-fiu": ["g@x"]},
         |"cc": {"default": ["cc@x"]}}""".stripMargin)
@@ -283,7 +283,7 @@ class RenderSinksSpec extends AnyFunSuite {
     import java.net.ServerSocket
     import graft.io.Smtp
 
-    val attach = Files.createTempFile("report", ".xlsx")
+    val attach = Tmp.file("report", ".xlsx")
     val payloadBytes = Array[Byte](80, 75, 3, 4, 0, -1, 42) // zip-ish bytes
     Files.write(attach, payloadBytes)
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.ZipFile
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -27,20 +28,20 @@ class RunReportsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
 
   private lazy val base: String = {
-    val dir = Files.createTempDirectory("reports-in").toString
+    val dir = Tmp.dir("reports-in").toString
     Fx.write(dir, Fx.defaultDays)
     dir
   }
 
   private def recipients(entities: Seq[String]): String = {
-    val f = Files.createTempFile("recipients", ".json")
+    val f = Tmp.file("recipients", ".json")
     Files.writeString(f, entities.map(e => s""""$e": ["$e@x"]""")
       .mkString("""{"to": {""", ", ", "}}"))
     f.toString
   }
 
   private def run(date: String, entities: Seq[String]): String = {
-    val out = Files.createTempDirectory("reports-out").toString
+    val out = Tmp.dir("reports-out").toString
     assert(RunReports.run(spark, RunReports.Args(base = Some(base),
       date = Some(date), recipients = Some(recipients(entities)),
       out = out)) === 0)
@@ -64,7 +65,7 @@ class RunReportsSpec extends AnyFunSuite {
 
   /** The grid as the xlsx sink takes it: one blank row, then the grid. */
   private def xlsxOf(grid: DataFrame): String = {
-    val path = Files.createTempFile("lazy", ".xlsx").toString
+    val path = Tmp.file("lazy", ".xlsx").toString
     Sinks.xlsxFunnel(Row.fromSeq(Seq.fill(7)("")) +:
       grid.drop("ord").collect().toSeq, path)
     path
@@ -106,10 +107,93 @@ class RunReportsSpec extends AnyFunSuite {
       assert(math.abs(d.bytesRead - dayBytes) <= dayBytes / 100,
         s"read ${d.bytesRead} bytes for a $dayBytes-byte day")
       assert(csvQueries.get === 1, s"${csvQueries.get} of ${queries.get} queries read CSV")
+      // one source aggregate (2 jobs), the grid collect, parquet and csv
+      assert(d.jobs <= 5, s"${d.jobs} jobs")
     } finally {
       spark.listenerManager.unregister(qel)
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** Job group of every job started while `body` runs. */
+  private def jobGroups(body: => Unit): Seq[String] = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    val listener = new Suite.TaskListener
+    spark.sparkContext.addSparkListener(jobs)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; listener.settled() }
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+    groups.asScala.toSeq
+  }
+
+  test("every job of a report carries the caller's job group, sinks included") {
+    // two reports under two groups: a sink thread reused across reports
+    // would carry the first group into the second
+    Seq("report-1", "report-2").foreach { group =>
+      spark.sparkContext.setJobGroup(group, "one report")
+      val groups =
+        try jobGroups(run(DateSpec.formatDay(Fx.defaultDays.head), Seq("fiu-a")))
+        finally spark.sparkContext.clearJobGroup()
+      assert(groups.nonEmpty)
+      assert(groups.forall(_ == group), groups.mkString(","))
+    }
+  }
+
+  test("the one-aggregate totals equal the four per-family aggregates " +
+      "for both entities, day and range specs") {
+    Seq("31_01_2026", "31_01_2026 -> 01_02_2026").foreach { date =>
+      val spec = DateSpec.parse(date)
+      Fx.entities.foreach { e =>
+        val en = Some(e)
+        FunnelTableSpec.assertTotalsMatch(
+          FunnelSources.stages(spark, base, spec, en),
+          FunnelSources.otp(spark, base, spec, en),
+          FunnelSources.discovery(spark, base, spec, en),
+          FunnelSources.userFunnel(spark, base, spec, en), s"$e @ $date")
+      }
+    }
+  }
+
+  test("a failing sink fails its entity only, after both sinks have ended") {
+    val out = Tmp.dir("reports-sinkfail")
+    val date = DateSpec.formatDay(Fx.defaultDays.head)
+    // a directory where fiu-a's xlsx goes: the grid branch fails while
+    // the parquet write runs alongside it
+    Files.createDirectories(out.resolve(s"funnel_report-fiu-a-$date.xlsx"))
+    assert(RunReports.run(spark, RunReports.Args(base = Some(base),
+      date = Some(date), recipients = Some(recipients(Fx.entities)),
+      out = out.toString)) === 1)
+    assert(Files.exists(out.resolve(s"funnel_report-fiu-a-$date.parquet/_SUCCESS")),
+      "run returned before the failed entity's parquet write ended")
+    Seq("parquet/_SUCCESS", "grid.csv/_SUCCESS", "xlsx").foreach { f =>
+      assert(Files.exists(out.resolve(s"funnel_report-fiu-b-$date.$f")), f)
+    }
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName == "report-sink" && t.isAlive))
+  }
+
+  test("alongside waits for both sides and throws the first failure") {
+    val ended = new AtomicInteger(0)
+    def slow(fail: Boolean): Unit = {
+      Thread.sleep(200); ended.incrementAndGet()
+      if (fail) throw new IllegalStateException("side")
+    }
+    assert(RunReports.alongside(slow(fail = false))(7) === 7)
+    assert(ended.get === 1)
+    val side = intercept[IllegalStateException](
+      RunReports.alongside(slow(fail = true))(7))
+    assert(side.getMessage === "side" && ended.get === 2)
+    val both = intercept[IllegalArgumentException](
+      RunReports.alongside(slow(fail = true))(throw new IllegalArgumentException("body")))
+    assert(both.getMessage === "body" && ended.get === 3)
+    assert(both.getSuppressed.map(_.getMessage).toSeq === Seq("side"))
   }
 
   test("parquet, grid csv and xlsx equal the lazy grid plan, day and range specs") {
@@ -132,7 +216,7 @@ class RunReportsSpec extends AnyFunSuite {
 
         assert(spark.read.parquet(s"$stem.parquet").collect().toSeq ===
           rows.collect().toSeq, clue)
-        val lazyCsv = Files.createTempDirectory("lazy-grid").resolve("g").toString
+        val lazyCsv = Tmp.dir("lazy-grid").resolve("g").toString
         Sinks.csv(grid, lazyCsv)
         assert(partText(s"$stem.grid.csv") === partText(lazyCsv), clue)
         assert(sheetXml(s"$stem.xlsx") === sheetXml(xlsxOf(grid)), clue)
@@ -141,7 +225,7 @@ class RunReportsSpec extends AnyFunSuite {
   }
 
   test("--demo writes the xlsx of the MockData grid") {
-    val out = Files.createTempDirectory("demo-out").toString
+    val out = Tmp.dir("demo-out").toString
     assert(RunReports.run(spark, RunReports.Args(demo = true,
       date = Some("15_02_2026"), out = out)) === 0)
     val w = FunnelTable.wide(
@@ -154,7 +238,7 @@ class RunReportsSpec extends AnyFunSuite {
   }
 
   test("a day with no directory fails every entity before any file is written") {
-    val out = Files.createTempDirectory("reports-none").toString
+    val out = Tmp.dir("reports-none").toString
     assert(RunReports.run(spark, RunReports.Args(base = Some(base),
       date = Some("05_03_2026"), recipients = Some(recipients(Fx.entities)),
       out = out)) === Fx.entities.size)

@@ -155,7 +155,7 @@ class ScoringSpec extends AnyFunSuite {
     val d = Seq(
       (1L, "a b c d e"), (2L, "a b c x y z"), (3L, "b c d"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("cover").toString
+    val dir = Tmp.dir("cover").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("greedy_cover")(spark, dir)
       .collect()
@@ -176,7 +176,7 @@ class ScoringSpec extends AnyFunSuite {
       (4L, "bbb zzzz qqqq wwww", "en", "s1"),
       (5L, "bbb alpha beta gamma", "de", "s2"))
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("fs").toString
+    val dir = Tmp.dir("fs").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = graft.SparkEntry.queries("fellegi_sunter")(spark, dir)
       .collect().map(r => (r.getString(0), r.getDouble(1),
@@ -289,7 +289,7 @@ class ScoringSpec extends AnyFunSuite {
     // star: supplier 1 supplies parts 1..4; part 1 also from supplier 2.
     val li = Seq((1L, 1L), (1L, 2L), (1L, 3L), (1L, 4L), (2L, 1L))
       .toDF("l_suppkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("pr").toString
+    val dir = Tmp.dir("pr").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("pagerank_iter")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -308,7 +308,7 @@ class ScoringSpec extends AnyFunSuite {
     // p2..p4 send 180625 to s1; restart adds 150000 on s1.
     val li = Seq((1L, 1L), (1L, 2L), (1L, 3L), (1L, 4L), (2L, 1L))
       .toDF("l_suppkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("ppr").toString
+    val dir = Tmp.dir("ppr").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("ppr_seeded")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -323,7 +323,7 @@ class ScoringSpec extends AnyFunSuite {
     // a1: p1=1, p2=2; h1: s1=3, s2=2; a2: p1=3, p2=5.
     val li = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 2L))
       .toDF("l_suppkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("hits").toString
+    val dir = Tmp.dir("hits").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("hits_scores")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -345,7 +345,7 @@ class ScoringSpec extends AnyFunSuite {
         col("user_id"),
         lit("view").as("event_type"), lit(1.0).as("value"),
         lit("{}").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("rd").toString
+    val dir = Tmp.dir("rd").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("rolling_distinct")(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -399,7 +399,7 @@ class ScoringSpec extends AnyFunSuite {
   test("inverted index probe prunes term-bucket partitions") {
     val d = docs(
       1L -> "alpha beta gamma", 2L -> "alpha beta", 3L -> "beta delta")
-    val dir = java.nio.file.Files.createTempDirectory("inv").toString
+    val dir = Tmp.dir("inv").toString
     TextAnalysis.invertedIndexWrite(d, dir, nBuckets = 8)
     val probe = TextAnalysis.invertedIndexProbe(spark, dir,
       Seq("alpha", "delta"), nBuckets = 8)
@@ -425,7 +425,7 @@ class ScoringSpec extends AnyFunSuite {
     val d = lens.zipWithIndex
       .map { case (n, i) => (i.toLong, "x", "en", n) }
       .toDF("doc_id", "text", "lang", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("mad").toString
+    val dir = Tmp.dir("mad").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = SparkEntry.queries("mad_outliers")(spark, dir).collect()
     assert(r.length === 1)
@@ -438,7 +438,7 @@ class ScoringSpec extends AnyFunSuite {
     import spark.implicits._
     val od = (1L to 100L).map(i => (i, i.toDouble * 10, "O"))
       .toDF("o_orderkey", "o_totalprice", "o_orderstatus")
-    val dir = java.nio.file.Files.createTempDirectory("bd").toString
+    val dir = Tmp.dir("bd").toString
     od.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("bucketize_depth")(spark, dir)
       .collect()
@@ -455,7 +455,7 @@ class ScoringSpec extends AnyFunSuite {
     // zero variance → w = 0, alloc = 0, kept = 0 (but still reported).
     // A's threshold 5000·1e6 div 4 caps the md5 rule wide open → all
     // 4 rows kept.
-    val dir = java.nio.file.Files.createTempDirectory("strat").toString
+    val dir = Tmp.dir("strat").toString
     Seq(("A", 1L, 1, 1.00), ("A", 1L, 2, 1.00), ("A", 2L, 1, 3.00),
       ("A", 2L, 2, 3.00), ("B", 3L, 1, 5.00), ("B", 3L, 2, 5.00))
       .toDF("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
@@ -474,7 +474,7 @@ class ScoringSpec extends AnyFunSuite {
     // doc3 (fr) "a b c" → its only gram first occurred in doc1 (0/1);
     // doc4 has 2 tokens → no grams → excluded from doc counts entirely.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("novelty").toString
+    val dir = Tmp.dir("novelty").toString
     Seq((1L, "a b c d", "en"), (2L, "a b c e", "en"), (3L, "a b c", "fr"),
       (4L, "x y", "en"))
       .toDF("doc_id", "text", "lang")
@@ -488,8 +488,7 @@ class ScoringSpec extends AnyFunSuite {
 
   test("bpe_train_rounds: round 2 merges the symbol round 1 created") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("score_bpe").toString
+    val dir = Tmp.dir("score_bpe").toString
     // w0: 'a a a'(3), 'a b'(2) → r1 merges 'a a' (cnt 6, overlap
     // counted naively, replaced greedily: 'a a a' → 'aa a');
     // r2 merges 'aa a' (3) — a symbol that did not exist before r1;
@@ -506,8 +505,7 @@ class ScoringSpec extends AnyFunSuite {
 
   test("distribution_match: per-bucket quota caps, underfull keeps all") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("score_dm").toString
+    val dir = Tmp.dir("score_dm").toString
     // N = 10 → quota 1 per bucket: bin 0 (8 docs) caps to 1,
     // bin 9 (2 docs) caps to 1
     val rows = (1 to 8).map(i => (i.toLong, 50L)) ++
@@ -536,7 +534,7 @@ class ScoringSpec extends AnyFunSuite {
     // (2-cent span can't straddle a 5000 boundary at either end:
     // offsets 0..2 and 1000000..1000002 both sit flush against a
     // multiple of 5000 ± 2).
-    val dir = java.nio.file.Files.createTempDirectory("pps").toString
+    val dir = Tmp.dir("pps").toString
     (Seq((1L, "A", 1.00), (2L, "A", 1.00), (3L, "A", 1.00),
       (4L, "A", 1.00), (5L, "B", 10000.00), (6L, "B", 0.02)))
       .toDF("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -554,7 +552,7 @@ class ScoringSpec extends AnyFunSuite {
     // a: rewards 1.00+3.00 over 2 pulls, b: 5.00 over 1 pull; N=3,
     // A=2 actions → term_a = 400/2/2/100 = 1.0, term_b =
     // 500/1/2/100 = 2.5 (uniform target policy π=1/A).
-    val dir = java.nio.file.Files.createTempDirectory("ips").toString
+    val dir = Tmp.dir("ips").toString
     Seq(("a", 1.00), ("a", 3.00), ("b", 5.00))
       .toDF("event_type", "value")
       .write.parquet(s"$dir/events.parquet")

@@ -32,6 +32,12 @@ class ScratchSpec extends AnyFunSuite {
     assert(Scratch.root.getName.startsWith("graft-"))
   }
 
+  test("a graft session's warehouse dir is under the scratch root") {
+    val wh = TestSpark.session.conf.get("spark.sql.warehouse.dir")
+    assert(new java.net.URI(wh).getPath.startsWith(
+      Scratch.root.getAbsolutePath + File.separator), wh)
+  }
+
   test("once from 8 threads builds exactly once and every caller sees " +
       "the complete directory") {
     val target = Scratch.dir(unique("race"), "once")

@@ -34,7 +34,7 @@ class SignalsSpec extends AnyFunSuite {
       (1L, 103L, 3000L, 2.0, "purchase"),
       (1L, 104L, 4000L, 99.0, "view"))
       .toDF("user_id", "event_id", "ts", "value", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("sig_ewma").toString
+    val dir = Tmp.dir("sig_ewma").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("ewma_smooth")(spark, dir).collect()
     assert(out.length === 3, "view events are excluded")
@@ -96,7 +96,7 @@ class SignalsSpec extends AnyFunSuite {
     val d = ((1L to 20L) :+ 1000L).zipWithIndex
       .map { case (v, i) => (i.toLong, "en", v) }
       .toDF("doc_id", "lang", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("sig_win").toString
+    val dir = Tmp.dir("sig_win").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = SparkEntry.queries("winsorize")(spark, dir).collect()(0)
     assert(r.getAs[Double]("lo") === 2.0 && r.getAs[Double]("hi") === 20.0)
@@ -109,7 +109,7 @@ class SignalsSpec extends AnyFunSuite {
   test("weighted sample: ranks match the A-res key recomputed in the JVM") {
     val d = docs((1L to 50L).map(i => i -> s"doc number $i body"): _*)
       .withColumn("n_chars", col("doc_id") * 10) // weights 10..500
-    val dir = java.nio.file.Files.createTempDirectory("sig_ws").toString
+    val dir = Tmp.dir("sig_ws").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("weighted_sample")(spark, dir)
       .collect().map(_.getAs[Long]("doc_id")).toSeq
@@ -133,7 +133,7 @@ class SignalsSpec extends AnyFunSuite {
       (100L, 1L), (100L, 2L), (100L, 3L), (100L, 9L),
       (200L, 1L), (200L, 2L), (200L, 3L))
     val li = rows.toDF("l_orderkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("sig_tri").toString
+    val dir = Tmp.dir("sig_tri").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val r = SparkEntry.queries("triangle_count")(spark, dir)
       .collect()(0)
@@ -155,7 +155,7 @@ class SignalsSpec extends AnyFunSuite {
       (3L, 8L, 1000L, "error"))
       .toDF("user_id", "event_id", "ts", "event_type")
       .withColumn("value", lit(1.0))
-    val dir = java.nio.file.Files.createTempDirectory("sig_tj").toString
+    val dir = Tmp.dir("sig_tj").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("top_journeys")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
@@ -172,7 +172,7 @@ class SignalsSpec extends AnyFunSuite {
       (3L, Some(20L), "O", 5.0, "3-MEDIUM", ts(2)))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority", "o_orderdate")
-    val dir = java.nio.file.Files.createTempDirectory("sig_pt").toString
+    val dir = Tmp.dir("sig_pt").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val rows = SparkEntry.queries("profile_table")(spark, dir)
       .collect().map(r => r.getString(0) ->
@@ -193,7 +193,7 @@ class SignalsSpec extends AnyFunSuite {
       (1L, 103L, ts(14), 64.0, "purchase"),
       (2L, 104L, ts(14), 1.0, "view"))
       .toDF("user_id", "event_id", "ts", "value", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("sig_ds").toString
+    val dir = Tmp.dir("sig_ds").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("decayed_sum")(spark, dir).collect()
     assert(r.length === 1 && r(0).getAs[Long]("user_id") === 1L)
@@ -203,7 +203,7 @@ class SignalsSpec extends AnyFunSuite {
 
   test("negative sampling: pair totals and recipe parity on a dense id space") {
     val d = docs((0L to 19L).map(i => i -> s"doc $i"): _*)
-    val dir = java.nio.file.Files.createTempDirectory("sig_ns").toString
+    val dir = Tmp.dir("sig_ns").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("negative_sample")(spark, dir)
       .collect()
@@ -231,7 +231,7 @@ class SignalsSpec extends AnyFunSuite {
     // levels: 0:{s1} 1:{p10} 2:{s2} 3:{p20} 4:{s3}
     val li = Seq((1L, 10L), (2L, 10L), (2L, 20L), (3L, 20L))
       .toDF("l_suppkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("sig_bfs").toString
+    val dir = Tmp.dir("sig_bfs").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("bfs_levels")(spark, dir)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -242,7 +242,7 @@ class SignalsSpec extends AnyFunSuite {
     import spark.implicits._
     // single edge s1 - p1: level 1 exhausts the graph; round 2's empty
     // frontier must stop the 4-round schedule (rounds == 1 expansions)
-    val dir = java.nio.file.Files.createTempDirectory("sig_bfs_ee").toString
+    val dir = Tmp.dir("sig_bfs_ee").toString
     Seq((1L, 1L)).toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val (res, rounds) = graft.queries.Signals.bfsLevels(spark, dir)
@@ -261,7 +261,7 @@ class SignalsSpec extends AnyFunSuite {
       Seq(201L, 202L).flatMap(o => (7L to 9L).map(p => (o, p))) ++
       Seq(301L, 302L).flatMap(o => Seq((o, 5L), (o, 6L))))
       .toDF("l_orderkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("truss").toString
+    val dir = Tmp.dir("truss").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("ktruss_edges")(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
@@ -273,7 +273,7 @@ class SignalsSpec extends AnyFunSuite {
     // keys a,a,b → F2 = 2² + 1² = 5; the sketch sum is recomputed
     // against a plain-Scala walk of the same md5-parity sign hashes
     val li = Seq(7L, 7L, 9L).toDF("l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("ams").toString
+    val dir = Tmp.dir("ams").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     def sign(j: Int, k: String): Long = {
       val h = java.security.MessageDigest.getInstance("MD5")
@@ -307,7 +307,7 @@ class SignalsSpec extends AnyFunSuite {
       (5L, 12L, 10L, "view"),
       (6L, 13L, 20L, "purchase"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("sig_shap").toString
+    val dir = Tmp.dir("sig_shap").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("shapley_attribution")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -323,7 +323,7 @@ class SignalsSpec extends AnyFunSuite {
     // plain Scala (same md5-bucket coords, same formula), so the 5×5
     // neighbor-cell candidate generation is checked for completeness,
     // not just determinism
-    val dir = java.nio.file.Files.createTempDirectory("sig_geo").toString
+    val dir = Tmp.dir("sig_geo").toString
     (1L to 400L).toDF("c_custkey")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     def bucket(key: String, m: Long): Long = {
@@ -362,7 +362,7 @@ class SignalsSpec extends AnyFunSuite {
     // ε-neighborhood triage in plain Scala (same md5 coords, same
     // integer distance), so the ε-sized-cell candidate generation is
     // checked for completeness, not just determinism
-    val dir = java.nio.file.Files.createTempDirectory("sig_db").toString
+    val dir = Tmp.dir("sig_db").toString
     (1L to 600L).toDF("c_custkey")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     def bucket(key: String, m: Long): Long = {
@@ -396,7 +396,7 @@ class SignalsSpec extends AnyFunSuite {
     import spark.implicits._
     def write(rows: Seq[(Long, Long, String, Double, String)],
         shuffle: Boolean): String = {
-      val dir = java.nio.file.Files.createTempDirectory("sig_mk").toString
+      val dir = Tmp.dir("sig_mk").toString
       val r0 = if (shuffle) scala.util.Random.shuffle(rows) else rows
       r0.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderpriority")
@@ -439,7 +439,7 @@ class SignalsSpec extends AnyFunSuite {
     // maximality are asserted against the edge list as math
     val edges = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 3L),
       (3L, 1L))
-    val dir = java.nio.file.Files.createTempDirectory("sig_mis").toString
+    val dir = Tmp.dir("sig_mis").toString
     edges.toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     def bucket(key: String, m: Long): Long = {
@@ -487,7 +487,7 @@ class SignalsSpec extends AnyFunSuite {
     val li = Seq((1L, 1L, 4.0), (1L, 1L, 1.0), (2L, 1L, 2.0),
       (2L, 2L, 5.0), (1L, 2L, 10.0))
       .toDF("l_suppkey", "l_partkey", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("sig_sssp").toString
+    val dir = Tmp.dir("sig_sssp").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val (res, rounds) = graft.queries.Signals.ssspWeighted(spark, dir)
     assert(res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -505,7 +505,7 @@ class SignalsSpec extends AnyFunSuite {
       (4L, 90.0, 3), (5L, 80.0, 1))
     val o = rows.map { case (k, p, d) => (k, p, ts(d)) }
       .toDF("o_orderkey", "o_totalprice", "o_orderdate")
-    val dir = java.nio.file.Files.createTempDirectory("sig_sky").toString
+    val dir = Tmp.dir("sig_sky").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("skyline")(spark, dir).collect()
       .map(r => (r.getDouble(0), r.getInt(1), r.getLong(2))).toSeq
@@ -516,7 +516,7 @@ class SignalsSpec extends AnyFunSuite {
     import spark.implicits._
     def orders(rows: Seq[(Long, Long, String, Double, String)],
         parts: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("sig_ck").toString
+      val dir = Tmp.dir("sig_ck").toString
       rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority").repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -540,7 +540,7 @@ class SignalsSpec extends AnyFunSuite {
     val d = docs((1L to 9L).map(i => i -> s"body $i"): _*)
       .withColumn("lang", when(col("doc_id") <= 6, "en").otherwise("de"))
       .withColumn("source", when(col("doc_id") === 6, "b").otherwise("a"))
-    val dir = java.nio.file.Files.createTempDirectory("sig_ka").toString
+    val dir = Tmp.dir("sig_ka").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = SparkEntry.queries("kanonymity")(spark, dir)
       .collect()(0)
@@ -598,7 +598,7 @@ class SignalsSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "text")
       .withColumn("source", lit("test"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("sig_kl").toString
+    val dir = Tmp.dir("sig_kl").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("kl_drift")(spark, dir).collect()
       .map(r => r.getAs[String]("slice") ->
@@ -630,7 +630,7 @@ class SignalsSpec extends AnyFunSuite {
       (k, grp, (k * 7 % 100) * 10 + 0.25)
     }
     val o = rows.toDF("o_orderkey", "o_orderpriority", "o_totalprice")
-    val dir = java.nio.file.Files.createTempDirectory("sig_boot").toString
+    val dir = Tmp.dir("sig_boot").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("bootstrap_ci")(spark, dir).collect()
       .map(r => r.getAs[String]("grp") ->
@@ -680,7 +680,7 @@ class SignalsSpec extends AnyFunSuite {
       year(1997, 0, 0, 10)).zipWithIndex
       .map { case ((d, v), i) => (i.toLong, d, v) }
     val o = rows.toDF("o_orderkey", "o_orderdate", "o_totalprice")
-    val dir = java.nio.file.Files.createTempDirectory("sig_psi").toString
+    val dir = Tmp.dir("sig_psi").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("psi_drift")(spark, dir).collect()
       .map(r => r.getAs[Int]("yr") ->
@@ -703,7 +703,7 @@ class SignalsSpec extends AnyFunSuite {
     // arm1 = {1,7,9,10,11}; values uid*1.5 so the arms differ
     val rows = (1L to 12L).map(u => (u, "purchase", u * 1.5))
     val ev = rows.toDF("user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("sig_tt").toString
+    val dir = Tmp.dir("sig_tt").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("welch_ttest")(spark, dir).collect()
     assert(out.length === 1)
@@ -747,7 +747,7 @@ class SignalsSpec extends AnyFunSuite {
         (ns(d), "flat", 7.5, 3L))
     }
     val ev = rows.toDF("ts", "event_type", "value", "user_id")
-    val dir = java.nio.file.Files.createTempDirectory("sig_ols").toString
+    val dir = Tmp.dir("sig_ols").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("ols_fit")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
@@ -770,7 +770,7 @@ class SignalsSpec extends AnyFunSuite {
         (u, "sep", if (arm0(u)) 1.0 else 2.0)) ++
       (1L to 12L).map(u => (u, "same", 5.0))
     val ev = rows.toDF("user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("sig_ks").toString
+    val dir = Tmp.dir("sig_ks").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("ks_test")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
@@ -795,7 +795,7 @@ class SignalsSpec extends AnyFunSuite {
     // exactly its margins' product / N -> every pico term is 0
     val rows = (1L to 12L).flatMap(u => Seq((u, "a"), (u, "b")))
     val ev = rows.toDF("user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("sig_chi").toString
+    val dir = Tmp.dir("sig_chi").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("chi_square")(spark, dir).collect()
     assert(out.length === 1)
@@ -821,7 +821,7 @@ class SignalsSpec extends AnyFunSuite {
       (8L, 1L, "view", ns(0)), (9L, 2L, "view", ns(0)),
       (10L, 3L, "view", ns(0)))
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("sig_ld").toString
+    val dir = Tmp.dir("sig_ld").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("ldiversity")(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") ->
@@ -843,7 +843,7 @@ class SignalsSpec extends AnyFunSuite {
     val ev = vals.zipWithIndex
       .map { case (v, i) => (i.toLong, "click", v) }
       .toDF("event_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("sig_sq").toString
+    val dir = Tmp.dir("sig_sq").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = SparkEntry.queries("sketch_quantiles")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n") === 200L)
@@ -885,7 +885,7 @@ class SignalsSpec extends AnyFunSuite {
       (6L, 3L, "purchase", ns(0), 7.0), (7L, 3L, "click", ns(1), 0.0),
       (8L, 4L, "click", ns(0), 0.0), (9L, 4L, "purchase", ns(72), 2.0))
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("sig_att").toString
+    val dir = Tmp.dir("sig_att").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("attribution")(spark, dir).collect()
       .map(r => r.getAs[String]("channel") ->
@@ -902,7 +902,7 @@ class SignalsSpec extends AnyFunSuite {
       (1L, Array(0.5f, 0f, 1f)), (2L, Array(0.5f, 0f, 2f)),
       (3L, Array(0.5f, 0f, 3f)), (4L, Array(0.5f, 1f, 4f)))
     val e = vecs.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("sig_eds").toString
+    val dir = Tmp.dir("sig_eds").toString
     e.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = SparkEntry.queries("embed_dim_stats")(spark, dir).collect()
       .map(r => r.getAs[Int]("dim") ->
@@ -916,7 +916,7 @@ class SignalsSpec extends AnyFunSuite {
   test("dense ids: a contiguous stable bijection, invariant to input layout") {
     import spark.implicits._
     def write(parts: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("sig_di").toString
+      val dir = Tmp.dir("sig_di").toString
       (0L until 100L).map(i => (i, s"t$i")).toDF("doc_id", "text")
         .repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -940,7 +940,7 @@ class SignalsSpec extends AnyFunSuite {
       5L -> textB, 6L -> textB,
       7L -> "unique seven content nothing shared with anything",
       8L -> "unique eight content also unshared entirely")
-    val dir = java.nio.file.Files.createTempDirectory("sig_slk").toString
+    val dir = Tmp.dir("sig_slk").toString
     d.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("split_leakage")(spark, dir)
       .collect()
@@ -963,7 +963,7 @@ class SignalsSpec extends AnyFunSuite {
       (5L, 3L, ns(0)), (6L, 3L, ns(5)))
     val ev = rows.map { case (e, u, t) => (e, u, "click", t) }
       .toDF("event_id", "user_id", "event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("sig_km").toString
+    val dir = Tmp.dir("sig_km").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("survival_curve")(spark, dir).collect()
       .map(r => r.getAs[Int]("w") ->
@@ -991,7 +991,7 @@ class SignalsSpec extends AnyFunSuite {
       i <- 0 until n
     } yield ((d * 100 + i).toLong, 1L, "click", ns(d, i))
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("sig_sdow").toString
+    val dir = Tmp.dir("sig_sdow").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("seasonal_dow")(spark, dir).collect()
       .map(r => r.getAs[Int]("dow") ->
@@ -1011,7 +1011,7 @@ class SignalsSpec extends AnyFunSuite {
       java.sql.Timestamp.valueOf(f"2024-01-0$k%d 00:00:00"), k * 100.0))
     val o = rows.toDF("o_orderkey", "o_custkey", "o_orderdate",
       "o_totalprice")
-    val dir = java.nio.file.Files.createTempDirectory("sig_rfm").toString
+    val dir = Tmp.dir("sig_rfm").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val out = SparkEntry.queries("rfm_segments")(spark, dir).collect()
       .map(r => (r.getAs[Int]("r"), r.getAs[Int]("f"), r.getAs[Int]("m")) ->
@@ -1029,7 +1029,7 @@ class SignalsSpec extends AnyFunSuite {
     val edges = Seq(1L -> Seq(1L), 2L -> (1L to 2L), 3L -> (1L to 4L),
       4L -> (1L to 8L)).flatMap { case (sk, ps) => ps.map(p => (sk, p)) }
     val li = edges.toDF("l_suppkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("sig_pl").toString
+    val dir = Tmp.dir("sig_pl").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val r = SparkEntry.queries("powerlaw_alpha")(spark, dir).collect()(0)
     val picos = Seq(2.0, 4.0, 8.0)
@@ -1046,7 +1046,7 @@ class SignalsSpec extends AnyFunSuite {
     // gini = 2*340/(4*100) - 5/4 = 0.45; hhi = 3*.01 + .49 = 0.52
     val o = Seq((1L, 1L, 10.0), (2L, 2L, 10.0), (3L, 3L, 10.0),
       (4L, 4L, 70.0)).toDF("o_orderkey", "o_custkey", "o_totalprice")
-    val dir = java.nio.file.Files.createTempDirectory("sig_cc").toString
+    val dir = Tmp.dir("sig_cc").toString
     o.write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val r = SparkEntry.queries("concentration")(spark, dir).collect()(0)
     assert(r.getAs[Long]("n") === 4L)
@@ -1113,7 +1113,7 @@ class SignalsSpec extends AnyFunSuite {
     }.toDF("event_id", "us", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("event_type"), col("value"))
-    val dir = java.nio.file.Files.createTempDirectory("sig_sqr").toString
+    val dir = Tmp.dir("sig_sqr").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val roll = SparkEntry.queries("sketch_quantile_rollup")(spark, dir)
       .collect()(0)
@@ -1135,7 +1135,7 @@ class SignalsSpec extends AnyFunSuite {
     val li = edges.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq((2L * i, a), (2L * i, b), (2L * i + 1, a), (2L * i + 1, b))
     }.toDF("l_orderkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("sig_kcore").toString
+    val dir = Tmp.dir("sig_kcore").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("kcore_decompose")(spark, dir).collect()
       .map(r => (r.getAs[Int]("rnd"), r.getAs[Long]("n_vertices"),
@@ -1147,7 +1147,7 @@ class SignalsSpec extends AnyFunSuite {
   test("assoc_rules: directed confidence is asymmetric, lift is not") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_ar").toString
+    val dir = Tmp.dir("sig_ar").toString
     // baskets {1,2}, {1,2}, {1,3}: supp(1)=3, supp(2)=2, supp(1,2)=2
     // conf(1→2)=2/3, conf(2→1)=1, lift both = 3·2/(3·2) = 1
     val rows = Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
@@ -1166,7 +1166,7 @@ class SignalsSpec extends AnyFunSuite {
   test("wilson_ci: interval matches the closed-form chain at p=0.25") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_wil").toString
+    val dir = Tmp.dir("sig_wil").toString
     Seq(300.0, 100.0, 100.0, 100.0).zipWithIndex
       .map { case (v, i) => (i.toLong, "a", v) }
       .toDF("event_id", "event_type", "value")
@@ -1188,7 +1188,7 @@ class SignalsSpec extends AnyFunSuite {
   test("graph_jaccard: triangle neighbors give 1/3 similarity each") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_gj").toString
+    val dir = Tmp.dir("sig_gj").toString
     // two orders, both containing parts 1,2,3 → all three edges at
     // support 2; every pair shares exactly one neighbor: jac = 1/3
     val rows = for (o <- Seq(1L, 2L); p <- Seq(1L, 2L, 3L)) yield (o, p)
@@ -1205,7 +1205,7 @@ class SignalsSpec extends AnyFunSuite {
   test("dp_counts: md5-seeded discrete Laplace replayed by a mini-oracle") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_dp").toString
+    val dir = Tmp.dir("sig_dp").toString
     val rows = (1 to 7).map(i => (i.toLong, "view")) ++
       (1 to 3).map(i => (100L + i, "purchase"))
     rows.map { case (id, et) =>
@@ -1232,7 +1232,7 @@ class SignalsSpec extends AnyFunSuite {
   test("cohens_kappa: chance-corrected agreement from integer margins") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_kap").toString
+    val dir = Tmp.dir("sig_kap").toString
     // doc_id % 200 == 0 makes rater2 = rater1 (n11, n00); the two
     // mid-length docs flip only the lenient rater (n01); r2 >= r1 by
     // construction so n10 = 0. po=2/4, chance=6/16 -> kappa = 0.2
@@ -1250,7 +1250,7 @@ class SignalsSpec extends AnyFunSuite {
   test("t_closeness: ordered EMD against the global length distribution") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sig_tc").toString
+    val dir = Tmp.dir("sig_tc").toString
     // group (en,s1): 4 docs in class 0; group (en,s2): 4 docs in class 9
     // global CDF: cum(i) = 4 for i = 0..8 over N = 8
     // s1: |4·8 − 4·4| = 16 per class i<9 → Σ = 144; t = 144/(4·8·9) = 0.5
@@ -1281,7 +1281,7 @@ class SignalsSpec extends AnyFunSuite {
       (300L, 10L), (300L, 11L), (300L, 12L),
       (400L, 10L), (400L, 11L), (400L, 12L),
       (500L, 3L), (500L, 10L), (600L, 3L), (600L, 10L))
-    val dir = java.nio.file.Files.createTempDirectory("sig_lpa").toString
+    val dir = Tmp.dir("sig_lpa").toString
     rows.toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
     val out = SparkEntry.queries("label_propagation")(spark, dir).collect()
@@ -1301,7 +1301,7 @@ class SignalsSpec extends AnyFunSuite {
       (300L, 10L), (300L, 11L), (300L, 12L),
       (400L, 10L), (400L, 11L), (400L, 12L),
       (500L, 3L), (500L, 10L), (600L, 3L), (600L, 10L))
-    val dir = java.nio.file.Files.createTempDirectory("sig_mod").toString
+    val dir = Tmp.dir("sig_mod").toString
     rows.toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
     val qc = math.rint((3.0 / 7.0 - (7.0 / 14.0) * (7.0 / 14.0))
@@ -1323,7 +1323,7 @@ class SignalsSpec extends AnyFunSuite {
       (1L, "a b c a b c", "tr"),
       (2L, "a b c d", "src0"),   // tier3 ("a b c") + tier1 ("b c d": OOV d)
       (3L, "x b c a", "src0"))   // tier2 ("x b c") + tier3 ("b c a")
-    val dir = java.nio.file.Files.createTempDirectory("sig_sb").toString
+    val dir = Tmp.dir("sig_sb").toString
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -34,7 +34,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("stream of a directory table equals its batch read, " +
       "plain and file: URI") {
-    val dir = Files.createTempDirectory("tables_dir").toString
+    val dir = Tmp.dir("tables_dir").toString
     val table = s"$dir/events.parquet"
     rows(10).repartition(2).write.parquet(table)
     assert(Files.isDirectory(Paths.get(table)))
@@ -44,7 +44,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("stream of a single-file table equals its batch read, " +
       "plain and file: URI") {
-    val dir = Files.createTempDirectory("tables_file").toString
+    val dir = Tmp.dir("tables_file").toString
     val table = s"$dir/events.parquet"
     singleFile(rows(10), table)
     singleFile(rows(4), s"$dir/orders.parquet")
@@ -67,7 +67,7 @@ object TablesSpec {
 
   /** Write `df` as ONE parquet file at `dest` (not a directory). */
   def singleFile(df: DataFrame, dest: String): Unit = {
-    val tmp = Files.createTempDirectory("tables_one")
+    val tmp = Tmp.dir("tables_one")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("t").toString)
     val part = tmp.resolve("t").toFile.listFiles
       .filter(f => f.getName.startsWith("part-") &&
