@@ -97,27 +97,23 @@ object GraftSession {
     else df
   }
 
-  /** Per-partition source-byte target for [[streamStateWidth]],
-    * overridable via `spark.graft.stream.statePartitionBytes` (bytes).
-    * Default 8 MiB (r18, was 64 MiB in r17): the r17 value was sized
-    * against COMMIT overhead only — at sf0.1 (2 MB source) both values
-    * derive width 1 and the fsync-flood fix is identical — but the sf1
-    * per-batch probe showed the next regime is COMPUTE-bound, not
-    * commit-bound: a 22 MB source carries a 2M-row symmetric-hash join
-    * whose addBatch ran 30 s on the single derived partition while
-    * state commit cost ~1 s. 8 MiB/partition widens exactly when there
-    * is real per-row work to spread (sf1 derives 3) and still saturates
-    * at cluster width long before production scale; the A/B table in
-    * OPTIMIZATION_r18.md pins the choice.
+  /** Per-partition source-byte target for [[streamStateWidth]]: 8 MiB.
+    * At sf0.1 (2 MB source) any target from 8 to 64 MiB derives width 1,
+    * but the sf1 per-batch probe showed the regime past the fsync-bound
+    * commit is COMPUTE-bound: a 22 MB source carries a 2M-row
+    * symmetric-hash join whose addBatch ran 30 s on a single partition
+    * while state commit cost ~1 s. 8 MiB/partition widens exactly when
+    * there is real per-row work to spread (sf1 derives 3) and still
+    * saturates at cluster width long before production scale; the A/B
+    * table in OPTIMIZATION_r18.md pins the choice.
     */
-  def streamStatePartitionBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.stream.statePartitionBytes")
-      .map(_.toLong).filter(_ > 0).getOrElse(8L << 20)
+  val StreamStatePartitionBytes: Long = 8L << 20
 
-  /** Scale-adaptive stateful-stream shuffle width: ⌈sourceBytes/64 MiB⌉
-    * clamped to [1, defaultParallelism]. Streaming stateful operators
-    * cannot use AQE (disabled in stateful workloads), so their shuffle —
-    * and therefore their STATE STORE count — is pinned at plan time to
+  /** Scale-adaptive stateful-stream shuffle width:
+    * ⌈sourceBytes / [[StreamStatePartitionBytes]]⌉ clamped to
+    * [1, defaultParallelism]. Streaming stateful operators cannot use AQE
+    * (disabled in stateful workloads), so their shuffle — and therefore
+    * their STATE STORE count — is pinned at plan time to
     * `spark.sql.shuffle.partitions`, a constant tuned to the core count.
     * That constant is wrong in both directions (guide §2): at 100 TB it
     * undershoots (the cap keeps it at cluster width, the right ceiling),
@@ -128,14 +124,14 @@ object GraftSession {
     * (measured r17: `rocksdbCommitFileSyncLatency` was >90% of commit
     * time; stream_stream_join 13.5 s → 6.2 s, stream_sessionize
     * 9.1 s → 3.8 s, stream_late_data 6.9 s → 2.7 s at the derived
-    * width). 64 MiB/partition sits at the small end of the guide's
-    * 100 MB–1 GB target precisely so the width ramps up early as data
+    * width). The 8 MiB/partition target sits well below the guide's
+    * 100 MB–1 GB range precisely so the width ramps up early as data
     * grows. `sourceBytes < 0` (unknown — no file source visible) keeps
     * the session's width: never guess narrower than configured.
     */
   def streamStateWidth(s: SparkSession, sourceBytes: Long): Int = {
-    val target = streamStatePartitionBytes(s)
-    val byData = (sourceBytes + target - 1) / target
+    val byData = (sourceBytes + StreamStatePartitionBytes - 1) /
+      StreamStatePartitionBytes
     math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong, byData))
       .toInt
   }

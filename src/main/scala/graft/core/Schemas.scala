@@ -72,25 +72,3 @@ object Schemas {
   /** The `fetch_status` values the funnel keeps (report_engine.py:181). */
   val fetchStatuses: Seq[String] = Seq("Not Attempted", "Failed", "Success")
 }
-
-/** Canonical typed funnel row — the engine's data model for the report.
-  * The reference's positional 7-column presentation grid (headers mixed with
-  * data, report_engine.py:293-318) is a *render* step over this, not the
-  * model; see [[graft.engine.FunnelRender]].
-  *
-  * Nullable boxed fields: subcause rows carry no success numbers, and the
-  * "User did not take any action" row intentionally has no drop numbers
-  * (report_engine.py:313 emits empty strings there — quirk preserved at the
-  * render edge; canonically they are nulls).
-  */
-final case class FunnelRow(
-    row_idx: Int,
-    stage: String,
-    positive_action: String,
-    success_count: java.lang.Long,
-    success_pct: java.lang.Double,
-    drop_cause: String,
-    drop_count: java.lang.Long,
-    drop_pct: java.lang.Double,
-    is_subcause: Boolean,
-)

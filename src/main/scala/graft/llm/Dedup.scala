@@ -125,7 +125,7 @@ object Dedup {
     * [[minhashPairs]]'s per-table signature explode, the join carries
     * only (doc_id, band key).
     *
-    * Hot-band skew at scale (measured, tools/skew_probe.scala): a
+    * Hot-band skew at scale (measured at sf10, see PLANS.md): a
     * boilerplate near-dup family creates a hot
     * band key whose reducer partition serializes the k² pair products
     * in one task — AQE's skew split cut a planted 20k-family join

@@ -817,7 +817,7 @@ object Similarity {
     * each step adds 4 band bits (16× more selective buckets) AND more
     * bands so high-similarity recall degrades gently instead of
     * collapsing — at cos 0.90–0.92, MEASURED on planted near-dup
-    * families ([[graft.tools.SignLshRecallProbe]], 300k-vector run for
+    * families (SignLshRecallProbe in the test tree, 300k-vector run for
     * the top branch; band math predicted 87/74/66): 88% (48/8×6),
     * 78% (96/12×8), 65% (160/16×10) — floors 0.85/0.72/0.60 are pinned
     * by SignLshRecallSpec. Thresholds are POWERS OF TWO the oracle mirrors
@@ -858,7 +858,7 @@ object Similarity {
 
   /** [[signLshNearDupPairs]] at EXPLICIT banding parameters — the
     * measurement surface for the per-branch recall floors
-    * ([[graft.tools.SignLshRecallProbe]], SignLshRecallSpec): recall of
+    * (the test tree's SignLshRecallProbe and SignLshRecallSpec): recall of
     * a true pair at angle θ is 1−(1−p^r)^b with p = 1−θ/π, a function
     * of (nBits, bitsPerBand) alone, so each [[signLshSteps]] branch can
     * be measured on a planted family without building a corpus at that

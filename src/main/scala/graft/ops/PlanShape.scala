@@ -113,14 +113,13 @@ object PlanShape {
     *
     * The batch gate fingerprints a DataFrame before running it; a
     * stream query's shape only exists while the query RUNS, and the
-    * verification read-back is a bare scan of the sink — so the stream
-    * runners ([[graft.queries.Insights]]'s parquetSinkReadback and
-    * [[graft.queries.FunnelOverEvents]]'s runStreamFunnel) record the
-    * last micro-batch's fingerprint here right after each drain, keyed
-    * by the runner's stream tag. PlanShapeSpec drains the registry around
+    * verification read-back is a bare scan of the sink — so the one
+    * stream runner, [[graft.streaming.StreamRunner]], records the last
+    * micro-batch's fingerprint here right after each drain, keyed by
+    * the query's stream tag. PlanShapeSpec drains the registry around
     * each registered stream query and asserts the committed
     * `PLANSHAPES_STREAM.json` snapshot. Always-on: a record is one map
-    * put of a short string per stream RUN (each runner reuses its one
+    * put of a short string per stream RUN (each query reuses its one
     * tag, so the map stays bounded).
     */
   object streamShapes {

@@ -1,12 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
 import graft.core.Schemas
 import graft.engine.FunnelTable
-import graft.io.{Scratch, Tables}
+import graft.io.Tables
+import graft.streaming.StreamRunner
+import graft.streaming.StreamRunner.Complete
 
 /** The full funnel pipeline (SURVEY §2.9, `report_engine.py:233-319`)
   * exercised over the harness's `events` table, so the driver's DuckDB
@@ -55,6 +56,14 @@ object FunnelOverEvents {
       }
   }
 
+  /** The 21 [[funnelAggs]] as ONE global aggregate over `events`, batch
+    * or stream alike.
+    */
+  private[graft] def funnelAgg(events: DataFrame): DataFrame = {
+    val aggs = funnelAggs
+    events.agg(aggs.head, aggs.tail: _*)
+  }
+
   /** ONE scan of events computes all 21 aggregates (11 stage + 3 otp +
     * 5 discovery + 2 fi counts) as conditional counts in a single
     * HashAggregate, then projects the wide funnel metrics — versus the
@@ -65,77 +74,23 @@ object FunnelOverEvents {
     * [[FunnelTable.buildFromRaw]] — LlmSpec-equivalent paths are covered
     * by FunnelTableSpec; the DuckDB oracle pins this one.
     */
-  def query(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val aggs = funnelAggs
-    val one = ev.agg(aggs.head, aggs.tail: _*)
-    FunnelTable.rows(FunnelTable.wideFromJoined(one)).orderBy("row_idx")
-  }
+  def query(s: SparkSession, dir: String): DataFrame =
+    FunnelTable.rows(FunnelTable.wideFromJoined(
+      funnelAgg(Tables.events(s, dir)))).orderBy("row_idx")
 
   /** [[query]] with the aggregation run as a STREAM: readStream over the
     * events parquet, the same 21 conditional aggregates as a global
     * complete-mode aggregate (state = one row of counters — the shape
-    * that stays tiny at 100 TB/day), AvailableNow trigger into a FILE
-    * sink, then the identical wide→rows projection over the settled
-    * 1-row result read back from parquet. Same oracle as the batch
-    * path: stream/batch parity for the funnel table itself is a
-    * hash-checked gate, not a spec claim.
-    *
-    * Sink choice: Spark's native parquet sink is append-only, which a
-    * complete-mode global aggregate cannot use, so the canonical file
-    * path is foreachBatch + idempotent per-batch OVERWRITE — executors
-    * write the parquet, the driver holds nothing, and the last batch's
-    * overwrite is the settled result. Unlike the memory sink this
-    * verification path itself survives any scale (the written table is
-    * one row regardless of input size, and a restart simply rewrites
-    * it).
+    * that stays tiny at 100 TB/day) drained by [[StreamRunner]], then the
+    * identical wide→rows projection over the settled 1-row result. Same
+    * oracle as the batch path: stream/batch parity for the funnel table
+    * itself is a hash-checked gate, not a spec claim. The aggregates
+    * never touch `ts`, so the raw stream needs no projection.
     */
-  def streamQuery(s: SparkSession, dir: String): DataFrame = {
-    val sink = Scratch.fresh("stream_funnel")
-    runStreamFunnel(s, dir, sink)
-    FunnelTable.rows(FunnelTable.wideFromJoined(s.read.parquet(sink)))
-      .orderBy("row_idx")
-  }
-
-  /** One streaming run of the funnel aggregate into `sink` (foreachBatch
-    * + idempotent overwrite). The knobs exist so FunnelStreamSpec can
-    * prove the RESTART-RECOVERY claim the overwrite pattern makes:
-    * `maxFilesPerTrigger` splits the fixture into several micro-batches,
-    * `ckpt` pins a durable checkpoint across runs, and `failAtBatch`
-    * injects a crash BEFORE that batch's write — the first run dies
-    * mid-stream, the rerun resumes from the committed offsets and the
-    * settled overwrite must still equal the batch aggregate. Production
-    * callers ([[streamQuery]]) leave every knob at None: fresh
-    * checkpoint, one AvailableNow drain.
-    */
-  private[graft] def runStreamFunnel(s: SparkSession, dir: String,
-      sink: String, ckpt: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None,
-      failAtBatch: Option[Long] = None): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    // the raw stream: the aggregates never touch ts, so no projection
-    val raw = Tables.stream(s, s"$dir/events.parquet", maxFilesPerTrigger)
-    val aggs = funnelAggs
-    val writer = raw.agg(aggs.head, aggs.tail: _*)
-      .writeStream
-      .outputMode("complete").trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (failAtBatch.contains(batchId))
-          throw new RuntimeException(s"injected failure at batch $batchId")
-        batch.write.mode("overwrite").parquet(sink)
-      }
-    // stateful (global complete-mode agg) → verified under the RocksDB
-    // provider like every other engine stream query; state width derives
-    // from the source's bytes (GraftSession.streamStateWidth, r17)
-    GraftSession.withStreamStateWidth(s, raw) {
-      GraftSession.withRocksDbState(s) {
-        val q = ckpt.map(c => writer.option("checkpointLocation", c))
-          .getOrElse(writer).start()
-        q.awaitTermination()
-        graft.ops.PlanShape.streamShapes.record("funnel", q)
-      }
-    }
-  }
+  def streamQuery(s: SparkSession, dir: String): DataFrame =
+    FunnelTable.rows(FunnelTable.wideFromJoined(StreamRunner.run(s,
+      funnelAgg(Tables.stream(s, s"$dir/events.parquet")), Complete,
+      "funnel"))).orderBy("row_idx")
 
   /** DuckDB twin of [[query]]: source-specific CTEs that emit the
     * [[Schemas]] column names down to the wide single-row `w` (the shared
@@ -166,7 +121,7 @@ object FunnelOverEvents {
   val defs: Seq[QueryDef] = Seq(
     QueryDef("funnel_table", query, oracle),
     // the funnel aggregation run as a real Structured Streaming query
-    // (readStream → global complete-mode agg → memory sink), hash-
+    // (readStream → global complete-mode agg → parquet sink), hash-
     // checked against the SAME oracle as the batch funnel_table:
     // stream/batch parity IS the claim
     QueryDef("stream_funnel_table", streamQuery, oracle))

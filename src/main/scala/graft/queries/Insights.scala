@@ -9,6 +9,8 @@ import graft.GraftSession
 import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
+import graft.streaming.StreamRunner
+import graft.streaming.StreamRunner.{Append, Complete, State, Update}
 
 /** Round-10 analytics batch: funnel timing, exact correlation, iterative
   * connected components, corpus readability, and a nation-pair volume
@@ -20,92 +22,6 @@ import graft.llm.{Dedup, TextAnalysis}
 object Insights {
 
   private val D38 = DecimalType(38, 0)
-
-  /** Runs a streaming DataFrame to completion (AvailableNow) through a
-    * PARQUET sink and reads the settled result back — so the
-    * verification path itself is scale-true: result rows land on disk
-    * via executor writes like any production job, never in driver
-    * memory (the memory sink materializes every row in the driver —
-    * bounded for these grids, but the wrong pattern to rehearse).
-    *
-    *  - `append`   → Spark's NATIVE file sink: per-batch exactly-once
-    *    via the `_spark_metadata` commit log (the batch read-back
-    *    honors it), the literal production path for finalized windows.
-    *  - `complete` → foreachBatch + idempotent full overwrite (the
-    *    file sink rejects complete mode); the final batch's overwrite
-    *    IS the settled aggregate — `stream_funnel_table`'s pattern,
-    *    restart-safe because replaying any batch rewrites the same
-    *    prefix-complete result.
-    *  - `update`   → foreachBatch appending each update batch stamped
-    *    with its batchId; read-back keeps each key's LAST update
-    *    (max batchId per `lastWinsKey`), correct under any micro-batch
-    *    split the trigger picks.
-    *
-    * Fresh sink + checkpoint per invocation ([[Scratch.fresh]]):
-    * bench's three passes stay independent; restart-recovery over a
-    * SHARED checkpoint is exercised separately in FunnelStreamSpec.
-    */
-  private[graft] def parquetSinkReadback(s: SparkSession, df: DataFrame,
-      mode: String, tag: String,
-      lastWinsKey: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.{Dataset, Row}
-    val base = new java.io.File(Scratch.fresh("fsink_" + tag))
-    val sink = new java.io.File(base, "out").getAbsolutePath
-    val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-    // every engine stream query verifies under the RocksDB state-store
-    // provider — the only store that holds 100 TB/day key spaces (see
-    // GraftSession.withRocksDbState); FunnelStreamSpec pins via a
-    // progress listener that the stateful entries actually engage it.
-    // State width derives from the source's bytes (r17,
-    // GraftSession.streamStateWidth): AQE cannot size stateful shuffles,
-    // and the fixed core-count width oversharded small replays into
-    // fsync-bound per-store commits.
-    GraftSession.withStreamStateWidth(s, df) {
-    GraftSession.withRocksDbState(s) {
-      val q = mode match {
-        case "append" =>
-          df.writeStream.outputMode("append").format("parquet")
-            .option("path", sink).option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        case "complete" =>
-          df.writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: Dataset[Row], _: Long) =>
-              batch.write.mode("overwrite").parquet(sink)
-            }.start()
-        case "update" =>
-          require(lastWinsKey.nonEmpty,
-            "update-mode read-back needs a last-wins key")
-          df.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-              batch.withColumn("__fs_batch", lit(batchId))
-                .write.mode("append").parquet(sink)
-            }.start()
-        case other =>
-          throw new IllegalArgumentException(s"unsupported mode: $other")
-      }
-      q.awaitTermination()
-      // the read-back below is a bare sink scan — the micro-batch plan
-      // is the only place streaming shape regressions are visible
-      graft.ops.PlanShape.streamShapes.record(tag, q)
-    }
-    }
-    if (!new java.io.File(sink).exists)
-      // zero batches committed (empty source) — settled result is empty
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema)
-    else if (mode == "update") {
-      val w = Window.partitionBy(lastWinsKey.map(col): _*)
-        .orderBy(col("__fs_batch").desc)
-      s.read.parquet(sink)
-        .withColumn("__fs_rn", row_number().over(w))
-        .filter(col("__fs_rn") === 1)
-        .drop("__fs_rn", "__fs_batch")
-    } else s.read.parquet(sink)
-  }
 
   /** [[defs]]' `connected_components` body, returning (result,
     * propagation rounds actually RUN) so InsightsSpec can gate the
@@ -195,13 +111,12 @@ object Insights {
     * window through both aggregation levels.
     *
     * Returns the settled grid read back from the native parquet file
-    * sink ([[parquetSinkReadback]]); InsightsSpec gates the
+    * sink ([[StreamRunner]]); InsightsSpec gates the
     * BOUNDED-SINK claim (row count == distinct purchase days with a
     * joined view).
     */
   private[graft] def streamStreamJoinDaily(
       s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     GraftSession.tune(s)
     val scratch = Scratch.once(Scratch.dir(dir, "ssj_sentinel")) { tmp =>
@@ -233,7 +148,7 @@ object Insights {
         count(lit(1)).as("n_users"))
       .select(date_format(col("day.start"), "yyyy-MM-dd").as("p_day"),
         col("n_pairs"), col("n_users"))
-    parquetSinkReadback(s, grid, "append", "ssj")
+    StreamRunner.run(s, grid, Append, "ssj")
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -979,9 +894,9 @@ object Insights {
     // type is the batch reader's ([[Tables.eventsStream]]).
     QueryDef("stream_daily_counts", (s, dir) => {
       val ev = Tables.eventsStream(s, dir)
-      parquetSinkReadback(s,
+      StreamRunner.run(s,
           graft.streaming.FunnelStream.dailyEventCounts(ev),
-          "complete", "daily")
+          Complete, "daily")
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("cnt"))
         .orderBy("day", "event_type")
@@ -998,15 +913,14 @@ object Insights {
     // oracle. Streaming state is |types|·512 counters, the fixed
     // memory a 100 TB stream pays for percentiles.
     QueryDef("stream_quantile", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), Signals.gridBin(col("value")))
       // the file-sink read-back is a plain parquet relation, so the
       // readout's self-join (cum window ⋈ totals) needs no
       // attribute-dedup workaround (the old memory-sink MemoryPlan did)
-      val grid = parquetSinkReadback(s,
+      val grid = StreamRunner.run(s,
         ev.groupBy("event_type", "bin").agg(count(lit(1)).as("c")),
-        "complete", "quant")
+        Complete, "quant")
       Signals.gridQuantileReadout(s, grid)
     },
       // stream/batch parity IS the claim: the batch sketch's oracle
@@ -1022,14 +936,13 @@ object Insights {
     // whose oracle serves unchanged. Exact witnesses come from one
     // batch pass beside the stream.
     QueryDef("stream_hll", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val hll = udaf(new graft.functions.HyperLogLogAgg(),
         org.apache.spark.sql.Encoders.STRING)
       val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
-      val regs = parquetSinkReadback(s,
+      val regs = StreamRunner.run(s,
         ev.groupBy("event_type").agg(hll(col("uid")).as("regs")),
-        "complete", "hll")
+        Complete, "hll")
       val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       regs.join(exact, Seq("event_type"))
@@ -1062,9 +975,9 @@ object Insights {
         org.apache.spark.sql.Encoders.STRING)
       val ev = Tables.eventsStream(s, dir)
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
-      val sk = parquetSinkReadback(s,
+      val sk = StreamRunner.run(s,
         ev.groupBy("event_type").agg(kmv(col("uid")).as("sk")),
-        "complete", "kmv")
+        Complete, "kmv")
       val exact = Tables.events(s, dir).groupBy("event_type")
         .agg(countDistinct("user_id").as("true_distinct"))
       sk.join(exact, Seq("event_type"))
@@ -1110,14 +1023,13 @@ object Insights {
     // the readout), and popcounts must land exactly on the batch
     // countDistinct.
     QueryDef("stream_bitmap", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir).select(col("event_type"),
         expr("CAST(user_id DIV 62 AS BIGINT)").as("w"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 62 AS INT))")
           .as("m"))
-      val counts = parquetSinkReadback(s,
+      val counts = StreamRunner.run(s,
           ev.groupBy("event_type", "w").agg(bit_or(col("m")).as("bm")),
-          "complete", "bitmap")
+          Complete, "bitmap")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_words"),
           sum(bit_count(col("bm"))).cast("long").as("distinct_bitmap"))
@@ -1153,7 +1065,6 @@ object Insights {
     // tested against it: the md5 filter is deterministic, so pass,
     // present, and even the false-positive count are hash-gated.
     QueryDef("stream_bloom", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val nBits = 262144
       val k = 7
       val bloomAgg = udaf(new graft.functions.BloomFilterAgg(nBits, k),
@@ -1161,9 +1072,9 @@ object Insights {
       val ev = Tables.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id").cast("string").as("uid"))
-      val bits = parquetSinkReadback(s,
+      val bits = StreamRunner.run(s,
         ev.groupBy().agg(bloomAgg(col("uid")).as("bits")),
-        "complete", "bloom")
+        Complete, "bloom")
       val present = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id")).distinct()
@@ -1235,15 +1146,14 @@ object Insights {
     // cms_heavy_hitters' oracle serves unchanged; the probe and exact
     // witnesses come from one batch pass beside the stream.
     QueryDef("stream_cms", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val depth = 4
       val width = 64
       val cmsU = udaf(new graft.functions.CountMinSketchAgg(depth, width),
         org.apache.spark.sql.Encoders.STRING)
       val ev = Tables.eventsStream(s, dir).select(col("event_type"))
-      val sketch = parquetSinkReadback(s,
+      val sketch = StreamRunner.run(s,
         ev.groupBy().agg(cmsU(col("event_type")).as("sketch")),
-        "complete", "cms")
+        Complete, "cms")
       val (h1, h2) =
         graft.functions.CountMinSketchAgg.hashPairCols(col("event_type"))
       val est = (0 until depth).map { i =>
@@ -1267,13 +1177,12 @@ object Insights {
     // ends register-identical to the batch summary and reuses the
     // batch oracle (same exact-regime capacity: 16 ≥ ~5 event types).
     QueryDef("stream_topk", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val mgU = udaf(new graft.functions.MisraGriesAgg(16),
         org.apache.spark.sql.Encoders.STRING)
       val ev = Tables.eventsStream(s, dir).select(col("event_type"))
-      val summary = parquetSinkReadback(s,
+      val summary = StreamRunner.run(s,
         ev.groupBy().agg(mgU(col("event_type")).as("summary")),
-        "complete", "topk")
+        Complete, "topk")
       Tables.events(s, dir).groupBy("event_type")
         .agg(count(lit(1)).as("true_cnt"))
         .crossJoin(broadcast(summary))
@@ -1295,14 +1204,13 @@ object Insights {
     // [[graft.streaming.FunnelStream.dedupedEvents]], pinned in
     // FunnelStreamSpec (its cross-batch replay-drop test).
     QueryDef("stream_dedup_counts", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
-      parquetSinkReadback(s,
+      StreamRunner.run(s,
           ev.select("user_id", "event_type")
             .dropDuplicates("user_id", "event_type")
             .groupBy("event_type")
             .agg(count(lit(1)).as("distinct_users")),
-          "complete", "dedup")
+          Complete, "dedup")
         .orderBy("event_type")
     },
       // streaming first-per-key dedup ≡ batch count distinct
@@ -1318,16 +1226,15 @@ object Insights {
     // segment dimension derives deterministically from user_id so the
     // oracle can rebuild it.
     QueryDef("stream_enriched_counts", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val ev = Tables.eventsStream(s, dir)
       val dim = Tables.events(s, dir)
         .select(col("user_id")).distinct()
         .withColumn("segment",
           concat(lit("seg"), pmod(col("user_id"), lit(4))))
-      parquetSinkReadback(s,
+      StreamRunner.run(s,
           graft.streaming.FunnelStream
             .enrichedDailyCounts(ev.select("ts", "user_id"), dim),
-          "complete", "enrich")
+          Complete, "enrich")
         .select(date_format(col("day_start"), "yyyy-MM-dd").as("day"),
           col("segment"), col("cnt"))
         .orderBy("day", "segment")
@@ -1412,7 +1319,6 @@ object Insights {
     // oracle; the sentinel user's own never-closed session is the only
     // state left behind, filtered by user_id ≥ 0.
     QueryDef("stream_sessionize", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
       // one pass for the sentinel horizon AND the content fingerprint
@@ -1448,9 +1354,9 @@ object Insights {
       val ds = src
         .select(col("user_id"), col("ts"), lit("e").as("event_type"))
         .as[graft.streaming.FunnelStream.UserEvent]
-      val sessions = parquetSinkReadback(s,
+      val sessions = StreamRunner.run(s,
         graft.streaming.FunnelStream.userSessions(ds, 30, "1 hour").toDF(),
-        "append", "sess")
+        Append, "sess")
       val w = Window.partitionBy("user_id").orderBy("session_start")
       sessions.filter(col("user_id") >= 0)
         .select(col("user_id"),
@@ -1478,7 +1384,6 @@ object Insights {
     // never reaches the sink. State = |days|·|types| windows, bounded
     // by the watermark — the 100 TB streaming-agg posture.
     QueryDef("stream_late_data", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
@@ -1517,11 +1422,11 @@ object Insights {
           t0 - 15000)
       }
       val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
-      val settled = parquetSinkReadback(s,
+      val settled = StreamRunner.run(s,
         src.withWatermark("ts", "1 day")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("cnt")),
-        "append", "late")
+        Append, "late")
       // a finalized SENTINEL window (year-away) is fixture scaffolding,
       // not data — the readout keeps only real-horizon days
       settled
@@ -1683,15 +1588,13 @@ object Insights {
     // semantics are pinned separately in FunnelStreamSpec (this gate
     // pins the arithmetic against DuckDB).
     QueryDef("stream_user_funnel", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val ds = Tables.eventsStream(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
         .as[graft.streaming.FunnelStream.UserEvent]
-      parquetSinkReadback(s,
+      StreamRunner.run(s,
           graft.streaming.FunnelStream.userFunnelState(ds).toDF(),
-          "update", "ufun",
-          lastWinsKey = Seq("user_id"))
+          Update("user_id"), "ufun")
         .groupBy("events", "purchases", "converted")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("events", "purchases", "converted")
@@ -1726,44 +1629,23 @@ object Insights {
     // and emit the answer FROM THE STATE, never from the sink. The
     // oracle is the plain batch GROUP BY — so the gate proves the
     // persisted state holds exactly the aggregate's (count, sum)
-    // buffer per key. Fresh checkpoint per run (Scratch.fresh) keeps
-    // bench passes identical; the state read is partition-parallel (one
+    // buffer per key. Fresh checkpoint per run keeps bench passes
+    // identical; the state read is partition-parallel (one
     // state file per shuffle partition, `partition_id` exposed).
     QueryDef("stream_state_read", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val ckpt = Scratch.fresh("ss_read")
       val counts = Tables.eventsStream(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           sum(bround(col("value") * lit(1000000.0)).cast("long"))
             .as("value_micros"))
       // sink rows are deliberately DISCARDED (noop): the gate reads the
-      // answer from the persisted STATE, never from the sink. Both the
-      // run AND the state read live under the RocksDB provider (the
-      // statestore source instantiates the provider from session conf
-      // at read time, so the read materializes inside the wrapper).
-      // State width data-derived like every other stream runner (r17).
-      GraftSession.withStreamStateWidth(s, counts) {
-      GraftSession.withRocksDbState(s) {
-        val q = counts.writeStream.format("noop")
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.ops.PlanShape.streamShapes.record("ssread", q)
-        s.read.format("statestore").load(ckpt)
-          .select(col("key.event_type").as("event_type"),
-            col("value.count").as("cnt"),
-            col("value.sum").as("value_micros"))
-          .orderBy("event_type")
-          .localCheckpoint()
-      }
-      }
+      // answer from the persisted STATE, never from the sink
+      StreamRunner.run(s, counts, State, "ssread")
+        .select(col("key.event_type").as("event_type"),
+          col("value.count").as("cnt"),
+          col("value.sum").as("value_micros"))
+        .orderBy("event_type")
     },
-      // watermarked stream-stream join ≡ batch self-join with the same
-      // event-time range predicate (AvailableNow delivers every row before
-      // the watermark can drop any, so the match set is exact)
       // the state store must hold exactly the batch aggregate — the
       // oracle never sees a stream or a checkpoint
       """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,

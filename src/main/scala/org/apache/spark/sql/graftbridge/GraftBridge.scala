@@ -26,9 +26,10 @@ object GraftBridge {
     * workloads). Lives in the bridge package because
     * `StreamingRelation`/`DataSource` are `private[sql]`.
     *
-    * A directory source counts the whole directory (a glob-filtered
-    * scan of a mixed directory overcounts); overcounting only ever
-    * widens the derived state width, which is the safe direction.
+    * A `pathGlobFilter` source counts only the files the glob admits
+    * (a single-file table is streamed as its parent directory plus a
+    * glob, see [[graft.io.Tables.stream]]), so a small table next to
+    * large siblings sizes by its own bytes.
     */
   def streamSourceBytes(df: org.apache.spark.sql.Dataset[_]): Long = {
     import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
@@ -46,8 +47,12 @@ object GraftBridge {
             // contributing 0 would let a single listing hiccup clamp a
             // possibly-huge stream to 1 state partition, violating the
             // "never guess narrower than configured" invariant
-            try fs.getContentSummary(path).getLength
-            catch { case _: Exception => return -1L }
+            try ds.options.get("pathGlobFilter") match {
+              case None => fs.getContentSummary(path).getLength
+              case Some(glob) =>
+                fs.listStatus(path, new org.apache.hadoop.fs.GlobFilter(glob))
+                  .filter(_.isFile).map(_.getLen).sum
+            } catch { case _: Exception => return -1L }
           }.sum
       }
       // 0 total bytes is indistinguishable from "nothing readable";

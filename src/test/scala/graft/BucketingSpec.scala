@@ -14,7 +14,6 @@ class BucketingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
 
   test("same-bucketed tables sort-merge join with zero exchanges") {
-    import spark.implicits._
     val dir = Tmp.dir("buckets").toString
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")

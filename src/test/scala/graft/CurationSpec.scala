@@ -158,7 +158,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("batch_padding: fixed-32 batches, arrival vs length-sorted waste") {
-    import org.apache.spark.sql.functions._
     val dir = tmp("cur_pad")
     // 40 docs, one shard; token counts are a deterministic
     // non-monotonic permutation so arrival order ≠ sorted order
@@ -194,7 +193,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("encoding_audit: run counting, dict width, and the decision rule") {
-    import org.apache.spark.sql.functions._
     val dir = tmp("cur_enc")
     val d1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val d2 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
@@ -222,7 +220,6 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("zonemap_skip: interleaved days defeat natural zones, sorted skips") {
-    import org.apache.spark.sql.functions._
     val dir = tmp("cur_zm")
     val base = java.sql.Timestamp.valueOf("1995-01-01 00:00:00")
     def ts(day: Int) = new java.sql.Timestamp(

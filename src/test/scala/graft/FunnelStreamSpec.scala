@@ -704,15 +704,17 @@ class FunnelStreamSpec extends AnyFunSuite {
     // The r13 gap: FunnelStreamSpec pinned RocksDB for two hand-built
     // shapes, but the registered stream queries verified on the default
     // heap-backed store — the one component that cannot hold 100 TB/day
-    // key spaces. parquetSinkReadback now pins the provider for every
-    // engine stream run (GraftSession.withRocksDbState); this test
-    // watches the actual verification path of a stateful entry through
-    // a progress listener and asserts every stateful micro-batch
-    // reported RocksDB's custom metrics (the heap store reports none
-    // prefixed "rocksdb").
+    // key spaces. StreamRunner pins the provider for every engine stream
+    // run (GraftSession.withRocksDbState); this test watches the actual
+    // verification path of each listed stateful entry — one per runner
+    // mode that opens a store: dedup (complete), the state read (state)
+    // and the paper's funnel (complete) — through a progress listener and
+    // asserts every stateful micro-batch reported RocksDB's custom
+    // metrics (the heap store reports none prefixed "rocksdb").
     import spark.implicits._
     val rocks = new java.util.concurrent.atomic.AtomicInteger(0)
     val nonRocks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val terminated = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener
@@ -730,32 +732,37 @@ class FunnelStreamSpec extends AnyFunSuite {
       }
       override def onQueryTerminated(
           e: org.apache.spark.sql.streaming.StreamingQueryListener
-            .QueryTerminatedEvent): Unit = ()
+            .QueryTerminatedEvent): Unit = terminated.incrementAndGet()
     }
     spark.streams.addListener(listener)
     try {
       val dir = Tmp.dir("srocks").toString
-      Seq((1L, 1L, "a"), (2L, 1L, "a"), (3L, 1L, "a"), (4L, 1L, "b"),
-        (5L, 2L, "a"))
-        .toDF("us", "user_id", "event_type")
-        .select(timestamp_micros(col("us")).as("ts"), col("user_id"),
-          col("event_type"))
+      Seq((1L, 1L, "a", 1.5), (2L, 1L, "a", 2.0), (3L, 1L, "a", 0.5),
+        (4L, 1L, "b", 3.0), (5L, 2L, "a", 1.0))
+        .toDF("us", "user_id", "event_type", "value")
+        .select(col("us").as("event_id"),
+          timestamp_micros(col("us")).as("ts"), col("user_id"),
+          col("event_type"), col("value"))
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      // dropDuplicates state through the real registered entry
-      val got = SparkEntry.queries("stream_dedup_counts")(
-        spark, dir).collect()
-      assert(got.nonEmpty)
-      // progress events are async — poll for the stateful batches
-      var waited = 0
-      while (rocks.get() == 0 && nonRocks.get() == 0 && waited < 50) {
-        Thread.sleep(200); waited += 1
-      }
-      assert(rocks.get() > 0,
-        "no RocksDB-backed stateful micro-batch observed on the " +
-          "verification path")
-      assert(nonRocks.get() === 0,
-        s"${nonRocks.get()} stateful micro-batches ran on a non-RocksDB " +
-          "store during the verification run")
+      Seq("stream_dedup_counts", "stream_state_read", "stream_funnel_table")
+        .foreach { name =>
+          rocks.set(0); nonRocks.set(0)
+          val before = terminated.get()
+          val got = SparkEntry.queries(name)(spark, dir).collect()
+          assert(got.nonEmpty, name)
+          // listener events are async and in order: once this query's
+          // termination arrived, all its progress events have too
+          var waited = 0
+          while (terminated.get() == before && waited < 50) {
+            Thread.sleep(200); waited += 1
+          }
+          assert(rocks.get() > 0,
+            s"$name: no RocksDB-backed stateful micro-batch observed on " +
+              "the verification path")
+          assert(nonRocks.get() === 0,
+            s"$name: ${nonRocks.get()} stateful micro-batches ran on a " +
+              "non-RocksDB store during the verification run")
+        }
     } finally spark.streams.removeListener(listener)
   }
 
@@ -772,28 +779,74 @@ class FunnelStreamSpec extends AnyFunSuite {
         timestamp_micros(col("us")).as("ts"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val base = Tmp.dir("fs_restart_run")
-    val sink = s"$base/out"
-    val ckpt = s"$base/ckpt"
-    // run 1: injected crash BEFORE batch 1's write — batch 0's offsets
-    // and aggregate state are committed to the checkpoint, batches 1-3
-    // never run
-    val ex = intercept[
-        org.apache.spark.sql.streaming.StreamingQueryException] {
-      graft.queries.FunnelOverEvents.runStreamFunnel(spark, dir, sink,
-        ckpt = Some(ckpt), maxFilesPerTrigger = Some(1),
-        failAtBatch = Some(1L))
+    // the file source takes files oldest first: staggered modtimes fix
+    // which file each batch reads, so batch 1 reads files(1)
+    val files = new java.io.File(s"$dir/events.parquet").listFiles
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(files.length === 4)
+    val t0 = System.currentTimeMillis
+    files.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(t0 - 60000 + i * 10000)
     }
-    assert(Option(ex.getCause).exists(
-      _.getMessage.contains("injected failure at batch 1")))
-    // run 2: SAME checkpoint + sink, no injection — the engine must
-    // resume from the committed offsets (restoring batch 0's state, not
-    // re-reading its file) and the idempotent overwrite must settle to
-    // exactly the batch aggregate of all 400 rows
-    graft.queries.FunnelOverEvents.runStreamFunnel(spark, dir, sink,
-      ckpt = Some(ckpt), maxFilesPerTrigger = Some(1))
+    // the crash rides in on the DataFrame: while armed, a row from
+    // batch 1's file throws before that batch writes anything
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val crashFile = files(1).getName
+    val guard = udf { (file: String) =>
+      if (armed.get && file.endsWith(crashFile))
+        throw new RuntimeException("injected failure at batch 1")
+      true
+    }
+    val agg = graft.queries.FunnelOverEvents.funnelAgg(
+      graft.io.Tables.stream(spark, s"$dir/events.parquet",
+        maxFilesPerTrigger = Some(1)).filter(guard(input_file_name())))
+    val base = Tmp.dir("fs_restart_run").toString
+    def run(): org.apache.spark.sql.DataFrame =
+      graft.streaming.StreamRunner.run(spark, agg,
+        graft.streaming.StreamRunner.Complete, "funnel", Some(base))
+
+    // run 1: batch 0's offsets and aggregate state are committed to the
+    // checkpoint; batch 1 dies, batches 2-3 never run
+    val ex = intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage)
+        .exists(_.contains("injected failure at batch 1"))), ex)
+    // run 2: SAME checkpoint + sink, disarmed — the engine must resume
+    // from the committed offsets (restoring batch 0's state, not
+    // re-reading its file: the first batch it runs is 1) and the
+    // idempotent overwrite must settle to exactly the batch aggregate
+    // of all 400 rows
+    // only run 2's events count (keyed by the run id it starts with)
+    @volatile var rerun: java.util.UUID = null
+    val batchIds = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener
+            .QueryStartedEvent): Unit = rerun = e.runId
+      override def onQueryProgress(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener
+            .QueryProgressEvent): Unit =
+        if (e.progress.runId == rerun) batchIds.add(e.progress.batchId)
+      override def onQueryTerminated(
+          e: org.apache.spark.sql.streaming.StreamingQueryListener
+            .QueryTerminatedEvent): Unit =
+        if (e.runId == rerun) ended.countDown()
+    }
+    armed.set(false)
+    spark.streams.addListener(listener)
+    val settled =
+      try {
+        val out = run()
+        assert(ended.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        out
+      } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(batchIds.asScala.toSeq.sorted === Seq(1L, 2L, 3L),
+      "the rerun did not resume after batch 0's commit")
     val recovered = graft.engine.FunnelTable.rows(
-        graft.engine.FunnelTable.wideFromJoined(spark.read.parquet(sink)))
+        graft.engine.FunnelTable.wideFromJoined(settled))
       .orderBy("row_idx").collect().map(_.toSeq)
     val batch = graft.queries.FunnelOverEvents.query(spark, dir)
       .collect().map(_.toSeq)
@@ -801,14 +854,13 @@ class FunnelStreamSpec extends AnyFunSuite {
   }
 
   test("streamStateWidth derives from source bytes: floor 1, " +
-      "8 MiB/partition default (conf-overridable), capped at " +
-      "defaultParallelism, scoped conf") {
+      "8 MiB/partition, capped at defaultParallelism, scoped conf") {
     // r17: stateful-stream shuffle width is data-derived (AQE cannot
     // size stateful shuffles), replacing the fixed core-count width
     // that oversharded small replays into fsync-bound RocksDB commits.
-    // r18: the per-partition byte target dropped 64 MiB → 8 MiB and
-    // became conf-overridable — the sf1 per-batch probe showed the
-    // regime past the fsync fix is COMPUTE-bound (a 22 MB source ran a
+    // r18: the per-partition byte target dropped 64 MiB → 8 MiB — the
+    // sf1 per-batch probe showed the regime past the fsync fix is
+    // COMPUTE-bound (a 22 MB source ran a
     // 2M-row symmetric-hash join single-partition for 30 s while state
     // commit cost ~1 s), so the width must widen as soon as there is
     // real per-row work to spread.
@@ -817,15 +869,6 @@ class FunnelStreamSpec extends AnyFunSuite {
     assert(GraftSession.streamStateWidth(spark, 2L << 20) === 1)
     assert(GraftSession.streamStateWidth(spark, 8L << 20) === 1)
     assert(GraftSession.streamStateWidth(spark, (8L << 20) + 1) === 2)
-    // the target is a runtime conf: the scale-dependent constant stays
-    // parameterised, with the 8 MiB local default
-    spark.conf.set("spark.graft.stream.statePartitionBytes",
-      (64L << 20).toString)
-    try {
-      assert(GraftSession.streamStateWidth(spark, 64L << 20) === 1)
-      assert(GraftSession.streamStateWidth(spark, (64L << 20) + 1) === 2)
-    } finally
-      spark.conf.unset("spark.graft.stream.statePartitionBytes")
     // monotone in bytes, and saturates at the cluster width — the
     // 100 TB posture: width is the cluster's, never the constant's
     assert(GraftSession.streamStateWidth(spark, 1L << 40) === par)
@@ -864,5 +907,32 @@ class FunnelStreamSpec extends AnyFunSuite {
     GraftSession.withStreamStateWidth(spark, mem.toDF()) {
       assert(spark.conf.get(key) === prior)
     }
+  }
+
+  test("a single-file stream table beside a large sibling derives its " +
+      "width from that file alone") {
+    // Tables.stream reads a single-file table as its parent directory
+    // plus a pathGlobFilter: the width must count the files the glob
+    // admits, not every table in that directory
+    import spark.implicits._
+    val staged = Tmp.dir("sfile_stage").toString
+    (0 until 100).map(i => (i.toLong, "view")).toDF("user_id", "event_type")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val dir = Tmp.dir("sfile").toFile
+    val table = new java.io.File(dir, "events.parquet")
+    assert(new java.io.File(staged).listFiles
+      .find(_.getName.endsWith(".parquet")).get.renameTo(table))
+    val sibling = new java.io.RandomAccessFile(
+      new java.io.File(dir, "sibling.bin"), "rw")
+    try sibling.setLength(3 * GraftSession.StreamStatePartitionBytes)
+    finally sibling.close()
+    val stream = graft.io.Tables.stream(spark, table.toString)
+    assert(org.apache.spark.sql.graftbridge.GraftBridge
+      .streamSourceBytes(stream) === table.length)
+    var inside = ""
+    GraftSession.withStreamStateWidth(spark, stream) {
+      inside = spark.conf.get("spark.sql.shuffle.partitions")
+    }
+    assert(inside === "1", s"a ${table.length}-byte table derived $inside")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Planted-data semantics for the round-11 inference batch: every
@@ -387,7 +386,6 @@ class InferenceSpec extends AnyFunSuite {
   }
 
   test("isotonic: the 1.0→0.0 violation pools all three bins to 0.5") {
-    import org.apache.spark.sql.functions._
     // bins (n,k): b0 (4,2) rate .5, b1 (2,2) rate 1, b2 (2,0) rate 0;
     // PAVA pools b1..b2 to .5, then b0 joins: fit = (.5,.5,.5) — each
     // verified against the minimax identity by hand

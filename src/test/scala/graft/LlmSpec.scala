@@ -340,7 +340,6 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("pii redaction replaces emails and long digit runs, leaves prose") {
-    import spark.implicits._
     val d = docs(1L ->
       "contact jane.doe+x@corp.example.org or call 12345678901 about order 42")
     val r = d.select(

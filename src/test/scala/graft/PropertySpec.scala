@@ -174,7 +174,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("zonemap_skip invariants: layouts agree on totals and selection") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(7)
     val dir = Tmp.dir("prop_zm").toString
     val base = java.sql.Timestamp.valueOf("1995-01-01 00:00:00")

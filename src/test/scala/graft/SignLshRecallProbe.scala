@@ -1,9 +1,8 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
 import graft.llm.Similarity
 
 /** Measure (don't derive) the sign-LSH recall floor of EACH
@@ -71,7 +70,6 @@ object SignLshRecallProbe {
   def measure(emb: DataFrame, nBulk: Long, nPairs: Int,
       minCosine: Double, nBits: Int, bitsPerBand: Int): (Long, Long, Double) = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val planted = spark.range(nPairs)
       .select(col("id").as("vec_a"), (col("id") + nBulk).as("vec_b"))
     // blocked-exact truth: one equi-join per planted pair, exact fused

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Similarity
-import graft.tools.SignLshRecallProbe
 
 /** Pins the MEASURED per-branch recall of the adaptive sign-LSH banding
   * ([[Similarity.signLshSteps]]) against documented floors. Everything

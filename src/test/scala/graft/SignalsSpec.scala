@@ -1145,7 +1145,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("assoc_rules: directed confidence is asymmetric, lift is not") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_ar").toString
     // baskets {1,2}, {1,2}, {1,3}: supp(1)=3, supp(2)=2, supp(1,2)=2
@@ -1164,7 +1163,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("wilson_ci: interval matches the closed-form chain at p=0.25") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_wil").toString
     Seq(300.0, 100.0, 100.0, 100.0).zipWithIndex
@@ -1186,7 +1184,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("graph_jaccard: triangle neighbors give 1/3 similarity each") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_gj").toString
     // two orders, both containing parts 1,2,3 → all three edges at
@@ -1203,7 +1200,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("dp_counts: md5-seeded discrete Laplace replayed by a mini-oracle") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_dp").toString
     val rows = (1 to 7).map(i => (i.toLong, "view")) ++
@@ -1230,7 +1226,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("cohens_kappa: chance-corrected agreement from integer margins") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_kap").toString
     // doc_id % 200 == 0 makes rater2 = rater1 (n11, n00); the two
@@ -1248,7 +1243,6 @@ class SignalsSpec extends AnyFunSuite {
   }
 
   test("t_closeness: ordered EMD against the global length distribution") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Tmp.dir("sig_tc").toString
     // group (en,s1): 4 docs in class 0; group (en,s2): 4 docs in class 9

@@ -24,9 +24,9 @@ import graft.ops.PlanShape
   * negative control with skewJoin disabled returns the same pair count
   * and no skew flags, so the assertion isn't vacuous.
   *
-  * The sf10-scale variant of this probe (tools/skew_probe.scala) runs
-  * a 12k-doc near-dup family against the 500k-doc corpus and records
-  * wall times with the split on/off in PLANS.md.
+  * The sf10-scale measurement of this probe (a 12k-doc near-dup
+  * family against the 500k-doc corpus, wall times with the split
+  * on/off) is recorded in PLANS.md.
   */
 class SkewSpec extends AnyFunSuite {
 
