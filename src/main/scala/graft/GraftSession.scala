@@ -121,8 +121,8 @@ object GraftSession {
     * 2 MB events stream got 32 state partitions (64 KB each), and every
     * partition × every store × every micro-batch paid a full RocksDB
     * checkpoint commit whose cost is fsync-bound, not data-bound
-    * (measured r17: `rocksdbCommitFileSyncLatency` was >90% of commit
-    * time; stream_stream_join 13.5 s → 6.2 s, stream_sessionize
+    * (measured on local[4] at sf0.1: `rocksdbCommitFileSyncLatency`
+    * was >90% of commit time; stream_stream_join 13.5 s → 6.2 s, stream_sessionize
     * 9.1 s → 3.8 s, stream_late_data 6.9 s → 2.7 s at the derived
     * width). The 8 MiB/partition target sits well below the guide's
     * 100 MB–1 GB range precisely so the width ramps up early as data
@@ -172,7 +172,9 @@ object GraftSession {
     */
   def withRocksDbState[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(key)
+    // getAll holds only explicit settings; getOption would return the
+    // registered default and turn an unset key into a set one
+    val prior = s.conf.getAll.get(key)
     s.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body

@@ -19,9 +19,6 @@ sealed trait DateSpec {
   /** Every day covered by the spec, ascending (reference `_date_range`). */
   def days: Seq[LocalDate]
 
-  /** `dd_MM_yyyy` day tokens, one per covered day. */
-  def dayTokens: Seq[String] = days.map(DateSpec.formatDay)
-
   /** Month-glob tokens `*MM_yyyy` covering the spec (reference
     * `_month_prefixes`, report_engine.py:77-86: first-of-month stepping).
     */

@@ -535,8 +535,7 @@ object Similarity {
     * promises: at 100 TB the legs run as independent jobs over `blk=`-
     * partitioned storage (each bounded at (n/B)² pairs, resumable after
     * any failure), and the union of their outputs is the unsharded pair
-    * set row for row (LlmSpec proves the identity; the r16 sf10 probe
-    * measures per-leg walls on the 200k-vector corpus). All legs share
+    * set row for row (LlmSpec proves the identity). All legs share
     * ONE checkpointed normalized-vector frame, so running them
     * leg-by-leg re-pays no normalization.
     */
@@ -583,18 +582,17 @@ object Similarity {
   /** Per-leg pair bound for the auto block schedule: 2³² pairs
     * (≈4.3e9), so the blocked schedule engages above ~93k vectors
     * with legs of ≤ √(2³²) = 65 536 vectors. Sized by a WARM A/B at
-    * sf10 (round 16, S,B,S,B alternated in one JVM, identical
+    * sf10 (S,B,S,B alternated in one JVM, identical
     * pair-set signatures all four runs): at 200k vectors (2e10
     * pairs) the 10-leg plain-join union runs 183.9 s warm vs 322.4 s
     * unsharded (1.75×), and at 100k vectors (5e9 pairs, B=2 → 3
     * legs) it still wins 61.2 s vs 74.6 s (1.22×) — parallel
     * occupancy, not JIT: ~50k-vector plain-join legs keep
     * amortization-sized cartesian partitions AND fill all task slots,
-    * where the unsharded scan's tail partitions straggle. (The r15
-    * calibration that measured blocked LOSING used two leg spellings
-    * since abandoned — forced-broadcast nested loops, 2.25×, no
-    * whole-stage codegen on the conditioned inner iteration; and
-    * small-partition cartesians, 3.1×, per-task build-side
+    * where the unsharded scan's tail partitions straggle. (Two other
+    * leg spellings make blocked LOSE: forced-broadcast nested loops,
+    * 2.25×, no whole-stage codegen on the conditioned inner iteration;
+    * and small-partition cartesians, 3.1×, per-task build-side
     * re-deserialization. The plain-join legs have neither defect.)
     * Below the trip point a single scan stays the measured winner,
     * and each leg above it behaves exactly like a smaller unsharded

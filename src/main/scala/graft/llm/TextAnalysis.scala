@@ -452,7 +452,6 @@ object TextAnalysis {
     // commutes, so collect_list's nondeterministic order cannot change
     // the total (measured at 10× sf0.1: 7.9 s → 2.6 s vs the
     // count-join-recount spelling).
-    val cnt = col("cnt").cast("double")
     docs
       .select(col("doc_id"),
         explode(regexp_extract_all(col("text"), lit("\\S"), lit(0))).as("c"))

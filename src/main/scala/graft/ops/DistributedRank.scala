@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 /** Global row_number / ntile without a single-partition sort.
   *
   * `Window.orderBy(value)` moves EVERY row through one task — the
-  * classic scale killer the round-12 audit removed from
-  * spearman_corr/window_distribution (their inline versions rank a
-  * bounded grid; this helper is the reusable ROW-level variant for
-  * per-customer / per-order rankings). The decomposition:
+  * classic scale killer. spearman_corr/window_distribution rank a
+  * bounded grid inline; this helper is the reusable ROW-level variant
+  * for per-customer / per-order rankings. The decomposition:
   *
   *   rn(row) = #strictly-smaller values            (two-level bucketed
   *             cumulative: a monotone coarse bucket floor(v/width)

@@ -32,14 +32,6 @@ object Skew {
       .groupBy(col(key))
       .agg(sum(col("__partial")).as(s"sum_$value"))
 
-  /** Salted `groupBy(key).count()`. */
-  def saltedCount(df: DataFrame, key: String, salts: Int = 16): DataFrame =
-    df.withColumn("__salt", salt(df, salts))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("cnt"))
-
   /** Skew-mitigated equi-join for a hot-keyed big side against a small
     * (but not broadcast-small) dimension: the big side gets a
     * deterministic salt in [0, salts), the small side is replicated once
@@ -58,17 +50,4 @@ object Skew {
       explode(array((0 until salts).map(i => lit(i.toLong)): _*)))
     bigS.join(smallS, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Skew-safe exact distinct-count, two-phase: phase 1 dedups
-    * (key, value) — the shuffle key INCLUDES the value, so a hot key's
-    * rows already spread across reducers by value hash (no salt needed;
-    * a salt derived from the dedup key itself would be a no-op), with
-    * map-side partial dedup bounding shuffle volume — phase 2 counts per
-    * key, where `count` is algebraic and partial-aggregates map-side.
-    */
-  def twoPhaseCountDistinct(df: DataFrame, key: String, value: String): DataFrame =
-    df.select(col(key), col(value))
-      .dropDuplicates(key, value)
-      .groupBy(col(key))
-      .agg(count(lit(1)).as(s"distinct_$value"))
 }

@@ -9,6 +9,7 @@ import graft.GraftSession
 import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
+import graft.ops.Graphs
 
 /** Round-7 analytics batch: behavioral/time-series operators (cohorts,
   * transitions, time-range frames), deterministic second-moment
@@ -186,7 +187,7 @@ object Analytics {
     // position, so a value-only ordering would let the two engines
     // assign straddling tied rows to different tiles.
     //
-    // Plan shape (round-12 rewrite, round-13 fusion): the naive
+    // Plan shape: the naive
     // spelling — percent_rank()/ntile() OVER (PARTITION BY event_type
     // ORDER BY value, event_id) — hash-partitions on event_type only,
     // so ONE task sorts an entire type's rows: the classic
@@ -633,13 +634,12 @@ object Analytics {
     // counts end to end. The edge dedup is the one corpus-sized shuffle;
     // each degree aggregate re-keys the (already tiny) edge list.
     QueryDef("graph_degree", (s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .select("l_partkey", "l_suppkey").distinct()
-      def hist(side: String, key: String) =
-        e.groupBy(key).agg(count(lit(1)).as("deg"))
+      val e = Graphs.supplierPart(t(s, dir, "lineitem"))
+      def hist(side: String, end: String) =
+        e.groupBy(end).agg(count(lit(1)).as("deg"))
           .groupBy("deg").agg(count(lit(1)).as("nodes"))
           .select(lit(side).as("side"), col("deg"), col("nodes"))
-      hist("part", "l_partkey").unionByName(hist("supp", "l_suppkey"))
+      hist("part", "dst").unionByName(hist("supp", "src"))
         .orderBy("side", "deg")
     },
       """WITH e AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),

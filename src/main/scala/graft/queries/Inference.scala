@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.io.Tables
 import graft.io.Tables.{read => t}
 import graft.llm.Dedup
+import graft.ops.Graphs
 
 /** Round-11 batch: time-series diagnostics and nonparametric inference
   * over the event stream, link prediction on the co-occurrence graph,
@@ -206,7 +207,7 @@ object Inference {
     // the Σ(2r)² ≤ 4n³ and n·Σ ≤ 4n⁴ growth caps the exact window at
     // ~10⁹ rows per group — past that the chk() guard raises rather
     // than silently diverging (the correlation_matrix contract).
-    // The strictly-smaller cumulative is BUCKETED (round-12): a
+    // The strictly-smaller cumulative is BUCKETED: a
     // monotone coarse bucket floor(c/1024) splits each group's grid so
     // the per-group window sorts only the bucket list and each
     // bucket's values — never one task sorting a whole group's grid
@@ -405,7 +406,7 @@ object Inference {
           .as("c1"),
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("c2"))
         .withColumn("t", col("c1") + col("c2"))
-      // bucketed strictly-before cumulative (round-12): the grid's
+      // bucketed strictly-before cumulative: the grid's
       // running sum no longer funnels through one unpartitioned sort
       // when values are near-unique — same exact integers
       val ranked = graft.ops.DistributedRank.withCumBefore(
@@ -895,27 +896,26 @@ object Inference {
     // Per-part weights quantize to pico-units before the pair sum;
     // deg<2 parts drop (no pair, and ln 1 = 0 would divide by zero).
     QueryDef("adamic_adar", (s, dir) => {
-      val e = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-      val degw = e.groupBy("pk").agg(count(lit(1)).as("deg"))
+      val e = Graphs.supplierPart(t(s, dir, "lineitem"))
+      val degw = e.groupBy("dst").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= 2)
-        .select(col("pk"),
+        .select(col("dst"),
           bround(lit(1000000000000.0) / log(col("deg").cast("double")))
             .cast("long").as("w_pico"))
-      // ew materializes ONCE (r18): the pair self-join consumes it on
+      // ew materializes ONCE: the pair self-join consumes it on
       // BOTH sides, and the optimizer rebuilt the scan→distinct→degree
       // chain per consumer (profiled at sf0.1: the distinct's map stage
       // ran twice, ~1 s of duplicated task time). The checkpoint is the
       // weighted edge list — 3 narrow longs per row, a fraction of the
       // lineitem scan it replaces.
-      val ew = e.join(degw, "pk").localCheckpoint()
-      val pa = ew.select(col("pk"), col("sk").as("sa"), col("w_pico"))
-      val pb = ew.select(col("pk"), col("sk").as("sb"))
-      pa.join(pb, Seq("pk")).filter(col("sa") < col("sb"))
+      val ew = e.join(degw, "dst").localCheckpoint()
+      val pa = ew.select(col("dst"), col("src").as("sa"), col("w_pico"))
+      val pb = ew.select(col("dst"), col("src").as("sb"))
+      pa.join(pb, Seq("dst")).filter(col("sa") < col("sb"))
         .groupBy("sa", "sb")
         .agg(count(lit(1)).as("n_common"), sum("w_pico").as("w_sum"))
-        .select(col("sa"), col("sb"), col("n_common"),
+        .select(Graphs.key(col("sa")).as("sa"),
+          Graphs.key(col("sb")).as("sb"), col("n_common"),
           bround(col("w_sum").cast("double") / lit(1000000000000.0), 6)
             .as("aa_score"))
         .orderBy(col("aa_score").desc, col("sa").asc, col("sb").asc)
@@ -1152,7 +1152,7 @@ object Inference {
       val grid = ev.groupBy("event_type", "v")
         .agg(count(lit(1)).as("c"))
         .localCheckpoint() // feeds the per-type AND pooled CDFs
-      // bucketed inclusive CDFs (round-12): per-type and pooled
+      // bucketed inclusive CDFs: per-type and pooled
       // cumulatives through DistributedRank.withCumBefore + own
       // weight — no one-task-per-type sort on a near-unique grid
       val cumT = graft.ops.DistributedRank.withCumBefore(

@@ -9,15 +9,16 @@ import graft.GraftSession
 import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
+import graft.ops.Graphs
 import graft.streaming.StreamRunner
 import graft.streaming.StreamRunner.{Append, Complete, State, Update}
 
-/** Round-10 analytics batch: funnel timing, exact correlation, iterative
-  * connected components, corpus readability, and a nation-pair volume
-  * rollup. House determinism rules apply throughout (see [[Relational]]):
-  * exact integer/decimal accumulation, ONE mirrored IEEE chain at the
-  * end, `bround` ≙ DuckDB `round_even`, total ORDER BY, no raw
-  * timestamps in output.
+/** Funnel timing, exact correlation, iterative connected components,
+  * corpus readability, and a nation-pair volume rollup. House
+  * determinism rules apply throughout (see [[Relational]]): exact
+  * integer/decimal accumulation, ONE mirrored IEEE chain at the end,
+  * `bround` ≙ DuckDB `round_even`, total ORDER BY, no raw timestamps
+  * in output.
   */
 object Insights {
 
@@ -46,18 +47,13 @@ object Insights {
     * hash-matches while the frontier (and the join's stream side)
     * shrinks as components settle. Round 1's frontier is every node
     * (initialization counts as a change). An EMPTY delta ends the
-    * schedule early (round-12): no label changed, so every remaining
+    * schedule early: no label changed, so every remaining
     * round would propagate nothing — the convergence detection a
     * sparse graph's fixed schedule wastes.
     */
   private[graft] def connectedComponents(
       s: SparkSession, dir: String): (DataFrame, Int) = {
-    val e0 = t(s, dir, "lineitem")
-      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-      .distinct()
-      .select((col("sk") * 2).as("src"), (col("pk") * 2 + 1).as("dst"))
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = Graphs.symmetric(Graphs.supplierPart(t(s, dir, "lineitem")))
       .localCheckpoint()
     val lbl0 = edges.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).localCheckpoint()
@@ -67,7 +63,7 @@ object Insights {
       val cand = edges.join(delta0, edges("dst") === delta0("node"))
         .select(edges("src").as("node"), col("lbl"))
         .groupBy("node").agg(min("lbl").as("cand"))
-      // ONE materialization per round (r17): `next` and `delta` both
+      // ONE materialization per round: `next` and `delta` both
       // derive from this join — left unmaterialized, the harness's
       // per-frame checkpoints re-ran the edges⋈delta join + aggregate
       // chain once PER CONSUMER (profiled at sf0.1: 40 driver-side jobs

@@ -1789,7 +1789,6 @@ object LlmQueries {
         val rounds = (1 to 5).map { i =>
           val anti = if (i == 1) ""
             else s" WHERE w NOT IN (SELECT w FROM c${i - 1})"
-          val prev = if (i == 1) "" else s", c${i - 1}"
           val cover = if (i == 1)
             s"""c1 AS MATERIALIZED (SELECT DISTINCT w.w
                |  FROM w JOIN s1 USING (doc_id))""".stripMargin

@@ -9,6 +9,7 @@ import graft.GraftSession
 import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, Ranking, Similarity, TextAnalysis}
+import graft.ops.Graphs
 
 /** Round-8 batch: corpus ranking and scoring (BM25, PMI collocations,
   * char entropy), exact-substring near-dup fingerprints, rendezvous
@@ -395,23 +396,20 @@ object Scoring {
       // the full-table distinct each (measured at 10× sf0.1: 11 s →
       // <2 s). Any multi-pass graph algorithm materializes its edge
       // list; same precedent as dupClusters' iteration state.
-      val e0 = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-        .localCheckpoint()
+      val e0 = Graphs.supplierPart(t(s, dir, "lineitem")).localCheckpoint()
       def pr(sc: org.apache.spark.sql.Column) =
         (lit(150000L) + bround(lit(0.85) * sc.cast("double")).cast("long"))
           .as("pr_micros")
-      val degS = e0.groupBy("sk").agg(count(lit(1)).as("deg"))
-      val degP = e0.groupBy("pk").agg(count(lit(1)).as("deg"))
-      val intoP = e0.join(degS, "sk")
-        .select(col("pk"), bround(lit(1000000.0) / col("deg")).cast("long").as("c"))
-        .groupBy("pk").agg(sum("c").as("sc"))
-        .select(concat(lit("p"), col("pk").cast("string")).as("node"), pr(col("sc")))
-      val intoS = e0.join(degP, "pk")
-        .select(col("sk"), bround(lit(1000000.0) / col("deg")).cast("long").as("c"))
-        .groupBy("sk").agg(sum("c").as("sc"))
-        .select(concat(lit("s"), col("sk").cast("string")).as("node"), pr(col("sc")))
+      val degS = e0.groupBy("src").agg(count(lit(1)).as("deg"))
+      val degP = e0.groupBy("dst").agg(count(lit(1)).as("deg"))
+      val intoP = e0.join(degS, "src")
+        .select(col("dst"), bround(lit(1000000.0) / col("deg")).cast("long").as("c"))
+        .groupBy("dst").agg(sum("c").as("sc"))
+        .select(Graphs.label(col("dst")).as("node"), pr(col("sc")))
+      val intoS = e0.join(degP, "dst")
+        .select(col("src"), bround(lit(1000000.0) / col("deg")).cast("long").as("c"))
+        .groupBy("src").agg(sum("c").as("sc"))
+        .select(Graphs.label(col("src")).as("node"), pr(col("sc")))
       intoP.unionByName(intoS)
         .orderBy(col("pr_micros").desc, col("node"))
         .limit(20)
@@ -449,32 +447,30 @@ object Scoring {
     // integer keys separately, labels appear only in the readout.
     QueryDef("ppr_seeded", (s, dir) => {
       import s.implicits._
-      val e0 = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
+      val e0 = Graphs.supplierPart(t(s, dir, "lineitem"))
         .localCheckpoint() // degree aggregates + three propagation joins
-      val degS = e0.groupBy("sk").agg(count(lit(1)).as("degs"))
-      val degP = e0.groupBy("pk").agg(count(lit(1)).as("degp"))
+      val seed = Graphs.supplier(lit(1L))
+      val degS = e0.groupBy("src").agg(count(lit(1)).as("degs"))
+      val degP = e0.groupBy("dst").agg(count(lit(1)).as("degp"))
       // round 1: mass leaves the seed; restart keeps 150000 on it
-      val p1p = e0.join(degS, "sk").filter(col("sk") === 1)
-        .select(col("pk"),
+      val p1p = e0.join(degS, "src").filter(col("src") === seed)
+        .select(col("dst"),
           bround(lit(850000.0) / col("degs")).cast("long").as("m"))
       // round 2, part side: the seed's retained 150000 fans out again
-      val p2p = e0.join(degS, "sk").filter(col("sk") === 1)
-        .select(col("pk"),
+      val p2p = e0.join(degS, "src").filter(col("src") === seed)
+        .select(col("dst"),
           bround(lit(150000L) * lit(0.85) / col("degs")).cast("long")
             .as("c"))
-        .groupBy("pk").agg(sum("c").as("m"))
+        .groupBy("dst").agg(sum("c").as("m"))
       // round 2, supplier side: round-1 part mass + the seed restart
-      val p2s = e0.join(p1p, "pk").join(degP, "pk")
-        .select(col("sk"),
+      val p2s = e0.join(p1p, "dst").join(degP, "dst")
+        .select(col("src"),
           bround(col("m") * lit(0.85) / col("degp")).cast("long").as("c"))
-        .unionByName(Seq((1L, 150000L)).toDF("sk", "c"))
-        .groupBy("sk").agg(sum("c").as("m"))
-      p2s.select(concat(lit("s"), col("sk").cast("string")).as("node"),
+        .unionByName(Seq(150000L).toDF("c").select(seed.as("src"), col("c")))
+        .groupBy("src").agg(sum("c").as("m"))
+      p2s.select(Graphs.label(col("src")).as("node"),
           col("m").as("ppr_micros"))
-        .unionByName(p2p.select(
-          concat(lit("p"), col("pk").cast("string")).as("node"),
+        .unionByName(p2p.select(Graphs.label(col("dst")).as("node"),
           col("m").as("ppr_micros")))
         .orderBy(col("ppr_micros").desc, col("node"))
         .limit(20)
@@ -516,23 +512,18 @@ object Scoring {
     // consumers), then keyed aggregate→join→aggregate chains — the
     // same shuffle budget as one sparse-matrix-squared multiply.
     QueryDef("hits_scores", (s, dir) => {
-      val e0 = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-        .distinct()
-        .localCheckpoint()
-      val a1 = e0.groupBy("pk").agg(count(lit(1)).as("a1"))
-      val h1 = e0.join(a1, "pk")
-        .groupBy("sk").agg(sum("a1").as("h1"))
-      val a2 = e0.join(h1, "sk")
-        .groupBy("pk").agg(sum("h1").as("a2"))
+      val e0 = Graphs.supplierPart(t(s, dir, "lineitem")).localCheckpoint()
+      val a1 = e0.groupBy("dst").agg(count(lit(1)).as("a1"))
+      val h1 = e0.join(a1, "dst")
+        .groupBy("src").agg(sum("a1").as("h1"))
+      val a2 = e0.join(h1, "src")
+        .groupBy("dst").agg(sum("h1").as("a2"))
       val hubs = h1
-        .select(lit("hub").as("kind"),
-          concat(lit("s"), col("sk").cast("string")).as("node"),
+        .select(lit("hub").as("kind"), Graphs.label(col("src")).as("node"),
           col("h1").as("score"))
         .orderBy(col("score").desc, col("node")).limit(20)
       val auths = a2
-        .select(lit("auth").as("kind"),
-          concat(lit("p"), col("pk").cast("string")).as("node"),
+        .select(lit("auth").as("kind"), Graphs.label(col("dst")).as("node"),
           col("a2").as("score"))
         .orderBy(col("score").desc, col("node")).limit(20)
       auths.unionByName(hubs)

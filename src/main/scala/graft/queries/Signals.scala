@@ -8,13 +8,14 @@ import graft.GraftSession
 import graft.io.Tables
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, Ranking, TextAnalysis}
+import graft.ops.Graphs
 
-/** Round-8 (cont.) batch: per-entity signal smoothing and corpus
-  * vectorization/quality signals — bounded-window EWMA, the feature
-  * hashing trick, interpolated bigram LM scoring (CCNet-style
-  * perplexity filtering), and an exact prefix-filtered set-similarity
-  * join (PPJoin) as the lossless alternative to the LSH near-dup
-  * candidate generators.
+/** Per-entity signal smoothing and corpus vectorization/quality
+  * signals — bounded-window EWMA, the feature hashing trick,
+  * interpolated bigram LM scoring (CCNet-style perplexity filtering),
+  * and an exact prefix-filtered set-similarity join (PPJoin) as the
+  * lossless alternative to the LSH near-dup candidate generators —
+  * plus most of the lineitem graph queries, over [[Graphs]]' edges.
   *
   * Same determinism contract as [[Relational]]/[[Analytics]]/[[Scoring]]:
   * integer quantization before any cross-row float sum, fixed IEEE
@@ -64,6 +65,13 @@ object Signals {
       .orderBy("event_type")
   }
 
+  /** The traversal seed: the smallest supplier id of a symmetric
+    * edge list (the oracles' `'s' || min(l_suppkey)`).
+    */
+  private def minSupplier(edges: DataFrame): Long =
+    edges.filter(Graphs.isSupplier(col("src"))).agg(min("src")).head()
+      .getLong(0)
+
   /** [[defs]]' `bfs_levels` body, returning (result, expansion
     * rounds actually RUN) so SignalsSpec can gate the early exit: the
     * level-4 schedule stops as soon as a frontier comes back empty
@@ -75,20 +83,13 @@ object Signals {
     * frontier can never add rows.
     */
   private[graft] def bfsLevels(s: SparkSession, dir: String): (DataFrame, Int) = {
-    val li = t(s, dir, "lineitem")
-    val e0 = li.select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-      .distinct()
-      .select(concat(lit("s"), col("sk").cast("string")).as("src"),
-        concat(lit("p"), col("pk").cast("string")).as("dst"))
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = Graphs.symmetric(Graphs.supplierPart(t(s, dir, "lineitem")))
       .localCheckpoint()
-    val seed = "s" + li.agg(min("l_suppkey")).head().getLong(0)
     val visited0 = s.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(seed, 0)),
+      java.util.List.of(org.apache.spark.sql.Row(minSupplier(edges), 0)),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.StringType, nullable = false),
+          org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("lvl",
           org.apache.spark.sql.types.IntegerType, nullable = false))))
     // broadcast the FRONTIER (≤ node-count rows), never shuffle the
@@ -140,19 +141,15 @@ object Signals {
     * empty rounds add nothing on either engine.
     */
   private[graft] def misLuby(s: SparkSession, dir: String): (DataFrame, Int) = {
-    val li = t(s, dir, "lineitem")
-    val e0 = li.select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
-      .distinct()
-      .select(concat(lit("s"), col("sk").cast("string")).as("src"),
-        concat(lit("p"), col("pk").cast("string")).as("dst"))
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = Graphs.symmetric(Graphs.supplierPart(t(s, dir, "lineitem")))
       .localCheckpoint()
-    def pkeyOf(node: Column): Column = concat(
-      lpad(graft.llm.Dedup.hashBucket(concat(lit("mis:"), node),
-        1000000000L).cast("string"), 10, "0"), lit(":"), node)
+    // the priority hashes and compares the s<k>/p<k> label, as the
+    // oracle does; every join below keys on the long id
+    def pkeyOf(label: Column): Column = concat(
+      lpad(graft.llm.Dedup.hashBucket(concat(lit("mis:"), label),
+        1000000000L).cast("string"), 10, "0"), lit(":"), label)
     val und0 = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), pkeyOf(col("node")).as("pkey"))
+      .select(col("node"), pkeyOf(Graphs.label(col("node"))).as("pkey"))
       .localCheckpoint()
     // The in/out accumulators live OUTSIDE the iteration state: as
     // state frames, every round's union-with-delta would be re-
@@ -215,7 +212,7 @@ object Signals {
     def prOf(c: Column): Column = substring(c, 1, 10).cast("long")
     val inStats = inAcc.agg(count(lit(1)).as("n_in"),
       sum(prOf(col("pkey"))).as("in_pr_sum"),
-      sum(when(col("node").startsWith("s"), 1L).otherwise(0L))
+      sum(when(Graphs.isSupplier(col("node")), 1L).otherwise(0L))
         .as("in_suppliers"))
     val outStats = outAcc.agg(count(lit(1)).as("n_out"))
     val undStats = und.agg(count(lit(1)).as("n_undecided"))
@@ -243,23 +240,14 @@ object Signals {
     * matches.
     */
   private[graft] def ssspWeighted(s: SparkSession, dir: String): (DataFrame, Int) = {
-    val li = t(s, dir, "lineitem")
-    val ew = li.select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"),
-        col("l_quantity").cast("long").as("q"))
-      .groupBy("sk", "pk").agg(min("q").as("w"))
-    val edges = ew.select(
-        concat(lit("s"), col("sk").cast("string")).as("src"),
-        concat(lit("p"), col("pk").cast("string")).as("dst"), col("w"))
-      .unionByName(ew.select(
-        concat(lit("p"), col("pk").cast("string")).as("src"),
-        concat(lit("s"), col("sk").cast("string")).as("dst"), col("w")))
+    val edges = Graphs.symmetric(Graphs.weightedSupplierPart(
+        t(s, dir, "lineitem"), col("l_quantity").cast("long")))
       .localCheckpoint()
-    val seed = "s" + li.agg(min("l_suppkey")).head().getLong(0)
     val dist0 = s.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(seed, 0L)),
+      java.util.List.of(org.apache.spark.sql.Row(minSupplier(edges), 0L)),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.StringType, nullable = false),
+          org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("dist",
           org.apache.spark.sql.types.LongType, nullable = false))))
     val (st, rounds) = graft.ops.IterateUntilFixed.frontier(
@@ -289,25 +277,18 @@ object Signals {
   /** Support-2 co-purchase part graph and 3 synchronous min-tie LPA
     * rounds — shared by `label_propagation` (community sizes) and
     * `modularity_score` (community quality). Returns (canonical
-    * p1<p2 edge list, symmetric (v,u) edge list, final (v, label)).
+    * p1<p2 edge list, final (v, label)), both in part ids: a label is
+    * its community's smallest id, and readouts print its [[Graphs.key]].
     * See the `label_propagation` registration for the determinism and
     * scale rationale.
     */
   private def lpaLabels(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val op = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct()
-    val und = op.select(col("o"), col("p").as("p1"))
-      .join(op.select(col("o"), col("p").as("p2")), Seq("o"))
-      .filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("p1", "p2")
-      .localCheckpoint() // consumed by sym edges + modularity's 3 readers
-    val e = und.select(col("p1").as("v"), col("p2").as("u"))
-      .unionByName(und.select(col("p2").as("v"), col("p1").as("u")))
+      : (DataFrame, DataFrame) = {
+    val und = Graphs.coPurchase(t(s, dir, "lineitem"), 2)
+    val e = Graphs.symmetric(und, "p1", "p2")
+      .select(col("p1").as("v"), col("p2").as("u"))
     val labels0 = e.select(col("v")).distinct()
-      .withColumn("label", col("v").cast("long"))
+      .withColumn("label", col("v"))
     val labels = graft.ops.IterateUntilFixed.fixed(
       Map("labels" -> labels0), 3) { (st, _) =>
       val cnt = e
@@ -318,7 +299,7 @@ object Signals {
           (col("label") * lit(-1L)).as("nl"))).as("m"))
         .select(col("v"), (col("m.nl") * lit(-1L)).as("label")))
     }("labels")
-    (und, e, labels)
+    (und, labels)
   }
 
   /** Shared DuckDB CTE chain for the LPA family: support-2 co-purchase
@@ -1327,16 +1308,7 @@ object Signals {
     // standard distributed triangle shape (two keyed equi-joins, no
     // per-node neighbor lists).
     QueryDef("triangle_count", (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("p1"))
-        .join(op.select(col("o"), col("p").as("p2")), Seq("o"))
-        .filter(col("p1") < col("p2"))
-        .groupBy("p1", "p2").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint() // three consumers: two closure sides + degrees
+      val e = Graphs.coPurchase(t(s, dir, "lineitem"), 2)
       val deg = e.select(col("p1").as("v")).unionByName(
           e.select(col("p2").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -1388,21 +1360,13 @@ object Signals {
     // shows as a repeated row, and a production full peel loops the same
     // body until the count fixpoints.
     QueryDef("kcore_decompose", (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
       def stats(rnd: Int, df: DataFrame): DataFrame =
         df.select(col("p1").as("v"))
           .unionByName(df.select(col("p2").as("v")))
           .agg(countDistinct("v").as("n_vertices"),
             (count(lit(1)) / 2).cast("long").as("n_edges"))
           .select(lit(rnd).as("rnd"), col("n_vertices"), col("n_edges"))
-      val e0 = op.select(col("o"), col("p").as("p1"))
-        .join(op.select(col("o"), col("p").as("p2")), Seq("o"))
-        .filter(col("p1") < col("p2"))
-        .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2).select("p1", "p2")
-        .localCheckpoint()
+      val e0 = Graphs.coPurchase(t(s, dir, "lineitem"), 2)
       // trajectory rows accumulate driver-side over the checkpointed
       // per-round edge sets (the mis_luby accumulator pattern): as a
       // state frame, `out` would be re-checkpointed union-so-far each
@@ -1465,15 +1429,7 @@ object Signals {
     // contract: convergence shows as a repeated trajectory row), state
     // localCheckpointed per round.
     QueryDef("ktruss_edges", (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e0 = op.select(col("o"), col("p").as("p1"))
-        .join(op.select(col("o"), col("p").as("p2")), Seq("o"))
-        .filter(col("p1") < col("p2"))
-        .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2).select("p1", "p2")
-        .localCheckpoint()
+      val e0 = Graphs.coPurchase(t(s, dir, "lineitem"), 2)
       // trajectory rows accumulate driver-side (the kcore pattern)
       val rows = scala.collection.mutable.ArrayBuffer[DataFrame]()
       graft.ops.IterateUntilFixed.fixed(Map("e" -> e0), 3) { (st, r) =>
@@ -1551,8 +1507,8 @@ object Signals {
     // and per-round labels localCheckpoint (the kcore/pagerank
     // precedent for iteration state).
     QueryDef("label_propagation", (s, dir) => {
-      val (_, _, labels) = lpaLabels(s, dir)
-      labels.groupBy("label")
+      val (_, labels) = lpaLabels(s, dir)
+      labels.groupBy(Graphs.key(col("label")).as("label"))
         .agg(count(lit(1)).as("members"))
         .orderBy(col("members").desc, col("label"))
         .limit(20)
@@ -1576,7 +1532,7 @@ object Signals {
     // list + three keyed aggregates; community count ≤ vertex count,
     // everything after the joins is community-sized.
     QueryDef("modularity_score", (s, dir) => {
-      val (und, _, labels) = lpaLabels(s, dir)
+      val (und, labels) = lpaLabels(s, dir)
       val mTot = und.agg(count(lit(1)).as("m"))
       val intra = und
         .join(labels.select(col("v").as("p1"), col("label").as("la")), "p1")
@@ -1599,7 +1555,7 @@ object Signals {
       val contrib = vstats
         .join(intra, Seq("label"), "left")
         .crossJoin(broadcast(mTot))
-        .select(col("label"), col("members"),
+        .select(Graphs.key(col("label")).as("label"), col("members"),
           coalesce(col("intra_edges"), lit(0L)).as("intra_edges"),
           col("degree_sum"),
           bround((coalesce(col("intra_edges"), lit(0L)).cast("double") / md
@@ -2304,18 +2260,9 @@ object Signals {
     // exclusion, no second join). Support ≥ 2 keeps the projected
     // graph sparse exactly as triangle_count does.
     QueryDef("graph_jaccard", (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("p1"))
-        .join(op.select(col("o"), col("p").as("p2")), Seq("o"))
-        .filter(col("p1") < col("p2"))
-        .groupBy("p1", "p2").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint() // wedge join + degree table share it
-      val nbr = e.select(col("p1").as("v"), col("p2").as("w"))
-        .unionByName(e.select(col("p2").as("v"), col("p1").as("w")))
+      val nbr = Graphs.symmetric(Graphs.coPurchase(t(s, dir, "lineitem"), 2),
+          "p1", "p2")
+        .select(col("p1").as("v"), col("p2").as("w"))
       val deg = nbr.groupBy("v").agg(count(lit(1)).as("deg"))
       val common = nbr.select(col("w").as("mid"), col("v").as("a"))
         .join(nbr.select(col("w").as("mid"), col("v").as("b")),
@@ -2325,8 +2272,8 @@ object Signals {
       common
         .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
         .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
-        .select(col("a"), col("b"), col("common"),
-          (col("da") + col("db") - col("common")).as("uni"),
+        .select(Graphs.key(col("a")).as("a"), Graphs.key(col("b")).as("b"),
+          col("common"), (col("da") + col("db") - col("common")).as("uni"),
           bround(col("common").cast("double") * lit(1000000.0)
             / (col("da") + col("db") - col("common")).cast("double"))
             .cast("long").as("jac_micros"))
@@ -2362,9 +2309,7 @@ object Signals {
     // broadcast-sized per-part support lookups. Ratios quantize to
     // micros; top 25 by lift is TakeOrdered.
     QueryDef("assoc_rules", (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
+      val op = Graphs.orderParts(t(s, dir, "lineitem"))
         .localCheckpoint() // basket count, item supports, pair join
       val nOrders = op.agg(countDistinct("o").as("n_orders"))
       val supp = op.groupBy("p").agg(count(lit(1)).as("sp"))
@@ -2377,7 +2322,8 @@ object Signals {
         .join(supp.select(col("p").as("a"), col("sp").as("sa")), Seq("a"))
         .join(supp.select(col("p").as("b"), col("sp").as("sb")), Seq("b"))
         .crossJoin(broadcast(nOrders))
-        .select(col("a"), col("b"), col("sab"), col("sa"), col("sb"),
+        .select(Graphs.key(col("a")).as("a"), Graphs.key(col("b")).as("b"),
+          col("sab"), col("sa"), col("sb"),
           bround(col("sab").cast("double") * lit(1000000.0)
             / col("sa").cast("double")).cast("long").as("conf_micros"),
           bround(col("n_orders").cast("double")
@@ -3228,9 +3174,8 @@ object Signals {
     // order-independent, and the final α is one mirrored chain.
     QueryDef("powerlaw_alpha", (s, dir) => {
       val dmin = 2.0
-      val deg = t(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_partkey")).distinct()
-        .groupBy("l_suppkey").agg(count(lit(1)).as("d"))
+      val deg = Graphs.supplierPart(t(s, dir, "lineitem"))
+        .groupBy("src").agg(count(lit(1)).as("d"))
       deg.filter(col("d") >= dmin)
         .select(bround(log(col("d").cast("double") / lit(dmin - 0.5))
           * lit(1000000000000.0)).cast("long").as("l_picos"))

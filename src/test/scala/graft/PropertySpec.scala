@@ -290,7 +290,7 @@ class PropertySpec extends AnyFunSuite {
       val cut = (tw + 1) / 2
       var cum = 0L
       var med = 0L
-      grid.find { case (v, w) => cum += w; cum >= cut }
+      grid.find { case (_, w) => cum += w; cum >= cut }
         .foreach { case (v, _) => med = v }
       g -> ((tw, grid.size.toLong, med))
     }

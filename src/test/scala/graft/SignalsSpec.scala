@@ -218,7 +218,7 @@ class SignalsSpec extends AnyFunSuite {
     }
     val expected = (for { id <- 0L to 19L; i <- 0 to 2 }
       yield partner(i, id)).zip(
-        for { id <- 0L to 19L; i <- 0 to 2 } yield id)
+        for { id <- 0L to 19L; _ <- 0 to 2 } yield id)
       .count { case (p, id) => p != id }
     assert(out.length === 1)
     assert(out(0).getAs[String]("lang") === "en")

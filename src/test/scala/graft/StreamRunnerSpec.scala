@@ -67,6 +67,18 @@ class StreamRunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("a run leaves an unset state-store provider unset") {
+    // a fresh session: other suites set the key on the shared one
+    val session = spark.newSession()
+    session.conf.unset(providerKey)
+    val src = batchedTable(Seq(Seq("a" -> 1L, "b" -> 2L)))
+    val df = Tables.stream(session, src).groupBy("k")
+      .agg(count(lit(1)).as("n"))
+    StreamRunner.run(session, df, StreamRunner.Complete, "runner_unset")
+      .collect()
+    assert(!session.conf.getAll.contains(providerKey))
+  }
+
   test("update mode keeps each key's last update when the source runs " +
       "in several micro-batches") {
     // running per-key counts: a's last update is 3 (batch 2), b's is 2
