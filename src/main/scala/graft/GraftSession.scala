@@ -4,7 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.io.Scratch
 
-/** Standard session configuration for the graft engine.
+/** Standard session configuration for the graft engine, and the only
+  * code under `src/main` that writes session conf: [[builder]] and
+  * [[tune]] apply the defaults, and every scoped setting (per-query
+  * overlays, stream widths, the state-store provider) goes through
+  * [[withConf]], which restores explicit settings only, so a key that
+  * was unset before a scope is unset after it.
   *
   * - `spark.sql.ansi.enabled=false`: the funnel sources are string-typed CSVs
   *   cast at query time (`CAST(x AS DOUBLE)`, reference
@@ -36,17 +41,25 @@ object GraftSession {
       .master(master)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(Defaults)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", Scratch.fresh("spark-warehouse"))
     sys.env.get("SPARK_GRAFT_JARS").fold(b)(b.config("spark.jars", _))
   }
 
-  /** Apply graft defaults to an externally created session (e.g. the
-    * driver's); runtime-settable confs only.
+  /** The runtime-settable graft defaults, set by [[builder]] and by
+    * [[tune]].
+    */
+  private val Defaults: Map[String, String] = Map(
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Apply [[Defaults]] to a session created elsewhere (e.g. by a host
+    * application). Every registered build applies it itself
+    * ([[SparkEntry.registry]]); a caller that drives operators directly
+    * on such a session calls it first.
     *
     * `nanosAsLong`: kept as a compatibility guard — if a dataset carries
     * TIMESTAMP(NANOS) (as the harness's `events.parquet` once did), Spark 4
@@ -56,9 +69,7 @@ object GraftSession {
     * physical precision (see [[graft.io.Tables.events]]).
     */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Defaults.foreach { case (k, v) => spark.conf.set(k, v) }
     // size shuffles to the actual core count when the caller's session
     // kept the 200 default (builder() already does this for our mains)
     if (spark.conf.get("spark.sql.shuffle.partitions") == "200")
@@ -149,12 +160,9 @@ object GraftSession {
     val bytes =
       org.apache.spark.sql.graftbridge.GraftBridge.streamSourceBytes(src)
     if (bytes < 0) body
-    else {
-      val key = "spark.sql.shuffle.partitions"
-      val prior = s.conf.get(key)
-      s.conf.set(key, streamStateWidth(s, bytes).toString)
-      try body finally s.conf.set(key, prior)
-    }
+    else withConf(s,
+      "spark.sql.shuffle.partitions" -> streamStateWidth(s, bytes).toString)(
+      body)
   }
 
   /** Run `body` (which starts and drains streaming queries on `s`) with
@@ -170,17 +178,26 @@ object GraftSession {
     * session-wide default) keeps spec-level negative controls able to
     * exercise the heap provider deliberately.
     */
-  def withRocksDbState[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // getAll holds only explicit settings; getOption would return the
-    // registered default and turn an unset key into a set one
-    val prior = s.conf.getAll.get(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  def withRocksDbState[A](s: SparkSession)(body: => A): A =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+      body)
+
+  /** Run `body` with each of `kvs` set on `s`, then restore every key,
+    * also when `body` throws: a key set explicitly before goes back to
+    * its value, an unset key goes back to unset. The prior state comes
+    * from `getAll`, which holds only explicit settings; `get`/`getOption`
+    * return the registered default for an unset key, and writing that
+    * back would leave the key set. Nested scopes unwind innermost first.
+    */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val explicit = s.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> explicit.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    finally prior.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 }

@@ -18,13 +18,17 @@ object SparkEntry {
     * table); driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame =
-    FunnelOverEvents.query(spark, "/root/testdata/sf0.001")
+    queries("funnel_table")(spark, "/root/testdata/sf0.001")
 
-  /** Every registered query, each name once (see [[QueryDef.registry]]). */
+  /** Every registered query, each name once (see [[QueryDef.registry]]).
+    * Each build first applies the graft defaults ([[GraftSession.tune]])
+    * to the session it is given, so no builder or table reader does.
+    */
   lazy val registry: Seq[QueryDef] = QueryDef.registry(
     Relational.defs, LlmQueries.defs, Analytics.defs, Scoring.defs,
     Signals.defs, Insights.defs, Inference.defs, Curation.defs,
     FunnelOverEvents.defs, CsvFunnelReport.defs)
+    .map(d => d.copy(build = (s, dir) => d.build(GraftSession.tune(s), dir)))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -65,17 +69,8 @@ object SparkEntry {
     * never leaks its overlay into the next one's timed slot.
     */
   def withOverlay[A](spark: SparkSession, name: String)(body: => A): A =
-    confOverlays.get(name) match {
-      case None => body
-      case Some(kvs) =>
-        val prior = kvs.keys.map(k => k -> spark.conf.getOption(k)).toSeq
-        kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try body
-        finally prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-    }
+    GraftSession.withConf(spark,
+      confOverlays.getOrElse(name, Map.empty).toSeq: _*)(body)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */

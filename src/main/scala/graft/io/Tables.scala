@@ -5,21 +5,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.GraftSession
-
 /** The one reader of the registered queries' parquet tables: every
   * `(dir, name)` table and every scratch path becomes a DataFrame here,
   * batch or streaming. Schemas always come from the file footers. The
   * only thing kept between calls is [[parquetRowCount]]'s per-path row
-  * count; no schema, plan or data is cached.
+  * count; no schema, plan or data is cached. Reads take the session as
+  * given: the graft defaults (non-ANSI casts, UTC, `nanosAsLong`) are
+  * applied once per registered build by [[graft.SparkEntry.registry]],
+  * not per read.
   */
 object Tables {
 
-  /** `dir/name.parquet` under the graft session defaults. */
-  def read(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftSession.tune(s)
+  /** `dir/name.parquet`. */
+  def read(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** `events` with `ts` normalized to one canonical TIMESTAMP type. */
   def events(s: SparkSession, dir: String): DataFrame =
@@ -34,7 +33,6 @@ object Tables {
     */
   def stream(s: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    GraftSession.tune(s)
     val rd = s.readStream.schema(s.read.parquet(path).schema)
     val limited = maxFilesPerTrigger
       .map(n => rd.option("maxFilesPerTrigger", n.toString)).getOrElse(rd)
@@ -52,7 +50,7 @@ object Tables {
   /** Branches on the `ts` type the footer actually declares, so readers
     * keep working when the data's physical precision moves:
     *  - TIMESTAMP(NANOS) arrives as raw Long nanos under the session's
-    *    `nanosAsLong` (see [[GraftSession.tune]]) — integer `div` keeps
+    *    `nanosAsLong` (see [[graft.GraftSession.tune]]) — integer `div` keeps
     *    full precision (double division would lose bits above 2^53);
     *  - TIMESTAMP(MICROS) without isAdjustedToUTC arrives as
     *    TIMESTAMP_NTZ — under the UTC session, casting to TIMESTAMP

@@ -1290,11 +1290,9 @@ object Analytics {
       daily.withColumn("cnt",
         when(col("d") >= 15, lit(0L)).otherwise(col("cnt")))
         .write.mode("overwrite").partitionBy("d").parquet(path)
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try daily.filter(col("d") >= 15)
-        .write.mode("overwrite").partitionBy("d").parquet(path)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      daily.filter(col("d") >= 15).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").partitionBy("d")
+        .parquet(path)
       s.read.parquet(path)
         .select("d", "event_type", "cnt").orderBy("d", "event_type")
     },

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.GraftSession
 import graft.core.{DateSpec, Schemas}
 import graft.engine.FunnelTable
 import graft.io.{FunnelCsvFixture, FunnelSources, Scratch}
@@ -41,7 +40,6 @@ object CsvFunnelReport {
     * [[FunnelTable.buildFromRaw]].
     */
   def query(s: SparkSession, ignoredSfDir: String): DataFrame = {
-    GraftSession.tune(s)
     val base = fixture()
     val spec = DateSpec.parse(dateSpecText)
     val e = Some(entity)
@@ -75,7 +73,6 @@ object CsvFunnelReport {
     * CSV result.
     */
   def partitionedQuery(s: SparkSession, ignoredSfDir: String): DataFrame = {
-    GraftSession.tune(s)
     val base = fixture()
     val dir = partitionedStages(s, base)
     val spec = DateSpec.parse(dateSpecText)
@@ -99,7 +96,6 @@ object CsvFunnelReport {
     */
   def lineageQuery(s: SparkSession, ignoredSfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    GraftSession.tune(s)
     val base = fixture()
     val days = DateSpec.parse(dateSpecText).days
     val paths = days.map { d =>

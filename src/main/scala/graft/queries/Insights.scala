@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftSession
 import graft.io.{Scratch, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
@@ -114,7 +113,6 @@ object Insights {
   private[graft] def streamStreamJoinDaily(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftSession.tune(s)
     val scratch = Scratch.once(Scratch.dir(dir, "ssj_sentinel")) { tmp =>
       Seq((-1L, "view"), (-2L, "purchase")).toDF("user_id", "event_type")
         .select(col("user_id"),
@@ -1267,7 +1265,6 @@ object Insights {
     // DynamicPruningExpression in the fact scan is asserted in
     // PlanSpec; the values must match the plain join oracle.
     QueryDef("dpp_join", (s, dir) => {
-      GraftSession.tune(s)
       val p = Scratch.once(Scratch.dir(dir, "dpp")) { tmp =>
         Tables.events(s, dir)
           .select(to_date(col("ts")).as("day"), col("value"))
@@ -1448,7 +1445,6 @@ object Insights {
     // rule (the synthetic_source trick) — it never parses the file, so
     // only correct quarantine semantics can match it.
     QueryDef("corrupt_records", (s, dir) => {
-      GraftSession.tune(s)
       val n = 10000
       val p = Scratch.once(Scratch.dir(dir, "corrupt")) { tmp =>
         val w = new java.io.PrintWriter(
@@ -1530,7 +1526,6 @@ object Insights {
     // construction, the same reason a 100 TB interchange layer never
     // ships raw doubles through text.
     QueryDef("federated_union", (s, dir) => {
-      GraftSession.tune(s)
       val canon = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           bround(col("value") * lit(1000000.0)).cast("long").as("vm"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftSession
 import graft.io.Scratch
 import graft.io.Tables.{events, read => t}
 
@@ -571,7 +570,6 @@ object Relational {
     // connector — only correct pushdown-plus-residual semantics can
     // match it.
     QueryDef("synthetic_source", (s, dir) => {
-      GraftSession.tune(s)
       s.read.format("graft.sources.SequenceSource")
         .option("start", "0").option("end", "1000000")
         .option("slices", "32")

@@ -23,11 +23,9 @@ class BucketingSpec extends AnyFunSuite {
     Bucketing.writeBucketed(lineitem, "lineitem_b", s"$dir/lineitem", "o_orderkey", 8)
 
     // force the join path (tiny tables would broadcast otherwise)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val joined = Bucketing.coLocatedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan.take(400))
@@ -38,8 +36,6 @@ class BucketingSpec extends AnyFunSuite {
       val expected = orders.join(lineitem, "o_orderkey").count()
       assert(cnt === expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }

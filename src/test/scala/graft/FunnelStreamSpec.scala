@@ -284,39 +284,31 @@ class FunnelStreamSpec extends AnyFunSuite {
     // accumulation contract as the mapGroupsWithState test above.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // TimeMode.None here (ttlMillis = 0): under ProcessingTime the
-    // engine keeps running empty batches to advance the TTL clock, so
-    // processAllAvailable never quiesces in a test harness
-    val input = MemoryStream[FunnelStream.UserEvent]
-    val q = FunnelStream.userFunnelStateV2(input.toDS())
-      .writeStream.format("memory").queryName("funnel_tws")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        FunnelStream.UserEvent(1L, ts(1, 1), "view"),
-        FunnelStream.UserEvent(1L, ts(1, 2), "view"),
-        FunnelStream.UserEvent(2L, ts(1, 1), "view"))
-      q.processAllAvailable()
-      input.addData(FunnelStream.UserEvent(1L, ts(1, 3), "purchase"))
-      q.processAllAvailable()
-      val last = spark.table("funnel_tws")
-        .groupBy("user_id")
-        .agg(max("events").as("events"), max("purchases").as("purchases"),
-          max("converted").as("converted"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
-        .toMap
-      assert(last(1L) === ((3L, 1L, true)))
-      assert(last(2L) === ((1L, 0L, false)))
-    } finally {
-      q.stop()
-      prior match {
-        case Some(v0) => spark.conf.set(provider, v0)
-        case None => spark.conf.unset(provider)
-      }
+    GraftSession.withRocksDbState(spark) {
+      // TimeMode.None here (ttlMillis = 0): under ProcessingTime the
+      // engine keeps running empty batches to advance the TTL clock, so
+      // processAllAvailable never quiesces in a test harness
+      val input = MemoryStream[FunnelStream.UserEvent]
+      val q = FunnelStream.userFunnelStateV2(input.toDS())
+        .writeStream.format("memory").queryName("funnel_tws")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        input.addData(
+          FunnelStream.UserEvent(1L, ts(1, 1), "view"),
+          FunnelStream.UserEvent(1L, ts(1, 2), "view"),
+          FunnelStream.UserEvent(2L, ts(1, 1), "view"))
+        q.processAllAvailable()
+        input.addData(FunnelStream.UserEvent(1L, ts(1, 3), "purchase"))
+        q.processAllAvailable()
+        val last = spark.table("funnel_tws")
+          .groupBy("user_id")
+          .agg(max("events").as("events"), max("purchases").as("purchases"),
+            max("converted").as("converted"))
+          .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
+          .toMap
+        assert(last(1L) === ((3L, 1L, true)))
+        assert(last(2L) === ((1L, 0L, false)))
+      } finally q.stop()
     }
   }
 
@@ -333,62 +325,54 @@ class FunnelStreamSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = Tmp.dir("tws_ckpt").toString
-    val input = MemoryStream[FunnelStream.UserEvent]
-    // foreachBatch: the one Update-mode sink that supports checkpoint
-    // recovery (memory sink refuses to restart from a checkpoint)
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Long, Long, Boolean)]()
-    def start() = FunnelStream.userFunnelStateV2(input.toDS())
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[FunnelStream.UserFunnelUpdate],
-            _: Long) =>
-          df.collect().foreach(u =>
-            out.add((u.user_id, u.events, u.purchases, u.converted)))
-          ()
+    GraftSession.withRocksDbState(spark) {
+      val ckpt = Tmp.dir("tws_ckpt").toString
+      val input = MemoryStream[FunnelStream.UserEvent]
+      // foreachBatch: the one Update-mode sink that supports checkpoint
+      // recovery (memory sink refuses to restart from a checkpoint)
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Long, Long, Long, Boolean)]()
+      def start() = FunnelStream.userFunnelStateV2(input.toDS())
+        .writeStream
+        .foreachBatch {
+          (df: org.apache.spark.sql.Dataset[FunnelStream.UserFunnelUpdate],
+              _: Long) =>
+            df.collect().foreach(u =>
+              out.add((u.user_id, u.events, u.purchases, u.converted)))
+            ()
+        }
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Update()).start()
+      def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
+          : Unit = {
+        val withState = q.recentProgress.filter(_.stateOperators.nonEmpty)
+        assert(withState.nonEmpty, "no stateful batch progress recorded")
+        val custom = withState.last.stateOperators.head.customMetrics.keySet()
+        assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
+          s"state metrics are not RocksDB's: $custom")
       }
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Update()).start()
-    def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
-        : Unit = {
-      val withState = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      assert(withState.nonEmpty, "no stateful batch progress recorded")
-      val custom = withState.last.stateOperators.head.customMetrics.keySet()
-      assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
-        s"state metrics are not RocksDB's: $custom")
+      val q1 = start()
+      try {
+        input.addData(
+          FunnelStream.UserEvent(1L, ts(1, 1), "view"),
+          FunnelStream.UserEvent(1L, ts(1, 2), "view"),
+          FunnelStream.UserEvent(2L, ts(1, 1), "view"))
+        q1.processAllAvailable()
+        rocksMetrics(q1)
+      } finally q1.stop()
+      val q2 = start() // NEW query, same checkpoint: RocksDB state reloads
+      try {
+        input.addData(FunnelStream.UserEvent(1L, ts(1, 3), "purchase"))
+        q2.processAllAvailable()
+        rocksMetrics(q2)
+      } finally q2.stop()
+      // exactly the uninterrupted update sequence: run-1 emits (1,2,0) and
+      // (2,1,0); run-2's purchase continues user 1 at events=3 — a reset
+      // (lost state) would emit events=1, a replayed batch would duplicate
+      val updates = out.asScala.toSeq.sorted
+      assert(updates === Seq(
+        (1L, 2L, 0L, false), (1L, 3L, 1L, true), (2L, 1L, 0L, false)))
     }
-    val q1 = start()
-    try {
-      input.addData(
-        FunnelStream.UserEvent(1L, ts(1, 1), "view"),
-        FunnelStream.UserEvent(1L, ts(1, 2), "view"),
-        FunnelStream.UserEvent(2L, ts(1, 1), "view"))
-      q1.processAllAvailable()
-      rocksMetrics(q1)
-    } finally q1.stop()
-    val q2 = start() // NEW query, same checkpoint: RocksDB state reloads
-    try {
-      input.addData(FunnelStream.UserEvent(1L, ts(1, 3), "purchase"))
-      q2.processAllAvailable()
-      rocksMetrics(q2)
-    } finally {
-      q2.stop()
-      prior match {
-        case Some(v0) => spark.conf.set(provider, v0)
-        case None => spark.conf.unset(provider)
-      }
-    }
-    // exactly the uninterrupted update sequence: run-1 emits (1,2,0) and
-    // (2,1,0); run-2's purchase continues user 1 at events=3 — a reset
-    // (lost state) would emit events=1, a replayed batch would duplicate
-    val updates = out.asScala.toSeq.sorted
-    assert(updates === Seq(
-      (1L, 2L, 0L, false), (1L, 3L, 1L, true), (2L, 1L, 0L, false)))
   }
 
   test("stream-stream join runs on RocksDB state and matches hand semantics") {
@@ -399,42 +383,34 @@ class FunnelStreamSpec extends AnyFunSuite {
     // metrics are RocksDB's — and (b) join results are unchanged.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val views = MemoryStream[(Long, Timestamp)]
-    val purchases = MemoryStream[(Long, Timestamp)]
-    val v = views.toDF().toDF("v_user", "v_ts").withWatermark("v_ts", "1 day")
-    val p = purchases.toDF().toDF("p_user", "p_ts").withWatermark("p_ts", "1 day")
-    val joined = v.join(p,
-      col("v_user") === col("p_user") &&
-        col("p_ts") >= col("v_ts") &&
-        col("p_ts") <= col("v_ts") + expr("INTERVAL 7 DAYS"))
-    val q = joined.writeStream.format("memory").queryName("ssj_rocks")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      views.addData((1L, ts(1, 1)), (2L, ts(1, 2)))
-      q.processAllAvailable()
-      // across micro-batches: one purchase in-window, one 8 days out,
-      // one for a user with no view
-      purchases.addData((1L, ts(3, 1)), (2L, ts(9, 3)), (7L, ts(2, 1)))
-      q.processAllAvailable()
-      val got = spark.table("ssj_rocks")
-        .select("v_user", "p_ts").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString)).toSet
-      assert(got === Set((1L, "2024-01-03 01:00:00.0")))
-      val stateMetrics = q.lastProgress.stateOperators
-      assert(stateMetrics.nonEmpty)
-      val custom = stateMetrics.head.customMetrics.keySet()
-      assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
-        s"state metrics are not RocksDB's: $custom")
-    } finally {
-      q.stop()
-      prior match {
-        case Some(v0) => spark.conf.set(provider, v0)
-        case None => spark.conf.unset(provider)
-      }
+    GraftSession.withRocksDbState(spark) {
+      val views = MemoryStream[(Long, Timestamp)]
+      val purchases = MemoryStream[(Long, Timestamp)]
+      val v = views.toDF().toDF("v_user", "v_ts").withWatermark("v_ts", "1 day")
+      val p = purchases.toDF().toDF("p_user", "p_ts").withWatermark("p_ts", "1 day")
+      val joined = v.join(p,
+        col("v_user") === col("p_user") &&
+          col("p_ts") >= col("v_ts") &&
+          col("p_ts") <= col("v_ts") + expr("INTERVAL 7 DAYS"))
+      val q = joined.writeStream.format("memory").queryName("ssj_rocks")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        views.addData((1L, ts(1, 1)), (2L, ts(1, 2)))
+        q.processAllAvailable()
+        // across micro-batches: one purchase in-window, one 8 days out,
+        // one for a user with no view
+        purchases.addData((1L, ts(3, 1)), (2L, ts(9, 3)), (7L, ts(2, 1)))
+        q.processAllAvailable()
+        val got = spark.table("ssj_rocks")
+          .select("v_user", "p_ts").collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1).toString)).toSet
+        assert(got === Set((1L, "2024-01-03 01:00:00.0")))
+        val stateMetrics = q.lastProgress.stateOperators
+        assert(stateMetrics.nonEmpty)
+        val custom = stateMetrics.head.customMetrics.keySet()
+        assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
+          s"state metrics are not RocksDB's: $custom")
+      } finally q.stop()
     }
   }
 
@@ -454,66 +430,58 @@ class FunnelStreamSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = Tmp.dir("ssj_ckpt").toString
-    val views = MemoryStream[(Long, Timestamp)]
-    val purchases = MemoryStream[(Long, Timestamp)]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    def start() = {
-      val v = views.toDF().toDF("v_user", "v_ts")
-        .withWatermark("v_ts", "1 day")
-      val p = purchases.toDF().toDF("p_user", "p_ts")
-        .withWatermark("p_ts", "1 day")
-      v.join(p,
-          col("v_user") === col("p_user") &&
-            col("p_ts") >= col("v_ts") &&
-            col("p_ts") <= col("v_ts") + expr("INTERVAL 7 DAYS"))
-        .select("v_user", "p_ts")
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            df.collect().foreach(r =>
-              out.add((r.getLong(0), r.getTimestamp(1).toString)))
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-    }
-    def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
-        : Unit = {
-      val withState = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      assert(withState.nonEmpty, "no stateful batch progress recorded")
-      val custom = withState.last.stateOperators.head.customMetrics.keySet()
-      assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
-        s"state metrics are not RocksDB's: $custom")
-    }
-    val q1 = start()
-    try {
-      views.addData((1L, ts(1, 1)), (2L, ts(1, 2)))
-      q1.processAllAvailable()
-      purchases.addData((1L, ts(3, 1)))
-      q1.processAllAvailable()
-      rocksMetrics(q1)
-    } finally q1.stop()
-    val q2 = start() // NEW query, same checkpoint: join state reloads
-    try {
-      // user 2's purchase joins a view buffered BEFORE the restart;
-      // the 8-days-out purchase for user 1 must stay unmatched
-      purchases.addData((2L, ts(5, 1)), (1L, ts(9, 1)))
-      q2.processAllAvailable()
-      rocksMetrics(q2)
-    } finally {
-      q2.stop()
-      prior match {
-        case Some(v0) => spark.conf.set(provider, v0)
-        case None => spark.conf.unset(provider)
+    GraftSession.withRocksDbState(spark) {
+      val ckpt = Tmp.dir("ssj_ckpt").toString
+      val views = MemoryStream[(Long, Timestamp)]
+      val purchases = MemoryStream[(Long, Timestamp)]
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+      def start() = {
+        val v = views.toDF().toDF("v_user", "v_ts")
+          .withWatermark("v_ts", "1 day")
+        val p = purchases.toDF().toDF("p_user", "p_ts")
+          .withWatermark("p_ts", "1 day")
+        v.join(p,
+            col("v_user") === col("p_user") &&
+              col("p_ts") >= col("v_ts") &&
+              col("p_ts") <= col("v_ts") + expr("INTERVAL 7 DAYS"))
+          .select("v_user", "p_ts")
+          .writeStream
+          .foreachBatch {
+            (df: org.apache.spark.sql.DataFrame, _: Long) =>
+              df.collect().foreach(r =>
+                out.add((r.getLong(0), r.getTimestamp(1).toString)))
+              ()
+          }
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append()).start()
       }
+      def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
+          : Unit = {
+        val withState = q.recentProgress.filter(_.stateOperators.nonEmpty)
+        assert(withState.nonEmpty, "no stateful batch progress recorded")
+        val custom = withState.last.stateOperators.head.customMetrics.keySet()
+        assert(custom.stream().anyMatch(_.startsWith("rocksdb")),
+          s"state metrics are not RocksDB's: $custom")
+      }
+      val q1 = start()
+      try {
+        views.addData((1L, ts(1, 1)), (2L, ts(1, 2)))
+        q1.processAllAvailable()
+        purchases.addData((1L, ts(3, 1)))
+        q1.processAllAvailable()
+        rocksMetrics(q1)
+      } finally q1.stop()
+      val q2 = start() // NEW query, same checkpoint: join state reloads
+      try {
+        // user 2's purchase joins a view buffered BEFORE the restart;
+        // the 8-days-out purchase for user 1 must stay unmatched
+        purchases.addData((2L, ts(5, 1)), (1L, ts(9, 1)))
+        q2.processAllAvailable()
+        rocksMetrics(q2)
+      } finally q2.stop()
+      assert(out.asScala.toSeq.sorted === Seq(
+        (1L, "2024-01-03 01:00:00.0"), (2L, "2024-01-05 01:00:00.0")))
     }
-    assert(out.asScala.toSeq.sorted === Seq(
-      (1L, "2024-01-03 01:00:00.0"), (2L, "2024-01-05 01:00:00.0")))
   }
 
   test("session gap compares exact microseconds, not truncated millis") {

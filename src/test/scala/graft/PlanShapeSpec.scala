@@ -154,12 +154,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // optimizer's stats-based choice, exactly the decision that can
     // silently degrade (an explicitly hinted query like join_broadcast
     // survives threshold=-1 by design, verified while writing this)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
     val healthy = graft.ops.PlanShape.fingerprint(
       SparkEntry.queries("join_equi")(spark, sfDir))
-    try {
-      spark.conf.set(key, "-1")
+    GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val degraded = graft.ops.PlanShape.fingerprint(
         SparkEntry.queries("join_equi")(spark, sfDir))
       assert(healthy.contains("bhj=1"), s"unexpected healthy shape: $healthy")
@@ -168,6 +166,6 @@ class PlanShapeSpec extends AnyFunSuite {
           "gate would miss a lost broadcast")
       assert(degraded.contains("bhj=0"),
         s"degraded shape kept the broadcast: $degraded")
-    } finally spark.conf.set(key, saved)
+    }
   }
 }

@@ -20,8 +20,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("filters: every predicate is pushed to the parquet scan") {
     // default metadata cap (100 chars) truncates the PushedFilters list
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val p = plan(q("filters"))
+    val p = GraftSession.withConf(spark,
+      "spark.sql.maxMetadataStringLength" -> "2000")(plan(q("filters")))
     assert(p.contains("PushedFilters"))
     Seq("In(o_orderstatus", "EqualTo(o_orderpriority,1-URGENT)",
       "IsNotNull(o_custkey)").foreach(f =>
@@ -141,18 +141,11 @@ class PlanSpec extends AnyFunSuite {
     // actually shuffle, or the rule correctly declines — so this pins
     // both the configs that arm it and the plan shape it produces.
     import org.apache.spark.sql.functions._
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
       val urgent = spark.read.parquet(s"$dir/orders.parquet")
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -162,8 +155,6 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(joined)
       assert(p.contains("bloom_filter") || p.contains("BloomFilterMightContain"),
         s"no runtime bloom filter injected\n${p.take(1200)}")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 
@@ -175,22 +166,13 @@ class PlanSpec extends AnyFunSuite {
     // rows; thresholds are scaled to fixture bytes the same way the
     // bloom-filter test scales its scan threshold.
     import org.apache.spark.sql.functions._
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark,
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val big = spark.range(0, 300000).select(
         when(col("id") < 250000, lit(0L))
           .otherwise(pmod(col("id"), lit(64L))).as("k"),
@@ -208,8 +190,6 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(j)
       assert(p.contains("skew=true"),
         s"AQE skew-join split did not fire\n${p.take(1200)}")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _))
     }
   }
 
@@ -244,8 +224,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("tpch_q5_like: both dim paths broadcast, date filter is pushed") {
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val p = plan(q("tpch_q5_like"))
+    val p = GraftSession.withConf(spark,
+      "spark.sql.maxMetadataStringLength" -> "2000")(plan(q("tpch_q5_like")))
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
       s"dim joins not broadcast\n${p.take(1500)}")
     assert(p.contains("IsNotNull(o_orderdate)") ||
@@ -304,14 +284,19 @@ class PlanSpec extends AnyFunSuite {
       "adamic_adar must carry its small-partition AQE floor " +
         "(pair fan-out starved at bytes/1MB partitions)")
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val prior = spark.conf.getOption(key)
+    // every scope and every query run below leaves the explicit settings
+    // exactly as it found them: no key added, dropped or changed
+    val before = spark.conf.getAll.toSet
+    def leaked(): Set[(String, String)] = {
+      val now = spark.conf.getAll.toSet
+      (now -- before) ++ (before -- now)
+    }
     var inside = ""
     SparkEntry.withOverlay(spark, "adamic_adar") {
       inside = spark.conf.get(key)
     }
     assert(inside === "64k")
-    assert(spark.conf.getOption(key) === prior,
-      "overlay leaked past its query's scope")
+    assert(leaked().isEmpty, "overlay leaked past its query's scope")
     // restored on throw too: a failed query must not poison the next
     // bench slot's configuration
     intercept[RuntimeException] {
@@ -319,11 +304,10 @@ class PlanSpec extends AnyFunSuite {
         throw new RuntimeException("boom")
       }
     }
-    assert(spark.conf.getOption(key) === prior,
-      "overlay leaked after a throw")
+    assert(leaked().isEmpty, "overlay leaked after a throw")
     // a query with no overlay is a pass-through
     SparkEntry.withOverlay(spark, "filters") {
-      assert(spark.conf.getOption(key) === prior)
+      assert(leaked().isEmpty)
     }
     // the shared runner applies the overlay around build AND sink, and
     // restores it when the sink throws
@@ -336,13 +320,53 @@ class PlanSpec extends AnyFunSuite {
       atSink = spark.conf.get(key)
     }.isRight)
     assert(atBuild === "64k" && atSink === "64k")
-    assert(spark.conf.getOption(key) === prior,
-      "runner leaked the overlay past its query's scope")
+    assert(leaked().isEmpty, "runner leaked the overlay past its query's scope")
     val failed = Suite.run(spark, dir, "adamic_adar", probe) { _ =>
       throw new RuntimeException("boom")
     }
     assert(failed.left.map(_.getMessage) === Left("boom"))
-    assert(spark.conf.getOption(key) === prior,
-      "runner leaked the overlay after a throw")
+    assert(leaked().isEmpty, "runner leaked the overlay after a throw")
+    // registered queries that write with dynamic partition overwrite and
+    // that run a stream under a derived width and the RocksDB provider
+    Seq("dynamic_overwrite", "stream_funnel_table").foreach { name =>
+      val r = Suite.run(spark, dir, name, SparkEntry.queries(name))(Suite.noop)
+      assert(r.isRight, s"$name failed: $r")
+      assert(leaked().isEmpty, s"$name changed the session conf: ${leaked()}")
+    }
+  }
+
+  test("withConf restores explicit settings only, also after a throw and " +
+      "across nested scopes") {
+    // a fresh session: no other suite's explicit settings
+    val s = spark.newSession()
+    val unset = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val set = "spark.sql.shuffle.partitions"
+    s.conf.unset(unset)
+    s.conf.set(set, "5")
+    val seen = GraftSession.withConf(s, unset -> "64k", set -> "7") {
+      val inner = GraftSession.withConf(s, set -> "9")(s.conf.get(set))
+      (s.conf.get(unset), inner, s.conf.get(set))
+    }
+    assert(seen === (("64k", "9", "7")))
+    def restored(): Unit = {
+      assert(!s.conf.getAll.contains(unset), "an unset key came back set")
+      assert(s.conf.getAll.get(set) === Some("5"))
+    }
+    restored()
+    intercept[RuntimeException](GraftSession.withConf(s, unset -> "1k",
+      set -> "7")(throw new RuntimeException("boom")))
+    restored()
+  }
+
+  test("under src/main only GraftSession writes session conf") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val writers = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).filter { f =>
+        val text = Files.readString(f)
+        text.contains("conf.set(") || text.contains("conf.unset(")
+      }.map(_.getFileName.toString).toSeq
+    assert(writers === Seq("GraftSession.scala"),
+      "write session conf through GraftSession.withConf")
   }
 }

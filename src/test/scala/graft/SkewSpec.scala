@@ -37,8 +37,8 @@ class SkewSpec extends AnyFunSuite {
     * targets), restoring every key afterwards — the session is shared
     * across suites.
     */
-  private def withSkewConf[A](skewEnabled: Boolean)(body: => A): A = {
-    val keys = Seq(
+  private def withSkewConf[A](skewEnabled: Boolean)(body: => A): A =
+    GraftSession.withConf(spark,
       "spark.sql.shuffle.partitions" -> "16",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -52,19 +52,7 @@ class SkewSpec extends AnyFunSuite {
       // createSkewPartitionSpecs returns None and the skew silently
       // doesn't fire. Production-scale maps are plentiful, so this is
       // a fixture-size artifact, not an operator property.
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = keys.map { case (k, _) =>
-      // getOption-with-null-guard: optional confs (e.g. the adaptive
-      // broadcast threshold) report a null "value" rather than throwing
-      k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten
-    }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   /** 600 identical docs (one hot band key per band — the worst-case
     * boilerplate family) + 60 unique docs for a cold baseline. Hot

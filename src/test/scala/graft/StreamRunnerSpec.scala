@@ -49,21 +49,15 @@ class StreamRunnerSpec extends AnyFunSuite {
     }
     val df = Tables.stream(spark, src).groupBy("k")
       .agg(sum(boom(col("v"))).as("s"))
-    val priorWidth = spark.conf.get(widthKey)
     val heap = "org.apache.spark.sql.execution.streaming.state." +
       "HDFSBackedStateStoreProvider"
     // a width the derived one (1 for a few bytes) cannot equal
-    spark.conf.set(widthKey, "3")
-    spark.conf.set(providerKey, heap)
-    try {
+    GraftSession.withConf(spark, widthKey -> "3", providerKey -> heap) {
       intercept[StreamingQueryException] {
         StreamRunner.run(spark, df, StreamRunner.Complete, "runner_fail")
       }
       assert(spark.conf.get(widthKey) === "3")
       assert(spark.conf.get(providerKey) === heap)
-    } finally {
-      spark.conf.set(widthKey, priorWidth)
-      spark.conf.unset(providerKey)
     }
   }
 
