@@ -119,7 +119,7 @@ object Bench {
     if (passes > 1) {
       Suite.noop(spark.range(1 << 20).selectExpr("sum(id)"))
       suite.foreach { case QueryDef(name, fn, _) =>
-        Suite.run(spark, sfDir, name, fn)(Suite.noop)
+        Suite.run(spark, sfDir, fn)(Suite.noop)
       }
     }
 
@@ -160,7 +160,7 @@ object Bench {
         interSlot()
         val spillBase = if (spillTrack && pass == 1) listener.settled() else null
         val t0 = System.nanoTime()
-        Suite.run(spark, sfDir, name, fn)(Suite.noop) match {
+        Suite.run(spark, sfDir, fn)(Suite.noop) match {
           case Right(_) =>
             val sec = (System.nanoTime() - t0) / 1e9
             timings(name) = timings.get(name).fold(sec)(math.min(_, sec))
@@ -188,7 +188,7 @@ object Bench {
         System.gc()
         val t0 = System.nanoTime()
         // a failed third sample keeps the existing min
-        if (Suite.run(spark, sfDir, name, fn)(Suite.noop).isRight) {
+        if (Suite.run(spark, sfDir, fn)(Suite.noop).isRight) {
           val sec = (System.nanoTime() - t0) / 1e9
           timings(name) = math.min(timings(name), sec)
         }

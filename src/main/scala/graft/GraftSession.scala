@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.io.Scratch
 
 /** Standard session configuration for the graft engine, and the only
   * code under `src/main` that writes session conf: [[builder]] and
-  * [[tune]] apply the defaults, and every scoped setting (per-query
-  * overlays, stream widths, the state-store provider) goes through
-  * [[withConf]], which restores explicit settings only, so a key that
-  * was unset before a scope is unset after it.
+  * [[tune]] apply the defaults, and every scoped setting (stream
+  * widths, the state-store provider) goes through [[withConf]], which
+  * restores explicit settings only, so a key that was unset before a
+  * scope is unset after it. No query runs under a conf of its own: a
+  * width a query needs is set in its plan ([[fanoutBy]]).
   *
   * - `spark.sql.ansi.enabled=false`: the funnel sources are string-typed CSVs
   *   cast at query time (`CAST(x AS DOUBLE)`, reference
@@ -107,6 +108,22 @@ object GraftSession {
       df.repartition(spark.sessionState.conf.numShufflePartitions)
     else df
   }
+
+  /** `df` hash-partitioned on `keys` into the session's shuffle width,
+    * an explicit-count exchange that AQE does not coalesce. For the
+    * keyed exchange that feeds a stage that multiplies rows (pair
+    * expansion, per-doc explode), in place of the exchange the planner
+    * would insert there: AQE sizes post-shuffle partitions by the bytes
+    * going in, at least 1 MB each, so a few-MB input coalesces to one or
+    * two partitions however many rows the next stage emits. Once each
+    * partition holds more than that floor, AQE keeps the session width
+    * too (which [[builder]] and [[tune]] set to the core count), so at
+    * scale this changes nothing. Never on a join's own exchange: only an
+    * exchange AQE inserted can be skew-split.
+    */
+  def fanoutBy(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      keys: _*)
 
   /** Per-partition source-byte target for [[streamStateWidth]]: 8 MiB.
     * At sf0.1 (2 MB source) any target from 8 to 64 MiB derives width 1,

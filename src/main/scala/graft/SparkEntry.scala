@@ -34,43 +34,10 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(d => d.name -> d.build).toMap
 
-  /** Per-query session-conf overlays, applied by the runner around the
-    * query's BUILD AND EXECUTION and restored after. Only performance
-    * confs belong here (AQE sizing, shuffle width): an overlay must never
-    * change what a query computes, and the oracle gate re-runs every
-    * overlaid query like any other. An overlay stays only while its
-    * measured benefit reproduces.
+  /** Runs `body`. Kept because the perfbench harness wraps each query
+    * in it; no query has a conf of its own.
     */
-  def confOverlays: Map[String, Map[String, String]] = {
-    // AQE's parallelismFirst coalescing floors post-shuffle partitions
-    // at minPartitionSize (default 1m) — so at small replay SFs a
-    // few-MB exchange coalesces to bytes/1MB ≈ 2-5 partitions, and any
-    // operator that MULTIPLIES rows after that exchange (pair
-    // expansion, per-doc token/chunk explode) runs its heavy stage 2-5
-    // wide regardless of session width. A 64k floor restores
-    // parallelism exactly where the fan-out is (measured A/B: adamic_adar
-    // 0.38×, curation_pipeline 0.52×, containment 0.72×); at
-    // production scale partitions sit far above 1 MB and the knob is
-    // inert. NOT blanket-applied: the same floor regressed the
-    // iterative/scan-heavy band up to 3× (greedy_cover, winnow — more
-    // tiny tasks per round, nothing to win), so it stays a per-query
-    // overlay.
-    val smallPartFloor = Map(
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
-    Map(
-      "adamic_adar" -> smallPartFloor,
-      "curation_pipeline" -> smallPartFloor,
-      "containment_neardup" -> smallPartFloor,
-      "prefix_jaccard" -> smallPartFloor)
-  }
-
-  /** Run `body` under `name`'s conf overlay (if any), restoring every
-    * touched key afterwards — including on throw, so a failed query
-    * never leaks its overlay into the next one's timed slot.
-    */
-  def withOverlay[A](spark: SparkSession, name: String)(body: => A): A =
-    GraftSession.withConf(spark,
-      confOverlays.getOrElse(name, Map.empty).toSeq: _*)(body)
+  def withOverlay[A](spark: SparkSession, name: String)(body: => A): A = body
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. */

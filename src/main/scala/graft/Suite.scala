@@ -11,7 +11,7 @@ import graft.queries.QueryDef
 
 /** The one runner behind `Bench`, `Verify`, `QueryProfile` and
   * `ExplainDump`: session setup, query selection, running one query
-  * under its conf overlay, JSON output and task counters.
+  * under the session conf, JSON output and task counters.
   *
   * Environment: `SPARK_GRAFT_SF_DIR` (data directory, default the sf0.1
   * test data), `SPARK_GRAFT_CPUS` (local cores and shuffle width,
@@ -71,13 +71,12 @@ object Suite {
     slice
   }
 
-  /** Build query `name` and hand it to `sink`, both under its conf
-    * overlay ([[SparkEntry.withOverlay]]); any failure is returned, not
+  /** Build `query` and hand it to `sink`; any failure is returned, not
     * thrown, so one broken query never stops the rest of a suite.
     */
-  def run[A](spark: SparkSession, sfDir: String, name: String, query: Query)(
+  def run[A](spark: SparkSession, sfDir: String, query: Query)(
       sink: DataFrame => A): Either[Throwable, A] =
-    try Right(SparkEntry.withOverlay(spark, name)(sink(query(spark, sfDir))))
+    try Right(sink(query(spark, sfDir)))
     catch { case e: Throwable => Left(e) }
 
   /** Full execution without write-path cost (`count()` would let the

@@ -26,12 +26,10 @@ object Verify {
     val spark = Suite.session("spark.cleaner.periodicGC.interval" -> "60s")
     new java.io.File(outDir).mkdirs()
     val selected = Suite.only()
-    // the runner applies each query's conf overlay here too, so the
-    // oracle gate checks the exact configuration the bench runs
     selected.foreach { case QueryDef(name, fn, _) =>
       val out = new Path(s"$outDir/$name")
       out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
-      Suite.run(spark, sfDir, name, fn) {
+      Suite.run(spark, sfDir, fn) {
         _.coalesce(1).write.mode("overwrite").parquet(out.toString)
       }.left.foreach { e =>
         // class name too: ParseException and friends can have a null/empty

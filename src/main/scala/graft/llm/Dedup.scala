@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Deduplication operators for a training-data pipeline, scale-first:
   * every near-dup path generates candidate pairs through BUCKETED joins
   * (LSH band → hash-partitioned equi-join), never an all-pairs cross
@@ -985,7 +987,11 @@ object Dedup {
     // vocab is dense), but on a Zipfian web corpus the singleton tail
     // dominates rarest-first prefixes, and every dropped row is
     // candidate-shuffle bytes that produce nothing.
-    val prefix = tok.join(df, Seq("gram"))
+    //
+    // The rank window's exchange carries the session width, as the
+    // candidate distinct's does below: the window sorts and ranks every
+    // gram row of every doc, several per doc row of `sets`.
+    val prefix = GraftSession.fanoutBy(tok.join(df, Seq("gram")), col("doc_id"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .filter(col("df") > 1)
@@ -1025,7 +1031,7 @@ object Dedup {
     // re-run the rank window, which measured +24% on the cold path.
     val hot = df.filter(col("df") > hotBucketCap)
       .select(col("gram"), col("df").as("bucket_n"))
-    val cand = if (hot.isEmpty) {
+    val pairs = if (hot.isEmpty) {
       // Alias-only join sides + SHUFFLE_HASH: a column-RENAMING Project
       // on each side defeats plan canonicalization, so no exchange is
       // shared and the planner (picking broadcast at small SF) rebuilds
@@ -1044,7 +1050,7 @@ object Dedup {
           col("a.rn").as("rn_a"), col("a.sz").as("sz_a"),
           col("b.rn").as("rn_b"), col("b.sz").as("sz_b"))
         .filter(ppjoinFilters)
-        .select("doc_a", "doc_b").distinct()
+        .select("doc_a", "doc_b")
     } else {
       // materialized once: with per-side salt emissions the two join
       // sides are no longer the identical subplan ReusedExchange
@@ -1068,8 +1074,13 @@ object Dedup {
           ppjoinFilters)
         .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
           greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-        .distinct()
     }
+    // the verify join below multiplies work per candidate pair (two
+    // gram arrays and an intersection each), so the distinct's exchange
+    // carries the session width; the candidate join's own exchange on
+    // gram stays AQE's, which is what lets AQE split a hot gram
+    val cand = GraftSession.fanoutBy(pairs, col("doc_a"), col("doc_b"))
+      .distinct()
     val jac = col("inter").cast("double") /
       (col("sz_a") + col("sz_b") - col("inter")).cast("double")
     cand
@@ -1124,7 +1135,11 @@ object Dedup {
       explode(col("grams")).as("gram"))
     val df = tok.groupBy("gram").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("gram"))
-    val pre = tok.join(df, Seq("gram"))
+    // the rank window's exchange carries the session width: the
+    // candidate join, the distinct and the verify join all run in the
+    // stage it feeds while the container side is broadcast, and that
+    // stage multiplies each prefix gram into its whole posting list
+    val pre = GraftSession.fanoutBy(tok.join(df, Seq("gram")), col("doc_id"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .filter(col("df") > 1)

@@ -520,28 +520,14 @@ object Similarity {
     *
     * What sharding buys: each leg's pair enumeration — and each leg's
     * broadcast build side — is bounded at (n/B)² and n/B rows
-    * respectively, so the scan degrades into restartable bounded jobs
-    * instead of one n²-sized one. At 100 TB the legs run as separate
-    * jobs over `blk=`-partitioned storage; here they union into one
-    * plan over the checkpointed normalized vectors.
+    * respectively, so no join in the plan enumerates the whole n²
+    * space at once. The legs union into one plan over the checkpointed
+    * normalized vectors.
     */
   def exactCosinePairsBlocked(emb: DataFrame, minCosine: Double,
       nBlocks: Int): DataFrame =
     thresholdPairs(blockedLegsRaw(emb, nBlocks).reduce(_ unionByName _),
       minCosine)
-
-  /** The block schedule as SEPARATE leg DataFrames, each already
-    * thresholded — the restartable-jobs surface the blocked scaladoc
-    * promises: at 100 TB the legs run as independent jobs over `blk=`-
-    * partitioned storage (each bounded at (n/B)² pairs, resumable after
-    * any failure), and the union of their outputs is the unsharded pair
-    * set row for row (LlmSpec proves the identity). All legs share
-    * ONE checkpointed normalized-vector frame, so running them
-    * leg-by-leg re-pays no normalization.
-    */
-  def exactCosinePairsLegs(emb: DataFrame, minCosine: Double,
-      nBlocks: Int): Seq[DataFrame] =
-    blockedLegsRaw(emb, nBlocks).map(thresholdPairs(_, minCosine))
 
   private def blockedLegsRaw(emb: DataFrame, nBlocks: Int): Seq[DataFrame] = {
     require(nBlocks >= 1, s"nBlocks must be >= 1, got $nBlocks")
@@ -596,7 +582,7 @@ object Similarity {
     * re-deserialization. The plain-join legs have neither defect.)
     * Below the trip point a single scan stays the measured winner,
     * and each leg above it behaves exactly like a smaller unsharded
-    * scan — plus every leg is independently restartable.
+    * scan.
     */
   val defaultLegPairs: Long = 1L << 32
 

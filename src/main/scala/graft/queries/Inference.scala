@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftSession
 import graft.io.Tables
 import graft.io.Tables.{read => t}
 import graft.llm.Dedup
@@ -891,24 +892,32 @@ object Inference {
     // Adamic–Adar link prediction over the supplier co-purchase graph:
     // suppliers sharing parts score Σ_p 1/ln(deg p) — rare shared parts
     // count more. The pair fan-out is keyed on the part (Σ deg² — the
-    // triangle_count shape, hash-partitioned and AQE-skew-splittable;
-    // a web-scale corpus caps hub degrees first, the stop-gram move).
+    // triangle_count shape). The degree is a window over the edge list
+    // hash-partitioned on the part at the session width
+    // ([[GraftSession.fanoutBy]]), and the checkpoint keeps those
+    // partitions. While pb fits the broadcast threshold, the pair join
+    // streams that checkpoint; past it, the join is a sort-merge join on
+    // an exchange AQE inserts (a checkpoint does not carry its
+    // partitioning), hash-partitioned and AQE-skew-splittable; a
+    // web-scale corpus also caps hub degrees first, the stop-gram move.
     // Per-part weights quantize to pico-units before the pair sum;
     // deg<2 parts drop (no pair, and ln 1 = 0 would divide by zero).
     QueryDef("adamic_adar", (s, dir) => {
-      val e = Graphs.supplierPart(t(s, dir, "lineitem"))
-      val degw = e.groupBy("dst").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= 2)
-        .select(col("dst"),
-          bround(lit(1000000000000.0) / log(col("deg").cast("double")))
-            .cast("long").as("w_pico"))
+      val e = GraftSession.fanoutBy(
+        Graphs.supplierPart(t(s, dir, "lineitem")), col("dst"))
       // ew materializes ONCE: the pair self-join consumes it on
       // BOTH sides, and the optimizer rebuilt the scan→distinct→degree
       // chain per consumer (profiled at sf0.1: the distinct's map stage
       // ran twice, ~1 s of duplicated task time). The checkpoint is the
       // weighted edge list — 3 narrow longs per row, a fraction of the
       // lineitem scan it replaces.
-      val ew = e.join(degw, "dst").localCheckpoint()
+      val ew = e
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy("dst")))
+        .filter(col("deg") >= 2)
+        .select(col("dst"), col("src"),
+          bround(lit(1000000000000.0) / log(col("deg").cast("double")))
+            .cast("long").as("w_pico"))
+        .localCheckpoint()
       val pa = ew.select(col("dst"), col("src").as("sa"), col("w_pico"))
       val pb = ew.select(col("dst"), col("src").as("sb"))
       pa.join(pb, Seq("dst")).filter(col("sa") < col("sb"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.io.{Scratch, Tables}
+import graft.io.{Scratch, StaggeredBatches, Tables}
 import graft.io.Tables.{read => t}
 import graft.llm.{Dedup, TextAnalysis}
 import graft.ops.Graphs
@@ -143,6 +143,23 @@ object Insights {
       .select(date_format(col("day.start"), "yyyy-MM-dd").as("p_day"),
         col("n_pairs"), col("n_users"))
     StreamRunner.run(s, grid, Append, "ssj")
+  }
+
+  /** One year in microseconds: how far past the data the replay
+    * fixtures' sentinel rows sit.
+    */
+  private val YearUs = 365L * 86400 * 1000000
+
+  /** The latest `ts` in `ev` (epoch micros), for the replay sentinels,
+    * and the content key of its replay fixture, from one pass: row
+    * count, max `ts` and `user_id` sum, so a regenerated events table at
+    * the same SF gets a fresh replay.
+    */
+  private def replayKey(ev: DataFrame): (Long, String) = {
+    val m = ev.agg(count(lit(1)), max(unix_micros(col("ts"))),
+      sum(col("user_id"))).collect()(0)
+    (m.getLong(1), Seq(0, 1, 2).map(i => java.lang.Long.toHexString(
+      m.getLong(i))).mkString("_"))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -1314,34 +1331,13 @@ object Insights {
     QueryDef("stream_sessionize", (s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-      // one pass for the sentinel horizon AND the content fingerprint
-      // that keys the fixture (count / max-ts / user-sum: a regenerated
-      // events table at the same SF gets a fresh replay)
-      val meta = ev.agg(max(unix_micros(col("ts"))), count(lit(1)),
-        sum(col("user_id"))).collect()(0)
-      val maxUs = meta.getLong(0)
-      val fp = java.lang.Long.toHexString(meta.getLong(1)) + "_" +
-        java.lang.Long.toHexString(maxUs) + "_" +
-        java.lang.Long.toHexString(meta.getLong(2))
+      val (maxUs, fp) = replayKey(ev)
       val p = Scratch.once(Scratch.dir(dir, s"stream_sess_$fp")) { tp =>
-        def dataFiles: Set[java.io.File] =
-          Option(new java.io.File(tp).listFiles).map(_.toSet)
-            .getOrElse(Set.empty)
-            .filter(f => !f.getName.startsWith("_") &&
-              !f.getName.startsWith("."))
-        ev.coalesce(1).write.mode("overwrite").parquet(tp)
-        val t0 = System.currentTimeMillis
-        dataFiles.foreach(_.setLastModified(t0 - 60000))
-        val yearUs = 365L * 86400 * 1000000
-        def sentinel(us: Long, stamp: Long): Unit = {
-          val before = dataFiles
+        def sentinel(us: Long): DataFrame =
           Seq((-1L, us)).toDF("user_id", "us")
             .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-            .coalesce(1).write.mode("append").parquet(tp)
-          (dataFiles -- before).foreach(_.setLastModified(stamp))
-        }
-        sentinel(maxUs + yearUs, t0 - 40000)
-        sentinel(maxUs + 2 * yearUs, t0 - 20000)
+        StaggeredBatches.write(tp, Seq(ev,
+          sentinel(maxUs + YearUs), sentinel(maxUs + 2 * YearUs)))
       }
       val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val ds = src
@@ -1380,39 +1376,19 @@ object Insights {
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_type"))
-      val meta = ev.agg(max(unix_micros(col("ts"))), count(lit(1)),
-        sum(col("user_id"))).collect()(0)
-      val maxUs = meta.getLong(0)
-      val fp = java.lang.Long.toHexString(meta.getLong(1)) + "_" +
-        java.lang.Long.toHexString(maxUs) + "_" +
-        java.lang.Long.toHexString(meta.getLong(2))
+      val (maxUs, fp) = replayKey(ev)
       val p = Scratch.once(Scratch.dir(dir, s"stream_late_$fp")) { tp =>
-        def dataFiles: Set[java.io.File] =
-          Option(new java.io.File(tp).listFiles).map(_.toSet)
-            .getOrElse(Set.empty)
-            .filter(f => !f.getName.startsWith("_") &&
-              !f.getName.startsWith("."))
-        ev.coalesce(1).write.mode("overwrite").parquet(tp)
-        val t0 = System.currentTimeMillis
-        dataFiles.foreach(_.setLastModified(t0 - 60000))
-        val yearUs = 365L * 86400 * 1000000
-        def appendBatch(df: DataFrame, stamp: Long): Unit = {
-          val before = dataFiles
-          df.coalesce(1).write.mode("append").parquet(tp)
-          (dataFiles -- before).foreach(_.setLastModified(stamp))
-        }
         // TWO sentinels, the stream_sessionize lesson: the late-row
         // filter of batch N uses the watermark committed one batch
         // behind, so the jump needs a spacer batch before the late
         // rows arrive for them to be filtered under it
-        def sentinel(us: Long, stamp: Long): Unit =
-          appendBatch(Seq((-1L, us)).toDF("user_id", "us")
+        def sentinel(us: Long): DataFrame =
+          Seq((-1L, us)).toDF("user_id", "us")
             .select(col("user_id"), timestamp_micros(col("us")).as("ts"),
-              lit("view").as("event_type")), stamp)
-        sentinel(maxUs + yearUs, t0 - 45000)
-        sentinel(maxUs + 2 * yearUs, t0 - 30000)
-        appendBatch(ev.filter(pmod(col("user_id"), lit(10)) === 0),
-          t0 - 15000)
+              lit("view").as("event_type"))
+        StaggeredBatches.write(tp, Seq(ev,
+          sentinel(maxUs + YearUs), sentinel(maxUs + 2 * YearUs),
+          ev.filter(pmod(col("user_id"), lit(10)) === 0)))
       }
       val src = Tables.stream(s, p, maxFilesPerTrigger = Some(1))
       val settled = StreamRunner.run(s,

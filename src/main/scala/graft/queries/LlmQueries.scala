@@ -1385,11 +1385,15 @@ object LlmQueries {
       val d = t(s, dir, "documents")
       val heldOut = d.filter(pmod(col("doc_id"), lit(10)) === 7)
       val corpus = d.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-      val deduped = corpus
+      // the dedup exchange carries the session width: every later stage
+      // (decontaminate, gate, split, the per-doc chunk explode) runs in
+      // the stage it feeds
+      val deduped = GraftSession.fanoutBy(
+          corpus.withColumn("__fp", TextAnalysis.fingerprint(col("text"))),
+          col("__fp"))
         .withColumn("__rn", row_number().over(
-          Window.partitionBy(TextAnalysis.fingerprint(col("text")))
-            .orderBy("doc_id")))
-        .filter(col("__rn") === 1).drop("__rn")
+          Window.partitionBy("__fp").orderBy("doc_id")))
+        .filter(col("__rn") === 1).drop("__rn", "__fp")
       val decon = Dedup.decontaminateBloom(deduped, heldOut)
       val quality = decon.filter(
         TextAnalysis.tokenCount(col("text")).between(5, 10000))

@@ -9,7 +9,7 @@ import graft.queries.QueryDef
 
 /** Dump `.explain("formatted")` for named registered queries to files —
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
-  * Each plan is built under its query's conf overlay, as Bench runs it.
+  * Each plan is built as Bench builds it, under the session conf.
   *
   * Usage: runMain graft.tools.ExplainDump <outDir> <suffix> [q1,q2,...]
   * (no query list → every registered query). Each query writes
@@ -29,7 +29,7 @@ object ExplainDump {
     val queries = Suite.select(args.lift(2), "ExplainDump")
     val spark = Suite.session()
     queries.foreach { case QueryDef(name, fn, _) =>
-      val txt = Suite.run(spark, Suite.sfDir, name, fn) {
+      val txt = Suite.run(spark, Suite.sfDir, fn) {
         _.queryExecution.explainString(FormattedMode)
       }.fold(e => s"EXPLAIN FAILED: ${e.getClass.getName}: ${e.getMessage}",
         identity)

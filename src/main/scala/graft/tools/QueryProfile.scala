@@ -4,8 +4,8 @@ import graft.Suite
 import graft.queries.QueryDef
 
 /** Per-query breakdown profiler for optimization rounds: runs named
-  * registered queries as Bench does (conf overlay, noop sink, one warm
-  * pass, then N timed passes) with [[Suite.TaskListener]] attributing
+  * registered queries as Bench does (noop sink, one warm pass, then N
+  * timed passes) with [[Suite.TaskListener]] attributing
   * each pass to Spark jobs/stages/tasks, so "where does this query's
   * 3 s go" is answered with counts instead of guesses. A failed pass is
   * reported and the remaining passes and names still run.
@@ -26,14 +26,14 @@ object QueryProfile {
 
     queries.foreach { case QueryDef(name, fn, _) =>
       // warm pass (codegen + JIT), untimed
-      Suite.run(spark, sfDir, name, fn)(Suite.noop).left
+      Suite.run(spark, sfDir, fn)(Suite.noop).left
         .foreach(e => println(s"$name WARM ${failure(e)}"))
       val samples = (1 to passes).flatMap { p =>
         System.gc()
         val base = listener.settled()
         listener.takeJobs()
         val t0 = System.nanoTime()
-        val result = Suite.run(spark, sfDir, name, fn)(Suite.noop)
+        val result = Suite.run(spark, sfDir, fn)(Suite.noop)
         val sec = (System.nanoTime() - t0) / 1e9
         val d = listener.settled() - base
         val counts = f"jobs=${d.jobs}%3d stages=${d.stages}%3d " +

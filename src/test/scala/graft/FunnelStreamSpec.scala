@@ -738,24 +738,16 @@ class FunnelStreamSpec extends AnyFunSuite {
       "resume from checkpoint, settle to batch parity") {
     import spark.implicits._
     val dir = Tmp.dir("fs_restart").toString
-    // 4 data files → 4 micro-batches under maxFilesPerTrigger=1
-    (0 until 400).map { i =>
+    val events = (0 until 400).map { i =>
       (i.toLong, i.toLong % 7,
         Seq("view", "purchase", "error")(i % 3), i.toLong * 3600000000L)
     }.toDF("event_id", "user_id", "event_type", "us")
       .select(col("event_id"), col("user_id"), col("event_type"),
         timestamp_micros(col("us")).as("ts"))
-      .repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // the file source takes files oldest first: staggered modtimes fix
-    // which file each batch reads, so batch 1 reads files(1)
-    val files = new java.io.File(s"$dir/events.parquet").listFiles
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    assert(files.length === 4)
-    val t0 = System.currentTimeMillis
-    files.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(t0 - 60000 + i * 10000)
-    }
+    // 4 data files → 4 micro-batches under maxFilesPerTrigger=1, and
+    // batch 1 reads files(1)
+    val files = graft.io.StaggeredBatches.write(s"$dir/events.parquet",
+      (0 until 4).map(b => events.filter(col("event_id") % 4 === b)))
     // the crash rides in on the DataFrame: while armed, a row from
     // batch 1's file throws before that batch writes anything
     val armed = new java.util.concurrent.atomic.AtomicBoolean(true)

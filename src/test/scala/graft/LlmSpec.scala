@@ -678,16 +678,6 @@ class LlmSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(blocked.toSeq === exact.toSeq, s"nBlocks=$b diverged")
     }
-    // the leg-by-leg schedule (separate restartable jobs) covers the
-    // same pair set exactly once: B=3 -> 6 legs, disjoint, union ===
-    // the unsharded scan
-    val legs = Similarity.exactCosinePairsLegs(emb, 0.4, 3)
-    assert(legs.size === 6)
-    val legRows = legs.flatMap(_.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
-    assert(legRows.size === legRows.distinct.size,
-      "legs overlap: a pair was enumerated twice")
-    assert(legRows.sorted === exact.toSeq.sorted)
   }
 
   test("pairs budget is mechanical: trips on an oversized corpus, auto-shards past the leg bound") {

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.PlanShape
 
 /** Physical-plan shape regressions: the properties PLANS.md documents,
   * enforced. A change that silently un-broadcasts a dimension join,
@@ -268,70 +273,65 @@ class PlanSpec extends AnyFunSuite {
     assert(SparkEntry.queries.size === SparkEntry.registry.length)
   }
 
-  test("per-query conf overlays are registered, scoped, and restored") {
-    // a query declares its conf overlay and the runners apply it ONLY
-    // inside that query's scope
-    val overlays = SparkEntry.confOverlays
-    assert(overlays.keySet.subsetOf(SparkEntry.queries.keySet),
-      s"overlay for unregistered query: " +
-        s"${overlays.keySet -- SparkEntry.queries.keySet}")
-    // an overlay stays only while its measured benefit reproduces
-    // (assoc_rules' did not); the small-partition floor for starved
-    // fan-out stages is pinned here via adamic_adar
-    assert(!overlays.contains("assoc_rules"),
-      "assoc_rules carries no overlay: its scale benefit did not reproduce")
-    assert(overlays.contains("adamic_adar"),
-      "adamic_adar must carry its small-partition AQE floor " +
-        "(pair fan-out starved at bytes/1MB partitions)")
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    // every scope and every query run below leaves the explicit settings
-    // exactly as it found them: no key added, dropped or changed
+  test("registered runs leave the session conf as they found it") {
+    // no key added, dropped or changed by a run, including one that
+    // fails: the next query in a suite must see the same session
     val before = spark.conf.getAll.toSet
     def leaked(): Set[(String, String)] = {
       val now = spark.conf.getAll.toSet
       (now -- before) ++ (before -- now)
     }
-    var inside = ""
-    SparkEntry.withOverlay(spark, "adamic_adar") {
-      inside = spark.conf.get(key)
-    }
-    assert(inside === "64k")
-    assert(leaked().isEmpty, "overlay leaked past its query's scope")
-    // restored on throw too: a failed query must not poison the next
-    // bench slot's configuration
-    intercept[RuntimeException] {
-      SparkEntry.withOverlay(spark, "adamic_adar") {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(leaked().isEmpty, "overlay leaked after a throw")
-    // a query with no overlay is a pass-through
-    SparkEntry.withOverlay(spark, "filters") {
-      assert(leaked().isEmpty)
-    }
-    // the shared runner applies the overlay around build AND sink, and
-    // restores it when the sink throws
-    var atBuild, atSink = ""
-    val probe: Suite.Query = (s, _) => {
-      atBuild = s.conf.get(key)
-      s.range(1).toDF()
-    }
-    assert(Suite.run(spark, dir, "adamic_adar", probe) { _ =>
-      atSink = spark.conf.get(key)
-    }.isRight)
-    assert(atBuild === "64k" && atSink === "64k")
-    assert(leaked().isEmpty, "runner leaked the overlay past its query's scope")
-    val failed = Suite.run(spark, dir, "adamic_adar", probe) { _ =>
+    val failed = Suite.run(spark, dir, (s, _) => s.range(1).toDF()) { _ =>
       throw new RuntimeException("boom")
     }
     assert(failed.left.map(_.getMessage) === Left("boom"))
-    assert(leaked().isEmpty, "runner leaked the overlay after a throw")
-    // registered queries that write with dynamic partition overwrite and
-    // that run a stream under a derived width and the RocksDB provider
-    Seq("dynamic_overwrite", "stream_funnel_table").foreach { name =>
-      val r = Suite.run(spark, dir, name, SparkEntry.queries(name))(Suite.noop)
-      assert(r.isRight, s"$name failed: $r")
-      assert(leaked().isEmpty, s"$name changed the session conf: ${leaked()}")
+    assert(leaked().isEmpty, s"a failed run changed the session conf: ${leaked()}")
+    // a dynamic-partition-overwrite write, a stream under a derived width
+    // and the RocksDB provider, and the queries that set their fan-out
+    // width in their plans
+    Seq("dynamic_overwrite", "stream_funnel_table", "adamic_adar",
+        "containment_neardup", "curation_pipeline", "prefix_jaccard")
+      .foreach { name =>
+        val r = Suite.run(spark, dir, SparkEntry.queries(name))(Suite.noop)
+        assert(r.isRight, s"$name failed: $r")
+        assert(leaked().isEmpty, s"$name changed the session conf: ${leaked()}")
+      }
+  }
+
+  // The stage where each query multiplies rows runs at the session's
+  // shuffle width at sf0.01 too, where AQE would coalesce its few-MB
+  // input exchange to a single partition.
+  private def joinOutputs(column: String): SparkPlan => Boolean = {
+    case j: BaseJoinExec => j.output.exists(_.name == column)
+    case _ => false
+  }
+  private def partitions(p: SparkPlan): Int = p match {
+    case r: RDDScanExec => r.rdd.getNumPartitions // a checkpoint's scan
+    case _ => p.outputPartitioning.numPartitions
+  }
+  Seq(
+    // pa ⋈ pb on the part streams the checkpointed weighted edge list
+    // (pb is broadcast at this scale)
+    "adamic_adar" -> ((p: SparkPlan) => p match {
+      case r: RDDScanExec => r.output.exists(_.name == "w_pico")
+      case _ => false
+    }),
+    // the candidate join against each posting list, and the verify join
+    "containment_neardup" -> joinOutputs("doc_b"),
+    // the verify join over the candidate pairs
+    "prefix_jaccard" -> joinOutputs("g_b"),
+    // the dedup window, whose stage runs decontaminate, gate and chunking
+    "curation_pipeline" -> ((p: SparkPlan) => p.isInstanceOf[WindowExec])
+  ).foreach { case (name, fanOut) =>
+    test(s"$name: the fan-out stage runs at the session's shuffle width") {
+      val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+      df.collect() // the adaptive plan finalizes only on execution
+      val widths = PlanShape.executedNodes(df.queryExecution.executedPlan)
+        .filter(fanOut).map(partitions)
+      assert(widths.nonEmpty, s"no fan-out operator in $name's plan")
+      assert(widths.forall(_ >= width),
+        s"$name fan-out partitions $widths < shuffle width $width")
     }
   }
 
@@ -358,15 +358,19 @@ class PlanSpec extends AnyFunSuite {
     restored()
   }
 
-  test("under src/main only GraftSession writes session conf") {
+  test("under src/main only GraftSession writes or scopes session conf") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val writers = Files.walk(Paths.get("src/main/scala")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).filter { f =>
-        val text = Files.readString(f)
-        text.contains("conf.set(") || text.contains("conf.unset(")
-      }.map(_.getFileName.toString).toSeq
-    assert(writers === Seq("GraftSession.scala"),
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => f.getFileName.toString -> Files.readString(f)).toSeq
+    def containing(needles: String*): Seq[String] = sources.collect {
+      case (name, text) if needles.exists(text.contains) => name
+    }
+    assert(containing("conf.set(", "conf.unset(") === Seq("GraftSession.scala"),
       "write session conf through GraftSession.withConf")
+    // a query needs no conf scope of its own: a width belongs in its plan
+    assert(containing("withConf(") === Seq("GraftSession.scala"),
+      "no per-query conf scope outside GraftSession")
   }
 }

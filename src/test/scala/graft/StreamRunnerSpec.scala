@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.Tables
+import graft.io.{StaggeredBatches, Tables}
 import graft.streaming.StreamRunner
 import graft.streaming.StreamRunner.Update
 
@@ -26,18 +26,9 @@ class StreamRunnerSpec extends AnyFunSuite {
     */
   private def batchedTable(batches: Seq[Seq[(String, Long)]]): String = {
     import spark.implicits._
-    val dir = Tmp.dir("runner_src").toFile
-    val t0 = System.currentTimeMillis
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val staged = Tmp.dir("runner_stage").toFile
-      rows.toDF("k", "v").coalesce(1).write.mode("overwrite")
-        .parquet(staged.toString)
-      val part = staged.listFiles.find(_.getName.endsWith(".parquet")).get
-      val f = new java.io.File(dir, f"batch-$i%02d.parquet")
-      assert(part.renameTo(f))
-      f.setLastModified(t0 - 60000 + i * 10000)
-    }
-    dir.toString
+    val dir = Tmp.dir("runner_src").toString
+    StaggeredBatches.write(dir, batches.map(_.toDF("k", "v")))
+    dir
   }
 
   test("a failing stream restores the shuffle width and the state-store " +

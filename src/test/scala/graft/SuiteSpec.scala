@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared runner's pure parts: query selection, the tranche split and
-  * the JSON string escaper. Overlay scoping is pinned in PlanSpec.
+  * the JSON string escaper. PlanSpec pins that a run leaves the session
+  * conf unchanged.
   */
 class SuiteSpec extends AnyFunSuite {
 
